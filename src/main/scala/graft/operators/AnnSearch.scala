@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
 import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -381,22 +381,145 @@ object AnnSearch {
       resolveProbe(nc, nProbe), expectedQ)
   }
 
-  /** Resolve an index dir to (centroids path, seq-ordered vector segment
-    * dirs). Two layouts share every read path:
-    *
-    *  - PLAIN (the build-once fixture index): `dir/centroids` +
-    *    `dir/vectors` — one segment;
-    *  - MANIFESTED (appended versions): `dir/manifest` lists the segments
-    *    by absolute path — the predecessor's segments re-referenced plus
-    *    the version's own batch segment ([[IndexStore.writeManifest]]).
+  /** An IVF index's code format — FAISS's split of the coarse quantizer
+    * and inverted lists (`IndexIVF`, the lifecycle) from the codes the
+    * lists hold (`index_factory("IVF{n},Flat")` vs `"IVF{n},PQ{m}"`).
+    * The write lifecycle ([[appendAt]], [[deleteAt]]) and its gates are
+    * written once over this seam; a codec supplies only what differs:
+    * its manifest data kind, the encode of centroid-assigned rows, its
+    * search, its refit, and its codec-only gate checks.
     */
-  private[graft] def ivfLayout(spark: SparkSession,
-                               dir: String): (String, Seq[String]) =
+  private[graft] sealed abstract class IvfCodec(val data: String) {
+    /** The version dir-name stem at `nc` clusters. */
+    def name(nc: Int): String
+    /** Version suffix of the append gates' committed dirs. */
+    def appVersion: Int
+    /** The fixture's build-once base version at `nc` clusters. */
+    def base(spark: SparkSession, sfDir: String, nc: Int): String
+    /** Data rows (vec_id, payload, cluster) of centroid-assigned
+      * (vec_id, v, cluster) rows.
+      */
+    def encode(spark: SparkSession, base: IvfLayout,
+               assigned: DataFrame): DataFrame
+    /** Top-k (query_id, id, …) over the version at `dir`; `corpus` is
+      * the full-precision rescore corpus the version indexes.
+      */
+    def search(spark: SparkSession, dir: String, queries: DataFrame,
+               corpus: DataFrame, k: Int, nProbe: Int,
+               expectedQ: Long): DataFrame
+    /** The refit index over the grown `union` of `n` rows, on the shared
+      * centroid refit at `ivfDir` (`nc` clusters): (codec, dir).
+      */
+    def refit(spark: SparkSession, sfDir: String, union: DataFrame,
+              n: Long, nc: Int, ivfDir: String): (IvfCodec, String)
+    /** Rows a well-formed version never holds (PQ: a code array that is
+      * not m wide); the append and refit gates report their count as
+      * `code_width`.
+      */
+    def malformed: Option[Column] = None
+    /** Whether the delete gate also compacts the deleted version. */
+    def compacts: Boolean = false
+  }
+
+  private[graft] case object FlatCodec extends IvfCodec("vectors") {
+    def name(nc: Int): String = s"ivf$nc"
+    def appVersion: Int = 3
+    def base(spark: SparkSession, sfDir: String, nc: Int): String =
+      loadOrBuildIvf(spark, sfDir, nc)
+    def encode(spark: SparkSession, base: IvfLayout,
+               assigned: DataFrame): DataFrame = assigned
+    def search(spark: SparkSession, dir: String, queries: DataFrame,
+               corpus: DataFrame, k: Int, nProbe: Int,
+               expectedQ: Long): DataFrame =
+      ivfSearchAt(spark, dir, queries, k, nProbe, expectedQ)
+    def refit(spark: SparkSession, sfDir: String, union: DataFrame,
+              n: Long, nc: Int, ivfDir: String): (IvfCodec, String) =
+      (this, ivfDir)
+    override def compacts: Boolean = true
+  }
+
+  /** PQ codes of `m` subspaces × `nk` codebook centers, scanned by ADC
+    * and rescored over the candidate margin.
+    */
+  private[graft] final case class PqCodec(m: Int, nk: Int)
+      extends IvfCodec(PqCodec.Data) {
+    def name(nc: Int): String = s"ivfpq$nc-$m-$nk"
+    def appVersion: Int = 2
+    def base(spark: SparkSession, sfDir: String, nc: Int): String =
+      buildIvfPqIndex(spark, sfDir, nc, m, nk)
+    def encode(spark: SparkSession, base: IvfLayout,
+               assigned: DataFrame): DataFrame =
+      pqEncode(spark, base.codebooks.get, assigned, m, nk)
+    def search(spark: SparkSession, dir: String, queries: DataFrame,
+               corpus: DataFrame, k: Int, nProbe: Int,
+               expectedQ: Long): DataFrame =
+      ivfPqSearchAt(spark, dir, queries, corpus, k, nProbe, m, nk,
+        rerank = 40, expectedQ = expectedQ)
+    // codebooks re-trained over the grown corpus through the one PQ
+    // build path, composed onto the shared centroid refit
+    def refit(spark: SparkSession, sfDir: String, union: DataFrame,
+              n: Long, nc: Int, ivfDir: String): (IvfCodec, String) = {
+      val c = PqCodec(m, Quantize.codesFor(n))
+      val pqDir = IndexStore.indexDir(sfDir, s"pq$m-${c.nk}-refit-v2",
+        "embeddings")
+      Quantize.buildPqOver(spark, union, m, c.nk, pqDir)
+      val dir = IndexStore.indexDir(sfDir, s"${c.name(nc)}-refit-v2",
+        "embeddings")
+      if (!ivfLayout(spark, dir, data).committed)
+        composeIvfPq(spark, ivfDir, pqDir, dir)
+      (c, dir)
+    }
+    override def malformed: Option[Column] = Some(size(col("codes")) =!= m)
+  }
+  private[graft] object PqCodec { val Data = "codes" }
+
+  /** One IVF version's artifacts: centroids, the codebooks (PQ only),
+    * the seq-ordered `data` segments (`vectors` or `codes`) and the
+    * tombstone segments. Two layouts share every read and write path:
+    *
+    *  - PLAIN (the build-once fixture index): `dir/centroids` (+
+    *    `dir/codebooks`) + `dir/<data>` — one segment, no tombstones;
+    *  - MANIFESTED (appended or deleted versions): `dir/manifest` lists
+    *    the segments by absolute path — the predecessor's segments
+    *    re-referenced plus the version's own batch or tombstone segment
+    *    ([[IndexStore.writeManifest]]).
+    */
+  private[graft] final case class IvfLayout(data: String, centroids: String,
+                                            codebooks: Option[String],
+                                            segments: Seq[String],
+                                            tombstones: Seq[String]) {
+    /** Every artifact and data segment is committed: a valid base. */
+    def committed: Boolean =
+      (centroids +: (codebooks.toSeq ++ segments))
+        .forall(IndexStore.committed)
+
+    /** The manifest rows of a successor version that keeps these
+      * centroids and codebooks.
+      */
+    def successor(segs: Seq[String], tombs: Seq[String])
+        : Seq[(String, String, Long)] =
+      (("centroids", centroids, 0L) +:
+        codebooks.map(("codebooks", _, 0L)).toSeq) ++
+        segs.zipWithIndex.map { case (s, i) => (data, s, i.toLong) } ++
+        tombs.zipWithIndex.map { case (s, i) => ("tombstones", s, i.toLong) }
+  }
+
+  /** THE layout reader of every IVF version, flat or PQ (`data` is the
+    * codec's data kind). A delete version's tombstones are O(batch)
+    * segments of bare vec_ids — the DELETE half of the index lifecycle
+    * (the reference wraps its index in `IndexIDMap`, `main.py:60-62`,
+    * precisely so entries are id-addressable — FAISS's `remove_ids`).
+    */
+  private[graft] def ivfLayout(spark: SparkSession, dir: String,
+                               data: String = FlatCodec.data): IvfLayout =
     if (IndexStore.committed(s"$dir/manifest")) {
       val entries = IndexStore.readManifest(spark, dir)
-      (IndexStore.manifestSegments(entries, "centroids").head,
-        IndexStore.manifestSegments(entries, "vectors"))
-    } else (s"$dir/centroids", Seq(s"$dir/vectors"))
+      def segs(kind: String) = IndexStore.manifestSegments(entries, kind)
+      IvfLayout(data, segs("centroids").head, segs("codebooks").headOption,
+        segs(data), segs("tombstones"))
+    } else IvfLayout(data, s"$dir/centroids",
+      Option.when(data == PqCodec.Data)(s"$dir/codebooks"),
+      Seq(s"$dir/$data"), Nil)
 
   /** The version's full vector table: union of its immutable segments.
     * Each segment is hive-partitioned by cluster, and a `cluster IN`
@@ -406,7 +529,7 @@ object AnnSearch {
     * rows masked by tombstones; [[ivfLiveVectors]] is the resolved view.
     */
   private[graft] def ivfVectors(spark: SparkSession, dir: String): DataFrame =
-    IndexStore.readUnion(spark, ivfLayout(spark, dir)._2)
+    IndexStore.readUnion(spark, ivfLayout(spark, dir).segments)
 
   /** The version's cluster count, cached per COMMITTED centroids path
     * (immutable once committed — the [[IndexStore.readManifest]] cache's
@@ -418,26 +541,11 @@ object AnnSearch {
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Integer]()
   private[graft] def clusterCountAt(spark: SparkSession,
                                     dir: String): Int = {
-    val cPath = ivfLayout(spark, dir)._1
+    val cPath = ivfLayout(spark, dir).centroids
     def load() = IndexStore.readCached(spark, cPath).count().toInt
     if (!IndexStore.committed(cPath)) load()
     else clusterCountCache.computeIfAbsent(cPath, _ => load()).intValue()
   }
-
-  /** The version's TOMBSTONE segment paths — the DELETE half of the index
-    * lifecycle (the reference wraps its index in `IndexIDMap`,
-    * `main.py:60-62`, precisely so entries are id-addressable — FAISS's
-    * `remove_ids` surface; takedown/retention is the first lifecycle
-    * event a production corpus hits). A delete version appends one
-    * O(batch) segment of bare vec_ids ([[deleteFromIvfIndexAt]]); a
-    * plain (build-once) layout has none.
-    */
-  private[graft] def ivfTombSegments(spark: SparkSession,
-                                     dir: String): Seq[String] =
-    if (IndexStore.committed(s"$dir/manifest"))
-      IndexStore.manifestSegments(
-        IndexStore.readManifest(spark, dir), "tombstones")
-    else Seq.empty
 
   /** Drop tombstone-masked rows from a candidate/vector frame keyed by
     * `idCol` — THE one exclusion seam every read path shares (searches,
@@ -456,24 +564,27 @@ object AnnSearch {
     * reference, which never re-uses a faiss_id: `main.py:129-130`
     * allocates fresh dense ids).
     */
-  private def excludeTombstoned(spark: SparkSession, dir: String,
+  private def excludeTombstoned(spark: SparkSession, tombstones: Seq[String],
                                 rows: DataFrame,
-                                idCol: String = "vec_id"): DataFrame = {
-    val segs = ivfTombSegments(spark, dir)
-    if (segs.isEmpty) rows
+                                idCol: String = "vec_id"): DataFrame =
+    if (tombstones.isEmpty) rows
     else rows.join(
-      broadcast(IndexStore.readUnion(spark, segs)
+      broadcast(IndexStore.readUnion(spark, tombstones)
         .select(col("vec_id").as(idCol)).distinct()),
       Seq(idCol), "left_anti")
-  }
 
-  /** The version's LIVE vector table: raw segments minus tombstoned ids —
-    * what searches rank over and what "the index holds" means once
-    * deletes exist.
+  /** A version's LIVE data rows (vectors or codes): raw segments minus
+    * tombstoned ids — what searches rank over and what "the index holds"
+    * means once deletes exist.
     */
-  private[graft] def ivfLiveVectors(spark: SparkSession,
-                                    dir: String): DataFrame =
-    excludeTombstoned(spark, dir, ivfVectors(spark, dir))
+  private def liveRows(spark: SparkSession, layout: IvfLayout): DataFrame =
+    excludeTombstoned(spark, layout.tombstones,
+      IndexStore.readUnion(spark, layout.segments))
+
+  private[graft] def ivfLiveVectors(spark: SparkSession, dir: String,
+                                    data: String = FlatCodec.data)
+      : DataFrame =
+    liveRows(spark, ivfLayout(spark, dir, data))
 
   /** The IVF probe-and-scan against an EXPLICIT index dir — shared by the
     * fixture-corpus [[ivfKnn]] and the appended-version gate, so the two
@@ -499,13 +610,14 @@ object AnnSearch {
   private[graft] def ivfSearchCollectAt(spark: SparkSession, dir: String,
                                         queries: DataFrame, k: Int,
                                         nProbe: Int): DataFrame = {
-    val (centroidsPath, _) = ivfLayout(spark, dir)
-    val centersDf = IndexStore.readCached(spark, centroidsPath)
+    val layout = ivfLayout(spark, dir)
+    val centersDf = IndexStore.readCached(spark, layout.centroids)
     val (probedClusters, probes) = probe(spark, queries, centersDf, nProbe)
     // tombstone exclusion ABOVE the isin-filtered scan: the static
     // PartitionFilters stay on the scan, the anti-join only thins rows
-    val assigned = excludeTombstoned(spark, dir, ivfVectors(spark, dir)
-      .filter(col("cluster").isin(probedClusters: _*)))
+    val assigned = excludeTombstoned(spark, layout.tombstones,
+      IndexStore.readUnion(spark, layout.segments)
+        .filter(col("cluster").isin(probedClusters: _*)))
     VectorSearch.topK(
       broadcast(probes).join(assigned, "cluster")
         .filter(col("vec_id") =!= col("query_id"))
@@ -533,11 +645,11 @@ object AnnSearch {
                                        queries: DataFrame, k: Int,
                                        nProbe: Int,
                                        expectedQ: Long = 0L): DataFrame = {
-    val (centroidsPath, segments) = ivfLayout(spark, dir)
-    val centersDf = IndexStore.readCached(spark, centroidsPath)
+    val layout = ivfLayout(spark, dir)
+    val centersDf = IndexStore.readCached(spark, layout.centroids)
     val probes = probeFrame(queries, centersDf, nProbe)
     val p = probeSide(probes, expectedQ, nProbe, centroidDim(centersDf))
-    val cands = segments.map { seg =>
+    val cands = layout.segments.map { seg =>
       p.join(IndexStore.readCached(spark, seg), "cluster")
         .filter(col("vec_id") =!= col("query_id"))
         .select(col("query_id"), col("vec_id").as("id"),
@@ -547,7 +659,8 @@ object AnnSearch {
     // scan: the probe join must sit directly on each partitioned scan
     // for DPP to attach ([[excludeTombstoned]] is a no-op plan-wise on
     // undeleted versions)
-    VectorSearch.topK(excludeTombstoned(spark, dir, cands, "id"), k)
+    VectorSearch.topK(excludeTombstoned(spark, layout.tombstones, cands,
+      "id"), k)
   }
 
   /** Load-or-build gate for the persisted IVF index — the ONE place the
@@ -570,28 +683,9 @@ object AnnSearch {
     appendToIvfIndexAt(spark, loadOrBuildIvf(spark, sfDir, nClusters),
       batch, out)
 
-  /** Incremental add to the persisted IVF index — the reference's
-    * `index.add_with_ids` (`main.py:134`) applied to the scale layout:
-    * new vectors are assigned to their NEAREST EXISTING centroid (no
-    * refit — exactly how FAISS IVF adds work) and a NEW index version is
-    * produced at `out` as a MANIFEST: the predecessor's immutable vector
-    * segments are re-referenced by path, the batch is written as ONE new
-    * cluster-partitioned segment, and centroids are shared unchanged. Both
-    * compute AND I/O are O(batch) — at 100 TB a micro-batch append writes
-    * the batch's files plus one manifest, never a copy/rewrite of the
-    * corpus. Readers keep using the old `dir` until the caller switches —
-    * version-swap, never in-place. Commit protocol: the manifest is
-    * written LAST, so `committed(out/manifest)` structurally gates the
-    * whole version (a crash after the segment but before the manifest
-    * reads as "never built", and the replay guard keys on the same
-    * marker). Retention is manifest refcounting
-    * ([[graft.streaming.StreamingIndex.pruneVersions]]): a segment lives
-    * while any surviving manifest references it.
-    */
   /** Nearest-existing-centroid assignment of one append batch — THE one
-    * seam both append paths (flat [[appendToIvfIndexAt]] and PQ
-    * [[appendToIvfPqIndexAt]]) share, so assignment semantics cannot
-    * drift. Returns (vec_id, v-normalized, cluster), one row per BATCH
+    * seam of [[appendAt]], so assignment semantics cannot drift across
+    * codecs. Returns (vec_id, v-normalized, cluster), one row per BATCH
     * row (duplicate ids stay distinct via a per-row uid — FAISS
     * `add_with_ids` semantics).
     *
@@ -634,83 +728,84 @@ object AnnSearch {
     } finally Checkpoints.release(uid)
   }
 
-  private[graft] def appendToIvfIndexAt(spark: SparkSession, dir: String,
-                                        batch: DataFrame, out: String,
-                                        maxSegments: Int =
-                                          IndexStore.DefaultMaxSegments)
-      : Unit = {
+  /** Incremental add to a persisted IVF version, written ONCE for every
+    * codec — the reference's `index.add_with_ids` (`main.py:134`)
+    * applied to the scale layout: new vectors are assigned to their
+    * NEAREST EXISTING centroid (no refit — exactly how FAISS IVF adds
+    * work), encoded by the codec (flat: as-is; PQ: with the FROZEN
+    * codebooks, [[pqEncode]]), and a NEW index version is produced at
+    * `out` as a MANIFEST: the predecessor's immutable data segments are
+    * re-referenced by path, the batch is written as ONE new
+    * cluster-partitioned segment, and centroids (and codebooks) are
+    * shared unchanged. Both compute AND I/O are O(batch) — at 100 TB a
+    * micro-batch append writes the batch's files plus one manifest,
+    * never a copy/rewrite of the corpus. Readers keep using the old
+    * `dir` until the caller switches — version-swap, never in-place.
+    * Commit protocol: the manifest is written LAST, so
+    * `committed(out/manifest)` structurally gates the whole version (a
+    * crash after the segment but before the manifest reads as "never
+    * built", and the replay guard keys on the same marker). Retention is
+    * manifest refcounting
+    * ([[graft.streaming.StreamingIndex.pruneVersions]]): a segment lives
+    * while any surviving manifest references it.
+    */
+  private def appendAt(spark: SparkSession, codec: IvfCodec, dir: String,
+                       batch: DataFrame, out: String,
+                       maxSegments: Int): Unit = {
     // a committed `out` means this version already folded its batch — a
     // re-invocation (crash-replay, retried job) must not append it twice
     if (IndexStore.committed(s"$out/manifest")) return
-    val (centroidsPath, segments) = ivfLayout(spark, dir)
-    require(IndexStore.committed(centroidsPath) &&
-      segments.forall(IndexStore.committed),
+    val base = ivfLayout(spark, dir, codec.data)
+    require(base.committed,
       s"append base $dir is not a committed index version")
-    val centersDf = IndexStore.readCached(spark, centroidsPath)
+    val centersDf = IndexStore.readCached(spark, base.centroids)
     // the batch's dimension must match the index — a mismatch would make
     // every squaredL2 NULL and silently dump the whole batch in cluster 0
-    val centerDim = centersDf.select(size(col("center"))).head.getInt(0)
+    val centerDim = centroidDim(centersDf)
     batch.select(size(col("v"))).limit(1).collect().headOption.foreach {
       r => require(r.getInt(0) == centerDim,
         s"batch dim ${r.getInt(0)} != index dim $centerDim")
     }
-    // assign each batch ROW to its nearest existing centroid (tiny
-    // broadcast of k centers, one map pass over the batch) through the
-    // slim shared seam — see [[assignToCentroids]] for the shuffle-
-    // payload argument (the round-17 deep×wide streamed tier caught the
-    // previous window form moving batch·nc rows that each carried BOTH
-    // d-dim arrays). Keyed by a per-row uid, not vec_id: duplicate ids
-    // in one batch are appended as distinct rows (FAISS add_with_ids
-    // semantics), never silently collapsed. Overwrite clears any crashed
-    // attempt's leftovers at the segment path before this version's
-    // write.
-    val segment = s"$out/segment"
+    // assign each batch ROW to its nearest existing centroid through the
+    // slim shared seam ([[assignToCentroids]]): keyed by a per-row uid,
+    // not vec_id, so duplicate ids in one batch are appended as distinct
+    // rows (FAISS add_with_ids semantics), never silently collapsed
     val assigned = assignToCentroids(spark, batch, centersDf)
-    val tombSegs = ivfTombSegments(spark, dir)
-    if (segments.length + 1 > maxSegments) {
-      // compaction trigger ([[IndexStore.DefaultMaxSegments]]): fold the
-      // whole chain + batch into ONE fresh cluster-partitioned segment,
-      // re-clustered to one file per cluster — per-cluster rows are
-      // O(√n) by the nlist sizing, so single files stay scan-friendly
-      // and the chain's accumulated small delta files collapse. The fold
-      // reads the LIVE view: tombstone-masked rows are physically
-      // dropped here and the tombstones themselves retired from the
-      // manifest (the merge-on-read → compaction contract of the
-      // delete lifecycle)
-      ivfLiveVectors(spark, dir)
-        .select(col("vec_id"), col("v"), col("cluster"))
-        .unionByName(assigned)
-        .repartition(col("cluster"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("cluster").parquet(segment)
-      IndexStore.writeManifest(spark, out,
-        Seq(("centroids", centroidsPath, 0L), ("vectors", segment, 0L)))
-    } else {
-      assigned
-        // one O(batch) shuffle so each touched cluster gets ONE file, not
-        // one per (task × cluster): a micro-batch spread over every
-        // writer task would otherwise add tasks·nprobe-ish small files
-        // per trigger — the file-listing death of a frequently-appended
-        // index
-        .repartition(col("cluster"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("cluster").parquet(segment)
-      // LAST: the manifest commits the version (see commit protocol
-      // above) — a crash anywhere before this line reads as "never
-      // built". The predecessor's tombstones are carried FORWARD: an
-      // append after a delete must not silently un-delete
-      IndexStore.writeManifest(spark, out,
-        ("centroids", centroidsPath, 0L) +:
-          ((segments :+ segment).zipWithIndex.map { case (s, i) =>
-            ("vectors", s, i.toLong)
-          } ++ tombSegs.zipWithIndex.map { case (s, i) =>
-            ("tombstones", s, i.toLong)
-          }))
-    }
+    val rows = codec.encode(spark, base, assigned)
+    val segment = s"$out/segment"
+    // compaction trigger ([[IndexStore.DefaultMaxSegments]]): fold the
+    // whole chain + batch into ONE fresh segment. The fold reads the
+    // LIVE view: tombstone-masked rows are physically dropped and the
+    // tombstones retired from the manifest (the merge-on-read →
+    // compaction contract of the delete lifecycle). A delta append
+    // carries the tombstones FORWARD: it must never un-delete
+    val fold = base.segments.length + 1 > maxSegments
+    (if (fold) liveRows(spark, base).select(rows.columns.map(col): _*)
+        .unionByName(rows)
+      else rows)
+      // one shuffle so each touched cluster gets ONE file, not one per
+      // (task × cluster): per-cluster rows are O(√n) by the nlist
+      // sizing, and a micro-batch spread over every writer task would
+      // otherwise add tasks·nprobe-ish small files per trigger — the
+      // file-listing death of a frequently-appended index. Overwrite
+      // clears any crashed attempt's leftovers at the segment path
+      .repartition(col("cluster"))
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .partitionBy("cluster").parquet(segment)
+    // LAST: the manifest commits the version (see commit protocol above)
+    IndexStore.writeManifest(spark, out,
+      if (fold) base.successor(Seq(segment), Nil)
+      else base.successor(base.segments :+ segment, base.tombstones))
     // the version is committed — the assignment's working checkpoint is
     // dead; release deterministically ([[Checkpoints]])
     Checkpoints.release(assigned)
   }
+
+  private[graft] def appendToIvfIndexAt(spark: SparkSession, dir: String,
+                                        batch: DataFrame, out: String,
+                                        maxSegments: Int =
+                                          IndexStore.DefaultMaxSegments)
+      : Unit = appendAt(spark, FlatCodec, dir, batch, out, maxSegments)
 
   /** DELETE from the persisted IVF index — FAISS `remove_ids` restated
     * for the manifested layout (the reference's `IndexIDMap`,
@@ -736,26 +831,12 @@ object AnnSearch {
                                           ids: DataFrame, out: String,
                                           maxSegments: Int =
                                             IndexStore.DefaultMaxSegments)
-      : Unit = {
-    if (IndexStore.committed(s"$out/manifest")) return
-    val (centroidsPath, segments) = ivfLayout(spark, dir)
-    require(IndexStore.committed(centroidsPath) &&
-      segments.forall(IndexStore.committed),
-      s"delete base $dir is not a committed index version")
-    writeTombstoneVersion(spark, dir, ids, out, maxSegments,
-      ("centroids", centroidsPath, 0L) +:
-        segments.zipWithIndex.map { case (s, i) =>
-          ("vectors", s, i.toLong)
-        })
-  }
+      : Unit = deleteAt(spark, FlatCodec.data, dir, ids, out, maxSegments)
 
-  /** DELETE from the persisted IVF+PQ index — the quantized twin of
-    * [[deleteFromIvfIndex]], so the production-default layout has the
-    * same takedown surface as the flat one: a new version re-references
-    * centroids, codebooks and every code segment untouched and adds one
-    * O(batch) tombstone segment; the ADC scan excludes tombstoned ids
-    * merge-on-read ([[ivfPqSearchAt]]), appends carry tombstones
-    * forward, and the in-chain fold drops masked codes physically.
+  /** DELETE from the persisted IVF+PQ index — the same tombstone version
+    * over the quantized layout: centroids, codebooks and every code
+    * segment are re-referenced untouched; the ADC scan excludes
+    * tombstoned ids merge-on-read ([[ivfPqSearchAt]]).
     */
   def deleteFromIvfPqIndex(spark: SparkSession, sfDir: String,
                            ids: DataFrame, out: String,
@@ -772,51 +853,45 @@ object AnnSearch {
                                             out: String,
                                             maxSegments: Int =
                                               IndexStore.DefaultMaxSegments)
-      : Unit = {
+      : Unit = deleteAt(spark, PqCodec.Data, dir, ids, out, maxSegments)
+
+  /** The one delete of every codec: a tombstone is a bare vec_id, so the
+    * codec enters only as the manifest data kind the version carries.
+    */
+  private def deleteAt(spark: SparkSession, data: String, dir: String,
+                       ids: DataFrame, out: String,
+                       maxSegments: Int): Unit = {
     if (IndexStore.committed(s"$out/manifest")) return
-    val (centroidsPath, codebooksPath, segments) = ivfPqLayout(spark, dir)
-    require(IndexStore.committed(centroidsPath) &&
-      IndexStore.committed(codebooksPath) &&
-      segments.forall(IndexStore.committed),
+    val base = ivfLayout(spark, dir, data)
+    require(base.committed,
       s"delete base $dir is not a committed index version")
-    writeTombstoneVersion(spark, dir, ids, out, maxSegments,
-      ("centroids", centroidsPath, 0L) +:
-        ("codebooks", codebooksPath, 0L) +:
-        segments.zipWithIndex.map { case (s, i) =>
-          ("codes", s, i.toLong)
-        })
+    writeTombstoneVersion(spark, base, ids, out, maxSegments)
   }
 
-  /** The shared tombstone-version tail of both delete paths: write the
+  /** The tombstone-version tail of [[deleteAt]]: write the
     * (folded-if-over-bound) tombstone segment, then commit a manifest
-    * of the predecessor's data artifacts plus the tombstone chain. One
-    * seam, so the two layouts cannot drift in fold bound, dedup of the
-    * id batch, or commit protocol (manifest LAST, replay-idempotent at
-    * the caller's `committed` guard).
+    * of the predecessor's data artifacts plus the tombstone chain
+    * (manifest LAST, replay-idempotent at the caller's `committed`
+    * guard).
     */
-  private def writeTombstoneVersion(spark: SparkSession, dir: String,
+  private def writeTombstoneVersion(spark: SparkSession, base: IvfLayout,
                                     ids: DataFrame, out: String,
-                                    maxSegments: Int,
-                                    dataEntries: Seq[(String, String, Long)])
-      : Unit = {
-    val tombSegs = ivfTombSegments(spark, dir)
+                                    maxSegments: Int): Unit = {
     val segment = s"$out/tombstones"
     val batch = ids.select(col("vec_id")).distinct()
     val (written, kept) =
-      if (tombSegs.length + 1 > maxSegments) {
+      if (base.tombstones.length + 1 > maxSegments) {
         // fold the tombstone chain + batch into one fresh segment —
         // O(total deletes since compaction), still never corpus-bound
-        (IndexStore.readUnion(spark, tombSegs).select(col("vec_id"))
+        (IndexStore.readUnion(spark, base.tombstones).select(col("vec_id"))
           .unionByName(batch).distinct(), Seq.empty[String])
-      } else (batch, tombSegs)
+      } else (batch, base.tombstones)
     written.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(segment)
     // LAST: the manifest commits the version — predecessor data
     // segments re-referenced untouched, tombstone chain extended/folded
     IndexStore.writeManifest(spark, out,
-      dataEntries ++ (kept :+ segment).zipWithIndex.map { case (s, i) =>
-        ("tombstones", s, i.toLong)
-      })
+      base.successor(base.segments, kept :+ segment))
   }
 
   /** Compact an appended IVF version into a standalone one-segment index
@@ -833,12 +908,12 @@ object AnnSearch {
     * lifecycle.
     */
   def compactIvfTo(spark: SparkSession, dir: String, out: String): Unit = {
-    val (centroidsPath, _) = ivfLayout(spark, dir)
-    ivfLiveVectors(spark, dir)
+    val layout = ivfLayout(spark, dir)
+    liveRows(spark, layout)
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .partitionBy("cluster").parquet(s"$out/vectors")
     IndexStore.saveDataset(
-      IndexStore.readCached(spark, centroidsPath), s"$out/centroids")
+      IndexStore.readCached(spark, layout.centroids), s"$out/centroids")
   }
 
   /** IVF + SQ8 composed index — the 100 TB shape: the coarse quantizer's
@@ -1030,20 +1105,6 @@ object AnnSearch {
       mm, nk, rerank, expectedQ = nQueries.toLong, forceJoin = forceJoin)
   }
 
-  /** Resolve an IVF+PQ index dir to (centroids, codebooks, seq-ordered
-    * code segment dirs) — the [[ivfLayout]] contract extended with the
-    * codebooks artifact, so appended (manifested) versions share every
-    * read path with the plain build-once layout.
-    */
-  private[graft] def ivfPqLayout(spark: SparkSession, dir: String)
-      : (String, String, Seq[String]) =
-    if (IndexStore.committed(s"$dir/manifest")) {
-      val entries = IndexStore.readManifest(spark, dir)
-      (IndexStore.manifestSegments(entries, "centroids").head,
-        IndexStore.manifestSegments(entries, "codebooks").head,
-        IndexStore.manifestSegments(entries, "codes"))
-    } else (s"$dir/centroids", s"$dir/codebooks", Seq(s"$dir/codes"))
-
   /** The IVF+PQ probe-and-scan against an EXPLICIT (possibly manifested)
     * index dir — shared by the fixture search and the append gate, so
     * probe tie-breaking, LUT arithmetic and margin semantics can never
@@ -1078,14 +1139,14 @@ object AnnSearch {
                                    forceJoin: Boolean = false,
                                    lutsIn: Option[DataFrame] = None)
       : DataFrame = {
-    val (centroidsPath, codebooksPath, segments) = ivfPqLayout(spark, dir)
-    val centersDf = IndexStore.readCached(spark, centroidsPath)
+    val layout = ivfLayout(spark, dir, PqCodec.Data)
+    val centersDf = IndexStore.readCached(spark, layout.centroids)
     // `lutsIn`: a caller that probes several dirs sharing ONE trained
     // codebook (the sharded topology) builds the Q-row LUT table once
     // and passes it in — K identical Q·m·nk constructions collapsed to
     // one ([[ShardedSearch.shardedIvfPqKnn]])
     val luts = lutsIn.getOrElse(
-      Quantize.pqLutsAt(spark, codebooksPath, queries, m, nk)
+      Quantize.pqLutsAt(spark, layout.codebooks.get, queries, m, nk)
         .select(col("query_id"), col("lut")))
     def adistOf(probeLutCodes: DataFrame): DataFrame = probeLutCodes
       .filter(col("vec_id") =!= col("query_id"))
@@ -1103,8 +1164,8 @@ object AnnSearch {
           if (forceJoin) 0L else expectedQ, nProbe, lutDim)
         // per-segment join with the union ABOVE it, as in
         // [[ivfSearchJoinedAt]]: DPP attaches to each partitioned scan
-        segments.map(seg => adistOf(p.join(IndexStore.readCached(spark, seg),
-          "cluster"))).reduce(_ unionAll _)
+        layout.segments.map(seg => adistOf(p.join(
+          IndexStore.readCached(spark, seg), "cluster"))).reduce(_ unionAll _)
       } else {
         // the LUT rides per QUERY, not per probe row: joining luts into
         // the probe side before the broadcast denormalizes the m·nk
@@ -1118,7 +1179,7 @@ object AnnSearch {
         // only inside the stage, never staged or shuffled.
         val (probedClusters, p) = probe(spark, queries, centersDf, nProbe)
         adistOf(broadcast(p)
-          .join(IndexStore.readUnion(spark, segments)
+          .join(IndexStore.readUnion(spark, layout.segments)
             .filter(col("cluster").isin(probedClusters: _*)), "cluster")
           .join(broadcast(luts), "query_id"))
       }
@@ -1127,7 +1188,8 @@ object AnnSearch {
     // on undeleted versions, then the ONE shared pruning tail — margin
     // semantics identical to SQ8/PQ
     VectorSearch.pruneCandidates(
-      excludeTombstoned(spark, dir, adist, "id"), rerank, Some(queries))
+      excludeTombstoned(spark, layout.tombstones, adist, "id"), rerank,
+      Some(queries))
   }
 
   /** PQ-encode an explicit centroid-assigned frame (vec_id, v, cluster)
@@ -1140,7 +1202,7 @@ object AnnSearch {
     * subspace) argmin window; ties break on the lower code, matching the
     * build-time k-means predict (first minimal index). The window
     * partitions by a per-row uid so duplicate vec_ids in one batch stay
-    * distinct rows (add_with_ids semantics, as in [[appendToIvfIndexAt]]).
+    * distinct rows (add_with_ids semantics, as in [[appendAt]]).
     *
     * Arithmetic caveat (applies equally to append-time CENTROID
     * assignment): this path computes exact fold-order squared L2 against
@@ -1199,15 +1261,10 @@ object AnnSearch {
       .select(col("vec_id"), col("codes"), col("cluster"))
   }
 
-  /** Incremental add to the persisted IVF+PQ index — the quantized twin
-    * of [[appendToIvfIndex]], completing the lifecycle for the layout a
-    * 100 TB deployment actually runs: new vectors are assigned to their
-    * nearest EXISTING centroid and encoded with the FROZEN codebooks
-    * ([[pqEncode]]), and a NEW version at `out` re-references the
-    * predecessor's immutable code segments by manifest plus ONE new
-    * cluster-partitioned batch segment. Same commit protocol (manifest
-    * written last, replay-idempotent on `committed(out/manifest)`), same
-    * [[IndexStore.DefaultMaxSegments]] in-chain auto-compaction bound.
+  /** Incremental add to the persisted IVF+PQ index: [[appendAt]] with
+    * the PQ codec — codes encoded with the FROZEN codebooks
+    * ([[pqEncode]]), the same commit protocol and in-chain fold bound as
+    * the flat chain.
     */
   def appendToIvfPqIndex(spark: SparkSession, sfDir: String,
                          batch: DataFrame, out: String,
@@ -1225,60 +1282,7 @@ object AnnSearch {
                                           out: String, m: Int, nk: Int,
                                           maxSegments: Int =
                                             IndexStore.DefaultMaxSegments)
-      : Unit = {
-    if (IndexStore.committed(s"$out/manifest")) return
-    val (centroidsPath, codebooksPath, segments) = ivfPqLayout(spark, dir)
-    require(IndexStore.committed(centroidsPath) &&
-      IndexStore.committed(codebooksPath) &&
-      segments.forall(IndexStore.committed),
-      s"append base $dir is not a committed index version")
-    val centersDf = IndexStore.readCached(spark, centroidsPath)
-    val centerDim = centersDf.select(size(col("center"))).head.getInt(0)
-    batch.select(size(col("v"))).limit(1).collect().headOption.foreach {
-      r => require(r.getInt(0) == centerDim,
-        s"batch dim ${r.getInt(0)} != index dim $centerDim")
-    }
-    // coarse assignment through the slim shared seam
-    // ([[assignToCentroids]] — the flat append's exact semantics and
-    // shuffle shape)
-    val assigned = assignToCentroids(spark, batch, centersDf)
-    val encoded = pqEncode(spark, codebooksPath, assigned, m, nk)
-    val segment = s"$out/segment"
-    val tombSegs = ivfTombSegments(spark, dir)
-    if (segments.length + 1 > maxSegments) {
-      // compaction trigger: fold the whole chain + batch into ONE fresh
-      // cluster-partitioned code segment ([[appendToIvfIndexAt]]'s
-      // bound). The fold reads the LIVE view — tombstone-masked codes
-      // are dropped physically and the tombstones retired, exactly as
-      // in the flat chain's fold
-      excludeTombstoned(spark, dir, IndexStore.readUnion(spark, segments))
-        .select(col("vec_id"), col("codes"), col("cluster"))
-        .unionByName(encoded)
-        .repartition(col("cluster"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("cluster").parquet(segment)
-      IndexStore.writeManifest(spark, out,
-        Seq(("centroids", centroidsPath, 0L),
-          ("codebooks", codebooksPath, 0L), ("codes", segment, 0L)))
-    } else {
-      encoded
-        // one O(batch) shuffle so each touched cluster gets ONE file
-        // (the small-file bound of [[appendToIvfIndexAt]])
-        .repartition(col("cluster"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("cluster").parquet(segment)
-      // tombstones carried FORWARD (an append must never un-delete)
-      IndexStore.writeManifest(spark, out,
-        ("centroids", centroidsPath, 0L) +:
-          ("codebooks", codebooksPath, 0L) +:
-          ((segments :+ segment).zipWithIndex.map { case (s, i) =>
-            ("codes", s, i.toLong)
-          } ++ tombSegs.zipWithIndex.map { case (s, i) =>
-            ("tombstones", s, i.toLong)
-          }))
-    }
-    Checkpoints.release(assigned)
-  }
+      : Unit = appendAt(spark, PqCodec(m, nk), dir, batch, out, maxSegments)
 
   /** Load-or-build the PAYLOAD-CARRYING IVF layout: the same centroids
     * and cluster-partitioned vectors as the plain index, with the
@@ -1945,12 +1949,15 @@ object AnnSearch {
 
   /** HARD gate for the O(batch) IVF append (same zero-row contract as
     * [[annRecallViolations]]): fold the deterministic [[appendBatch]]
-    * into a NEW index version via [[appendToIvfIndex]], then emit a
-    * violation row if either invariant breaks:
+    * into a NEW index version, then emit a violation row if an
+    * invariant breaks:
     *
     *  - completeness: the appended version must hold base + batch rows
-    *    (a lost cluster partition in the file-copy, or a dropped batch
-    *    row, trips this);
+    *    (a lost cluster partition, or a dropped batch row, trips this);
+    *  - well-formedness: the codec's malformed-row count must be zero
+    *    (PQ: every code array exactly m wide — a partial encode, e.g. a
+    *    dropped subspace in the frozen-codebook argmin, trips this even
+    *    when row counts look right);
     *  - quality: probing the appended version must reach `recallFloor`
     *    average recall@k against the exact k-NN over the appended corpus
     *    (assigning batch rows to wrong/degenerate centroids trips this
@@ -1963,8 +1970,25 @@ object AnnSearch {
   def ivfAppendViolations(spark: SparkSession, sfDir: String,
                           nQueries: Int = 10, k: Int = 10,
                           recallFloor: Double = 0.5,
-                          batchRows: Long = 0L): DataFrame = {
-    import spark.implicits._
+                          batchRows: Long = 0L): DataFrame =
+    appendViolations(spark, sfDir, FlatCodec, nQueries, k, recallFloor,
+      batchRows)
+
+  /** [[ivfAppendViolations]] on the IVF+PQ layout. The floor sits below
+    * the flat gate's 0.5: the probe misses compose with PQ quantization
+    * loss (the same ordering the `ivf_pq` vs `ivf` floors encode in
+    * [[annRecallViolations]]).
+    */
+  def ivfPqAppendViolations(spark: SparkSession, sfDir: String,
+                            nQueries: Int = 10, k: Int = 10,
+                            recallFloor: Double = 0.35): DataFrame =
+    appendViolations(spark, sfDir, fixturePq(spark, sfDir), nQueries, k,
+      recallFloor, batchRows = 0L)
+
+  private def appendViolations(spark: SparkSession, sfDir: String,
+                               codec: IvfCodec, nQueries: Int, k: Int,
+                               recallFloor: Double,
+                               batchRows: Long): DataFrame = {
     val nc = resolveClusters(spark, sfDir, 0)
     // batchRows > 0 slices the fixture growth batch to its smallest
     // `batchRows` ids — the steady-state micro-batch shape for corpora
@@ -1973,413 +1997,243 @@ object AnnSearch {
     // 0 keeps the doubling fixture batch. Tagged out dir: the two
     // regimes' committed artifacts never collide.
     val tag = if (batchRows <= 0L) "" else s"-b$batchRows"
-    val out = IndexStore.indexDir(sfDir, s"ivf$nc-app$tag-v3",
-      "embeddings")
     val fullBatch = appendBatch(spark, sfDir)
     val batch = if (batchRows <= 0L) fullBatch
                 else fullBatch.orderBy("vec_id").limit(batchRows.toInt)
-    appendToIvfIndex(spark, sfDir, batch, out, nc)
+    val (out, union) = gateAppend(spark, sfDir, codec, nc, batch, tag)
     val nBase = embeddingCount(spark, sfDir)
-    val nBatch = if (batchRows <= 0L) nBase else batchRows
-    // exact top-k over the appended corpus (base ∪ batch, both normalized
-    // exactly as the index stores them) — disk-committed per fingerprint
-    // ([[appendUnionExact]], r17: the brute force re-ran per call)
-    val union = normalizedVec(spark, sfDir).select(col("vec_id"), col("v"))
-      .unionAll(batch.select(col("vec_id"), l2Normalize(col("v")).as("v")))
+    val nOut = nBase + (if (batchRows <= 0L) nBase else batchRows)
     val exact = appendUnionExact(spark, sfDir, union, nQueries, k,
       batchTag = tag)
-    val approx = ivfSearchAt(spark, out,
-      queryVectors(spark, sfDir, nQueries), k, resolveProbe(nc, 0),
-      expectedQ = nQueries.toLong)
-    // ONE action for the scalar checks (r17: was three sequential jobs)
-    val g = Actions.gauges(
-      "n_out" -> ivfVectors(spark, out).agg(count(lit(1))),
-      "hits" -> exact.join(approx.select(col("query_id"), col("id")),
-        Seq("query_id", "id"), "left_semi").agg(count(lit(1))),
-      "n_exact" -> exact.agg(count(lit(1))))
-    val nOut = g("n_out").toLong
+    val approx = codec.search(spark, out, queryVectors(spark, sfDir,
+      nQueries), union, k, resolveProbe(nc, 0), nQueries.toLong)
+    val rows = IndexStore.readUnion(spark,
+      ivfLayout(spark, out, codec.data).segments)
+    // ONE action for the scalar checks (r17: was three to four jobs)
+    val g = Actions.gauges(Seq(
+      "n_out" -> rowCount(rows),
+      "hits" -> hitCount(exact, approx),
+      "n_exact" -> rowCount(exact)) ++ malformedGauge(codec, rows): _*)
     val recall = g("hits") / g("n_exact")
-    val viols = Seq(
-      Option.when(nOut != nBase + nBatch)(
-        ("vector_count", (nBase + nBatch).toDouble, nOut.toDouble)),
+    violationRows(spark,
+      Option.when(g("n_out") != nOut)(
+        ("vector_count", nOut.toDouble, g("n_out"))),
+      codeWidth(g),
       Option.when(recall < recallFloor)(
-        ("avg_recall", recallFloor,
-          math.round(recall * 10000.0) / 10000.0))).flatten
-    viols.toDF("invariant", "expected", "actual").orderBy("invariant")
-  }
-
-  /** HARD gate for the O(batch) IVF+PQ append — [[ivfAppendViolations]]'
-    * contract applied to the quantized layout (zero rows = passing,
-    * typed zero-row oracle): fold the SAME deterministic [[appendBatch]]
-    * into a new IVF+PQ version via [[appendToIvfPqIndex]], then emit a
-    * violation row if any invariant breaks:
-    *
-    *  - completeness: the appended version must hold base + batch code
-    *    rows (a lost partition or dropped batch row trips this);
-    *  - code width: every stored code array must have exactly m entries
-    *    (a partial encode — e.g. a dropped subspace in the frozen-
-    *    codebook argmin — trips this even when row counts look right);
-    *  - quality: probing the appended version must reach `recallFloor`
-    *    average recall@k against the exact k-NN over the appended
-    *    corpus. The floor sits below the flat append gate's 0.5: the
-    *    probe misses now compose with PQ quantization loss (the same
-    *    ordering the `ivf_pq` vs `ivf` floors encode in
-    *    [[annRecallViolations]]).
-    */
-  def ivfPqAppendViolations(spark: SparkSession, sfDir: String,
-                            nQueries: Int = 10, k: Int = 10,
-                            recallFloor: Double = 0.35): DataFrame = {
-    import spark.implicits._
-    val nc = resolveClusters(spark, sfDir, 0)
-    val nk = Quantize.resolveCodes(spark, sfDir, 0)
-    val m = Quantize.resolveM(spark, sfDir, 0)
-    val out = IndexStore.indexDir(sfDir, s"ivfpq$nc-$m-$nk-app-v2",
-      "embeddings")
-    val batch = appendBatch(spark, sfDir)
-    appendToIvfPqIndex(spark, sfDir, batch, out, nc, m, nk)
-    val nBase = embeddingCount(spark, sfDir)
-    val codes = IndexStore.readUnion(spark, ivfPqLayout(spark, out)._3)
-    val union = normalizedVec(spark, sfDir).select(col("vec_id"), col("v"))
-      .unionAll(batch.select(col("vec_id"), l2Normalize(col("v")).as("v")))
-    val queries = queryVectors(spark, sfDir, nQueries)
-    // the committed appended-corpus truth ([[appendUnionExact]]) + ONE
-    // action for the scalar checks (r17: was four sequential jobs)
-    val exact = appendUnionExact(spark, sfDir, union, nQueries, k)
-    val approx = ivfPqSearchAt(spark, out, queries, union, k,
-      resolveProbe(nc, 0), m, nk, rerank = 40,
-      expectedQ = nQueries.toLong)
-    val g = Actions.gauges(
-      "n_out" -> codes.agg(count(lit(1))),
-      "bad_width" -> codes.filter(size(col("codes")) =!= m)
-        .agg(count(lit(1))),
-      "hits" -> exact.join(approx.select(col("query_id"), col("id")),
-        Seq("query_id", "id"), "left_semi").agg(count(lit(1))),
-      "n_exact" -> exact.agg(count(lit(1))))
-    val nOut = g("n_out").toLong
-    val badWidth = g("bad_width").toLong
-    val recall = g("hits") / g("n_exact")
-    val viols = Seq(
-      Option.when(nOut != 2 * nBase)(
-        ("vector_count", 2.0 * nBase, nOut.toDouble)),
-      Option.when(badWidth != 0)(
-        ("code_width", 0.0, badWidth.toDouble)),
-      Option.when(recall < recallFloor)(
-        ("avg_recall", recallFloor,
-          math.round(recall * 10000.0) / 10000.0))).flatten
-    viols.toDF("invariant", "expected", "actual").orderBy("invariant")
+        ("avg_recall", recallFloor, r4(recall))))
   }
 
   /** HARD gate for index REFIT — the lifecycle step after appends: an
     * appended version keeps assigning new vectors to the ORIGINAL
-    * centroids (exactly how FAISS IVF adds work), so after enough
-    * growth the centroids are stale — fit on half the corpus, sized
-    * √(n/2) when the corpus warrants √n. The refit re-runs the SAME
-    * k-means build ([[buildIvfOver]] — one build path, refit can't
-    * drift) over the appended corpus at its own auto size, and the gate
-    * emits a violation row (zero rows = passing, typed zero-row oracle)
-    * if either invariant breaks:
+    * centroids (exactly how FAISS IVF adds work) and, on IVF+PQ, encoding
+    * them with the FROZEN codebooks ([[pqEncode]] — FAISS
+    * `IndexIVFPQ.add`), so after enough growth both are stale — fit on
+    * half the corpus, sized √(n/2) when the corpus warrants √n. The
+    * refit re-runs the SAME builds over the appended corpus at its own
+    * auto sizes — centroids through [[buildIvfOver]] (one build path,
+    * shared by every codec), codebooks through [[Quantize.buildPqOver]]
+    * composed by [[composeIvfPq]] — and the gate emits a violation row
+    * (zero rows = passing, typed zero-row oracle) if an invariant breaks:
     *
     *  - completeness: the refit index must hold exactly the appended
     *    corpus's rows (a dropped cluster in the rewrite trips this);
+    *  - well-formedness: the codec's malformed-row count must be zero;
     *  - quality: probing the refit index must reach at least the
-    *    APPENDED version's recall minus `eps` — refreshing centroids
-    *    must never cost recall (it typically gains: the refit centroids
-    *    see the grown corpus, and the auto probe fraction is
+    *    APPENDED version's recall minus `eps` — refreshing centroids or
+    *    codebooks must never cost recall (it typically gains: the refit
+    *    sees the grown corpus, and the auto probe fraction is
     *    size-consistent again).
     *
-    * Build-once: the refit index persists behind the committed gate, so
+    * Build-once: the refit index persists behind committed gates, so
     * the O(corpus) re-fit prices like every other index build — in the
     * build phase, not the query path.
     */
   def ivfRefitViolations(spark: SparkSession, sfDir: String,
                          nQueries: Int = 10, k: Int = 10,
-                         eps: Double = 0.05): DataFrame = {
-    import spark.implicits._
-    val nc = resolveClusters(spark, sfDir, 0)
-    val appended = IndexStore.indexDir(sfDir, s"ivf$nc-refit-base-v2",
-      "embeddings")
-    val batch = appendBatch(spark, sfDir)
-    // appendToIvfIndexAt is replay-idempotent on the committed manifest
-    // itself — no second guard here, one copy of the commit protocol
-    appendToIvfIndex(spark, sfDir, batch, appended, nc)
-    val union = normalizedVec(spark, sfDir).select(col("vec_id"), col("v"))
-      .unionAll(batch.select(col("vec_id"), l2Normalize(col("v")).as("v")))
-    val nc2 = autoClusters(2 * embeddingCount(spark, sfDir))
-    val refit = IndexStore.indexDir(sfDir, s"ivf$nc2-refit-v2",
-      "embeddings")
-    if (!IndexStore.committed(s"$refit/centroids") ||
-        !IndexStore.committed(s"$refit/vectors"))
-      buildIvfOver(spark, union, nc2, refit)
-    val queries = queryVectors(spark, sfDir, nQueries)
-    // the committed appended-corpus truth + ONE action for all six
-    // scalar checks (r17: was six sequential jobs)
-    val exact = appendUnionExact(spark, sfDir, union, nQueries, k)
-    def hitsAt(dir: String, p: Int): DataFrame =
-      exact.join(
-        ivfSearchAt(spark, dir, queries, k, p, nQueries.toLong)
-          .select(col("query_id"), col("id")),
-        Seq("query_id", "id"), "left_semi").agg(count(lit(1)))
-    val g = Actions.gauges(
-      "n_appended" -> ivfVectors(spark, appended).agg(count(lit(1))),
-      "n_refit" -> ivfVectors(spark, refit).agg(count(lit(1))),
-      "hits_before" -> hitsAt(appended, resolveProbe(nc, 0)),
-      "hits_after" -> hitsAt(refit, resolveProbe(nc2, 0)),
-      "n_exact" -> exact.agg(count(lit(1))))
-    val nAppended = g("n_appended").toLong
-    val nRefit = g("n_refit").toLong
-    val before = g("hits_before") / g("n_exact")
-    val after = g("hits_after") / g("n_exact")
-    val viols = Seq(
-      Option.when(nRefit != nAppended)(
-        ("vector_count", nAppended.toDouble, nRefit.toDouble)),
-      Option.when(after < before - eps)(
-        ("refit_recall", math.round((before - eps) * 10000.0) / 10000.0,
-          math.round(after * 10000.0) / 10000.0))).flatten
-    viols.toDF("invariant", "expected", "actual").orderBy("invariant")
-  }
+                         eps: Double = 0.05): DataFrame =
+    refitViolations(spark, sfDir, FlatCodec, nQueries, k, eps)
 
-  /** HARD gate for CODEBOOK refit — [[ivfRefitViolations]]' contract
-    * extended to the quantized family: IVF+PQ appends freeze the
-    * codebooks by design ([[pqEncode]] — FAISS `IndexIVFPQ.add`
-    * semantics), so quantization error drifts unbounded across appends
-    * unless a refit periodically re-trains them over the grown corpus.
-    * FAISS retrains codebooks on refit; this gate is the gauge that
-    * keeps the engine's lifecycle story symmetric. The refit re-runs
-    * BOTH parents' shared builds over the appended corpus at its own
-    * auto sizes — centroids through [[buildIvfOver]] (the SAME dir the
-    * flat refit gate builds, shared work), codebooks through
-    * [[Quantize.buildPqOver]] (one PQ build path, refit can't drift) —
-    * and composes them through the one [[composeIvfPq]] seam. Violation
-    * rows (zero = passing, typed zero-row oracle):
-    *
-    *  - completeness: the refit index must hold exactly the appended
-    *    corpus's rows;
-    *  - code width: every refit code array must have exactly m entries;
-    *  - quality: probing the refit index must reach at least the
-    *    APPENDED (frozen-codebook) version's recall minus `eps` —
-    *    re-training codebooks must never cost recall.
-    *
-    * Build-once: all three rebuilt artifacts persist behind committed
-    * gates, so the O(corpus) re-fit prices in the build phase.
+  /** [[ivfRefitViolations]] on the IVF+PQ layout: centroids AND
+    * codebooks re-trained over the grown corpus.
     */
   def ivfPqRefitViolations(spark: SparkSession, sfDir: String,
                            nQueries: Int = 10, k: Int = 10,
-                           eps: Double = 0.05): DataFrame = {
-    import spark.implicits._
+                           eps: Double = 0.05): DataFrame =
+    refitViolations(spark, sfDir, fixturePq(spark, sfDir), nQueries, k, eps)
+
+  private def refitViolations(spark: SparkSession, sfDir: String,
+                              codec: IvfCodec, nQueries: Int, k: Int,
+                              eps: Double): DataFrame = {
     val nc = resolveClusters(spark, sfDir, 0)
-    val nk = Quantize.resolveCodes(spark, sfDir, 0)
-    val m = Quantize.resolveM(spark, sfDir, 0)
-    // the SAME appended version the PQ append gate builds (idempotent)
-    val appended = IndexStore.indexDir(sfDir, s"ivfpq$nc-$m-$nk-app-v2",
-      "embeddings")
-    val batch = appendBatch(spark, sfDir)
-    appendToIvfPqIndex(spark, sfDir, batch, appended, nc, m, nk)
-    val union = normalizedVec(spark, sfDir).select(col("vec_id"), col("v"))
-      .unionAll(batch.select(col("vec_id"), l2Normalize(col("v")).as("v")))
+    val (appended, union) =
+      gateAppend(spark, sfDir, codec, nc, appendBatch(spark, sfDir))
     val n2 = 2 * embeddingCount(spark, sfDir)
     val nc2 = autoClusters(n2)
-    val nk2 = Quantize.codesFor(n2)
-    // centroid side: the refit IVF the flat gate builds (shared path +
-    // shared work); codebook side: the PQ build path over the union
-    val refitIvf = IndexStore.indexDir(sfDir, s"ivf$nc2-refit-v2",
-      "embeddings")
-    if (!IndexStore.committed(s"$refitIvf/centroids") ||
-        !IndexStore.committed(s"$refitIvf/vectors"))
+    val refitIvf = IndexStore.indexDir(sfDir,
+      s"${FlatCodec.name(nc2)}-refit-v2", "embeddings")
+    if (!ivfLayout(spark, refitIvf).committed)
       buildIvfOver(spark, union, nc2, refitIvf)
-    val refitPq = IndexStore.indexDir(sfDir, s"pq$m-$nk2-refit-v2",
-      "embeddings")
-    Quantize.buildPqOver(spark, union, m, nk2, refitPq)
-    val refit = IndexStore.indexDir(sfDir, s"ivfpq$nc2-$m-$nk2-refit-v2",
-      "embeddings")
-    if (!IndexStore.committed(s"$refit/centroids") ||
-        !IndexStore.committed(s"$refit/codebooks") ||
-        !IndexStore.committed(s"$refit/codes"))
-      composeIvfPq(spark, refitIvf, refitPq, refit)
-    val codes = IndexStore.readUnion(spark, ivfPqLayout(spark, refit)._3)
-    val nRefit = codes.count()
-    val badWidth = codes.filter(size(col("codes")) =!= m).count()
+    val (refitCodec, refit) =
+      codec.refit(spark, sfDir, union, n2, nc2, refitIvf)
     val queries = queryVectors(spark, sfDir, nQueries)
-    val exact = unionExactTopK(union, queries, k)
-    def recallOf(dir: String, probeN: Int, nkOf: Int): Double = {
-      val approx = ivfPqSearchAt(spark, dir, queries, union, k, probeN,
-        m, nkOf, rerank = 40, expectedQ = nQueries.toLong)
-      exact.join(approx.select(col("query_id"), col("id")),
-        Seq("query_id", "id"), "left_semi").count().toDouble / exact.count()
-    }
-    val before = recallOf(appended, resolveProbe(nc, 0), nk)
-    val after = recallOf(refit, resolveProbe(nc2, 0), nk2)
-    val viols = Seq(
-      Option.when(nRefit != n2)(
-        ("vector_count", n2.toDouble, nRefit.toDouble)),
-      Option.when(badWidth != 0)(
-        ("code_width", 0.0, badWidth.toDouble)),
+    // the committed appended-corpus truth + ONE action for the scalar
+    // checks (r17: was up to six sequential jobs)
+    val exact = appendUnionExact(spark, sfDir, union, nQueries, k)
+    def hitsAt(c: IvfCodec, dir: String, p: Int): DataFrame = hitCount(
+      exact, c.search(spark, dir, queries, union, k, p, nQueries.toLong))
+    val rows = IndexStore.readUnion(spark,
+      ivfLayout(spark, refit, refitCodec.data).segments)
+    val g = Actions.gauges(Seq(
+      "n_refit" -> rowCount(rows),
+      "hits_before" -> hitsAt(codec, appended, resolveProbe(nc, 0)),
+      "hits_after" -> hitsAt(refitCodec, refit, resolveProbe(nc2, 0)),
+      "n_exact" -> rowCount(exact)) ++ malformedGauge(refitCodec, rows): _*)
+    val before = g("hits_before") / g("n_exact")
+    val after = g("hits_after") / g("n_exact")
+    violationRows(spark,
+      Option.when(g("n_refit") != n2)(
+        ("vector_count", n2.toDouble, g("n_refit"))),
+      codeWidth(g),
       Option.when(after < before - eps)(
-        ("refit_recall", math.round((before - eps) * 10000.0) / 10000.0,
-          math.round(after * 10000.0) / 10000.0))).flatten
-    viols.toDF("invariant", "expected", "actual").orderBy("invariant")
+        ("refit_recall", r4(before - eps), r4(after))))
   }
 
   /** HARD gate for index DELETION — the lifecycle event between append
     * and compact (takedowns/retention; the reference's `IndexIDMap`,
     * `main.py:60-62`, makes entries id-addressable for exactly this):
     * fold the deterministic [[appendBatch]] into a version, DELETE every
-    * 5th batch id via an O(batch) tombstone version
-    * ([[deleteFromIvfIndexAt]]), then emit a violation row (zero rows =
-    * passing, typed zero-row oracle) if any invariant breaks:
+    * 5th batch id via an O(batch) tombstone version ([[deleteAt]]), then
+    * emit a violation row (zero rows = passing, typed zero-row oracle)
+    * if an invariant breaks:
     *
     *  - exclusion: searching the deleted version must return NO
     *    tombstoned id (a read path that misses the tombstone anti-join
     *    trips this);
     *  - merge-on-read completeness: the live view must hold exactly
     *    base + batch − deleted rows;
-    *  - physical drop: compacting the deleted version must leave
-    *    exactly the live rows on disk (tombstones resolved, not
-    *    carried);
-    *  - quality: probing the COMPACTED index must reach `recallFloor`
-    *    average recall@k against the exact k-NN over the live corpus —
-    *    deletion must not degrade what remains.
+    *  - physical drop (flat, [[IvfCodec.compacts]]): compacting the
+    *    deleted version must leave exactly the live rows on disk
+    *    (tombstones resolved, not carried);
+    *  - quality: probing the compacted index (flat) or the deleted
+    *    version (PQ) must reach `recallFloor` average recall@k against
+    *    the exact k-NN over the live corpus — deletion must not degrade
+    *    what remains.
     */
   def ivfDeleteViolations(spark: SparkSession, sfDir: String,
                           nQueries: Int = 10, k: Int = 10,
-                          recallFloor: Double = 0.5): DataFrame = {
-    import spark.implicits._
-    val nc = resolveClusters(spark, sfDir, 0)
-    // the SAME appended version the append gate builds (idempotent —
-    // one append job serves both gates in a suite run)
-    val appended = IndexStore.indexDir(sfDir, s"ivf$nc-app-v3",
-      "embeddings")
-    val batch = appendBatch(spark, sfDir)
-    appendToIvfIndex(spark, sfDir, batch, appended, nc)
-    val delIds = batch.select(col("vec_id"))
-      .filter(col("vec_id") % 5 === 0)
-    val deleted = IndexStore.indexDir(sfDir, s"ivf$nc-del-v2",
-      "embeddings")
-    deleteFromIvfIndexAt(spark, appended, delIds, deleted)
-    val nBase = embeddingCount(spark, sfDir)
-    val queries = queryVectors(spark, sfDir, nQueries)
-    val res = ivfSearchAt(spark, deleted, queries, k,
-      resolveProbe(nc, 0), expectedQ = nQueries.toLong)
-    val compacted = IndexStore.indexDir(sfDir, s"ivf$nc-delc-v2",
-      "embeddings")
-    if (!IndexStore.committed(s"$compacted/centroids") ||
-        !IndexStore.committed(s"$compacted/vectors"))
-      compactIvfTo(spark, deleted, compacted)
-    // the live corpus: base ∪ batch minus the deleted ids, normalized
-    // exactly as the index stores them; its exact truth is a pure
-    // fixture function — disk-committed ([[appendUnionExact]], shared
-    // with the PQ delete gate's identical live corpus)
-    val live = normalizedVec(spark, sfDir).select(col("vec_id"), col("v"))
-      .unionAll(batch.select(col("vec_id"), l2Normalize(col("v")).as("v")))
-      .join(delIds, Seq("vec_id"), "left_anti")
-    val exact = appendUnionExact(spark, sfDir, live, nQueries, k,
-      batchTag = "-del")
-    val postCompact = ivfSearchAt(spark, compacted, queries, k,
-      resolveProbe(nc, 0), expectedQ = nQueries.toLong)
-    // ONE action for the six scalar checks (r17: was six sequential jobs)
-    val g = Actions.gauges(
-      "n_del" -> delIds.agg(count(lit(1))),
-      "deleted_in_results" -> res
-        .join(delIds.select(col("vec_id").as("id")), Seq("id"),
-          "left_semi")
-        .agg(count(lit(1))),
-      "n_live" -> ivfLiveVectors(spark, deleted).agg(count(lit(1))),
-      "n_compact" -> ivfVectors(spark, compacted).agg(count(lit(1))),
-      "hits" -> exact.join(
-        postCompact.select(col("query_id"), col("id")),
-        Seq("query_id", "id"), "left_semi").agg(count(lit(1))),
-      "n_exact" -> exact.agg(count(lit(1))))
-    val nDel = g("n_del").toLong
-    val nLiveExpected = 2 * nBase - nDel
-    val deletedInResults = g("deleted_in_results").toLong
-    val nLive = g("n_live").toLong
-    val nCompact = g("n_compact").toLong
-    val recall = g("hits") / g("n_exact")
-    val viols = Seq(
-      Option.when(deletedInResults != 0L)(
-        ("deleted_in_results", 0.0, deletedInResults.toDouble)),
-      Option.when(nLive != nLiveExpected)(
-        ("live_count", nLiveExpected.toDouble, nLive.toDouble)),
-      Option.when(nCompact != nLiveExpected)(
-        ("compact_count", nLiveExpected.toDouble, nCompact.toDouble)),
-      Option.when(recall < recallFloor)(
-        ("post_compact_recall", recallFloor,
-          math.round(recall * 10000.0) / 10000.0))).flatten
-    viols.toDF("invariant", "expected", "actual").orderBy("invariant")
-  }
+                          recallFloor: Double = 0.5): DataFrame =
+    deleteViolations(spark, sfDir, FlatCodec, nQueries, k, recallFloor)
 
-  /** HARD gate for IVF+PQ DELETION — [[ivfDeleteViolations]]' contract
-    * on the quantized production-default layout, so the takedown
-    * surface is symmetric across both index families: fold the
-    * deterministic [[appendBatch]] into an IVF+PQ version, delete every
-    * 5th batch id via an O(batch) tombstone version
-    * ([[deleteFromIvfPqIndexAt]]), then emit a violation row (zero rows
-    * = passing, typed zero-row oracle) if any invariant breaks:
-    *
-    *  - exclusion: the ADC search over the deleted version must return
-    *    NO tombstoned id;
-    *  - merge-on-read completeness: the live code view must hold
-    *    exactly base + batch − deleted rows;
-    *  - quality: probing the deleted version must reach `recallFloor`
-    *    average recall@k against the exact k-NN over the LIVE corpus
-    *    (same floor as the PQ append gate — quantization loss composes
-    *    with probe misses, deletion must add nothing).
+  /** [[ivfDeleteViolations]] on the IVF+PQ layout, at the PQ append
+    * gate's floor (quantization loss composes with probe misses,
+    * deletion must add nothing).
     */
   def ivfPqDeleteViolations(spark: SparkSession, sfDir: String,
                             nQueries: Int = 10, k: Int = 10,
-                            recallFloor: Double = 0.35): DataFrame = {
-    import spark.implicits._
+                            recallFloor: Double = 0.35): DataFrame =
+    deleteViolations(spark, sfDir, fixturePq(spark, sfDir), nQueries, k,
+      recallFloor)
+
+  private def deleteViolations(spark: SparkSession, sfDir: String,
+                               codec: IvfCodec, nQueries: Int, k: Int,
+                               recallFloor: Double): DataFrame = {
     val nc = resolveClusters(spark, sfDir, 0)
-    val nk = Quantize.resolveCodes(spark, sfDir, 0)
-    val m = Quantize.resolveM(spark, sfDir, 0)
-    val appended = IndexStore.indexDir(sfDir, s"ivfpq$nc-$m-$nk-app-v2",
-      "embeddings")
     val batch = appendBatch(spark, sfDir)
-    appendToIvfPqIndex(spark, sfDir, batch, appended, nc, m, nk)
+    val (appended, union) = gateAppend(spark, sfDir, codec, nc, batch)
     val delIds = batch.select(col("vec_id"))
       .filter(col("vec_id") % 5 === 0)
-    val deleted = IndexStore.indexDir(sfDir, s"ivfpq$nc-$m-$nk-del-v2",
+    val deleted = IndexStore.indexDir(sfDir, s"${codec.name(nc)}-del-v2",
       "embeddings")
-    deleteFromIvfPqIndexAt(spark, appended, delIds, deleted)
-    val nBase = embeddingCount(spark, sfDir)
-    val live = normalizedVec(spark, sfDir).select(col("vec_id"), col("v"))
-      .unionAll(batch.select(col("vec_id"), l2Normalize(col("v")).as("v")))
-      .join(delIds, Seq("vec_id"), "left_anti")
-    val queries = queryVectors(spark, sfDir, nQueries)
-    val approx = ivfPqSearchAt(spark, deleted, queries, live, k,
-      resolveProbe(nc, 0), m, nk, rerank = 40,
-      expectedQ = nQueries.toLong)
-    // the SAME committed live-corpus truth as the flat delete gate
-    // (identical corpus — one artifact serves both) + ONE action for
-    // the five scalar checks (r17: was five sequential jobs)
+    deleteAt(spark, codec.data, appended, delIds, deleted,
+      IndexStore.DefaultMaxSegments)
+    // the live corpus and its committed exact truth — one artifact
+    // serves every codec's delete gate
+    val live = union.join(delIds, Seq("vec_id"), "left_anti")
     val exact = appendUnionExact(spark, sfDir, live, nQueries, k,
       batchTag = "-del")
-    val g = Actions.gauges(
-      "n_del" -> delIds.agg(count(lit(1))),
-      "deleted_in_results" -> approx
-        .join(delIds.select(col("vec_id").as("id")), Seq("id"),
-          "left_semi")
-        .agg(count(lit(1))),
-      "n_live" -> excludeTombstoned(spark, deleted,
-        IndexStore.readUnion(spark, ivfPqLayout(spark, deleted)._3))
-        .agg(count(lit(1))),
-      "hits" -> exact.join(approx.select(col("query_id"), col("id")),
-        Seq("query_id", "id"), "left_semi").agg(count(lit(1))),
-      "n_exact" -> exact.agg(count(lit(1))))
-    val nDel = g("n_del").toLong
-    val nLiveExpected = 2 * nBase - nDel
-    val deletedInResults = g("deleted_in_results").toLong
-    val nLive = g("n_live").toLong
+    val queries = queryVectors(spark, sfDir, nQueries)
+    def search(dir: String): DataFrame = codec.search(spark, dir, queries,
+      live, k, resolveProbe(nc, 0), nQueries.toLong)
+    val res = search(deleted)
+    val compacted = Option.when(codec.compacts) {
+      val dir = IndexStore.indexDir(sfDir, s"${codec.name(nc)}-delc-v2",
+        "embeddings")
+      if (!ivfLayout(spark, dir).committed) compactIvfTo(spark, deleted, dir)
+      dir
+    }
+    // ONE action for the scalar checks (r17: was five to six jobs)
+    val g = Actions.gauges(Seq(
+      "n_del" -> rowCount(delIds),
+      "deleted_in_results" -> rowCount(res.join(
+        delIds.select(col("vec_id").as("id")), Seq("id"), "left_semi")),
+      "n_live" -> rowCount(ivfLiveVectors(spark, deleted, codec.data)),
+      "hits" -> hitCount(exact, compacted.fold(res)(search)),
+      "n_exact" -> rowCount(exact)) ++
+      compacted.map(d => "n_compact" -> rowCount(ivfVectors(spark, d))): _*)
+    val nLive = 2 * embeddingCount(spark, sfDir) - g("n_del")
     val recall = g("hits") / g("n_exact")
-    val viols = Seq(
-      Option.when(deletedInResults != 0L)(
-        ("deleted_in_results", 0.0, deletedInResults.toDouble)),
-      Option.when(nLive != nLiveExpected)(
-        ("live_count", nLiveExpected.toDouble, nLive.toDouble)),
-      Option.when(recall < recallFloor)(
-        ("avg_recall", recallFloor,
-          math.round(recall * 10000.0) / 10000.0))).flatten
-    viols.toDF("invariant", "expected", "actual").orderBy("invariant")
+    violationRows(spark,
+      Option.when(g("deleted_in_results") != 0)(
+        ("deleted_in_results", 0.0, g("deleted_in_results"))),
+      Option.when(g("n_live") != nLive)(("live_count", nLive, g("n_live"))),
+      g.get("n_compact").filter(_ != nLive).map(("compact_count", nLive, _)),
+      Option.when(recall < recallFloor)((
+        if (compacted.isEmpty) "avg_recall" else "post_compact_recall",
+        recallFloor, r4(recall))))
   }
+
+  /** The IVF+PQ codec at the fixture's auto-sized m and nk. */
+  private def fixturePq(spark: SparkSession, sfDir: String): PqCodec =
+    PqCodec(Quantize.resolveM(spark, sfDir, 0),
+      Quantize.resolveCodes(spark, sfDir, 0))
+
+  /** The lifecycle gates' appended version: `batch` folded into the
+    * codec's build-once base at a committed dir ([[appendAt]] is
+    * replay-idempotent on it, so one codec's append, refit and delete
+    * gates share ONE append job). Returns (dir, the appended corpus
+    * base ∪ batch, normalized exactly as the index stores it).
+    */
+  private def gateAppend(spark: SparkSession, sfDir: String,
+                         codec: IvfCodec, nc: Int, batch: DataFrame,
+                         tag: String = ""): (String, DataFrame) = {
+    val out = IndexStore.indexDir(sfDir,
+      s"${codec.name(nc)}-app$tag-v${codec.appVersion}", "embeddings")
+    appendAt(spark, codec, codec.base(spark, sfDir, nc), batch, out,
+      IndexStore.DefaultMaxSegments)
+    (out, normalizedVec(spark, sfDir).select(col("vec_id"), col("v"))
+      .unionAll(batch.select(col("vec_id"), l2Normalize(col("v")).as("v"))))
+  }
+
+  private def rowCount(df: DataFrame): DataFrame = df.agg(count(lit(1)))
+
+  /** Recall numerator: exact (query_id, id) pairs the approximate top-k
+    * also returned.
+    */
+  private def hitCount(exact: DataFrame, approx: DataFrame): DataFrame =
+    rowCount(exact.join(approx.select(col("query_id"), col("id")),
+      Seq("query_id", "id"), "left_semi"))
+
+  /** The codec-only well-formedness gauge ([[IvfCodec.malformed]]) and
+    * its `code_width` violation row.
+    */
+  private def malformedGauge(codec: IvfCodec,
+                             rows: DataFrame): Seq[(String, DataFrame)] =
+    codec.malformed.map(c => "bad_width" -> rowCount(rows.filter(c))).toSeq
+  private def codeWidth(g: Map[String, Double])
+      : Option[(String, Double, Double)] =
+    g.get("bad_width").filter(_ != 0).map(("code_width", 0.0, _))
+
+  /** A zero-row gate's result: one (invariant, expected, actual) row per
+    * violated invariant.
+    */
+  private def violationRows(spark: SparkSession,
+                            viols: Option[(String, Double, Double)]*)
+      : DataFrame = {
+    import spark.implicits._
+    viols.flatten.toDF("invariant", "expected", "actual").orderBy("invariant")
+  }
+
+  private def r4(x: Double): Double = math.round(x * 10000.0) / 10000.0
 
   /** Disk-committed exact truth over the APPENDED corpus (base ∪ the
     * deterministic growth batch) per (fixture fingerprint, Q, k, batch
@@ -2424,10 +2278,8 @@ object AnnSearch {
       : Double = {
     val exact = exactOverride.getOrElse(unionExactTopK(union, queries, k))
     val approx = ivfSearchAt(spark, dir, queries, k, nProbe, expectedQ)
-    val g = Actions.gauges(
-      "hits" -> exact.join(approx.select(col("query_id"), col("id")),
-        Seq("query_id", "id"), "left_semi").agg(count(lit(1))),
-      "n_exact" -> exact.agg(count(lit(1))))
+    val g = Actions.gauges("hits" -> hitCount(exact, approx),
+      "n_exact" -> rowCount(exact))
     g("hits") / g("n_exact")
   }
 
@@ -2583,7 +2435,6 @@ object AnnSearch {
   def hybridProbeViolations(spark: SparkSession, sfDir: String,
                             perLeg: Int = 50,
                             recallFloor: Double = 0.6): DataFrame = {
-    import spark.implicits._
     def legRecall(dir: String, queries: DataFrame, nc: Int,
                   expectedQ: Long): (Int, Double) = {
       val np = autoProbe(nc)
@@ -2603,8 +2454,7 @@ object AnnSearch {
     val (embNp, mmrRecall) = legRecall(
       loadOrBuildIvf(spark, sfDir, embNc),
       queryVectors(spark, sfDir, 10), embNc, expectedQ = 10L)
-    def r4(x: Double): Double = math.round(x * 10000.0) / 10000.0
-    val viols = Seq(
+    violationRows(spark,
       Option.when(docNp >= docNc)(
         ("hybrid_probe_saturated", (docNc - 1).toDouble, docNp.toDouble)),
       Option.when(embNp >= embNc)(
@@ -2612,7 +2462,6 @@ object AnnSearch {
       Option.when(hybridRecall < recallFloor)(
         ("hybrid_leg_recall", recallFloor, r4(hybridRecall))),
       Option.when(mmrRecall < recallFloor)(
-        ("mmr_pool_recall", recallFloor, r4(mmrRecall)))).flatten
-    viols.toDF("invariant", "expected", "actual").orderBy("invariant")
+        ("mmr_pool_recall", recallFloor, r4(mmrRecall))))
   }
 }

@@ -685,9 +685,12 @@ object GraphAnn {
       // nodes): the build side is the beam itself — Q·ef slim rows,
       // priced like the frontier (it previously planned as a sort-merge
       // anti join re-shuffling BOTH sides once the distinct above was
-      // removed; hinted it is one broadcast, no exchange)
+      // removed; hinted it is one broadcast, no exchange). Unpruned,
+      // `visited` is the whole trace, not Q·ef rows: the frontier price
+      // does not bound it, so the planner picks the join by size
+      val seen = visited.select(col("query_id"), col("id"))
       val fresh = exp.join(
-        hinted(visited.select(col("query_id"), col("id")), frontierBytes),
+        if (pruneToEf) hinted(seen, frontierBytes) else seen,
         Seq("query_id", "id"), "left_anti")
       // fetch-then-attach: broadcast ONLY the slim (query_id, id,
       // bucket) triples into the bucket-pruned vector scan, and attach

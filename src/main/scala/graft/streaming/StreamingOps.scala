@@ -81,7 +81,9 @@ object StreamingOps extends Serializable {
         java.nio.file.Paths.get(ckptBase), s"graft_ckpt_$name").toString
       val q = df.writeStream.outputMode(mode).format("memory")
         .queryName(name).option("checkpointLocation", ckpt).start()
-      try q.processAllAvailable() finally {
+      // the checkpoint delete sits in its own finally: a throwing
+      // stop() or debug dump must not leak the tmpfs dir
+      try q.processAllAvailable() finally try {
         if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG")) {
           System.err.println(f"[stream] $name start->drained " +
             f"${(System.nanoTime() - t0) / 1e9}%.3f s")
@@ -91,9 +93,8 @@ object StreamingOps extends Serializable {
           }
         }
         q.stop()
-        org.apache.commons.io.FileUtils.deleteDirectory(
-          new java.io.File(ckpt))
-      }
+      } finally org.apache.commons.io.FileUtils.deleteDirectory(
+        new java.io.File(ckpt))
     }
     statePartitions match {
       case None => run() // no conf touched on the default path

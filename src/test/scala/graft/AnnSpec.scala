@@ -505,7 +505,7 @@ class AnnSpec extends SparkSpec {
     AnnSearch.compactIvfTo(spark, del, comp)
     assert(AnnSearch.ivfVectors(spark, comp).count() ==
       nApp - deletedSet.size)
-    assert(AnnSearch.ivfTombSegments(spark, comp).isEmpty)
+    assert(AnnSearch.ivfLayout(spark, comp).tombstones.isEmpty)
     val viaCompacted = AnnSearch
       .ivfSearchCollectAt(spark, comp, queries, 10, np)
       .collect().map(_.toSeq).toSeq
@@ -555,16 +555,16 @@ class AnnSpec extends SparkSpec {
     val v3 = tmp("graft_pqdel_v3")
     AnnSearch.appendToIvfPqIndexAt(spark, v2, shifted(80000, 0.02),
       v3, 8, nk, maxSegments = 8)
-    assert(AnnSearch.ivfTombSegments(spark, v3).nonEmpty)
+    assert(AnnSearch.ivfLayout(spark, v3).tombstones.nonEmpty)
     // fold trigger: chain has 3 code segments; maxSegments = 2 folds
     val v4 = tmp("graft_pqdel_v4")
     AnnSearch.appendToIvfPqIndexAt(spark, v3, shifted(90000, 0.03),
       v4, 8, nk, maxSegments = 2)
     // folded: one code segment, tombstones retired, masked codes gone
-    assert(AnnSearch.ivfPqLayout(spark, v4)._3.size == 1)
-    assert(AnnSearch.ivfTombSegments(spark, v4).isEmpty)
+    assert(AnnSearch.ivfLayout(spark, v4, "codes").segments.size == 1)
+    assert(AnnSearch.ivfLayout(spark, v4).tombstones.isEmpty)
     val codes = graft.sources.IndexStore
-      .readUnion(spark, AnnSearch.ivfPqLayout(spark, v4)._3)
+      .readUnion(spark, AnnSearch.ivfLayout(spark, v4, "codes").segments)
     assert(codes.count() == 4 * n - nDel)
     assert(codes.join(delIds, Seq("vec_id"), "left_semi").count() == 0)
   }
@@ -774,7 +774,8 @@ class AnnSpec extends SparkSpec {
       8, nk)
     assert(IndexStore.readManifest(spark, ctl).count(_._1 == "codes") == 3)
     def resolved(dir: String) =
-      IndexStore.readUnion(spark, AnnSearch.ivfPqLayout(spark, dir)._3)
+      IndexStore.readUnion(spark,
+        AnnSearch.ivfLayout(spark, dir, "codes").segments)
         .select(col("vec_id"), col("cluster"), col("codes"))
         .orderBy("vec_id", "cluster").collect().map(_.toSeq).toSeq
     assert(resolved(v2).nonEmpty && resolved(v2) == resolved(ctl))

@@ -1,0 +1,137 @@
+package graft
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import graft.operators.{AnnSearch, Quantize}
+import graft.sources.IndexStore
+
+/** The IVF write lifecycle (append, delete, in-chain fold) is one body
+  * over two codecs, flat vectors and PQ codes. These specs drive both
+  * through their public `*At` entry points and pin that the guards and
+  * the fold/tombstone policy are the same for each.
+  */
+class IvfLifecycleSpec extends SparkSpec {
+
+  /** One codec's lifecycle entry points over its fixture base index. */
+  case class Chain(name: String, data: String, base: String,
+                   append: (String, DataFrame, String, Int) => Unit,
+                   delete: (String, DataFrame, String) => Unit)
+
+  private lazy val chains: Seq[Chain] = {
+    val m = Quantize.resolveM(spark, sf, 0)
+    val nk = AnnSearch.pqCodebookSize(spark, sf)
+    Seq(
+      Chain("flat", "vectors", AnnSearch.ensureIvfIndex(spark, sf),
+        (dir, b, out, maxSeg) =>
+          AnnSearch.appendToIvfIndexAt(spark, dir, b, out, maxSeg),
+        (dir, ids, out) => AnnSearch.deleteFromIvfIndexAt(spark, dir, ids,
+          out)),
+      Chain("pq", "codes", AnnSearch.buildIvfPqIndex(spark, sf),
+        (dir, b, out, maxSeg) =>
+          AnnSearch.appendToIvfPqIndexAt(spark, dir, b, out, m, nk, maxSeg),
+        (dir, ids, out) => AnnSearch.deleteFromIvfPqIndexAt(spark, dir, ids,
+          out)))
+  }
+
+  private def tmp(p: String): String =
+    java.nio.file.Files.createTempDirectory(p).toString
+
+  private def shifted(off: Long, d: Double): DataFrame =
+    Tables.load(spark, sf, "embeddings")
+      .select((col("vec_id") + off).as("vec_id"),
+        expr(s"transform(embedding, x -> cast(x as double) + $d)").as("v"))
+
+  /** Every file under `dir` with its size and mtime: a write of any kind
+    * changes it. (The committed-manifest read is cached per JVM, so the
+    * disk is what shows a replay rewrote nothing.)
+    */
+  private def files(dir: String): Set[(String, Long, Long)] = {
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(IndexStore.hadoopConf)
+    val it = fs.listFiles(new org.apache.hadoop.fs.Path(dir), true)
+    var out = Set.empty[(String, Long, Long)]
+    while (it.hasNext) {
+      val f = it.next()
+      out += ((f.getPath.toString, f.getLen, f.getModificationTime))
+    }
+    out
+  }
+
+  test("append and delete guards hold on both codecs") {
+    for (c <- chains) {
+      // a batch of the wrong width would NULL every centroid distance
+      val wide = shifted(140000L, 0.01)
+        .select(col("vec_id"), concat(col("v"), array(lit(0.0))).as("v"))
+      val out = tmp(s"graft_guard_${c.name}_dim")
+      val dimErr = intercept[IllegalArgumentException](
+        c.append(c.base, wide, out, IndexStore.DefaultMaxSegments))
+      assert(dimErr.getMessage.contains("batch dim"), c.name)
+      assert(!IndexStore.committed(s"$out/manifest"), c.name)
+      // a base that never committed is refused by append and delete
+      val empty = tmp(s"graft_guard_${c.name}_base")
+      val appErr = intercept[IllegalArgumentException](c.append(empty,
+        shifted(140000L, 0.01), tmp("graft_guard_out"),
+        IndexStore.DefaultMaxSegments))
+      assert(appErr.getMessage.contains("is not a committed index version"),
+        c.name)
+      val delErr = intercept[IllegalArgumentException](c.delete(empty,
+        shifted(140000L, 0.01).select(col("vec_id")), tmp("graft_guard_out")))
+      assert(delErr.getMessage.contains("is not a committed index version"),
+        c.name)
+      // a replay onto a committed version is a no-op, even with another
+      // batch: nothing under `out` is rewritten
+      val app = tmp(s"graft_guard_${c.name}_app")
+      c.append(c.base, shifted(140000L, 0.01), app,
+        IndexStore.DefaultMaxSegments)
+      val appFiles = files(app)
+      c.append(c.base, shifted(150000L, 0.02), app,
+        IndexStore.DefaultMaxSegments)
+      assert(files(app) == appFiles, c.name)
+      val del = tmp(s"graft_guard_${c.name}_del")
+      c.delete(app, shifted(140000L, 0.01).select(col("vec_id"))
+        .filter(col("vec_id") % 2 === 0), del)
+      val delFiles = files(del)
+      c.delete(app, shifted(140000L, 0.01).select(col("vec_id")), del)
+      assert(files(del) == delFiles, c.name)
+    }
+  }
+
+  test("flat and PQ chains keep the same live ids and segment shape " +
+      "through append, delete and the in-chain fold") {
+    val b1 = shifted(110000L, 0.01)
+    val steps: Seq[(String, Chain, String) => Unit] = Seq(
+      (dir, c, out) => c.append(dir, b1, out, IndexStore.DefaultMaxSegments),
+      (dir, c, out) => c.delete(dir,
+        b1.select(col("vec_id")).filter(col("vec_id") % 2 === 0), out),
+      (dir, c, out) => c.append(dir, shifted(120000L, 0.02), out, 8),
+      // 3 data segments + 1 > 2: the fold
+      (dir, c, out) => c.append(dir, shifted(130000L, 0.03), out, 2))
+    // (live ids, data segments, tombstone segments) per version
+    def state(c: Chain, dir: String): (Set[Long], Int, Int) = {
+      val layout = AnnSearch.ivfLayout(spark, dir, c.data)
+      (AnnSearch.ivfLiveVectors(spark, dir, c.data).select("vec_id")
+        .collect().map(_.getLong(0)).toSet,
+        layout.segments.size, layout.tombstones.size)
+    }
+    var dirs = chains.map(_.base)
+    for ((step, i) <- steps.zipWithIndex) {
+      dirs = chains.zip(dirs).map { case (c, dir) =>
+        val out = tmp(s"graft_sym_${c.name}_v${i + 1}")
+        step(dir, c, out)
+        out
+      }
+      val Seq(flat, pq) = chains.zip(dirs).map { case (c, d) => state(c, d) }
+      val sameIds = flat._1.nonEmpty && flat._1 == pq._1
+      assert(sameIds, s"step ${i + 1}: flat-only " +
+        s"${(flat._1 -- pq._1).take(5)}, pq-only ${(pq._1 -- flat._1).take(5)}")
+      assert((flat._2, flat._3) == (pq._2, pq._3), s"step ${i + 1}")
+    }
+    // the last append folded both chains: one data segment, tombstones
+    // retired, and the deleted half of the first batch stays gone
+    val (ids, nSegs, nTombs) = state(chains.head, dirs.head)
+    assert(nSegs == 1 && nTombs == 0)
+    val deleted = b1.select("vec_id").filter(col("vec_id") % 2 === 0)
+      .collect().map(_.getLong(0)).toSet
+    assert(deleted.nonEmpty && (ids & deleted).isEmpty)
+  }
+}

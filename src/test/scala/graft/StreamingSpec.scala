@@ -242,8 +242,8 @@ class StreamingSpec extends SparkSpec {
     }
     // v0 is the pure-add version (no tombstones yet); v1 carries the
     // delete batch's tombstone segment
-    assert(AnnSearch.ivfTombSegments(spark, s"$root/v0").isEmpty)
-    assert(AnnSearch.ivfTombSegments(spark, s"$root/v1").nonEmpty)
+    assert(AnnSearch.ivfLayout(spark, s"$root/v0").tombstones.isEmpty)
+    assert(AnnSearch.ivfLayout(spark, s"$root/v1").tombstones.nonEmpty)
   }
 
   test("streamed GRAPH delete-at-ingest chains an add and a MIXED " +
