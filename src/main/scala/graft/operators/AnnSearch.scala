@@ -219,7 +219,7 @@ object AnnSearch {
     * bounded collect (`isin` literals → static PartitionFilters — the
     * cheapest plan when the probe set is a few MB); above it the search
     * keeps the probe DISTRIBUTED and lets dynamic partition pruning do
-    * the same file-level pruning ([[ivfSearchJoinedAt]]). What this
+    * the same file-level pruning ([[probeScan]]). What this
     * switch removes is the `isin`-literal COLLECT of Q·d doubles plus
     * Q·nprobe assignment rows (at d=2048 ~16 KB per query: 1024 queries
     * ≈ 16 MB fine, a 10⁶-query batch ~16 GB — a driver OOM). The joined
@@ -256,16 +256,14 @@ object AnnSearch {
     centersDf.select(col("center")).head.getSeq[Double](0).length
 
   /** The probe side of the joined strategy: broadcast while the staged
-    * payload is bounded, shuffle once it isn't. `expectedQ = 0` means
-    * "caller knows the probe is small" (fixture-forced plan tests) and
-    * keeps the broadcast shape.
+    * payload (`d` doubles per probe row) is bounded, shuffle once it
+    * isn't.
     */
   private def probeSide(probes: DataFrame, expectedQ: Long, nProbe: Int,
-                        d: => Int): DataFrame =
+                        d: Int): DataFrame =
     // compare by division so an enormous expectedQ cannot overflow the
     // product into a negative (which would silently keep the broadcast)
-    if (expectedQ > 0 &&
-        expectedQ > BroadcastProbeByteLimit /
+    if (expectedQ > BroadcastProbeByteLimit /
           math.max(1L, nProbe.toLong * d * 8L)) probes
     else broadcast(probes)
 
@@ -304,8 +302,8 @@ object AnnSearch {
     * the rows become the broadcast join side. This bounded collect IS the
     * index probe mechanism, not a driver-side compute loop; without it
     * the probe subplan would run twice (collect + lazy plan). Bounded by
-    * [[JoinProbeQueryThreshold]] at the call sites — high-Q searches
-    * never reach it.
+    * [[JoinProbeQueryThreshold]] at its one call site ([[probeScan]]) —
+    * high-Q searches never reach it.
     */
   private def probe(spark: SparkSession, queries: DataFrame,
                     centersDf: DataFrame,
@@ -356,29 +354,15 @@ object AnnSearch {
     * the probed cluster partitions. Above [[JoinProbeQueryThreshold]]
     * queries the probe auto-switches from the bounded collect to the
     * broadcast-probe-join + dynamic-partition-pruning plan
-    * ([[ivfSearchJoinedAt]]) so a batch-query run never stages Q·d
-    * doubles on the driver.
+    * ([[probeScan]]) so a batch-query run never stages Q·d doubles on
+    * the driver.
     */
   def ivfKnn(spark: SparkSession, sfDir: String, nQueries: Int = 10,
              k: Int = 10, nClusters: Int = 0, nProbe: Int = 0): DataFrame = {
     val nc = resolveClusters(spark, sfDir, nClusters)
     val dir = loadOrBuildIvf(spark, sfDir, nc)
-    ivfSearchAt(spark, dir, queryVectors(spark, sfDir, nQueries), k,
+    searchIndexAt(spark, dir, queryVectors(spark, sfDir, nQueries), k,
       resolveProbe(nc, nProbe), expectedQ = nQueries.toLong)
-  }
-
-  /** [[ivfKnn]] forced onto the joined-probe strategy regardless of Q —
-    * the high-Q plan made testable at fixture scale (the bit-identity
-    * spec and the DPP plan assertion run against this).
-    */
-  private[graft] def ivfKnnJoined(spark: SparkSession, sfDir: String,
-                                  nQueries: Int = 10, k: Int = 10,
-                                  nClusters: Int = 0, nProbe: Int = 0,
-                                  expectedQ: Long = 0L): DataFrame = {
-    val nc = resolveClusters(spark, sfDir, nClusters)
-    val dir = loadOrBuildIvf(spark, sfDir, nc)
-    ivfSearchJoinedAt(spark, dir, queryVectors(spark, sfDir, nQueries), k,
-      resolveProbe(nc, nProbe), expectedQ)
   }
 
   /** An IVF index's code format — FAISS's split of the coarse quantizer
@@ -431,7 +415,7 @@ object AnnSearch {
     def search(spark: SparkSession, dir: String, queries: DataFrame,
                corpus: DataFrame, k: Int, nProbe: Int,
                expectedQ: Long): DataFrame =
-      ivfSearchAt(spark, dir, queries, k, nProbe, expectedQ)
+      searchIndexAt(spark, dir, queries, k, nProbe, expectedQ)
     def refit(spark: SparkSession, sfDir: String, union: DataFrame,
               n: Long, nc: Int, ivfDir: String): (IvfCodec, String) =
       (this, ivfDir)
@@ -586,82 +570,90 @@ object AnnSearch {
       : DataFrame =
     liveRows(spark, ivfLayout(spark, dir, data))
 
-  /** The IVF probe-and-scan against an EXPLICIT index dir — shared by the
-    * fixture-corpus [[ivfKnn]] and the appended-version gate, so the two
-    * can never drift in probe tie-breaking or candidate shaping.
-    * `expectedQ` is the caller's known query count (a filter literal at
-    * every call site — never a count job); above
-    * [[JoinProbeQueryThreshold]] the search dispatches to the
-    * driver-safe joined strategy.
+  /** THE IVF probe-and-scan of every code format — FAISS's `IndexIVF`
+    * search (`main.py:138-165`), with the code format entering only as
+    * the caller's `score` column over the joined (query_id, qu, probe
+    * side…, scanned row…) rows. Returns (query_id, qu, id, score)
+    * candidates minus tombstoned ids; flat, SQ8, PQ and filtered
+    * searches differ only in that column and in the ranking tail they
+    * apply, so probe tie-breaking, strategy choice, broadcast pricing,
+    * segment fan-out and masking can never drift between them.
+    *
+    *  - up to [[JoinProbeQueryThreshold]] queries (`expectedQ`, the
+    *    caller's known query count — a filter literal at every call
+    *    site, never a count job) the probe is COLLECTED ([[probe]]): its
+    *    cluster ids become `isin` literals on the union scan (static
+    *    PartitionFilters, pushed into every segment);
+    *  - above it the probe stays a DISTRIBUTED plan ([[probeFrame]])
+    *    and becomes the broadcast side of an equi-join on the PARTITION
+    *    column, so dynamic partition pruning closes the same file-level
+    *    pruning without staging Q·d doubles on the driver (the plan
+    *    [[sqlAnnIvf]]'s BROADCAST hint produces). The join runs PER
+    *    SEGMENT with the union ABOVE it — DPP attaches to a partitioned
+    *    file scan, not to a Union; the probe side's exchange is planned
+    *    once and reused across branches — and above
+    *    [[BroadcastProbeByteLimit]] of staged payload the broadcast hint
+    *    drops ([[probeSide]]);
+    *  - `perQuery`: an optional query_id-keyed side and its width in
+    *    doubles (PQ's ADC LUTs). The collect path broadcasts it on its
+    *    own, per QUERY: joined into the probe rows it would be
+    *    denormalized across every probed cluster — Q·nProbe·(m·nk·8 B)
+    *    of broadcast, ~0.5 MB/row at d=2048 (m=256, nk=256), which
+    *    OOM'd a 24 g heap on the K-shard scatter-gather at the deep×wide
+    *    point. The joined path carries it on the probe side, priced into
+    *    the broadcast bound with the query vector;
+    *  - `rowFilter`: a predicate on the scanned rows (the filtered
+    *    index's `label = L`), pushed into the same partition scan.
+    *
+    * Tombstone exclusion sits on the (unioned) candidates: the probe
+    * join must sit directly on each partitioned scan for DPP to attach,
+    * and a deleted id must not burn a quantized path's rerank slots
+    * either ([[excludeTombstoned]] is a no-op plan-wise on undeleted
+    * versions).
     */
-  private[operators] def ivfSearchAt(spark: SparkSession, dir: String,
-                                     queries: DataFrame, k: Int,
-                                     nProbe: Int,
-                                     expectedQ: Long = 0L): DataFrame = {
-    if (expectedQ > JoinProbeQueryThreshold)
-      return ivfSearchJoinedAt(spark, dir, queries, k, nProbe, expectedQ)
-    ivfSearchCollectAt(spark, dir, queries, k, nProbe)
+  private def probeScan(spark: SparkSession, layout: IvfLayout,
+                        queries: DataFrame, nProbe: Int, expectedQ: Long,
+                        score: Column,
+                        perQuery: Option[(DataFrame, Int)] = None,
+                        rowFilter: Option[Column] = None): DataFrame = {
+    val centersDf = IndexStore.readCached(spark, layout.centroids)
+    val side = perQuery.map(_._1)
+    def scan(rows: DataFrame) = rowFilter.fold(rows)(rows.filter)
+    def candidates(joined: DataFrame) = joined
+      .filter(col("vec_id") =!= col("query_id"))
+      .select(col("query_id"), col("qu"), col("vec_id").as("id"), score)
+    val cands =
+      if (expectedQ <= JoinProbeQueryThreshold) {
+        val (probedClusters, p) = probe(spark, queries, centersDf, nProbe)
+        val scanned = broadcast(p).join(
+          scan(IndexStore.readUnion(spark, layout.segments)
+            .filter(col("cluster").isin(probedClusters: _*))), "cluster")
+        candidates(side.fold(scanned)(l =>
+          scanned.join(broadcast(l), "query_id")))
+      } else {
+        val probes = probeFrame(queries, centersDf, nProbe)
+        val p = probeSide(side.fold(probes)(probes.join(_, "query_id")),
+          expectedQ, nProbe, centroidDim(centersDf) + perQuery.fold(0)(_._2))
+        layout.segments.map(seg => candidates(
+          p.join(scan(IndexStore.readCached(spark, seg)), "cluster")))
+          .reduce(_ unionAll _)
+      }
+    excludeTombstoned(spark, layout.tombstones, cands, "id")
   }
 
-  /** The low-Q (collect-probe) strategy against an explicit dir —
-    * exposed so the spec can pin joined-vs-collect bit-identity on the
-    * SAME (possibly manifested) version.
+  /** Flat IVF top-k against an EXPLICIT (possibly manifested or
+    * tombstoned) index dir: exact squared L2 over the probed rows,
+    * ranked by [[VectorSearch.topK]]. The one flat read of every caller
+    * — fixture search, lifecycle gates, streaming chains, time travel,
+    * shard legs and the benchmark — so none can drift in probe
+    * tie-breaking or candidate shaping.
     */
-  private[graft] def ivfSearchCollectAt(spark: SparkSession, dir: String,
-                                        queries: DataFrame, k: Int,
-                                        nProbe: Int): DataFrame = {
-    val layout = ivfLayout(spark, dir)
-    val centersDf = IndexStore.readCached(spark, layout.centroids)
-    val (probedClusters, probes) = probe(spark, queries, centersDf, nProbe)
-    // tombstone exclusion ABOVE the isin-filtered scan: the static
-    // PartitionFilters stay on the scan, the anti-join only thins rows
-    val assigned = excludeTombstoned(spark, layout.tombstones,
-      IndexStore.readUnion(spark, layout.segments)
-        .filter(col("cluster").isin(probedClusters: _*)))
-    VectorSearch.topK(
-      broadcast(probes).join(assigned, "cluster")
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id").as("id"),
-          squaredL2(col("qu"), col("v")).as("dist")), k)
-  }
-
-  /** The high-Q IVF probe-and-scan: the probe stays a DISTRIBUTED plan
-    * ([[probeFrame]]) and becomes the broadcast side of an equi-join on
-    * the PARTITION column, so Spark's dynamic partition pruning closes
-    * the same file-level pruning the collect path gets from its `isin`
-    * literals — without ever staging query vectors on the driver (the
-    * exact plan [[sqlAnnIvf]]'s BROADCAST hint produces, now the
-    * programmatic path too). The join runs PER SEGMENT with the union
-    * ABOVE it (join distributes over union; [[VectorSearch.topK]] ranks
-    * the union) because DPP attaches to a partitioned file scan, not to
-    * a Union — the broadcast exchange of the probe side is planned once
-    * and reused across branches. Same probe window, same distance
-    * expression, same ranking tail as the collect path → bit-identical
-    * rows (spec-asserted). Above [[BroadcastProbeByteLimit]] of staged
-    * probe payload the broadcast hint is dropped ([[probeSide]]) — the
-    * join shuffles instead of staging Q·d doubles through the driver.
-    */
-  private[graft] def ivfSearchJoinedAt(spark: SparkSession, dir: String,
-                                       queries: DataFrame, k: Int,
-                                       nProbe: Int,
-                                       expectedQ: Long = 0L): DataFrame = {
-    val layout = ivfLayout(spark, dir)
-    val centersDf = IndexStore.readCached(spark, layout.centroids)
-    val probes = probeFrame(queries, centersDf, nProbe)
-    val p = probeSide(probes, expectedQ, nProbe, centroidDim(centersDf))
-    val cands = layout.segments.map { seg =>
-      p.join(IndexStore.readCached(spark, seg), "cluster")
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id").as("id"),
-          squaredL2(col("qu"), col("v")).as("dist"))
-    }.reduce(_ unionAll _)
-    // tombstone exclusion on the UNIONED candidates, not per segment
-    // scan: the probe join must sit directly on each partitioned scan
-    // for DPP to attach ([[excludeTombstoned]] is a no-op plan-wise on
-    // undeleted versions)
-    VectorSearch.topK(excludeTombstoned(spark, layout.tombstones, cands,
-      "id"), k)
-  }
+  private[graft] def searchIndexAt(spark: SparkSession, dir: String,
+                                   queries: DataFrame, k: Int,
+                                   nProbe: Int, expectedQ: Long): DataFrame =
+    VectorSearch.topK(probeScan(spark, ivfLayout(spark, dir), queries,
+      nProbe, expectedQ, squaredL2(col("qu"), col("v")).as("dist"))
+      .drop("qu"), k)
 
   /** Load-or-build gate for the persisted IVF index — the ONE place the
     * committed-artifact check lives (three call sites would otherwise
@@ -801,32 +793,18 @@ object AnnSearch {
     Checkpoints.release(assigned)
   }
 
+  /** Incremental add to the persisted flat IVF index: [[appendAt]] with
+    * the flat codec.
+    */
   private[graft] def appendToIvfIndexAt(spark: SparkSession, dir: String,
                                         batch: DataFrame, out: String,
                                         maxSegments: Int =
                                           IndexStore.DefaultMaxSegments)
       : Unit = appendAt(spark, FlatCodec, dir, batch, out, maxSegments)
 
-  /** DELETE from the persisted IVF index — FAISS `remove_ids` restated
-    * for the manifested layout (the reference's `IndexIDMap`,
-    * `main.py:60-62`, exists precisely to make entries id-addressable):
-    * a NEW version at `out` re-references every predecessor segment and
-    * adds ONE tombstone segment holding the deleted vec_ids. Both
-    * compute and I/O are O(batch-of-deletes); no corpus data is copied,
-    * rewritten, or scanned. Reads resolve merge-on-read
-    * ([[excludeTombstoned]]); compaction ([[compactIvfTo]] or the
-    * in-chain fold) physically drops masked rows and retires the
-    * tombstones. Same commit protocol as the append (manifest LAST,
-    * replay-idempotent on `committed(out/manifest)`), and the same
-    * `maxSegments` bound applied to the TOMBSTONE chain: a delete that
-    * would push it past the bound folds all tombstone segments into one.
+  /** DELETE from the persisted flat IVF index: [[deleteAt]] over the
+    * flat codec's `vectors` segments.
     */
-  def deleteFromIvfIndex(spark: SparkSession, sfDir: String,
-                         ids: DataFrame, out: String,
-                         nClusters: Int = 0): Unit =
-    deleteFromIvfIndexAt(spark, loadOrBuildIvf(spark, sfDir, nClusters),
-      ids, out)
-
   private[graft] def deleteFromIvfIndexAt(spark: SparkSession, dir: String,
                                           ids: DataFrame, out: String,
                                           maxSegments: Int =
@@ -838,16 +816,6 @@ object AnnSearch {
     * segment are re-referenced untouched; the ADC scan excludes
     * tombstoned ids merge-on-read ([[ivfPqSearchAt]]).
     */
-  def deleteFromIvfPqIndex(spark: SparkSession, sfDir: String,
-                           ids: DataFrame, out: String,
-                           nClusters: Int = 0, m: Int = 0,
-                           nCodes: Int = 0): Unit = {
-    val nc = resolveClusters(spark, sfDir, nClusters)
-    val nk = Quantize.resolveCodes(spark, sfDir, nCodes)
-    deleteFromIvfPqIndexAt(spark,
-      buildIvfPqIndex(spark, sfDir, nc, m, nk), ids, out)
-  }
-
   private[graft] def deleteFromIvfPqIndexAt(spark: SparkSession,
                                             dir: String, ids: DataFrame,
                                             out: String,
@@ -855,8 +823,21 @@ object AnnSearch {
                                               IndexStore.DefaultMaxSegments)
       : Unit = deleteAt(spark, PqCodec.Data, dir, ids, out, maxSegments)
 
-  /** The one delete of every codec: a tombstone is a bare vec_id, so the
-    * codec enters only as the manifest data kind the version carries.
+  /** DELETE from a persisted IVF version, written ONCE for every codec
+    * — FAISS `remove_ids` restated for the manifested layout (the
+    * reference's `IndexIDMap`, `main.py:60-62`, exists precisely to make
+    * entries id-addressable): a NEW version at `out` re-references every
+    * predecessor segment and adds ONE tombstone segment holding the
+    * deleted vec_ids. A tombstone is a bare vec_id, so the codec enters
+    * only as the manifest data kind the version carries. Both compute
+    * and I/O are O(batch-of-deletes); no corpus data is copied,
+    * rewritten, or scanned. Reads resolve merge-on-read
+    * ([[excludeTombstoned]]); compaction ([[compactIvfTo]] or the
+    * in-chain fold) physically drops masked rows and retires the
+    * tombstones. Same commit protocol as the append (manifest LAST,
+    * replay-idempotent on `committed(out/manifest)`), and the same
+    * `maxSegments` bound applied to the TOMBSTONE chain: a delete that
+    * would push it past the bound folds all tombstone segments into one.
     */
   private def deleteAt(spark: SparkSession, data: String, dir: String,
                        ids: DataFrame, out: String,
@@ -953,56 +934,31 @@ object AnnSearch {
     */
   def ivfSqKnn(spark: SparkSession, sfDir: String, nQueries: Int = 10,
                k: Int = 10, nClusters: Int = 0, nProbe: Int = 0,
-               rerank: Int = 40): DataFrame =
-    ivfSqSearch(spark, sfDir, nQueries, k, nClusters, nProbe, rerank,
-      forceJoin = false)
-
-  /** [[ivfSqKnn]] forced onto the joined-probe strategy — the high-Q
-    * plan made testable at fixture scale (bit-identity spec).
-    */
-  private[graft] def ivfSqKnnJoined(spark: SparkSession, sfDir: String,
-                                    nQueries: Int = 10, k: Int = 10,
-                                    nClusters: Int = 0, nProbe: Int = 0,
-                                    rerank: Int = 40): DataFrame =
-    ivfSqSearch(spark, sfDir, nQueries, k, nClusters, nProbe, rerank,
-      forceJoin = true)
-
-  private def ivfSqSearch(spark: SparkSession, sfDir: String,
-                          nQueries: Int, k: Int, nClusters: Int,
-                          nProbe: Int, rerank: Int,
-                          forceJoin: Boolean): DataFrame = {
+               rerank: Int = 40): DataFrame = {
     val nc = resolveClusters(spark, sfDir, nClusters)
-    val dir = buildIvfSqIndex(spark, sfDir, nc)
-    val centersDf = IndexStore.readCached(spark, s"$dir/centroids")
-    val queries = queryVectors(spark, sfDir, nQueries)
-    val np = resolveProbe(nc, nProbe)
-    val (probes, assigned) =
-      if (forceJoin || nQueries.toLong > JoinProbeQueryThreshold)
-        // distributed probe: DPP from the broadcast join on the
-        // partition column prunes the quantized scan (single segment —
-        // the SQ layout is always plain, so no per-segment fan-out);
-        // above BroadcastProbeByteLimit the hint drops away (probeSide)
-        (probeSide(probeFrame(queries, centersDf, np),
-          if (forceJoin) 0L else nQueries.toLong, np,
-          centroidDim(centersDf)),
-          IndexStore.readCached(spark, s"$dir/vectors"))
-      else {
-        val (probedClusters, p) = probe(spark, queries, centersDf, np)
-        (broadcast(p), IndexStore.readCached(spark, s"$dir/vectors")
-          .filter(col("cluster").isin(probedClusters: _*)))
-      }
-    val adist = probes.join(assigned, "cluster")
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("qu"), col("vec_id").as("id"),
-        squaredL2(col("qu"),
-          transform(col("qv"), x => x.cast("double") / col("scale")))
-          .as("adist"))
-    // the ONE shared pruning tail (NULL adist ranks last there) — a local
-    // copy of the window would let margin semantics drift from SQ8/PQ
-    VectorSearch.rescoreTopK(
-      VectorSearch.pruneCandidates(adist, rerank, Some(queries)),
-      VectorSearch.normalized(spark, sfDir), k)
+    ivfSqSearchAt(spark, buildIvfSqIndex(spark, sfDir, nc),
+      queryVectors(spark, sfDir, nQueries),
+      VectorSearch.normalized(spark, sfDir), k, resolveProbe(nc, nProbe),
+      rerank, nQueries.toLong)
   }
+
+  /** The IVF+SQ8 scan against an explicit (plain) index dir: the
+    * [[probeScan]] over the int8 rows, scored against each row
+    * dequantized in the scan, then the ONE shared pruning tail (NULL
+    * adist ranks last there) and the exact rescore against `normed`.
+    */
+  private[graft] def ivfSqSearchAt(spark: SparkSession, dir: String,
+                                   queries: DataFrame, normed: DataFrame,
+                                   k: Int, nProbe: Int, rerank: Int,
+                                   expectedQ: Long): DataFrame =
+    VectorSearch.rescoreTopK(
+      VectorSearch.pruneCandidates(
+        probeScan(spark, ivfLayout(spark, dir), queries, nProbe, expectedQ,
+          squaredL2(col("qu"),
+            transform(col("qv"), x => x.cast("double") / col("scale")))
+            .as("adist")),
+        rerank, Some(queries)),
+      normed, k)
 
   /** Build (once) the composed IVF+PQ layout — the production default of
     * every FAISS deployment at scale (`IndexIVFPQ`; the reference holds
@@ -1067,42 +1023,23 @@ object AnnSearch {
     * sums, exact rescore of the candidate margin — [[ivfSqKnn]]'s shape
     * with the scan rows shrunk from ~d bytes (SQ8) to m bytes (PQ), the
     * aggressive end of the family's storage/recall trade at the SAME
-    * probe pruning. The per-query LUTs are the shared distributed
-    * construction ([[Quantize.pqLutsAt]]) joined INTO the probe side, so
-    * the broadcast carries (qu, lut, cluster) per probe row and the code
-    * scan is one map-side pass summing m lookups per row; above
-    * [[JoinProbeQueryThreshold]] queries the probe stays distributed
-    * (DPP prunes the partitioned code scan), and [[probeSide]] prices
-    * the staged payload with the LUT bytes included.
+    * probe pruning. The per-query LUTs ride [[probeScan]]'s per-query
+    * side, so the code scan is one map-side pass summing m lookups per
+    * row; above [[JoinProbeQueryThreshold]] queries the probe stays
+    * distributed (DPP prunes the partitioned code scan), and
+    * [[probeSide]] prices the staged payload with the LUT bytes
+    * included.
     */
   def ivfPqKnn(spark: SparkSession, sfDir: String, nQueries: Int = 10,
                k: Int = 10, nClusters: Int = 0, nProbe: Int = 0,
-               m: Int = 0, nCodes: Int = 0, rerank: Int = 40): DataFrame =
-    ivfPqSearch(spark, sfDir, nQueries, k, nClusters, nProbe, m, nCodes,
-      rerank, forceJoin = false)
-
-  /** [[ivfPqKnn]] forced onto the joined-probe strategy — the high-Q
-    * plan made testable at fixture scale (bit-identity spec).
-    */
-  private[graft] def ivfPqKnnJoined(spark: SparkSession, sfDir: String,
-                                    nQueries: Int = 10, k: Int = 10,
-                                    nClusters: Int = 0, nProbe: Int = 0,
-                                    m: Int = 0, nCodes: Int = 0,
-                                    rerank: Int = 40): DataFrame =
-    ivfPqSearch(spark, sfDir, nQueries, k, nClusters, nProbe, m, nCodes,
-      rerank, forceJoin = true)
-
-  private def ivfPqSearch(spark: SparkSession, sfDir: String,
-                          nQueries: Int, k: Int, nClusters: Int,
-                          nProbe: Int, m: Int, nCodes: Int, rerank: Int,
-                          forceJoin: Boolean): DataFrame = {
+               m: Int = 0, nCodes: Int = 0, rerank: Int = 40): DataFrame = {
     val nc = resolveClusters(spark, sfDir, nClusters)
     val mm = Quantize.resolveM(spark, sfDir, m)
     val nk = Quantize.resolveCodes(spark, sfDir, nCodes)
     val dir = buildIvfPqIndex(spark, sfDir, nc, mm, nk)
     ivfPqSearchAt(spark, dir, queryVectors(spark, sfDir, nQueries),
       VectorSearch.normalized(spark, sfDir), k, resolveProbe(nc, nProbe),
-      mm, nk, rerank, expectedQ = nQueries.toLong, forceJoin = forceJoin)
+      mm, nk, rerank, expectedQ = nQueries.toLong)
   }
 
   /** The IVF+PQ probe-and-scan against an EXPLICIT (possibly manifested)
@@ -1116,31 +1053,31 @@ object AnnSearch {
                                    queries: DataFrame, normed: DataFrame,
                                    k: Int, nProbe: Int, m: Int, nk: Int,
                                    rerank: Int, expectedQ: Long,
-                                   forceJoin: Boolean = false,
                                    lutsIn: Option[DataFrame] = None)
       : DataFrame =
     VectorSearch.rescoreTopK(
       ivfPqMarginAt(spark, dir, queries, nProbe, m, nk, rerank,
-        expectedQ, forceJoin, lutsIn),
+        expectedQ, lutsIn),
       normed, k)
 
-  /** The ADC half of [[ivfPqSearchAt]]: probe-pruned LUT scan +
-    * rerank-margin prune, WITHOUT the exact rescore — (query_id, qu,
-    * id) rows. Split out for the sharded topology
-    * ([[ShardedSearch.shardedIvfPqKnn]]): gathering each shard's
-    * MARGIN and rescoring the union ONCE costs one full-precision
-    * corpus pass instead of K+1, and the gathered margin is a superset
-    * of the per-shard top-k gather, so the merge can only improve.
+  /** The ADC half of [[ivfPqSearchAt]]: the [[probeScan]] scored by m
+    * LUT lookups per code row (the per-query LUTs, the shared
+    * distributed construction [[Quantize.pqLutsAt]], ride as the scan's
+    * per-query side) + the ONE shared rerank-margin prune, WITHOUT the
+    * exact rescore — (query_id, qu, id) rows. Split out for the sharded
+    * topology ([[ShardedSearch.shardedIvfPqKnn]]): gathering each
+    * shard's MARGIN and rescoring the union ONCE costs one
+    * full-precision corpus pass instead of K+1, and the gathered margin
+    * is a superset of the per-shard top-k gather, so the merge can only
+    * improve.
     */
   private[graft] def ivfPqMarginAt(spark: SparkSession, dir: String,
                                    queries: DataFrame,
                                    nProbe: Int, m: Int, nk: Int,
                                    rerank: Int, expectedQ: Long,
-                                   forceJoin: Boolean = false,
                                    lutsIn: Option[DataFrame] = None)
       : DataFrame = {
     val layout = ivfLayout(spark, dir, PqCodec.Data)
-    val centersDf = IndexStore.readCached(spark, layout.centroids)
     // `lutsIn`: a caller that probes several dirs sharing ONE trained
     // codebook (the sharded topology) builds the Q-row LUT table once
     // and passes it in — K identical Q·m·nk constructions collapsed to
@@ -1148,48 +1085,13 @@ object AnnSearch {
     val luts = lutsIn.getOrElse(
       Quantize.pqLutsAt(spark, layout.codebooks.get, queries, m, nk)
         .select(col("query_id"), col("lut")))
-    def adistOf(probeLutCodes: DataFrame): DataFrame = probeLutCodes
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("qu"), col("vec_id").as("id"),
+    VectorSearch.pruneCandidates(
+      probeScan(spark, layout, queries, nProbe, expectedQ,
         expr(s"""aggregate(sequence(0, ${m - 1}), 0D, (acc, j) ->
           acc + element_at(lut, j * $nk +
-            element_at(codes, j + 1) + 1))""").as("adist"))
-    // the probe row payload is qu PLUS the m·nk-double LUT — price the
-    // broadcast staging with both, not just the query vector
-    def lutDim = centroidDim(centersDf) + m * nk
-    val adist =
-      if (forceJoin || expectedQ > JoinProbeQueryThreshold) {
-        val p = probeSide(probeFrame(queries, centersDf, nProbe)
-            .join(luts, "query_id"),
-          if (forceJoin) 0L else expectedQ, nProbe, lutDim)
-        // per-segment join with the union ABOVE it, as in
-        // [[ivfSearchJoinedAt]]: DPP attaches to each partitioned scan
-        layout.segments.map(seg => adistOf(p.join(
-          IndexStore.readCached(spark, seg), "cluster"))).reduce(_ unionAll _)
-      } else {
-        // the LUT rides per QUERY, not per probe row: joining luts into
-        // the probe side before the broadcast denormalizes the m·nk
-        // doubles across every probed cluster — Q·nProbe·(m·nk·8 B)
-        // of broadcast, ~0.5 MB/row at d=2048 (m=256, nk=256), which
-        // OOM'd a 24 g heap on the K-shard scatter-gather at the
-        // deep×wide point (invisible at d=64 where a LUT is 4 KB).
-        // Broadcasting the slim probe rows and the Q-row LUT table
-        // SEPARATELY keeps both map-side joins and the ADC scan one
-        // pipelined pass; the LUT is materialized per candidate row
-        // only inside the stage, never staged or shuffled.
-        val (probedClusters, p) = probe(spark, queries, centersDf, nProbe)
-        adistOf(broadcast(p)
-          .join(IndexStore.readUnion(spark, layout.segments)
-            .filter(col("cluster").isin(probedClusters: _*)), "cluster")
-          .join(broadcast(luts), "query_id"))
-      }
-    // tombstone exclusion on the ADC candidates before the margin prune
-    // (a deleted id must not burn rerank slots either); a no-op plan-wise
-    // on undeleted versions, then the ONE shared pruning tail — margin
-    // semantics identical to SQ8/PQ
-    VectorSearch.pruneCandidates(
-      excludeTombstoned(spark, layout.tombstones, adist, "id"), rerank,
-      Some(queries))
+            element_at(codes, j + 1) + 1))""").as("adist"),
+        perQuery = Some((luts, m * nk))),
+      rerank, Some(queries))
   }
 
   /** PQ-encode an explicit centroid-assigned frame (vec_id, v, cluster)
@@ -1266,17 +1168,6 @@ object AnnSearch {
     * ([[pqEncode]]), the same commit protocol and in-chain fold bound as
     * the flat chain.
     */
-  def appendToIvfPqIndex(spark: SparkSession, sfDir: String,
-                         batch: DataFrame, out: String,
-                         nClusters: Int = 0, m: Int = 0,
-                         nCodes: Int = 0): Unit = {
-    val nc = resolveClusters(spark, sfDir, nClusters)
-    val mm = Quantize.resolveM(spark, sfDir, m)
-    val nk = Quantize.resolveCodes(spark, sfDir, nCodes)
-    appendToIvfPqIndexAt(spark, buildIvfPqIndex(spark, sfDir, nc, mm, nk),
-      batch, out, mm, nk)
-  }
-
   private[graft] def appendToIvfPqIndexAt(spark: SparkSession,
                                           dir: String, batch: DataFrame,
                                           out: String, m: Int, nk: Int,
@@ -1293,8 +1184,9 @@ object AnnSearch {
     * committed artifacts (one assignment pass is shared); a from-scratch
     * deployment builds with payload columns on day one.
     */
-  private def loadOrBuildFilteredIvf(spark: SparkSession, sfDir: String,
-                                     nClusters: Int): String = {
+  private[graft] def loadOrBuildFilteredIvf(spark: SparkSession,
+                                            sfDir: String,
+                                            nClusters: Int): String = {
     val dir = IndexStore.indexDir(sfDir, s"ivf$nClusters-flt-v1",
       "embeddings")
     if (!IndexStore.committed(s"$dir/centroids") ||
@@ -1355,25 +1247,19 @@ object AnnSearch {
     *    different layout — partition by (label, cluster) — noted, not
     *    built: at that point the filter IS the index.
     *
-    * Same probe window, distance, and ranking tail as [[ivfKnn]]; same
-    * high-Q auto-switch ([[JoinProbeQueryThreshold]], [[probeSide]]).
+    * The same [[probeScan]] as [[ivfKnn]]: probe window, distance,
+    * ranking tail and high-Q auto-switch ([[JoinProbeQueryThreshold]]).
     */
   def ivfFilteredKnn(spark: SparkSession, sfDir: String, label: Int = 1,
                      nQueries: Int = 10, k: Int = 10, nClusters: Int = 0,
-                     nProbe: Int = 0): DataFrame =
-    ivfFilteredSearch(spark, sfDir, label, nQueries, k, nClusters, nProbe,
-      forceJoin = false)
-
-  /** [[ivfFilteredKnn]] forced onto the joined-probe strategy — the
-    * high-Q plan made testable at fixture scale (bit-identity spec).
-    */
-  private[graft] def ivfFilteredKnnJoined(spark: SparkSession,
-                                          sfDir: String, label: Int = 1,
-                                          nQueries: Int = 10, k: Int = 10,
-                                          nClusters: Int = 0,
-                                          nProbe: Int = 0): DataFrame =
-    ivfFilteredSearch(spark, sfDir, label, nQueries, k, nClusters, nProbe,
-      forceJoin = true)
+                     nProbe: Int = 0): DataFrame = {
+    val nc = resolveClusters(spark, sfDir, nClusters)
+    ivfFilteredSearchAt(spark, loadOrBuildFilteredIvf(spark, sfDir, nc),
+      queryVectors(spark, sfDir, nQueries), label, k,
+      filteredProbe(resolveProbe(nc, nProbe), nc,
+        labelSelectivity(spark, sfDir, label)),
+      nQueries.toLong)
+  }
 
   /** The over-probed cluster count of a filtered search: nprobe/sel,
     * saturating at the cluster count. Exposed for the saturation spec.
@@ -1383,33 +1269,18 @@ object AnnSearch {
     math.min(nClusters.toLong,
       math.ceil(nProbe / math.max(sel, 1e-12)).toLong).toInt
 
-  private def ivfFilteredSearch(spark: SparkSession, sfDir: String,
-                                label: Int, nQueries: Int, k: Int,
-                                nClusters: Int, nProbe: Int,
-                                forceJoin: Boolean): DataFrame = {
-    val nc = resolveClusters(spark, sfDir, nClusters)
-    val dir = loadOrBuildFilteredIvf(spark, sfDir, nc)
-    val centersDf = IndexStore.readCached(spark, s"$dir/centroids")
-    val queries = queryVectors(spark, sfDir, nQueries)
-    val np = filteredProbe(resolveProbe(nc, nProbe), nc,
-      labelSelectivity(spark, sfDir, label))
-    val (probes, assigned) =
-      if (forceJoin || nQueries.toLong > JoinProbeQueryThreshold)
-        (probeSide(probeFrame(queries, centersDf, np),
-          if (forceJoin) 0L else nQueries.toLong, np,
-          centroidDim(centersDf)),
-          IndexStore.readCached(spark, s"$dir/vectors"))
-      else {
-        val (probedClusters, p) = probe(spark, queries, centersDf, np)
-        (broadcast(p), IndexStore.readCached(spark, s"$dir/vectors")
-          .filter(col("cluster").isin(probedClusters: _*)))
-      }
-    VectorSearch.topK(
-      probes.join(assigned.filter(col("label") === label), "cluster")
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id").as("id"),
-          squaredL2(col("qu"), col("v")).as("dist")), k)
-  }
+  /** The filtered scan against an explicit payload-carrying index dir:
+    * the [[probeScan]] with `label = L` pushed into the probed partition
+    * scan, ranked like [[searchIndexAt]]. `nProbe` is the already
+    * over-probed count ([[filteredProbe]]).
+    */
+  private[graft] def ivfFilteredSearchAt(spark: SparkSession, dir: String,
+                                         queries: DataFrame, label: Int,
+                                         k: Int, nProbe: Int,
+                                         expectedQ: Long): DataFrame =
+    VectorSearch.topK(probeScan(spark, ivfLayout(spark, dir), queries,
+      nProbe, expectedQ, squaredL2(col("qu"), col("v")).as("dist"),
+      rowFilter = Some(col("label") === label)).drop("qu"), k)
 
   /** The persisted-IVF scale path through the PURE-SQL surface — what a
     * SQL-only consumer of the library runs (the exact-k-NN twin is
@@ -2277,7 +2148,7 @@ object AnnSearch {
                                  exactOverride: Option[DataFrame] = None)
       : Double = {
     val exact = exactOverride.getOrElse(unionExactTopK(union, queries, k))
-    val approx = ivfSearchAt(spark, dir, queries, k, nProbe, expectedQ)
+    val approx = searchIndexAt(spark, dir, queries, k, nProbe, expectedQ)
     val g = Actions.gauges("hits" -> hitCount(exact, approx),
       "n_exact" -> rowCount(exact))
     g("hits") / g("n_exact")
@@ -2320,15 +2191,6 @@ object AnnSearch {
   private[graft] def ensureIvfIndex(spark: SparkSession,
                                     sfDir: String): String =
     loadOrBuildIvf(spark, sfDir, 0)
-
-  /** [[ivfSearchAt]] opened to the streaming package — the delete-at-
-    * ingest gate searches an explicit (possibly tombstoned) version
-    * through the exact same dispatch as every other caller.
-    */
-  private[graft] def searchIndexAt(spark: SparkSession, dir: String,
-                                   queries: DataFrame, k: Int,
-                                   nProbe: Int, expectedQ: Long): DataFrame =
-    ivfSearchAt(spark, dir, queries, k, nProbe, expectedQ)
 
   /** Build-once IVF index over the hashed-BoW DOCUMENT embedding space
     * ([[VectorSearch.textEmbed]]) — the index the hybrid retrieval
@@ -2394,12 +2256,12 @@ object AnnSearch {
     val np = hybridVecProbe(nc, nCandidates, embeddingCount(spark, sfDir))
     val dir = loadOrBuildIvf(spark, sfDir, nc)
     val queries = queryVectors(spark, sfDir, nQueries)
-    val cands = ivfSearchAt(spark, dir, queries, nCandidates, np,
+    val cands = searchIndexAt(spark, dir, queries, nCandidates, np,
         expectedQ = nQueries.toLong)
       .select(col("query_id"), col("id"))
     // broadcast hints only while Q·C is broadcast-sized — a batch-query
     // run past the probe threshold drops them and lets the equi-joins
-    // shuffle, mirroring ivfSearchAt's own joined-strategy switch
+    // shuffle, mirroring searchIndexAt's own joined-strategy switch
     val (candSide, querySide) =
       if (nQueries <= JoinProbeQueryThreshold)
         (broadcast(cands), broadcast(queries))
@@ -2438,9 +2300,9 @@ object AnnSearch {
     def legRecall(dir: String, queries: DataFrame, nc: Int,
                   expectedQ: Long): (Int, Double) = {
       val np = autoProbe(nc)
-      val exact = ivfSearchAt(spark, dir, queries, perLeg, nc, expectedQ)
+      val exact = searchIndexAt(spark, dir, queries, perLeg, nc, expectedQ)
         .select(col("query_id"), col("id")).localCheckpoint(true)
-      val probed = ivfSearchAt(spark, dir, queries, perLeg, np, expectedQ)
+      val probed = searchIndexAt(spark, dir, queries, perLeg, np, expectedQ)
         .select(col("query_id"), col("id"))
       val hits = exact.join(probed, Seq("query_id", "id"), "left_semi")
         .count()

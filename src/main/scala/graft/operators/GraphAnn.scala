@@ -615,7 +615,7 @@ object GraphAnn {
     val seeds = artifact(spark, dir, "seeds")
       .select(col("vec_id").as("id"), col("v").as("sv"))
     // control-plane pricing inputs: Q (threaded in by callers that know
-    // it — the [[AnnSearch.ivfSearchAt]] expectedQ discipline — else one
+    // it — the [[AnnSearch.searchIndexAt]] expectedQ discipline — else one
     // count of the query frame) and d (one head row of the tiny seed
     // table, cached per immutable version dir)
     val qCount =

@@ -49,8 +49,11 @@ object Multimodal {
   ImageIO.setUseCache(false)
 
   case class MediaRow(doc_id: Long, content: Array[Byte], frame_h: Int)
-  private case class BuiltRow(doc_id: Long, content: Array[Byte],
-                              frame_h: Int, decoded_bytes: Long)
+  // package-private, not `private`: scalac omits a private case class's
+  // InnerClasses entry, and Janino then cannot resolve the accessors
+  // that whole-stage codegen calls on it
+  private[operators] case class BuiltRow(doc_id: Long, content: Array[Byte],
+                                         frame_h: Int, decoded_bytes: Long)
   case class Decoded(doc_id: Long, width: Long, height: Long,
                      n_frames: Long, frame_checksums: Seq[Long])
   case class Featurized(doc_id: Long, width: Long, height: Long,
@@ -147,8 +150,8 @@ object Multimodal {
     * `decoded_bytes` records the post-decode footprint batch sizing needs
     * (a real ingest gets the same figure from probe stats at write time).
     */
-  private def buildMediaTable(spark: SparkSession,
-                              sfDir: String): DataFrame = {
+  private[graft] def buildMediaTable(spark: SparkSession,
+                                     sfDir: String): DataFrame = {
     import spark.implicits._
     Tables.load(spark, sfDir, "documents")
       .select(col("doc_id")).as[Long]

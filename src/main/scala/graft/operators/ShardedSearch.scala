@@ -506,7 +506,7 @@ object ShardedSearch {
     val gathered = Actions.par(dirs.map(dir => () => {
       val nc = AnnSearch.clusterCountAt(spark, dir)
       val p = if (nProbe == -1) nc else math.min(nProbe, nc)
-      AnnSearch.ivfSearchAt(spark, dir, queries, k, p, expectedQ)
+      AnnSearch.searchIndexAt(spark, dir, queries, k, p, expectedQ)
         .select(col("query_id"), col("id"))
     })).reduce(_ unionAll _)
     VectorSearch.rescoreTopK(
@@ -516,7 +516,7 @@ object ShardedSearch {
   }
 
   /** ANN scatter-gather: probe each shard's IVF index (the one existing
-    * search path, [[AnnSearch.ivfSearchAt]] — collect-probe at low Q,
+    * search path, [[AnnSearch.searchIndexAt]] — collect-probe at low Q,
     * joined-probe + DPP above the threshold, per shard), gather the
     * ≤ Q·K·k candidates, and re-rank them globally on full-precision
     * distances through the shared rescore + [[VectorSearch.topK]] tail.
@@ -543,7 +543,7 @@ object ShardedSearch {
     // per-shard legs overlapped (Actions.par — the scatterGatherAt
     // rationale); input order preserved, union deterministic
     val gathered = Actions.par(dirs.map(dir => () =>
-      AnnSearch.ivfSearchAt(spark, dir, queries, k, math.min(p, nc),
+      AnnSearch.searchIndexAt(spark, dir, queries, k, math.min(p, nc),
           expectedQ = nQueries.toLong)
         .select(col("query_id"), col("id"))
     )).reduce(_ unionAll _)

@@ -8,6 +8,12 @@ import graft.sources.IndexStore
 class AnnSpec extends SparkSpec {
   import spark.implicits._
 
+  /** An expected query count just past the collect/joined switch: the
+    * trigger a batch search takes, so the joined probe runs at fixture
+    * scale through the same dispatch (its probe side stays a broadcast).
+    */
+  private val aboveJoinThreshold = AnnSearch.JoinProbeQueryThreshold + 1
+
   test("LSH approx kNN reaches high recall vs exact") {
     val rec = AnnSearch.annRecall(spark, sf).collect()
     val byMethod = rec.groupBy(_.getString(0)).map { case (m, rs) =>
@@ -480,10 +486,10 @@ class AnnSpec extends SparkSpec {
     val queries = AnnSearch.fixtureQueries(spark, sf, 10)
     val np = AnnSearch.defaultProbe(spark, sf)
     val viaCollect = AnnSearch
-      .ivfSearchCollectAt(spark, del, queries, 10, np)
+      .searchIndexAt(spark, del, queries, 10, np, 10L)
       .collect().map(_.toSeq).toSeq
     val viaJoin = AnnSearch
-      .ivfSearchJoinedAt(spark, del, queries, 10, np)
+      .searchIndexAt(spark, del, queries, 10, np, aboveJoinThreshold)
       .collect().map(_.toSeq).toSeq
     assert(viaCollect.nonEmpty && viaCollect == viaJoin)
     assert(viaCollect.forall(r =>
@@ -507,7 +513,7 @@ class AnnSpec extends SparkSpec {
       nApp - deletedSet.size)
     assert(AnnSearch.ivfLayout(spark, comp).tombstones.isEmpty)
     val viaCompacted = AnnSearch
-      .ivfSearchCollectAt(spark, comp, queries, 10, np)
+      .searchIndexAt(spark, comp, queries, 10, np, 10L)
       .collect().map(_.toSeq).toSeq
     assert(viaCompacted == viaCollect)
   }
@@ -692,7 +698,11 @@ class AnnSpec extends SparkSpec {
     // the auto-switch's high-Q strategy, forced at fixture scale: same
     // probe window, same distance, same ranking tail → bit-identical
     val want = AnnSearch.ivfKnn(spark, sf).collect().map(_.toSeq).toSeq
-    val joined = AnnSearch.ivfKnnJoined(spark, sf)
+    val queries = AnnSearch.fixtureQueries(spark, sf, 10)
+    val np = AnnSearch.defaultProbe(spark, sf)
+    val joined = AnnSearch.searchIndexAt(spark,
+      AnnSearch.ensureIvfIndex(spark, sf), queries, 10, np,
+      aboveJoinThreshold)
     val got = joined.collect().map(_.toSeq).toSeq
     assert(got.nonEmpty && got == want)
     // no probe collect: pruning must come from a DPP subquery on the
@@ -704,13 +714,19 @@ class AnnSpec extends SparkSpec {
     // and the SQ8 layout takes the same switch (exact-rescore tail makes
     // it bit-identical too)
     val wantSq = AnnSearch.ivfSqKnn(spark, sf).collect().map(_.toSeq).toSeq
-    val gotSq = AnnSearch.ivfSqKnnJoined(spark, sf)
+    val normed = AnnSearch.normalizedCorpus(spark, sf)
+    val gotSq = AnnSearch.ivfSqSearchAt(spark,
+        AnnSearch.buildIvfSqIndex(spark, sf), queries, normed, 10, np, 40,
+        aboveJoinThreshold)
       .collect().map(_.toSeq).toSeq
     assert(gotSq.nonEmpty && gotSq == wantSq)
     // and the PQ layout: the probe side additionally carries the ADC
     // LUTs, which must not perturb the switch or the result
     val wantPq = AnnSearch.ivfPqKnn(spark, sf).collect().map(_.toSeq).toSeq
-    val gotPq = AnnSearch.ivfPqKnnJoined(spark, sf)
+    val gotPq = AnnSearch.ivfPqSearchAt(spark,
+        AnnSearch.buildIvfPqIndex(spark, sf), queries, normed, 10, np,
+        graft.operators.Quantize.resolveM(spark, sf, 0),
+        AnnSearch.pqCodebookSize(spark, sf), 40, aboveJoinThreshold)
       .collect().map(_.toSeq).toSeq
     assert(gotPq.nonEmpty && gotPq == wantPq)
   }
@@ -725,12 +741,15 @@ class AnnSpec extends SparkSpec {
     // hinted plan still forces BroadcastHashJoin, the unhinted one
     // shuffles. Rows stay identical either way.
     val want = AnnSearch.ivfKnn(spark, sf).collect().map(_.toSeq).toSeq
+    def ivfAt(expectedQ: Long) = AnnSearch.searchIndexAt(spark,
+      AnnSearch.ensureIvfIndex(spark, sf),
+      AnnSearch.fixtureQueries(spark, sf, 10), 10,
+      AnnSearch.defaultProbe(spark, sf), expectedQ)
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val prev = spark.conf.get(key)
     try {
       spark.conf.set(key, "-1")
-      val big = AnnSearch.ivfKnnJoined(spark, sf,
-        expectedQ = AnnSearch.BroadcastProbeByteLimit)
+      val big = ivfAt(AnnSearch.BroadcastProbeByteLimit)
       assert(big.collect().map(_.toSeq).toSeq == want)
       val joins = big.queryExecution.sparkPlan.toString.linesIterator
         .filter(l => l.contains("Join") && l.contains("cluster"))
@@ -738,7 +757,7 @@ class AnnSpec extends SparkSpec {
       assert(joins.nonEmpty && !joins.contains("BroadcastHashJoin"), joins)
       // below the limit the hint stays: probe→vectors join is still a
       // forced broadcast even with auto-broadcast off
-      val small = AnnSearch.ivfKnnJoined(spark, sf)
+      val small = ivfAt(aboveJoinThreshold)
       assert(small.collect().map(_.toSeq).toSeq == want)
       val sJoins = small.queryExecution.sparkPlan.toString.linesIterator
         .filter(l => l.contains("Join") && l.contains("cluster"))
@@ -806,9 +825,10 @@ class AnnSpec extends SparkSpec {
     AnnSearch.appendToIvfIndex(spark, sf, batch, out)
     val queries = AnnSearch.fixtureQueries(spark, sf, 10)
     val np = AnnSearch.defaultProbe(spark, sf)
-    val got = AnnSearch.ivfSearchJoinedAt(spark, out, queries, 10, np)
+    val got = AnnSearch
+      .searchIndexAt(spark, out, queries, 10, np, aboveJoinThreshold)
       .collect().map(_.toSeq).toSeq
-    val want = AnnSearch.ivfSearchCollectAt(spark, out, queries, 10, np)
+    val want = AnnSearch.searchIndexAt(spark, out, queries, 10, np, 10L)
       .collect().map(_.toSeq).toSeq
     assert(got.nonEmpty && got == want)
   }
@@ -838,7 +858,12 @@ class AnnSpec extends SparkSpec {
         "PushedFilters: \\[[^\\]]*EqualTo\\(label,1\\)".r
           .findFirstIn(l).nonEmpty), scanLines.mkString("\n"))
     // the high-Q joined strategy returns identical rows
-    val joined = AnnSearch.ivfFilteredKnnJoined(spark, sf)
+    val joined = AnnSearch.ivfFilteredSearchAt(spark,
+      AnnSearch.loadOrBuildFilteredIvf(spark, sf, nc),
+      AnnSearch.fixtureQueries(spark, sf, 10), 1, 10,
+      AnnSearch.filteredProbe(AnnSearch.autoProbe(nc), nc,
+        AnnSearch.labelSelectivity(spark, sf, 1)),
+      aboveJoinThreshold)
     assert(joined.collect().map(_.toSeq).toSeq == want)
     // and the pure-SQL twin is bit-identical too, with the predicate
     // pushed into the same DPP-pruned scan

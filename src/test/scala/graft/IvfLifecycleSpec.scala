@@ -2,20 +2,29 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.VectorOps.l2Normalize
 import graft.operators.{AnnSearch, Quantize}
 import graft.sources.IndexStore
 
 /** The IVF write lifecycle (append, delete, in-chain fold) is one body
   * over two codecs, flat vectors and PQ codes. These specs drive both
-  * through their public `*At` entry points and pin that the guards and
-  * the fold/tombstone policy are the same for each.
+  * through their public `*At` entry points and pin that the guards, the
+  * fold/tombstone policy and the probe-and-scan read are the same for
+  * each.
   */
 class IvfLifecycleSpec extends SparkSpec {
 
-  /** One codec's lifecycle entry points over its fixture base index. */
+  /** One codec's lifecycle entry points over its fixture base index;
+    * `search` is its top-10 read of (version dir, rescore corpus,
+    * expected query count).
+    */
   case class Chain(name: String, data: String, base: String,
                    append: (String, DataFrame, String, Int) => Unit,
-                   delete: (String, DataFrame, String) => Unit)
+                   delete: (String, DataFrame, String) => Unit,
+                   search: (String, DataFrame, Long) => DataFrame)
+
+  private lazy val queries = AnnSearch.fixtureQueries(spark, sf, 10)
+  private lazy val nProbe = AnnSearch.defaultProbe(spark, sf)
 
   private lazy val chains: Seq[Chain] = {
     val m = Quantize.resolveM(spark, sf, 0)
@@ -25,12 +34,16 @@ class IvfLifecycleSpec extends SparkSpec {
         (dir, b, out, maxSeg) =>
           AnnSearch.appendToIvfIndexAt(spark, dir, b, out, maxSeg),
         (dir, ids, out) => AnnSearch.deleteFromIvfIndexAt(spark, dir, ids,
-          out)),
+          out),
+        (dir, _, q) =>
+          AnnSearch.searchIndexAt(spark, dir, queries, 10, nProbe, q)),
       Chain("pq", "codes", AnnSearch.buildIvfPqIndex(spark, sf),
         (dir, b, out, maxSeg) =>
           AnnSearch.appendToIvfPqIndexAt(spark, dir, b, out, m, nk, maxSeg),
         (dir, ids, out) => AnnSearch.deleteFromIvfPqIndexAt(spark, dir, ids,
-          out)))
+          out),
+        (dir, corpus, q) => AnnSearch.ivfPqSearchAt(spark, dir, queries,
+          corpus, 10, nProbe, m, nk, 40, q)))
   }
 
   private def tmp(p: String): String =
@@ -99,13 +112,19 @@ class IvfLifecycleSpec extends SparkSpec {
   test("flat and PQ chains keep the same live ids and segment shape " +
       "through append, delete and the in-chain fold") {
     val b1 = shifted(110000L, 0.01)
+    val b2 = shifted(120000L, 0.02)
+    val b3 = shifted(130000L, 0.03)
     val steps: Seq[(String, Chain, String) => Unit] = Seq(
       (dir, c, out) => c.append(dir, b1, out, IndexStore.DefaultMaxSegments),
       (dir, c, out) => c.delete(dir,
         b1.select(col("vec_id")).filter(col("vec_id") % 2 === 0), out),
-      (dir, c, out) => c.append(dir, shifted(120000L, 0.02), out, 8),
+      (dir, c, out) => c.append(dir, b2, out, 8),
       // 3 data segments + 1 > 2: the fold
-      (dir, c, out) => c.append(dir, shifted(130000L, 0.03), out, 2))
+      (dir, c, out) => c.append(dir, b3, out, 2))
+    // every row any version holds, normalized as the index stores it
+    val corpus = Seq(b1, b2, b3).foldLeft(
+      AnnSearch.normalizedCorpus(spark, sf))((all, b) =>
+      all.unionByName(b.select(col("vec_id"), l2Normalize(col("v")).as("v"))))
     // (live ids, data segments, tombstone segments) per version
     def state(c: Chain, dir: String): (Set[Long], Int, Int) = {
       val layout = AnnSearch.ivfLayout(spark, dir, c.data)
@@ -125,6 +144,18 @@ class IvfLifecycleSpec extends SparkSpec {
       assert(sameIds, s"step ${i + 1}: flat-only " +
         s"${(flat._1 -- pq._1).take(5)}, pq-only ${(pq._1 -- flat._1).take(5)}")
       assert((flat._2, flat._3) == (pq._2, pq._3), s"step ${i + 1}")
+      // the joined probe (segments under a union, tombstones anti-joined
+      // on the candidates) reads exactly what the collect probe reads
+      for ((c, dir) <- chains.zip(dirs)) {
+        def rows(expectedQ: Long) =
+          c.search(dir, corpus, expectedQ).collect().map(_.toSeq).toSeq
+        val collected = rows(10L)
+        val joined = rows(AnnSearch.JoinProbeQueryThreshold + 1)
+        val same = collected.nonEmpty && joined == collected
+        assert(same, s"${c.name} step ${i + 1}: joined-only " +
+          s"${joined.diff(collected).take(3)}, collect-only " +
+          s"${collected.diff(joined).take(3)}")
+      }
     }
     // the last append folded both chains: one data segment, tombstones
     // retired, and the deleted half of the first batch stays gone

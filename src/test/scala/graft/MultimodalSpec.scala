@@ -20,6 +20,19 @@ class MultimodalSpec extends SparkSpec {
       png(3) == 'G')
   }
 
+  test("media rows build under whole-stage codegen, never the " +
+      "interpreted fallback") {
+    // with the fallback off, a generated class Janino cannot compile
+    // fails the job instead of silently running interpreted
+    val key = "spark.sql.codegen.fallback"
+    val prev = spark.conf.get(key)
+    try {
+      spark.conf.set(key, "false")
+      val rows = Multimodal.buildMediaTable(spark, sf).collect()
+      assert(rows.nonEmpty)
+    } finally spark.conf.set(key, prev)
+  }
+
   test("decodeOne round-trips the encoder through a REAL ImageIO parse") {
     // encode → decode must recover the arithmetic geometry exactly; a
     // header-only or hash-derived "decode" cannot produce these checksums

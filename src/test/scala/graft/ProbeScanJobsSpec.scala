@@ -1,0 +1,75 @@
+package graft
+
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.testkit.ListenerBus
+import graft.operators.{AnnSearch, Quantize}
+
+/** Job-count ceilings of the IVF probe-and-scan, one per code format and
+  * probe strategy. A job count is a property of the plan, not of the
+  * machine, so wall-clock noise cannot trip these; an extra job per
+  * search (a second probe collect, an un-shared broadcast, a count
+  * added to a hot path) does.
+  */
+class ProbeScanJobsSpec extends SparkSpec {
+
+  /** Jobs started by `run`, counted under one job group. The search runs
+    * once untimed first, so per-path schema and size caches are warm and
+    * only the steady-state query is counted.
+    */
+  private def jobsOf(run: () => Unit): Int = {
+    run()
+    val sc = spark.sparkContext
+    val group = s"probe-scan-jobs-${java.util.UUID.randomUUID()}"
+    val n = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties)
+            .exists(_.getProperty("spark.jobGroup.id") == group))
+          n.incrementAndGet()
+    }
+    ListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      try run() finally sc.clearJobGroup()
+      ListenerBus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    n.get
+  }
+
+  test("each code format's probe-and-scan stays at its job ceiling") {
+    val queries = AnnSearch.fixtureQueries(spark, sf, 10)
+    val normed = AnnSearch.normalizedCorpus(spark, sf)
+    val np = AnnSearch.defaultProbe(spark, sf)
+    val ivf = AnnSearch.ensureIvfIndex(spark, sf)
+    val pq = AnnSearch.buildIvfPqIndex(spark, sf)
+    val m = Quantize.resolveM(spark, sf, 0)
+    val nk = AnnSearch.pqCodebookSize(spark, sf)
+    val joinQ = AnnSearch.JoinProbeQueryThreshold + 1
+    // (name, ceiling, search): each ceiling is the search's job count on
+    // the sf0.001 fixture with local[4] and 4 shuffle partitions; a
+    // search over it has gained a job
+    val cases: Seq[(String, Int, () => Unit)] = Seq(
+      ("flat-collect", 8, () =>
+        AnnSearch.searchIndexAt(spark, ivf, queries, 10, np, 10L)
+          .collect()),
+      ("flat-joined", 8, () =>
+        AnnSearch.searchIndexAt(spark, ivf, queries, 10, np, joinQ)
+          .collect()),
+      ("sq8", 11, () => AnnSearch.ivfSqKnn(spark, sf).collect()),
+      ("pq-collect", 14, () =>
+        AnnSearch.ivfPqSearchAt(spark, pq, queries, normed, 10, np, m, nk,
+          40, 10L).collect()),
+      ("pq-joined", 14, () =>
+        AnnSearch.ivfPqSearchAt(spark, pq, queries, normed, 10, np, m, nk,
+          40, joinQ).collect()),
+      ("filtered", 8, () => AnnSearch.ivfFilteredKnn(spark, sf).collect()))
+    val over = cases.flatMap { case (name, ceiling, search) =>
+      val jobs = jobsOf(search)
+      Option.when(jobs > ceiling)(s"$name: $jobs jobs > ceiling $ceiling")
+    }
+    assert(over.isEmpty, over.mkString("; "))
+  }
+}
