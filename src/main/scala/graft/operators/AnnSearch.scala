@@ -2075,12 +2075,14 @@ object AnnSearch {
       .unionAll(batch.select(col("vec_id"), l2Normalize(col("v")).as("v"))))
   }
 
-  private def rowCount(df: DataFrame): DataFrame = df.agg(count(lit(1)))
+  private[graft] def rowCount(df: DataFrame): DataFrame =
+    df.agg(count(lit(1)))
 
   /** Recall numerator: exact (query_id, id) pairs the approximate top-k
     * also returned.
     */
-  private def hitCount(exact: DataFrame, approx: DataFrame): DataFrame =
+  private[graft] def hitCount(exact: DataFrame, approx: DataFrame)
+      : DataFrame =
     rowCount(exact.join(approx.select(col("query_id"), col("id")),
       Seq("query_id", "id"), "left_semi"))
 
@@ -2097,14 +2099,14 @@ object AnnSearch {
   /** A zero-row gate's result: one (invariant, expected, actual) row per
     * violated invariant.
     */
-  private def violationRows(spark: SparkSession,
-                            viols: Option[(String, Double, Double)]*)
+  private[graft] def violationRows(spark: SparkSession,
+                                   viols: Option[(String, Double, Double)]*)
       : DataFrame = {
     import spark.implicits._
     viols.flatten.toDF("invariant", "expected", "actual").orderBy("invariant")
   }
 
-  private def r4(x: Double): Double = math.round(x * 10000.0) / 10000.0
+  private[graft] def r4(x: Double): Double = math.round(x * 10000.0) / 10000.0
 
   /** Disk-committed exact truth over the APPENDED corpus (base ∪ the
     * deterministic growth batch) per (fixture fingerprint, Q, k, batch

@@ -1,13 +1,15 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 import graft.Tables
 import graft.functions.VectorOps.l2Normalize
+import graft.operators.{AnnSearch, GraphAnn, ShardedSearch}
+import graft.operators.AnnSearch.{hitCount, r4, rowCount, violationRows}
 import graft.sources.IndexStore
 
 /** The reference's ingest endpoint (`POST /add_drawing`,
@@ -75,17 +77,14 @@ object StreamingIndex {
     StructField("faiss_id", LongType),
     StructField("v", ArrayType(DoubleType))))
 
-  /** Highest fully-committed index version under `root` below `limit`
-    * (exclusive). A version is committed iff its MANIFEST is — the
-    * manifest is always the last artifact written, for every store
-    * flavor (flat mapping+vectors and IVF alike), so one marker gates
-    * them all. The limit is what makes a checkpoint REPLAY safe: a
-    * re-run of batch n must fold into n's true predecessor, not into
-    * n's own (possibly half-committed) output from the crashed attempt.
+  /** Highest fully-committed index version under `root`. A version is
+    * committed iff its MANIFEST is — the manifest is always the last
+    * artifact written, for every store flavor (flat mapping+vectors and
+    * IVF alike), so one marker gates them all. A replayed batch folds
+    * from the version below its own id instead ([[predecessor]]).
     */
-  def latestVersion(root: String,
-                    limit: Long = Long.MaxValue): Option[Long] =
-    committedVersions(root).filter(_ < limit).lastOption
+  def latestVersion(root: String): Option[Long] =
+    committedVersions(root).lastOption
 
   /** All committed (manifested) version ids under `root`, ascending. */
   private def committedVersions(root: String): Seq[Long] = {
@@ -240,6 +239,57 @@ object StreamingIndex {
         IndexStore.readManifest(spark, versionDir), "vectors"),
       Some(VectorSchema))
 
+  /** THE checkpointed chain driver every streamed fold runs on: an
+    * `AvailableNow` file-source query over `landing` (read as `schema`),
+    * checkpointed at `ckpt`, that calls `step(batch, batchId)` once per
+    * micro-batch and returns when every file landed at the call has
+    * folded. `filesPerTrigger` bounds a micro-batch to that many files
+    * (the fixtures stage one batch per file); `None` folds everything
+    * landed into one batch. A batch whose offsets were checkpointed but
+    * whose commit was not re-runs `step` under the same id with the same
+    * files — the replay every step below is written to make idempotent.
+    */
+  private def runChain(spark: SparkSession, landing: String, ckpt: String,
+                       schema: StructType,
+                       filesPerTrigger: Option[Int] = Some(1))
+                      (step: (DataFrame, Long) => Unit): Unit = {
+    val src = spark.readStream.schema(schema)
+    filesPerTrigger.fold(src)(n => src.option("maxFilesPerTrigger", n))
+      .parquet(landing)
+      .writeStream
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch(step)
+      .start()
+      .awaitTermination()
+  }
+
+  /** The committed predecessor of batch `batchId` under `root` — the
+    * version the batch folds from, resolved BELOW its own id so a
+    * crash-replay of batch n folds into n's true predecessor, never
+    * into n's own half-committed output. Batch ids only ever grow under
+    * one checkpoint, so a committed version STRICTLY ABOVE the batch id
+    * means the checkpoint was lost/cleared (ids restarted) or points at
+    * a different root: folding from a stale base would silently rewrite
+    * history under readers, so it fails loudly instead. (A version
+    * equal to the batch id is a legitimate replay of this very batch.)
+    */
+  private def predecessor(root: String, batchId: Long): Option[Long] = {
+    val committed = committedVersions(root)
+    committed.lastOption.filter(_ > batchId).foreach { v =>
+      throw new IllegalStateException(
+        s"index root $root has committed version v$v > batch $batchId" +
+          ": checkpoint/root mismatch (lost checkpoint or wrong dir)" +
+          " — refusing to rewrite history")
+    }
+    committed.filter(_ < batchId).lastOption
+  }
+
+  /** [[predecessor]]'s version dir, or `base` for the chain's first. */
+  private def predecessorDir(root: String, batchId: Long,
+                             base: String): String =
+    predecessor(root, batchId).fold(base)(v => s"$root/v$v")
+
   /** Process every add-file currently in `srcDir` (Trigger.AvailableNow)
     * into versioned index snapshots under `root`, checkpointing source
     * progress in `ckptDir`. Re-invocations resume from the checkpoint:
@@ -259,27 +309,10 @@ object StreamingIndex {
   def ingestAvailable(spark: SparkSession, srcDir: String, root: String,
                       ckptDir: String,
                       maxSegments: Int =
-                        IndexStore.DefaultMaxSegments): Unit = {
-    val q = spark.readStream.schema(BatchSchema).parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", ckptDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row],
-                       batchId: Long) =>
-        // checkpoint/root consistency: batch ids only ever grow under one
-        // checkpoint, so a committed version STRICTLY ABOVE this batch id
-        // means the checkpoint was lost/cleared (ids restarted) or points
-        // at a different root — folding from an empty/stale base here
-        // would silently rewrite history under readers. Fail loudly
-        // instead. (== batchId is a legitimate crash-replay of this very
-        // batch and rewrites deterministically.)
-        latestVersion(root).filter(_ > batchId).foreach { v =>
-          throw new IllegalStateException(
-            s"index root $root has committed version v$v > batch $batchId" +
-              ": checkpoint/root mismatch (lost checkpoint or wrong dir)" +
-              " — refusing to rewrite history")
-        }
-        val prevVer = latestVersion(root, limit = batchId)
+                        IndexStore.DefaultMaxSegments): Unit =
+    runChain(spark, srcDir, ckptDir, BatchSchema, filesPerTrigger = None) {
+      (batch, batchId) =>
+        val prevVer = predecessor(root, batchId)
         val prev = prevVer
           .map(v => IndexStore.readManifest(spark, s"$root/v$v"))
           .getOrElse(Seq.empty)
@@ -328,11 +361,7 @@ object StreamingIndex {
             prev ++ Seq(("mapping", mSeg, batchId),
               ("vectors", vSeg, batchId)))
         }
-        ()
-      }
-      .start()
-    q.awaitTermination()
-  }
+    }
 
   /** The read side of the streamed lifecycle — the reference's
     * `POST /search_drawing` (`main.py:138-165`) against the latest
@@ -501,23 +530,22 @@ object StreamingIndex {
     fs.delete(new Path(tmp), true)
   }
 
-  /** Deterministic micro-batch delivery order for a staged landing dir:
-    * the file source orders batches by modification time (no path
-    * tie-break), and filesystem mtime resolution is not guaranteed to
-    * separate two stageInto calls — so every order-sensitive (and, for
-    * robustness, order-insensitive) consumer staggers the staged files'
-    * mtimes explicitly, 10 s apart in `prefixes` order.
+  /** Stage `batches` in order as `batch<i>` files of the landing dir
+    * (one file each: [[runChain]]'s one-file triggers fold one batch per
+    * micro-batch) and fix their delivery order. The file source orders
+    * batches by modification time with no path tie-break, and mtime
+    * resolution need not separate two writes, so the staged files'
+    * mtimes are set 10 s apart in `batches` order.
     */
-  private def staggerBatches(landing: String,
-                             prefixes: Seq[String]): Unit = {
-    val now = System.currentTimeMillis()
-    val files = new java.io.File(landing).listFiles()
-    if (files != null) files.foreach { f =>
-      prefixes.zipWithIndex.foreach { case (p, i) =>
-        if (f.getName.startsWith(p))
-          f.setLastModified(now - 10000L * (prefixes.size - 1 - i))
-      }
+  private[graft] def stageBatches(landing: String,
+                                  batches: DataFrame*): Unit = {
+    batches.zipWithIndex.foreach { case (b, i) =>
+      stageInto(b, landing, s"batch$i")
     }
+    val now = System.currentTimeMillis()
+    for (f <- new java.io.File(landing).listFiles();
+         i <- batches.indices if f.getName.startsWith(s"batch$i-"))
+      f.setLastModified(now - 10000L * (batches.size - 1 - i))
   }
 
   /** The order-disciplined folds' refusal: a batch whose low-water mark
@@ -661,797 +689,497 @@ object StreamingIndex {
       val batch = Tables.load(spark, sfDir, "documents")
         .select((col("doc_id") + 10000).as("doc_id"),
           expr("substring(text, instr(text, ' ') + 1)").as("text"))
-      stageInto(batch.filter(col("doc_id") % 2 === 0), landing, "batch0")
-      stageInto(batch.filter(col("doc_id") % 2 =!= 0), landing, "batch1")
+      stageBatches(landing, batch.filter(col("doc_id") % 2 === 0),
+        batch.filter(col("doc_id") % 2 =!= 0))
       val corpusBands = spark.read.parquet(s"$corpusDir/bands")
       val corpusSh = spark.read.parquet(s"$corpusDir/shingles")
-      val q = spark.readStream
-        .schema(StructType(Seq(StructField("doc_id", LongType),
-          StructField("text", StringType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-        .writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[Row],
-                         batchId: Long) =>
-          Dedup.dedupBatchAgainstIndex(corpusBands, corpusSh,
-              Dedup.shingleTable(Dedup.shingles(b.toDF())), threshold)
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$results/b$batchId")
-          ()
-        }
-        .start()
-      q.awaitTermination()
+      runChain(spark, landing, s"$root/ckpt", batch.schema) { (b, batchId) =>
+        Dedup.dedupBatchAgainstIndex(corpusBands, corpusSh,
+            Dedup.shingleTable(Dedup.shingles(b)), threshold)
+          .write.mode(SaveMode.Overwrite).parquet(s"$results/b$batchId")
+      }
     }
     spark.read.parquet(s"$results/b*").orderBy("new_doc", "dup_of")
   }
 
-  /** Streaming O(batch) ANN index growth: micro-batches of NEW vectors
-    * are chained into versioned IVF snapshots —
-    * v(n) = [[graft.operators.AnnSearch.appendToIvfIndexAt]](v(n-1),
-    * batch n) — under one checkpoint, with the same replay discipline as
-    * [[ingestAvailable]] (predecessor resolved below the batch id; a
-    * committed version above the batch id means a lost checkpoint and
-    * fails loudly; a replayed batch rewrites its own version from the
-    * same predecessor). Each version costs O(batch) in BOTH compute and
-    * I/O: untouched cluster segments are re-referenced by the version's
-    * manifest, only the batch is assigned and written.
-    *
-    * Returns the zero-row violations contract (same shape as
-    * `ivf_append_violations`): rows appear if the version chain is
-    * incomplete, the final version's vector count is not base + both
-    * batches, or probing the final version misses the recall floor
-    * against the exact k-NN over the full appended corpus.
+  /** An ANN index family as the streamed chains and their gates see it
+    * — what the IVF and graph chains differ in, one level above
+    * [[graft.operators.AnnSearch.IvfCodec]]: the fixture base(s), the
+    * O(batch) append and tombstone delete, the gate search, and a
+    * version's indexed and live ids. The checkpointed driver, the replay
+    * guard, the add/delete split, the fixtures and the shared invariants
+    * are written once over it.
     */
-  /** Streaming O(batch) GRAPH index growth — the graph-family twin of
-    * [[streamingIvfAppend]]: micro-batches of NEW vectors chain into
-    * versioned k-NN-graph snapshots,
-    * v(n) = [[graft.operators.GraphAnn.appendToGraphIndexAt]](v(n-1),
-    * batch n), under one checkpoint with the same replay discipline
-    * (predecessor resolved below the batch id; a committed version
-    * above the batch id is a lost checkpoint and fails loudly; a
-    * replayed batch rewrites its own version from the same
-    * predecessor). Each version costs O(batch): the batch beam-searches
-    * the PREDECESSOR graph for its forward edges, reverse edges repair
-    * only touched nodes, and the manifest re-references every base
-    * segment — the chained form of `main.py:134`'s `add_with_ids` for
-    * the graph layout.
+  private[graft] sealed abstract class IndexFamily {
+    /** Rows per fixture growth batch over an `n`-row corpus (0 = all). */
+    def batchRows(n: Long): Long
+    def base(spark: SparkSession, sfDir: String): String
+    def shardBases(spark: SparkSession, sfDir: String,
+                   shards: Int): Seq[String]
+    def append(spark: SparkSession, dir: String, batch: DataFrame,
+               out: String): Unit
+    def delete(spark: SparkSession, dir: String, ids: DataFrame,
+               out: String): Unit
+    /** Top-k (query_id, id, …) of `queries` over the version at `dir`,
+      * which holds `n` vectors.
+      */
+    def search(spark: SparkSession, sfDir: String, dir: String,
+               queries: DataFrame, nQueries: Int, k: Int,
+               n: Long): DataFrame
+    /** The version's indexed vec_ids, one row per id. */
+    def ids(spark: SparkSession, dir: String): DataFrame
+    /** [[ids]] minus the version's tombstoned ids. */
+    def live(spark: SparkSession, dir: String): DataFrame
+  }
+
+  private[graft] case object IvfFamily extends IndexFamily {
+    def batchRows(n: Long): Long = 0L
+    def base(spark: SparkSession, sfDir: String): String =
+      AnnSearch.ensureIvfIndex(spark, sfDir)
+    def shardBases(spark: SparkSession, sfDir: String,
+                   shards: Int): Seq[String] =
+      ShardedSearch.buildShardedIvf(spark, sfDir, shards)
+    def append(spark: SparkSession, dir: String, batch: DataFrame,
+               out: String): Unit =
+      AnnSearch.appendToIvfIndexAt(spark, dir, batch, out)
+    def delete(spark: SparkSession, dir: String, ids: DataFrame,
+               out: String): Unit =
+      AnnSearch.deleteFromIvfIndexAt(spark, dir, ids, out)
+    def search(spark: SparkSession, sfDir: String, dir: String,
+               queries: DataFrame, nQueries: Int, k: Int,
+               n: Long): DataFrame =
+      AnnSearch.searchIndexAt(spark, dir, queries, k,
+        AnnSearch.defaultProbe(spark, sfDir), expectedQ = nQueries.toLong)
+    def ids(spark: SparkSession, dir: String): DataFrame =
+      AnnSearch.ivfVectors(spark, dir).select(col("vec_id"))
+    def live(spark: SparkSession, dir: String): DataFrame =
+      AnnSearch.ivfLiveVectors(spark, dir).select(col("vec_id"))
+  }
+
+  private[graft] case object GraphFamily extends IndexFamily {
+    // a FIFTH of the corpus per trigger: a streamed ingest runs the
+    // INCREMENTAL (beam-link) side of the append regime switch;
+    // corpus-sized doubling batches take the rebuild side and are gated
+    // by `graph_append_violations` ([[GraphAnn.appendRebuilds]])
+    def batchRows(n: Long): Long = math.max(1L, n / 5L)
+    def base(spark: SparkSession, sfDir: String): String =
+      GraphAnn.buildGraphIndex(spark, sfDir)
+    def shardBases(spark: SparkSession, sfDir: String,
+                   shards: Int): Seq[String] =
+      ShardedSearch.buildShardedGraph(spark, sfDir, shards)
+    def append(spark: SparkSession, dir: String, batch: DataFrame,
+               out: String): Unit =
+      GraphAnn.appendToGraphIndexAt(spark, dir, batch, out)
+    def delete(spark: SparkSession, dir: String, ids: DataFrame,
+               out: String): Unit =
+      GraphAnn.deleteFromGraphIndex(spark, dir, ids, out)
+    def search(spark: SparkSession, sfDir: String, dir: String,
+               queries: DataFrame, nQueries: Int, k: Int,
+               n: Long): DataFrame =
+      GraphAnn.graphSearchAt(spark, dir, queries, k, GraphAnn.autoEf(n),
+        GraphAnn.autoHops(n,
+          GraphAnn.autoDegree(AnnSearch.embeddingCount(spark, sfDir))),
+        expectedQ = nQueries.toLong)
+    def ids(spark: SparkSession, dir: String): DataFrame =
+      IndexStore.loadSegments(spark, dir, "vectors")
+        .select(col("vec_id")).distinct()
+    // straight off the manifest: merge-on-read needs no resolution for
+    // an id set
+    def live(spark: SparkSession, dir: String): DataFrame = {
+      val tombs = IndexStore.manifestSegments(
+        IndexStore.readManifest(spark, dir), "tombstones")
+      if (tombs.isEmpty) ids(spark, dir)
+      else ids(spark, dir).join(
+        IndexStore.readUnion(spark, tombs).select("vec_id").distinct(),
+        Seq("vec_id"), "left_anti")
+    }
+  }
+
+  /** One serving invariant of a streamed index gate: its gauge frames,
+    * the violation row their values imply, and the frame checkpoints to
+    * release once they are read ([[measure]]).
+    */
+  private[graft] final case class Serving(
+      gauges: Seq[(String, DataFrame)],
+      violation: Map[String, Double] => Option[(String, Double, Double)],
+      checkpoints: Seq[DataFrame] = Nil)
+
+  /** `avg_recall`: `approx` reaches recall@k ≥ `floor` against `exact`. */
+  private def recall(exact: DataFrame, approx: DataFrame,
+                     floor: Double): Serving =
+    Serving(Seq("hits" -> hitCount(exact, approx),
+        "n_exact" -> rowCount(exact)),
+      g => {
+        val r = g("hits") / g("n_exact")
+        Option.when(r < floor)(("avg_recall", floor, r4(r)))
+      })
+
+  /** A gate's scalar checks — `gauges`, then the serving invariant's —
+    * in ONE action ([[graft.operators.Actions.gauges]]).
+    */
+  private def measure(gauges: Seq[(String, DataFrame)],
+                      serving: Serving): Map[String, Double] = {
+    val g = graft.operators.Actions.gauges(gauges ++ serving.gauges: _*)
+    serving.checkpoints.foreach(graft.operators.Checkpoints.release)
+    g
+  }
+
+  /** The landing schema of the vector chains; requests add an `op`. */
+  private val VecBatchSchema = StructType(Seq(
+    StructField("vec_id", LongType), StructField("v", ArrayType(DoubleType))))
+  private val VecRequestSchema = VecBatchSchema.add("op", StringType)
+
+  /** The streamed APPEND chain: each micro-batch folds into a new
+    * O(batch) version per (root, base) chain,
+    * v(n) = `fam.append`(v(n-1), batch n), from the chain's base. With
+    * K chains (shards) the batch hash-routes by
+    * [[graft.operators.ShardedSearch.shardOf]] and each chain folds only
+    * its slice — K writers that share nothing. Replay is idempotent:
+    * the predecessor resolves below the batch id ([[predecessor]]) and
+    * an append onto a committed version writes nothing.
+    */
+  private[graft] def appendChain(spark: SparkSession, fam: IndexFamily,
+                                 landing: String, ckpt: String,
+                                 chains: Seq[(String, String)]): Unit =
+    runChain(spark, landing, ckpt, VecBatchSchema) { (b, batchId) =>
+      chains.zipWithIndex.foreach { case ((root, base), s) =>
+        val slice =
+          if (chains.size == 1) b
+          else b.filter(ShardedSearch.shardOf(col("vec_id"), chains.size) === s)
+        fam.append(spark, predecessorDir(root, batchId, base), slice,
+          s"$root/v$batchId")
+      }
+    }
+
+  /** The streamed ADD/DELETE chain: add and delete requests land in ONE
+    * stream (an `op` column), and each micro-batch folds into a new
+    * O(batch) version — adds through `fam.append`, deletes through
+    * `fam.delete` (a tombstone segment + manifest, never a corpus
+    * rewrite). A mixed batch chains add-then-delete through an
+    * intermediate `v<id>-stage` dir — invisible to [[latestVersion]]'s
+    * `v\d+` match, so a half-committed stage never serves — and the
+    * delete's commit carries the version name. Replay is
+    * [[appendChain]]'s: both writes skip a committed output.
+    */
+  private[graft] def deleteChain(spark: SparkSession, fam: IndexFamily,
+                                 landing: String, ckpt: String,
+                                 root: String, base: String): Unit =
+    runChain(spark, landing, ckpt, VecRequestSchema) { (b, batchId) =>
+      val from = predecessorDir(root, batchId, base)
+      val adds = b.filter(col("op") === "add").select(col("vec_id"), col("v"))
+      val dels = b.filter(col("op") === "delete").select(col("vec_id"))
+      val out = s"$root/v$batchId"
+      // O(batch) emptiness probes on the micro-batch, not the corpus
+      (!adds.isEmpty, !dels.isEmpty) match {
+        case (true, true) =>
+          fam.append(spark, from, adds, s"$out-stage")
+          fam.delete(spark, s"$out-stage", dels, out)
+        case (true, false) => fam.append(spark, from, adds, out)
+        case (false, true) => fam.delete(spark, from, dels, out)
+        case _ => ()
+      }
+    }
+
+  /** The fixture corpus grown by `batches`, normalized as the index
+    * stores it.
+    */
+  private def grownCorpus(spark: SparkSession, sfDir: String,
+                          batches: Seq[DataFrame]): DataFrame =
+    batches.foldLeft(AnnSearch.normalizedCorpus(spark, sfDir))((all, b) =>
+      all.unionAll(b.select(col("vec_id"), l2Normalize(col("v")).as("v"))))
+
+  /** An append gate's streamed growth: the final (version, dir) of each
+    * chain, the two growth batches, and the corpus and batch sizes.
+    */
+  private final case class Growth(finals: Seq[(Long, String)],
+                                  batches: Seq[DataFrame], nBase: Long,
+                                  bSize: Long) {
+    def grown: Long = nBase + batches.size * bSize
+  }
+
+  /** Grow the append gates' chain(s) once per fixture: two injection
+    * batches (id windows 1 and 2, shifted +0.01/+0.02 —
+    * [[AnnSearch.injectionBatch]], collision-free on sparse blowup id
+    * spaces) of `batchRows` rows each (the family's default when 0) fold
+    * through [[appendChain]] into the chain at `<stem>-<ver>` — or, with
+    * `shards` > 0, into one chain per shard root `s<i>`, each from its
+    * own shard base. `batchRows` > 0 pins the per-trigger batch size
+    * (the deep×wide tier's micro-batch shape) and keys a SEPARATE
+    * `<stem>-b<rows>-<ver>` root, so a fixture's default-shape chain
+    * never short-circuits a differently-shaped run's counts.
+    */
+  private def grow(spark: SparkSession, sfDir: String, fam: IndexFamily,
+                   stem: String, ver: String, batchRows: Long,
+                   shards: Int = 0): Growth = {
+    val root = IndexStore.indexDir(sfDir,
+      if (batchRows > 0L) s"$stem-b$batchRows-$ver" else s"$stem-$ver",
+      "embeddings")
+    val nBase = AnnSearch.embeddingCount(spark, sfDir)
+    val rows =
+      if (batchRows > 0L) math.min(batchRows, nBase) else fam.batchRows(nBase)
+    val batches = Seq(1 -> 0.01, 2 -> 0.02).map { case (w, d) =>
+      AnnSearch.injectionBatch(spark, sfDir, w, d, rows)
+    }
+    val roots =
+      if (shards > 0) (0 until shards).map(s => s"$root/s$s") else Seq(root)
+    if (!roots.forall(latestVersion(_).exists(_ >= 1L))) {
+      val bases =
+        if (shards > 0) fam.shardBases(spark, sfDir, shards)
+        else Seq(fam.base(spark, sfDir))
+      stageBatches(s"$root/landing", batches: _*)
+      appendChain(spark, fam, s"$root/landing", s"$root/ckpt",
+        roots.zip(bases))
+    }
+    val finals = roots.map { r =>
+      val v = latestVersion(r).getOrElse(-1L)
+      (v, s"$r/v$v")
+    }
+    Growth(finals, batches, nBase, if (rows > 0L) rows else nBase)
+  }
+
+  /** The streamed APPEND gate body, one per family: [[grow]]'s chain
+    * v(n) = append(v(n-1), batch n) under one checkpoint, each version
+    * O(batch) in BOTH compute and I/O — untouched segments are
+    * re-referenced by the version's manifest, only the batch is written
+    * (the chained form of `main.py:134`'s `add_with_ids`).
     *
-    * Returns the zero-row violations contract (`graph_append_violations`
-    * shape): version chain complete, final vector count = base + both
-    * batches, beam-search recall on the final version ≥ floor against
-    * the exact k-NN over the grown corpus.
+    * Returns the zero-row violations contract (the
+    * `ivf_append_violations` / `graph_append_violations` shape): rows
+    * appear if the version chain is incomplete (`version_chain`), the
+    * final version's vector count is not base + both batches
+    * (`vector_count`), or searching the final version misses the recall
+    * floor against the exact k-NN over the grown corpus (`avg_recall`).
+    */
+  private def appendGate(spark: SparkSession, sfDir: String,
+                         fam: IndexFamily, stem: String, ver: String,
+                         nQueries: Int, k: Int, recallFloor: Double,
+                         batchRows: Long): DataFrame = {
+    val gr = grow(spark, sfDir, fam, stem, ver, batchRows)
+    val Seq((vLast, finalDir)) = gr.finals
+    // disk-committed streamed-corpus truth, shared with the sharded
+    // chain (same injection slices)
+    val serving = recall(AnnSearch.appendUnionExact(spark, sfDir,
+        grownCorpus(spark, sfDir, gr.batches), nQueries, k,
+        batchTag = s"-sinj${gr.bSize}"),
+      fam.search(spark, sfDir, finalDir,
+        AnnSearch.fixtureQueries(spark, sfDir, nQueries), nQueries, k,
+        gr.grown),
+      recallFloor)
+    val g = measure(Seq("n_out" -> rowCount(fam.ids(spark, finalDir))),
+      serving)
+    violationRows(spark,
+      Option.when(vLast != 1L)(("version_chain", 1.0, vLast.toDouble)),
+      Option.when(g("n_out") != gr.grown)(
+        ("vector_count", gr.grown.toDouble, g("n_out"))),
+      serving.violation(g))
+  }
+
+  /** The streamed SHARDED append gate body — the streaming twin of the
+    * sharded write path ([[graft.operators.ShardedSearch.appendToShards]]):
+    * each micro-batch hash-routes its rows and every shard folds its
+    * slice into its OWN version chain, v_s(n) = append(v_s(n-1),
+    * slice_s(n)) — K independent O(batch/K) appends per trigger, each
+    * under the single-chain replay discipline. At 100 TB this IS the
+    * ingest shape: no shard ever reads or locks another's chain.
+    *
+    * Returns the zero-row violations contract:
+    *
+    *  - `version_chain` — every shard's chain reached v1 (two triggers);
+    *  - `vector_count` — the K final versions together hold base + both
+    *    batches;
+    *  - `shard_disjoint` — no vec_id indexed by two shards (routing is a
+    *    pure function of the id, so a replay or a trigger split can
+    *    never double-place a row);
+    *  - the binding's `serving` invariant over the K final version dirs,
+    *    the fixture queries and the streamed corpus (its batch size
+    *    keys the committed exact truth).
+    */
+  private def shardedAppendGate(spark: SparkSession, sfDir: String,
+                                fam: IndexFamily, stem: String,
+                                nQueries: Int, k: Int, batchRows: Long)
+                               (serving: (Seq[String], DataFrame, DataFrame,
+                                 Long) => Serving): DataFrame = {
+    val shards = ShardedSearch.DefaultShards
+    val gr = grow(spark, sfDir, fam, s"$stem$shards", "v1", batchRows, shards)
+    val chainBad = gr.finals.count(_._1 != 1L)
+    val dirs = gr.finals.map(_._2)
+    val ids = dirs.map(fam.ids(spark, _)).reduce(_ unionAll _)
+    val union = grownCorpus(spark, sfDir, gr.batches).localCheckpoint(true)
+    val serves = serving(dirs,
+      AnnSearch.fixtureQueries(spark, sfDir, nQueries), union, gr.bSize)
+    val g = measure(Seq("n_out" -> rowCount(ids),
+      "dups" -> rowCount(ids.groupBy("vec_id").agg(count(lit(1)).as("c"))
+        .filter(col("c") > 1))), serves)
+    graft.operators.Checkpoints.release(union)
+    violationRows(spark,
+      Option.when(chainBad != 0)(("version_chain", 0.0, chainBad.toDouble)),
+      Option.when(g("n_out") != gr.grown)(
+        ("vector_count", gr.grown.toDouble, g("n_out"))),
+      Option.when(g("dups") != 0.0)(("shard_disjoint", 0.0, g("dups"))),
+      serves.violation(g))
+  }
+
+  /** The DELETE-AT-INGEST gate body — the streaming twin of the batch
+    * tombstone gate (`index_delete_violations`) over [[deleteChain]].
+    * The fixture streams batch 0 = brand-new vectors (the window-1
+    * id-ceiling injection, [[AnnSearch.injectionBatch]] — the family's
+    * batch size), batch 1 = a delete of every 2nd of them, plus — when
+    * `waves` is 2 — a window-2 second wave of adds in the SAME trigger,
+    * so the staged add-then-delete chaining runs in the fixture. The
+    * batches are order-sensitive (batch 1 tombstones ids batch 0 adds),
+    * so they are staged with fixed mtimes ([[stageBatches]]).
+    *
+    * Returns the zero-row violations contract: rows appear if the chain
+    * is incomplete (`version_chain`), the final live count is not
+    * base + adds − deletes (`live_count`), any deleted id surfaces in a
+    * search of the final version (`deleted_in_results`), or that search
+    * misses the recall floor against the exact k-NN over the live
+    * corpus (`avg_recall`).
+    */
+  private def deleteGate(spark: SparkSession, sfDir: String,
+                         fam: IndexFamily, name: String, tag: String,
+                         waves: Int, nQueries: Int, k: Int,
+                         recallFloor: Double): DataFrame = {
+    val root = IndexStore.indexDir(sfDir, name, "embeddings")
+    val nBase = AnnSearch.embeddingCount(spark, sfDir)
+    val rows = fam.batchRows(nBase)
+    val adds = Seq(0.03, 0.04).take(waves).zipWithIndex.map { case (d, i) =>
+      AnnSearch.injectionBatch(spark, sfDir, i + 1, d, rows)
+    }
+    val delIds = adds.head.select(col("vec_id"))
+      .filter(col("vec_id") % 2 === 0)
+    if (!latestVersion(root).exists(_ >= 1L)) {
+      val base = fam.base(spark, sfDir)
+      val dels = delIds.withColumn("v", lit(null).cast(ArrayType(DoubleType)))
+        .withColumn("op", lit("delete"))
+      val wave2 = adds.drop(1).map(_.withColumn("op", lit("add")))
+      stageBatches(s"$root/landing", adds.head.withColumn("op", lit("add")),
+        (wave2 :+ dels).reduce(_ unionByName _))
+      deleteChain(spark, fam, s"$root/landing", s"$root/ckpt", root, base)
+    }
+    val vLast = latestVersion(root).getOrElse(-1L)
+    val finalDir = s"$root/v$vLast"
+    val nGrown = nBase + waves * (if (rows > 0L) rows else nBase)
+    val res = fam.search(spark, sfDir, finalDir,
+      AnnSearch.fixtureQueries(spark, sfDir, nQueries), nQueries, k, nGrown)
+    // disk-committed live-corpus truth
+    val serving = recall(AnnSearch.appendUnionExact(spark, sfDir,
+        grownCorpus(spark, sfDir, adds).join(delIds, Seq("vec_id"),
+          "left_anti"), nQueries, k, batchTag = tag),
+      res, recallFloor)
+    val g = measure(Seq("n_del" -> rowCount(delIds),
+      "n_live" -> rowCount(fam.live(spark, finalDir)),
+      "deleted_in_results" -> rowCount(res.join(
+        delIds.select(col("vec_id").as("id")), Seq("id"), "left_semi"))),
+      serving)
+    val nLiveExpected = nGrown - g("n_del")
+    violationRows(spark,
+      Option.when(vLast != 1L)(("version_chain", 1.0, vLast.toDouble)),
+      Option.when(g("n_live") != nLiveExpected)(
+        ("live_count", nLiveExpected, g("n_live"))),
+      Option.when(g("deleted_in_results") != 0.0)(
+        ("deleted_in_results", 0.0, g("deleted_in_results"))),
+      serving.violation(g))
+  }
+
+  /** Streaming O(batch) IVF index growth: micro-batches of NEW vectors
+    * chain into versioned IVF snapshots,
+    * v(n) = [[graft.operators.AnnSearch.appendToIvfIndexAt]](v(n-1),
+    * batch n) — the [[appendGate]] contract at the IVF recall floor.
+    * Batches default to the whole corpus; `batchRows` > 0 pins them.
+    */
+  def streamingIvfAppend(spark: SparkSession, sfDir: String,
+                         nQueries: Int = 10, k: Int = 10,
+                         recallFloor: Double = 0.5,
+                         batchRows: Long = 0L): DataFrame =
+    appendGate(spark, sfDir, IvfFamily, "stream-ivf", "v3", nQueries, k,
+      recallFloor, batchRows)
+
+  /** Streaming O(batch) GRAPH index growth — [[streamingIvfAppend]] on
+    * the k-NN-graph chain,
+    * v(n) = [[graft.operators.GraphAnn.appendToGraphIndexAt]](v(n-1),
+    * batch n): the batch beam-searches the PREDECESSOR graph for its
+    * forward edges and reverse edges repair only touched nodes.
+    * Batches default to a fifth of the corpus.
     */
   def streamingGraphAppend(spark: SparkSession, sfDir: String,
                            nQueries: Int = 10, k: Int = 10,
                            recallFloor: Double = 0.9,
-                           batchRows: Long = 0L): DataFrame = {
-    import spark.implicits._
-    import graft.functions.VectorOps.l2Normalize
-    import graft.operators.{AnnSearch, GraphAnn}
-    // `batchRows` > 0 pins the per-trigger batch size (the deep×wide
-    // tier's steady-state micro-batch shape) and keys a SEPARATE chain
-    // root — a fixture's default-shape chain must not short-circuit a
-    // differently-shaped run's counts
-    val root = IndexStore.indexDir(sfDir,
-      if (batchRows > 0L) s"stream-graph-b$batchRows-v6"
-      else "stream-graph-v6", "embeddings")
-    val landing = s"$root/landing"
-    // per-trigger batches default to a FIFTH of the corpus — the
-    // streamed twin exercises the INCREMENTAL (beam-link) side of the
-    // append regime switch, which is what a streamed ingest is;
-    // corpus-sized doubling batches take the rebuild side and are gated
-    // by `graph_append_violations` instead ([[GraphAnn.appendRebuilds]]).
-    // Batches come from the shared id-ceiling-windowed injection
-    // fixture ([[AnnSearch.injectionBatch]] — collision-free on sparse
-    // blowup id spaces, unlike fixed offsets)
-    val nEmb = AnnSearch.embeddingCount(spark, sfDir)
-    val bSize =
-      if (batchRows > 0L) math.min(batchRows, nEmb)
-      else math.max(1L, nEmb / 5L)
-    def shifted(k: Int, delta: Double) =
-      AnnSearch.injectionBatch(spark, sfDir, k, delta, rows = bSize)
-    if (!latestVersion(root).exists(_ >= 1L)) {
-      val base = GraphAnn.buildGraphIndex(spark, sfDir)
-      stageInto(shifted(1, 0.01), landing, "batch0")
-      stageInto(shifted(2, 0.02), landing, "batch1")
-      val q = spark.readStream
-        .schema(StructType(Seq(StructField("vec_id", LongType),
-          StructField("v", ArrayType(DoubleType)))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-        .writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[Row],
-                         batchId: Long) =>
-          latestVersion(root).filter(_ > batchId)
-            .foreach { v =>
-              throw new IllegalStateException(
-                s"graph root $root has committed version v$v > batch " +
-                  s"$batchId: checkpoint/root mismatch — refusing to " +
-                  "rewrite history")
-            }
-          val baseDir = latestVersion(root, limit = batchId)
-            .map(v => s"$root/v$v").getOrElse(base)
-          GraphAnn.appendToGraphIndexAt(spark, baseDir, b.toDF(),
-            s"$root/v$batchId")
-          ()
-        }
-        .start()
-      q.awaitTermination()
-    }
-    val vLast = latestVersion(root).getOrElse(-1L)
-    val finalDir = s"$root/v$vLast"
-    val nBase = AnnSearch.embeddingCount(spark, sfDir)
-    val union = AnnSearch.normalizedCorpus(spark, sfDir)
-      .unionAll(shifted(1, 0.01)
-        .select(col("vec_id"), l2Normalize(col("v")).as("v")))
-      .unionAll(shifted(2, 0.02)
-        .select(col("vec_id"), l2Normalize(col("v")).as("v")))
-    val queries = AnnSearch.fixtureQueries(spark, sfDir, nQueries)
-    // disk-committed streamed-corpus truth (shared with the sharded
-    // graph chain — same injection slices) + ONE action for the scalar
-    // checks ([[graft.operators.Actions.gauges]], r17)
-    val exact = AnnSearch.appendUnionExact(spark, sfDir, union,
-      nQueries, k, batchTag = s"-sinj$bSize")
-    val approx = GraphAnn.graphSearchAt(spark, finalDir, queries, k,
-      GraphAnn.autoEf(nBase + 2 * bSize),
-      GraphAnn.autoHops(nBase + 2 * bSize, GraphAnn.autoDegree(nBase)),
-      expectedQ = nQueries.toLong)
-    val g = graft.operators.Actions.gauges(
-      "n_out" -> IndexStore.loadSegments(spark, finalDir, "vectors")
-        .agg(countDistinct(col("vec_id"))),
-      "hits" -> exact.join(approx.select(col("query_id"), col("id")),
-        Seq("query_id", "id"), "left_semi").agg(count(lit(1))),
-      "n_exact" -> exact.agg(count(lit(1))))
-    val nOut = g("n_out").toLong
-    val recall = g("hits") / g("n_exact")
-    val viols = Seq(
-      Option.when(vLast != 1L)(
-        ("version_chain", 1.0, vLast.toDouble)),
-      Option.when(nOut != nBase + 2 * bSize)(
-        ("vector_count", (nBase + 2 * bSize).toDouble, nOut.toDouble)),
-      Option.when(recall < recallFloor)(
-        ("avg_recall", recallFloor,
-          math.round(recall * 10000.0) / 10000.0))).flatten
-    viols.toDF("invariant", "expected", "actual").orderBy("invariant")
-  }
+                           batchRows: Long = 0L): DataFrame =
+    appendGate(spark, sfDir, GraphFamily, "stream-graph", "v6", nQueries, k,
+      recallFloor, batchRows)
 
-  def streamingIvfAppend(spark: SparkSession, sfDir: String,
-                         nQueries: Int = 10, k: Int = 10,
-                         recallFloor: Double = 0.5,
-                         batchRows: Long = 0L): DataFrame = {
-    import spark.implicits._
-    import graft.functions.VectorOps.l2Normalize
-    import graft.operators.AnnSearch
-    // `batchRows` > 0: deep×wide micro-batch shape + its own chain root
-    // (the [[streamingGraphAppend]] convention)
-    val root = IndexStore.indexDir(sfDir,
-      if (batchRows > 0L) s"stream-ivf-b$batchRows-v3"
-      else "stream-ivf-v3", "embeddings")
-    val landing = s"$root/landing"
-    val nBase = AnnSearch.embeddingCount(spark, sfDir)
-    val bSize = if (batchRows > 0L) math.min(batchRows, nBase) else nBase
-    // id-ceiling-windowed injection batches ([[AnnSearch.injectionBatch]]
-    // — collision-free on sparse blowup id spaces)
-    def shifted(k: Int, delta: Double) =
-      AnnSearch.injectionBatch(spark, sfDir, k, delta, rows = batchRows)
-    if (!latestVersion(root).exists(_ >= 1L)) {
-      val base = AnnSearch.ensureIvfIndex(spark, sfDir)
-      stageInto(shifted(1, 0.01), landing, "batch0")
-      stageInto(shifted(2, 0.02), landing, "batch1")
-      val q = spark.readStream
-        .schema(StructType(Seq(StructField("vec_id", LongType),
-          StructField("v", ArrayType(DoubleType)))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-        .writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[Row],
-                         batchId: Long) =>
-          latestVersion(root).filter(_ > batchId)
-            .foreach { v =>
-              throw new IllegalStateException(
-                s"IVF root $root has committed version v$v > batch " +
-                  s"$batchId: checkpoint/root mismatch — refusing to " +
-                  "rewrite history")
-            }
-          val baseDir = latestVersion(root, limit = batchId)
-            .map(v => s"$root/v$v").getOrElse(base)
-          AnnSearch.appendToIvfIndexAt(spark, baseDir, b.toDF(),
-            s"$root/v$batchId")
-          ()
-        }
-        .start()
-      q.awaitTermination()
-    }
-    val vLast = latestVersion(root).getOrElse(-1L)
-    val finalDir = s"$root/v$vLast"
-    val union = AnnSearch.normalizedCorpus(spark, sfDir)
-      .unionAll(shifted(1, 0.01)
-        .select(col("vec_id"), l2Normalize(col("v")).as("v")))
-      .unionAll(shifted(2, 0.02)
-        .select(col("vec_id"), l2Normalize(col("v")).as("v")))
-    // disk-committed streamed-corpus truth (shared with the sharded
-    // chain — identical corpus) + ONE action for the scalar checks
-    val exact = AnnSearch.appendUnionExact(spark, sfDir, union,
-      nQueries, k, batchTag = s"-sinj$bSize")
-    val approx = AnnSearch.searchIndexAt(spark, finalDir,
-      AnnSearch.fixtureQueries(spark, sfDir, nQueries), k,
-      AnnSearch.defaultProbe(spark, sfDir), expectedQ = nQueries.toLong)
-    val g = graft.operators.Actions.gauges(
-      "n_out" -> AnnSearch.ivfVectors(spark, finalDir)
-        .agg(count(lit(1))),
-      "hits" -> exact.join(approx.select(col("query_id"), col("id")),
-        Seq("query_id", "id"), "left_semi").agg(count(lit(1))),
-      "n_exact" -> exact.agg(count(lit(1))))
-    val nOut = g("n_out").toLong
-    val recall = g("hits") / g("n_exact")
-    val wantN = nBase + 2 * bSize
-    val viols = Seq(
-      Option.when(vLast != 1L)(
-        ("version_chain", 1.0, vLast.toDouble)),
-      Option.when(nOut != wantN)(
-        ("vector_count", wantN.toDouble, nOut.toDouble)),
-      Option.when(recall < recallFloor)(
-        ("avg_recall", recallFloor,
-          math.round(recall * 10000.0) / 10000.0))).flatten
-    viols.toDF("invariant", "expected", "actual").orderBy("invariant")
-  }
-
-  /** Streamed SHARDED ingest — the streaming twin of the sharded write
-    * path ([[graft.operators.ShardedSearch.appendToShards]]): each
-    * checkpointed micro-batch hash-routes its rows and every shard
-    * folds its slice into its OWN version chain,
-    * v_s(n) = appendToIvfIndexAt(v_s(n-1), slice_s(n)) — K independent
-    * O(batch/K) appends per trigger, each under the single-index replay
-    * discipline (predecessor resolved below the batch id; a committed
-    * version above the batch id fails loudly; a replayed batch rewrites
-    * its own per-shard versions from the same predecessors, idempotent
-    * behind each manifest commit). At 100 TB this IS the ingest shape:
-    * the stream fans out to K writers that share nothing — no shard
-    * ever reads or locks another's chain.
-    *
-    * Returns the zero-row violations contract:
-    *
-    *  - `version_chain` — every shard's chain reached v1 (two triggers);
-    *  - `vector_count` — the K final versions together hold base + both
-    *    batches;
-    *  - `shard_disjoint` — no vec_id indexed by two shards after the
-    *    stream (routing is a pure function of the id, so a replay or a
-    *    trigger split can never double-place a row);
-    *  - `scatter_gather_identity` — saturated scatter-gather over the K
-    *    final versions is BIT-IDENTICAL to the exact k-NN over the full
-    *    streamed corpus: the shard-merge theorem surviving a streamed
-    *    write history.
+  /** Streamed SHARDED IVF ingest ([[shardedAppendGate]]) over K
+    * per-shard IVF chains. `scatter_gather_identity`: saturated
+    * scatter-gather over the K final versions is BIT-IDENTICAL to the
+    * exact k-NN over the streamed corpus — the shard-merge theorem
+    * surviving a streamed write history. The leg compares FULL rows
+    * (distance, rank), so its exact frame is a live checkpoint, not the
+    * pair-only committed truth.
     */
   def streamingShardedAppend(spark: SparkSession, sfDir: String,
                              nQueries: Int = 10,
                              k: Int = 10,
-                             batchRows: Long = 0L): DataFrame = {
-    import spark.implicits._
-    import graft.functions.VectorOps.squaredL2
-    import graft.operators.{AnnSearch, ShardedSearch, VectorSearch}
-    val shards = ShardedSearch.DefaultShards
-    // `batchRows` > 0: deep×wide micro-batch shape + its own chain root
-    // (the [[streamingGraphAppend]] convention)
-    val root = IndexStore.indexDir(sfDir,
-      if (batchRows > 0L) s"stream-shard$shards-b$batchRows-v1"
-      else s"stream-shard$shards-v1", "embeddings")
-    val landing = s"$root/landing"
-    def shifted(kk: Int, delta: Double) =
-      AnnSearch.injectionBatch(spark, sfDir, kk, delta, rows = batchRows)
-    def shardRoot(s: Int) = s"$root/s$s"
-    if (!(0 until shards).forall(s =>
-        latestVersion(shardRoot(s)).exists(_ >= 1L))) {
-      val bases = ShardedSearch.buildShardedIvf(spark, sfDir, shards)
-      stageInto(shifted(1, 0.01), landing, "batch0")
-      stageInto(shifted(2, 0.02), landing, "batch1")
-      val q = spark.readStream
-        .schema(StructType(Seq(StructField("vec_id", LongType),
-          StructField("v", ArrayType(DoubleType)))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-        .writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[Row],
-                         batchId: Long) =>
-          (0 until shards).foreach { s =>
-            val sr = shardRoot(s)
-            latestVersion(sr).filter(_ > batchId).foreach { v =>
-              throw new IllegalStateException(
-                s"shard root $sr has committed version v$v > batch " +
-                  s"$batchId: checkpoint/root mismatch — refusing to " +
-                  "rewrite history")
-            }
-            val baseDir = latestVersion(sr, limit = batchId)
-              .map(v => s"$sr/v$v").getOrElse(bases(s))
-            AnnSearch.appendToIvfIndexAt(spark, baseDir,
-              b.toDF().filter(
-                ShardedSearch.shardOf(col("vec_id"), shards) === s),
-              s"$sr/v$batchId")
-          }
-          ()
-        }
-        .start()
-      q.awaitTermination()
+                             batchRows: Long = 0L): DataFrame =
+    shardedAppendGate(spark, sfDir, IvfFamily, "stream-shard", nQueries, k,
+        batchRows) { (dirs, queries, union, _) =>
+      import graft.functions.VectorOps.squaredL2
+      val exact = graft.operators.VectorSearch.topK(
+        union.join(broadcast(queries), col("vec_id") =!= col("query_id"))
+          .select(col("query_id"), col("vec_id").as("id"),
+            squaredL2(col("qu"), col("v")).as("dist")), k)
+        .localCheckpoint(true)
+      val got = ShardedSearch.scatterGatherAt(spark, dirs, queries, union, k,
+        nProbe = -1, expectedQ = nQueries.toLong).localCheckpoint(true)
+      def ones(df: DataFrame) = df.select(lit(1L).as("one"))
+      Serving(Seq("diff" -> rowCount(ones(exact.exceptAll(got))
+          .unionAll(ones(got.exceptAll(exact))))),
+        g => Option.when(g("diff") != 0.0)(
+          ("scatter_gather_identity", 0.0, g("diff"))),
+        Seq(exact, got))
     }
-    val finals = (0 until shards).map { s =>
-      val v = latestVersion(shardRoot(s)).getOrElse(-1L)
-      (v, s"${shardRoot(s)}/v$v")
-    }
-    val chainBad = finals.count(_._1 != 1L)
-    val ids = finals.map(f => AnnSearch.ivfVectors(spark, f._2)
-      .select(col("vec_id"))).reduce(_ unionAll _)
-    val nBase = AnnSearch.embeddingCount(spark, sfDir)
-    val bSize = if (batchRows > 0L) math.min(batchRows, nBase) else nBase
-    val union = AnnSearch.normalizedCorpus(spark, sfDir)
-      .unionAll(shifted(1, 0.01)
-        .select(col("vec_id"), l2Normalize(col("v")).as("v")))
-      .unionAll(shifted(2, 0.02)
-        .select(col("vec_id"), l2Normalize(col("v")).as("v")))
-      .localCheckpoint(true)
-    val queries = AnnSearch.fixtureQueries(spark, sfDir, nQueries)
-    // the identity leg compares FULL rows (distance, rank) so its exact
-    // frame stays a live checkpoint, not the pair-only committed truth
-    val exact = VectorSearch.topK(
-      union.join(broadcast(queries), col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id").as("id"),
-          squaredL2(col("qu"), col("v")).as("dist")), k)
-      .localCheckpoint(true)
-    val got = ShardedSearch.scatterGatherAt(spark, finals.map(_._2),
-      queries, union, k, nProbe = -1, expectedQ = nQueries.toLong)
-      .localCheckpoint(true)
-    // ONE action for the scalar checks (r17: was four sequential jobs)
-    val g = graft.operators.Actions.gauges(
-      "n_out" -> ids.agg(count(lit(1))),
-      "dups" -> ids.groupBy("vec_id").agg(count(lit(1)).as("c"))
-        .filter(col("c") > 1).agg(count(lit(1))),
-      "diff" -> exact.exceptAll(got).select(lit(1L).as("one"))
-        .unionAll(got.exceptAll(exact).select(lit(1L).as("one")))
-        .agg(count(lit(1))))
-    val nOut = g("n_out").toLong
-    val dups = g("dups").toLong
-    val diff = g("diff").toLong
-    graft.operators.Checkpoints.release(union)
-    graft.operators.Checkpoints.release(exact)
-    graft.operators.Checkpoints.release(got)
-    val viols = Seq(
-      Option.when(chainBad != 0)(
-        ("version_chain", 0.0, chainBad.toDouble)),
-      Option.when(nOut != nBase + 2 * bSize)(
-        ("vector_count", (nBase + 2 * bSize).toDouble, nOut.toDouble)),
-      Option.when(dups != 0L)(
-        ("shard_disjoint", 0.0, dups.toDouble)),
-      Option.when(diff != 0L)(
-        ("scatter_gather_identity", 0.0, diff.toDouble))).flatten
-    viols.toDF("invariant", "expected", "actual").orderBy("invariant")
-  }
 
-  /** Streamed SHARDED ingest for the GRAPH family — the
-    * [[streamingShardedAppend]] contract on the beam topology: each
-    * checkpointed micro-batch hash-routes its rows and every graph
-    * shard beam-links its slice into its OWN version chain,
-    * v_s(n) = [[graft.operators.GraphAnn.appendToGraphIndexAt]](
-    * v_s(n-1), slice_s(n)) — K independent O(batch/K) appends per
-    * trigger, each under the single-index replay discipline. The
-    * per-trigger default (a fifth of the corpus, so an n/20 slice
-    * against an n/4 shard) keeps every shard append squarely in the
-    * INCREMENTAL beam-link regime a streamed ingest actually runs
-    * ([[graft.operators.GraphAnn.appendRebuilds]] — doubling-sized
-    * batches take the rebuild side, gated by
-    * `graph_append_violations`).
-    *
-    * Returns the zero-row violations contract:
-    *
-    *  - `version_chain` — every shard's chain reached v1 (two triggers);
-    *  - `vector_count` — the K final versions together hold base + both
-    *    batches;
-    *  - `shard_disjoint` — no vec_id indexed by two shards after the
-    *    stream (routing is a pure function of the id);
-    *  - `avg_recall` — the merged beam scatter-gather over the K final
-    *    versions holds the floor against the exact k-NN over the full
-    *    streamed corpus (a beam has no saturation trick, so the
-    *    streamed-write contract is the shard-merge theorem's
-    *    approximate half — the [[streamingGraphAppend]] convention).
+  /** Streamed SHARDED GRAPH ingest ([[shardedAppendGate]]) over K
+    * per-shard beam-link chains — a fifth-of-corpus batch against a
+    * quarter-corpus shard keeps every shard append in the incremental
+    * regime. `avg_recall`: a beam has no saturation trick, so the
+    * contract is the shard-merge theorem's approximate half — the merged
+    * beam scatter-gather holds the floor against the exact k-NN over the
+    * streamed corpus.
     */
   def streamingGraphShardedAppend(spark: SparkSession, sfDir: String,
                                   nQueries: Int = 10, k: Int = 10,
                                   recallFloor: Double = 0.9,
-                                  batchRows: Long = 0L): DataFrame = {
-    import spark.implicits._
-    import graft.functions.VectorOps.l2Normalize
-    import graft.operators.{AnnSearch, GraphAnn, ShardedSearch}
-    val shards = ShardedSearch.DefaultShards
-    val root = IndexStore.indexDir(sfDir,
-      if (batchRows > 0L) s"stream-gshard$shards-b$batchRows-v1"
-      else s"stream-gshard$shards-v1", "embeddings")
-    val landing = s"$root/landing"
-    val nEmb = AnnSearch.embeddingCount(spark, sfDir)
-    val bSize =
-      if (batchRows > 0L) math.min(batchRows, nEmb)
-      else math.max(1L, nEmb / 5L)
-    def shifted(kk: Int, delta: Double) =
-      AnnSearch.injectionBatch(spark, sfDir, kk, delta, rows = bSize)
-    def shardRoot(s: Int) = s"$root/s$s"
-    if (!(0 until shards).forall(s =>
-        latestVersion(shardRoot(s)).exists(_ >= 1L))) {
-      val bases = ShardedSearch.buildShardedGraph(spark, sfDir, shards)
-      stageInto(shifted(1, 0.01), landing, "batch0")
-      stageInto(shifted(2, 0.02), landing, "batch1")
-      val q = spark.readStream
-        .schema(StructType(Seq(StructField("vec_id", LongType),
-          StructField("v", ArrayType(DoubleType)))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-        .writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[Row],
-                         batchId: Long) =>
-          (0 until shards).foreach { s =>
-            val sr = shardRoot(s)
-            latestVersion(sr).filter(_ > batchId).foreach { v =>
-              throw new IllegalStateException(
-                s"graph shard root $sr has committed version v$v > " +
-                  s"batch $batchId: checkpoint/root mismatch — " +
-                  "refusing to rewrite history")
-            }
-            val baseDir = latestVersion(sr, limit = batchId)
-              .map(v => s"$sr/v$v").getOrElse(bases(s))
-            GraphAnn.appendToGraphIndexAt(spark, baseDir,
-              b.toDF().filter(
-                ShardedSearch.shardOf(col("vec_id"), shards) === s),
-              s"$sr/v$batchId")
-          }
-          ()
-        }
-        .start()
-      q.awaitTermination()
+                                  batchRows: Long = 0L): DataFrame =
+    shardedAppendGate(spark, sfDir, GraphFamily, "stream-gshard", nQueries,
+        k, batchRows) { (dirs, queries, union, bSize) =>
+      recall(AnnSearch.appendUnionExact(spark, sfDir, union, nQueries, k,
+          batchTag = s"-sinj$bSize"),
+        ShardedSearch.scatterGatherGraphAt(spark, dirs, queries, union, k),
+        recallFloor)
     }
-    val finals = (0 until shards).map { s =>
-      val v = latestVersion(shardRoot(s)).getOrElse(-1L)
-      (v, s"${shardRoot(s)}/v$v")
-    }
-    val chainBad = finals.count(_._1 != 1L)
-    val ids = finals.map(f =>
-      IndexStore.loadSegments(spark, f._2, "vectors")
-        .select(col("vec_id")).distinct()).reduce(_ unionAll _)
-    val union = AnnSearch.normalizedCorpus(spark, sfDir)
-      .unionAll(shifted(1, 0.01)
-        .select(col("vec_id"), l2Normalize(col("v")).as("v")))
-      .unionAll(shifted(2, 0.02)
-        .select(col("vec_id"), l2Normalize(col("v")).as("v")))
-      .localCheckpoint(true)
-    val queries = AnnSearch.fixtureQueries(spark, sfDir, nQueries)
-    // disk-committed streamed-corpus truth (the [[streamingGraphAppend]]
-    // tag — identical corpus) + ONE action for the scalar checks
-    val exact = AnnSearch.appendUnionExact(spark, sfDir, union,
-      nQueries, k, batchTag = s"-sinj$bSize")
-    val approx = ShardedSearch.scatterGatherGraphAt(spark,
-      finals.map(_._2), queries, union, k)
-    val g = graft.operators.Actions.gauges(
-      "n_out" -> ids.agg(count(lit(1))),
-      "dups" -> ids.groupBy("vec_id").agg(count(lit(1)).as("c"))
-        .filter(col("c") > 1).agg(count(lit(1))),
-      "hits" -> exact.join(approx.select(col("query_id"), col("id")),
-        Seq("query_id", "id"), "left_semi").agg(count(lit(1))),
-      "n_exact" -> exact.agg(count(lit(1))))
-    val nOut = g("n_out").toLong
-    val dups = g("dups").toLong
-    val recall = g("hits") / g("n_exact")
-    graft.operators.Checkpoints.release(union)
-    val viols = Seq(
-      Option.when(chainBad != 0)(
-        ("version_chain", 0.0, chainBad.toDouble)),
-      Option.when(nOut != nEmb + 2 * bSize)(
-        ("vector_count", (nEmb + 2 * bSize).toDouble, nOut.toDouble)),
-      Option.when(dups != 0L)(
-        ("shard_disjoint", 0.0, dups.toDouble)),
-      Option.when(recall < recallFloor)(
-        ("avg_recall", recallFloor,
-          math.round(recall * 10000.0) / 10000.0))).flatten
-    viols.toDF("invariant", "expected", "actual").orderBy("invariant")
-  }
 
-  /** DELETE-AT-INGEST — the streaming twin of the batch tombstone gate
-    * (`index_delete_violations`): add/delete requests land as files in
-    * ONE stream (schema + `op` column), and each checkpointed micro-batch
-    * folds into a new O(batch) index version — adds through
-    * [[graft.operators.AnnSearch.appendToIvfIndexAt]], deletes through
-    * [[graft.operators.AnnSearch.deleteFromIvfIndexAt]] (a tombstone
-    * segment + manifest, never a corpus rewrite). A mixed batch chains
-    * add-then-delete through an intermediate `v<id>-stage` dir —
-    * invisible to [[latestVersion]]'s `v\d+` match, so a half-committed
-    * stage never serves — with the delete commit carrying the version
-    * name. Same replay discipline as [[ingestAvailable]]: predecessor
-    * resolved below the batch id, committed-version-above fails loudly,
-    * a replayed batch rewrites its own version deterministically
-    * (tombstone writes are Overwrite + manifest-last, idempotent like
-    * segment writes).
-    *
-    * The fixture streams batch 0 = brand-new vectors (the window-1
-    * id-ceiling injection — [[graft.operators.AnnSearch.injectionBatch]],
-    * collision-free on sparse blowup id spaces where the old fixed
-    * +50000 offset landed inside the corpus id range), batch 1 = delete
-    * every 2nd of them, through two micro-batches under
-    * one checkpoint. Returns the zero-row violations contract: rows
-    * appear if the chain is incomplete, the final live count is not
-    * base + adds − deletes, any deleted id surfaces in a snapshot
-    * search, or the final snapshot misses the recall floor against the
-    * exact k-NN over the live corpus.
+  /** DELETE-AT-INGEST on the IVF chain ([[deleteGate]]): a pure-add
+    * batch, then a pure-delete batch.
     */
   def streamingIvfDelete(spark: SparkSession, sfDir: String,
                          nQueries: Int = 10, k: Int = 10,
-                         recallFloor: Double = 0.5): DataFrame = {
-    import spark.implicits._
-    import graft.functions.VectorOps.l2Normalize
-    import graft.operators.AnnSearch
-    val root = IndexStore.indexDir(sfDir, "stream-ivf-del-v2",
-      "embeddings")
-    val landing = s"$root/landing"
-    val adds = AnnSearch.injectionBatch(spark, sfDir, 1, 0.03)
-    val delIds = adds.select(col("vec_id")).filter(col("vec_id") % 2 === 0)
-    val reqSchema = StructType(Seq(StructField("vec_id", LongType),
-      StructField("v", ArrayType(DoubleType)),
-      StructField("op", StringType)))
-    if (!latestVersion(root).exists(_ >= 1L)) {
-      val base = AnnSearch.ensureIvfIndex(spark, sfDir)
-      stageInto(adds.withColumn("op", lit("add")), landing, "batch0")
-      stageInto(delIds
-        .withColumn("v", lit(null).cast(ArrayType(DoubleType)))
-        .withColumn("op", lit("delete")), landing, "batch1")
-      // order-sensitive: batch1 tombstones ids batch0 ingests, and
-      // mtime resolution alone does not guarantee the delivery order
-      // (see [[staggerBatches]]) — a swapped order would tombstone
-      // not-yet-ingested ids
-      staggerBatches(landing, Seq("batch0", "batch1"))
-      val q = spark.readStream
-        .schema(reqSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-        .writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[Row],
-                         batchId: Long) =>
-          latestVersion(root).filter(_ > batchId).foreach { v =>
-            throw new IllegalStateException(
-              s"IVF root $root has committed version v$v > batch " +
-                s"$batchId: checkpoint/root mismatch — refusing to " +
-                "rewrite history")
-          }
-          val baseDir = latestVersion(root, limit = batchId)
-            .map(v => s"$root/v$v").getOrElse(base)
-          val batchAdds = b.filter(col("op") === "add")
-            .select(col("vec_id"), col("v"))
-          val batchDels = b.filter(col("op") === "delete")
-            .select(col("vec_id"))
-          // O(batch) emptiness probes on the micro-batch, not the corpus
-          val hasAdds = !batchAdds.isEmpty
-          val hasDels = !batchDels.isEmpty
-          val out = s"$root/v$batchId"
-          if (hasAdds && hasDels) {
-            val stage = s"$out-stage"
-            AnnSearch.appendToIvfIndexAt(spark, baseDir, batchAdds, stage)
-            AnnSearch.deleteFromIvfIndexAt(spark, stage, batchDels, out)
-          } else if (hasAdds)
-            AnnSearch.appendToIvfIndexAt(spark, baseDir, batchAdds, out)
-          else if (hasDels)
-            AnnSearch.deleteFromIvfIndexAt(spark, baseDir, batchDels, out)
-          ()
-        }
-        .start()
-      q.awaitTermination()
-    }
-    val vLast = latestVersion(root).getOrElse(-1L)
-    val finalDir = s"$root/v$vLast"
-    val nBase = AnnSearch.embeddingCount(spark, sfDir)
-    val queries = AnnSearch.fixtureQueries(spark, sfDir, nQueries)
-    val res = AnnSearch.searchIndexAt(spark, finalDir, queries, k,
-      AnnSearch.defaultProbe(spark, sfDir), expectedQ = nQueries.toLong)
-    val live = AnnSearch.normalizedCorpus(spark, sfDir)
-      .unionAll(adds.select(col("vec_id"), l2Normalize(col("v")).as("v")))
-      .join(delIds, Seq("vec_id"), "left_anti")
-    // disk-committed live-corpus truth + ONE action for the scalar
-    // checks ([[graft.operators.Actions.gauges]], r17: was five jobs)
-    val exact = AnnSearch.appendUnionExact(spark, sfDir, live,
-      nQueries, k, batchTag = "-sivfdel")
-    val g = graft.operators.Actions.gauges(
-      "n_del" -> delIds.agg(count(lit(1))),
-      "n_live" -> AnnSearch.ivfLiveVectors(spark, finalDir)
-        .agg(count(lit(1))),
-      "deleted_in_results" -> res
-        .join(delIds.select(col("vec_id").as("id")), Seq("id"),
-          "left_semi").agg(count(lit(1))),
-      "hits" -> exact.join(res.select(col("query_id"), col("id")),
-        Seq("query_id", "id"), "left_semi").agg(count(lit(1))),
-      "n_exact" -> exact.agg(count(lit(1))))
-    val nDel = g("n_del").toLong
-    val nLiveExpected = 2 * nBase - nDel
-    val nLive = g("n_live").toLong
-    val deletedInResults = g("deleted_in_results").toLong
-    val recall = g("hits") / g("n_exact")
-    val viols = Seq(
-      Option.when(vLast != 1L)(
-        ("version_chain", 1.0, vLast.toDouble)),
-      Option.when(nLive != nLiveExpected)(
-        ("live_count", nLiveExpected.toDouble, nLive.toDouble)),
-      Option.when(deletedInResults != 0L)(
-        ("deleted_in_results", 0.0, deletedInResults.toDouble)),
-      Option.when(recall < recallFloor)(
-        ("avg_recall", recallFloor,
-          math.round(recall * 10000.0) / 10000.0))).flatten
-    viols.toDF("invariant", "expected", "actual").orderBy("invariant")
-  }
+                         recallFloor: Double = 0.5): DataFrame =
+    deleteGate(spark, sfDir, IvfFamily, "stream-ivf-del-v2", "-sivfdel",
+      waves = 1, nQueries, k, recallFloor)
 
-  /** DELETE-AT-INGEST on the GRAPH index chain — the graph-family twin
-    * of [[streamingIvfDelete]], closing the last lifecycle asymmetry
-    * between the three index families (flat and IVF have streamed
-    * delete legs; the graph chain had only appends + retention):
-    * add/delete requests land as files in ONE stream (schema + `op`
-    * column), and each checkpointed micro-batch folds into a new
-    * O(batch) graph version — adds through
-    * [[graft.operators.GraphAnn.appendToGraphIndexAt]] (beam-linked
-    * forward edges + reverse repair, manifest re-referencing the base
-    * segments), deletes through
-    * [[graft.operators.GraphAnn.deleteFromGraphIndex]] (ONE tombstone
-    * segment + manifest — the masked delete: tombstoned nodes stay
-    * TRAVERSABLE for navigation and are excluded only from ranking,
-    * so no graph data is touched). A mixed batch chains
-    * add-then-delete through an intermediate `v<id>-stage` dir
-    * (invisible to [[latestVersion]]'s `v\d+` match, so a
-    * half-committed stage never serves); replay discipline is
-    * [[ingestAvailable]]'s — predecessor resolved below the batch id,
-    * committed-version-above fails loudly, a replayed batch rewrites
-    * its own version deterministically behind the manifest gate.
-    *
-    * The fixture streams batch 0 = a fifth-of-corpus batch of new
-    * vectors (the window-1 id-ceiling injection,
-    * [[graft.operators.AnnSearch.injectionBatch]] — sized to the
-    * INCREMENTAL side of the append regime switch, which is what a
-    * streamed ingest is), batch 1 = a genuinely MIXED batch (the
-    * flat-store twin's discipline): delete every 2nd of wave 1 AND add
-    * a window-2 second wave in the same trigger — so the staged
-    * add-then-delete chaining (append to `v1-stage`, tombstone commit
-    * carries the version name) executes in the fixture rather than
-    * sitting as untested generality. Returns the zero-row violations
-    * contract: rows appear if the chain is incomplete, the final live
-    * count (vectors minus tombstones) is not base + both waves −
-    * deletes, any tombstoned id surfaces in a beam search of the final
-    * version, or that search misses the recall floor against the
-    * exact k-NN over the live corpus (floor at measured-minus-margin
-    * like the other graph gates).
+  /** DELETE-AT-INGEST on the GRAPH chain ([[deleteGate]]) — closing the
+    * lifecycle asymmetry between the index families: an add batch, then
+    * a MIXED add+delete batch. The delete is the masked one
+    * ([[graft.operators.GraphAnn.deleteFromGraphIndex]]): tombstoned
+    * nodes stay TRAVERSABLE for navigation and are excluded only from
+    * ranking, so no graph data is touched.
     */
   def streamingGraphDelete(spark: SparkSession, sfDir: String,
                            nQueries: Int = 10, k: Int = 10,
-                           recallFloor: Double = 0.9): DataFrame = {
-    import spark.implicits._
-    import graft.functions.VectorOps.l2Normalize
-    import graft.operators.{AnnSearch, GraphAnn}
-    val root = IndexStore.indexDir(sfDir, "stream-graph-del-v2",
-      "embeddings")
-    val landing = s"$root/landing"
-    val nBase = AnnSearch.embeddingCount(spark, sfDir)
-    val bSize = math.max(1L, nBase / 5L)
-    val adds = AnnSearch.injectionBatch(spark, sfDir, 1, 0.03,
-      rows = bSize)
-    val adds2 = AnnSearch.injectionBatch(spark, sfDir, 2, 0.04,
-      rows = bSize)
-    val delIds = adds.select(col("vec_id")).filter(col("vec_id") % 2 === 0)
-    val reqSchema = StructType(Seq(StructField("vec_id", LongType),
-      StructField("v", ArrayType(DoubleType)),
-      StructField("op", StringType)))
-    if (!latestVersion(root).exists(_ >= 1L)) {
-      val base = GraphAnn.buildGraphIndex(spark, sfDir)
-      stageInto(adds.withColumn("op", lit("add")), landing, "batch0")
-      stageInto(adds2.withColumn("op", lit("add"))
-        .unionByName(delIds
-          .withColumn("v", lit(null).cast(ArrayType(DoubleType)))
-          .withColumn("op", lit("delete"))), landing, "batch1")
-      // order-sensitive: batch1's deletes target ids batch0 adds (and
-      // the spec pins the exact v0=add/v1=mixed shape) — stagger the
-      // staged mtimes so the file source cannot swap delivery
-      staggerBatches(landing, Seq("batch0", "batch1"))
-      val q = spark.readStream
-        .schema(reqSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-        .writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[Row],
-                         batchId: Long) =>
-          latestVersion(root).filter(_ > batchId).foreach { v =>
-            throw new IllegalStateException(
-              s"graph root $root has committed version v$v > batch " +
-                s"$batchId: checkpoint/root mismatch — refusing to " +
-                "rewrite history")
-          }
-          val baseDir = latestVersion(root, limit = batchId)
-            .map(v => s"$root/v$v").getOrElse(base)
-          val batchAdds = b.filter(col("op") === "add")
-            .select(col("vec_id"), col("v"))
-          val batchDels = b.filter(col("op") === "delete")
-            .select(col("vec_id"))
-          // O(batch) emptiness probes on the micro-batch, not the corpus
-          val hasAdds = !batchAdds.isEmpty
-          val hasDels = !batchDels.isEmpty
-          val out = s"$root/v$batchId"
-          if (hasAdds && hasDels) {
-            val stage = s"$out-stage"
-            GraphAnn.appendToGraphIndexAt(spark, baseDir, batchAdds,
-              stage)
-            GraphAnn.deleteFromGraphIndex(spark, stage, batchDels, out)
-          } else if (hasAdds)
-            GraphAnn.appendToGraphIndexAt(spark, baseDir, batchAdds, out)
-          else if (hasDels)
-            GraphAnn.deleteFromGraphIndex(spark, baseDir, batchDels, out)
-          ()
-        }
-        .start()
-      q.awaitTermination()
-    }
-    val vLast = latestVersion(root).getOrElse(-1L)
-    val finalDir = s"$root/v$vLast"
-    // live = distinct vectors minus tombstones, both straight off the
-    // final version's manifest (merge-on-read, no resolution needed for
-    // a count)
-    val vecIds = IndexStore.loadSegments(spark, finalDir, "vectors")
-      .select("vec_id").distinct()
-    val tombSegs = IndexStore.manifestSegments(
-      IndexStore.readManifest(spark, finalDir), "tombstones")
-    val liveIds =
-      if (tombSegs.isEmpty) vecIds
-      else vecIds.join(
-        IndexStore.readUnion(spark, tombSegs).select("vec_id").distinct(),
-        Seq("vec_id"), "left_anti")
-    val queries = AnnSearch.fixtureQueries(spark, sfDir, nQueries)
-    val nGrown = nBase + 2 * bSize
-    val ef = GraphAnn.autoEf(nGrown)
-    val hops = GraphAnn.autoHops(nGrown, GraphAnn.autoDegree(nBase))
-    val res = GraphAnn.graphSearchAt(spark, finalDir, queries, k, ef,
-      hops, expectedQ = nQueries.toLong)
-    val live = AnnSearch.normalizedCorpus(spark, sfDir)
-      .unionAll(adds.select(col("vec_id"), l2Normalize(col("v")).as("v")))
-      .unionAll(adds2.select(col("vec_id"),
-        l2Normalize(col("v")).as("v")))
-      .join(delIds, Seq("vec_id"), "left_anti")
-    // disk-committed live-corpus truth + ONE action for the scalar
-    // checks ([[graft.operators.Actions.gauges]], r17: was five jobs;
-    // the beam above still runs its own internal jobs first)
-    val exact = AnnSearch.appendUnionExact(spark, sfDir, live,
-      nQueries, k, batchTag = "-sgdel")
-    val g = graft.operators.Actions.gauges(
-      "n_del" -> delIds.agg(count(lit(1))),
-      "n_live" -> liveIds.agg(count(lit(1))),
-      "deleted_in_results" -> res
-        .join(delIds.select(col("vec_id").as("id")), Seq("id"),
-          "left_semi").agg(count(lit(1))),
-      "hits" -> exact.join(res.select(col("query_id"), col("id")),
-        Seq("query_id", "id"), "left_semi").agg(count(lit(1))),
-      "n_exact" -> exact.agg(count(lit(1))))
-    val nDel = g("n_del").toLong
-    val nLiveExpected = nBase + 2 * bSize - nDel
-    val nLive = g("n_live").toLong
-    val deletedInResults = g("deleted_in_results").toLong
-    val recall = g("hits") / g("n_exact")
-    val viols = Seq(
-      Option.when(vLast != 1L)(
-        ("version_chain", 1.0, vLast.toDouble)),
-      Option.when(nLive != nLiveExpected)(
-        ("live_count", nLiveExpected.toDouble, nLive.toDouble)),
-      Option.when(deletedInResults != 0L)(
-        ("deleted_in_results", 0.0, deletedInResults.toDouble)),
-      Option.when(recall < recallFloor)(
-        ("avg_recall", recallFloor,
-          math.round(recall * 10000.0) / 10000.0))).flatten
-    viols.toDF("invariant", "expected", "actual").orderBy("invariant")
-  }
+                           recallFloor: Double = 0.9): DataFrame =
+    deleteGate(spark, sfDir, GraphFamily, "stream-graph-del-v2", "-sgdel",
+      waves = 2, nQueries, k, recallFloor)
 
   /** DELETE through the FLAT mapping store — the reference's own store
     * shape (`main.py:119-126` LWW upsert keeps the old vector forever;
@@ -1542,30 +1270,18 @@ object StreamingIndex {
       val cust = Tables.load(spark, sfDir, "customer")
       IndexStore.saveDataset(Ingest.cdcSnapshot(cust), s"$versions/base")
       val log = Ingest.cdcFixtureLog(cust)
-      stageInto(log.filter(col("seq") <= 2L), landing, "batch0")
-      stageInto(log.filter(col("seq") >= 3L), landing, "batch1")
       // the fold converges under either delivery order for THIS fixture
       // (max-seq semilattice, see above), but seq-ordered delivery is the
-      // documented contract — make it deterministic rather than leaning
+      // documented contract — staged deterministic rather than leaning
       // on filesystem mtime resolution
-      staggerBatches(landing, Seq("batch0", "batch1"))
-      val q = spark.readStream.schema(log.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-        .writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[Row],
-                         batchId: Long) =>
-          val prevDir = if (batchId == 0L) s"$versions/base"
-                        else s"$versions/b${batchId - 1}"
-          Ingest.cdcLww(spark.read.parquet(prevDir).unionByName(b.toDF()))
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$versions/b$batchId")
-          ()
-        }
-        .start()
-      q.awaitTermination()
+      stageBatches(landing, log.filter(col("seq") <= 2L),
+        log.filter(col("seq") >= 3L))
+      runChain(spark, landing, s"$root/ckpt", log.schema) { (b, batchId) =>
+        val prevDir = if (batchId == 0L) s"$versions/base"
+                      else s"$versions/b${batchId - 1}"
+        Ingest.cdcLww(spark.read.parquet(prevDir).unionByName(b))
+          .write.mode(SaveMode.Overwrite).parquet(s"$versions/b$batchId")
+      }
     }
     Ingest.cdcShape(spark.read.parquet(s"$versions/b1"))
   }
@@ -1585,7 +1301,7 @@ object StreamingIndex {
     * rows through the shared aggregation half, so it is ROW-IDENTICAL
     * to the batch entry and shares its oracle verbatim.
     *
-    * ORDER MATTERS here, unlike every other stageInto consumer (the
+    * ORDER MATTERS here, unlike most other staged folds (the
     * dedup verdicts are split-independent, the CDC fold is a max-seq
     * semilattice): offsets are a prefix sum in doc_id order, so the
     * file source must deliver batch0 before batch1. The staging sets
@@ -1613,20 +1329,10 @@ object StreamingIndex {
       val docs = Tables.load(spark, sfDir, "documents")
         .select(col("doc_id"), col("text"))
       val cut = docs.agg(max(col("doc_id"))).head.getLong(0) / 2
-      stageInto(docs.filter(col("doc_id") <= cut), landing, "batch0")
-      stageInto(docs.filter(col("doc_id") > cut), landing, "batch1")
-      // deterministic delivery order: the file source sorts by mtime
-      staggerBatches(landing, Seq("batch0", "batch1"))
-      val q = spark.readStream
-        .schema(StructType(Seq(StructField("doc_id", LongType),
-          StructField("text", StringType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-        .writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[Row],
-                         batchId: Long) =>
+      stageBatches(landing, docs.filter(col("doc_id") <= cut),
+        docs.filter(col("doc_id") > cut))
+      try runChain(spark, landing, s"$root/ckpt", docs.schema) {
+        (b, batchId) =>
           val (base, prevMaxDoc) =
             if (batchId == 0L) (0L, Long.MinValue)
             else {
@@ -1642,16 +1348,13 @@ object StreamingIndex {
               s"packing batch $batchId out of order: min doc_id " +
                 s"${stats.getLong(0)} <= placed high-water $prevMaxDoc — " +
                 "refusing to commit a wrong-offset manifest")
-          val (placed, next) = TextAnalysis.packPlace(spark, b.toDF(), base)
-          placed.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+          val (placed, next) = TextAnalysis.packPlace(spark, b, base)
+          placed.write.mode(SaveMode.Overwrite)
             .parquet(s"$versions/b$batchId/rows")
           Seq((next, batchMaxDoc)).toDF("next_offset", "max_doc")
-            .coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+            .coalesce(1).write.mode(SaveMode.Overwrite)
             .parquet(s"$versions/b$batchId/state")
-          ()
-        }
-        .start()
-      try q.awaitTermination() catch {
+      } catch {
         case e: Throwable => wipeIfMisordered(root, e)
       }
     }
@@ -1683,32 +1386,17 @@ object StreamingIndex {
       val docs = Tables.load(spark, sfDir, "documents")
         .select(col("doc_id"), col("text"))
       val cut = docs.agg(max(col("doc_id"))).head.getLong(0) / 2
-      stageInto(docs.filter(col("doc_id") <= cut), landing, "batch0")
-      stageInto(docs.filter(col("doc_id") > cut), landing, "batch1")
-      staggerBatches(landing, Seq("batch0", "batch1"))
-      val q = spark.readStream
-        .schema(StructType(Seq(StructField("doc_id", LongType),
-          StructField("text", StringType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-        .writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[Row],
-                         batchId: Long) =>
-          VectorSearch.textEmbed(
-              TextAnalysis.chunkTokens(b.toDF(),
-                  TextAnalysis.DefaultChunkSize,
-                  TextAnalysis.DefaultChunkStride)
-                .select((col("doc_id") * VectorSearch.ChunkKeyBase +
-                    col("chunk_ix"))
-                  .as("doc_id"), col("chunk_text").as("text")), dim)
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$versions/b$batchId/rows")
-          ()
-        }
-        .start()
-      q.awaitTermination()
+      stageBatches(landing, docs.filter(col("doc_id") <= cut),
+        docs.filter(col("doc_id") > cut))
+      runChain(spark, landing, s"$root/ckpt", docs.schema) { (b, batchId) =>
+        VectorSearch.textEmbed(
+            TextAnalysis.chunkTokens(b, TextAnalysis.DefaultChunkSize,
+                TextAnalysis.DefaultChunkStride)
+              .select((col("doc_id") * VectorSearch.ChunkKeyBase +
+                  col("chunk_ix"))
+                .as("doc_id"), col("chunk_text").as("text")), dim)
+          .write.mode(SaveMode.Overwrite).parquet(s"$versions/b$batchId/rows")
+      }
     }
     val cEmb = spark.read.parquet(s"$versions/b*/rows")
     val qEmb = VectorSearch.textEmbed(
@@ -1742,33 +1430,18 @@ object StreamingIndex {
       val docs = Tables.load(spark, sfDir, "documents")
         .select(col("doc_id"), col("lang"), col("source"), col("text"))
       val cut = docs.agg(max(col("doc_id"))).head.getLong(0) / 2
-      stageInto(docs.filter(col("doc_id") <= cut), landing, "batch0")
-      stageInto(docs.filter(col("doc_id") > cut), landing, "batch1")
-      staggerBatches(landing, Seq("batch0", "batch1"))
-      val q = spark.readStream
-        .schema(StructType(Seq(StructField("doc_id", LongType),
-          StructField("lang", StringType),
-          StructField("source", StringType),
-          StructField("text", StringType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-        .writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[Row],
-                         batchId: Long) =>
-          val batchKeys = weightedKeys(b.toDF())
-          val pool =
-            if (batchId == 0L) batchKeys
-            else batchKeys.unionByName(
-              spark.read.parquet(s"$versions/b${batchId - 1}/state"))
-          weightedTopK(pool, k)
-            .coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$versions/b$batchId/state")
-          ()
-        }
-        .start()
-      q.awaitTermination()
+      stageBatches(landing, docs.filter(col("doc_id") <= cut),
+        docs.filter(col("doc_id") > cut))
+      runChain(spark, landing, s"$root/ckpt", docs.schema) { (b, batchId) =>
+        val batchKeys = weightedKeys(b)
+        val pool =
+          if (batchId == 0L) batchKeys
+          else batchKeys.unionByName(
+            spark.read.parquet(s"$versions/b${batchId - 1}/state"))
+        weightedTopK(pool, k)
+          .coalesce(1).write.mode(SaveMode.Overwrite)
+          .parquet(s"$versions/b$batchId/state")
+      }
     }
     spark.read.parquet(s"$versions/b1/state").orderBy("doc_id")
   }
@@ -1803,22 +1476,10 @@ object StreamingIndex {
           unix_micros(col("ts")).as("us"), col("value"))
       val cut = e.agg(expr("percentile_approx(us, 0.5)").cast("long"))
         .head.getLong(0)
-      stageInto(e.filter(col("us") <= cut), landing, "batch0")
-      stageInto(e.filter(col("us") > cut), landing, "batch1")
-      staggerBatches(landing, Seq("batch0", "batch1"))
-      val q = spark.readStream
-        .schema(StructType(Seq(StructField("event_id", LongType),
-          StructField("user_id", LongType),
-          StructField("event_type", StringType),
-          StructField("us", LongType),
-          StructField("value", DoubleType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-        .writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[Row],
-                         batchId: Long) =>
+      stageBatches(landing, e.filter(col("us") <= cut),
+        e.filter(col("us") > cut))
+      try runChain(spark, landing, s"$root/ckpt", e.schema) {
+        (b, batchId) =>
           val (prevTail, prevHigh) =
             if (batchId == 0L)
               (spark.createDataFrame(
@@ -1836,11 +1497,11 @@ object StreamingIndex {
                 s"${stats.getLong(0)} <= scored high-water $prevHigh — " +
                 "refusing to score against a wrong tail")
           val high = if (stats.isNullAt(1)) prevHigh else stats.getLong(1)
-          val ctx = prevTail.unionByName(b.toDF())
+          val ctx = prevTail.unionByName(b)
           val batchIds = b.select(col("event_id").as("bid"))
           graft.operators.Events.anomaliesOver(ctx, w)
             .join(batchIds, col("event_id") === col("bid"), "left_semi")
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+            .write.mode(SaveMode.Overwrite)
             .parquet(s"$versions/b$batchId/flags")
           val tw = org.apache.spark.sql.expressions.Window
             .partitionBy(col("user_id"))
@@ -1848,12 +1509,9 @@ object StreamingIndex {
           ctx.withColumn("rn", row_number().over(tw))
             .filter(col("rn") <= w).drop("rn")
             .withColumn("high_us", lit(high))
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+            .write.mode(SaveMode.Overwrite)
             .parquet(s"$versions/b$batchId/state")
-          ()
-        }
-        .start()
-      try q.awaitTermination() catch {
+      } catch {
         case e: Throwable => wipeIfMisordered(root, e)
       }
     }
@@ -1892,46 +1550,33 @@ object StreamingIndex {
       val docs = Tables.load(spark, sfDir, "documents")
         .select(col("doc_id"), col("text"))
       val cut = docs.agg(max(col("doc_id"))).head.getLong(0) / 2
-      stageInto(docs.filter(col("doc_id") <= cut), landing, "batch0")
-      stageInto(docs.filter(col("doc_id") > cut), landing, "batch1")
-      staggerBatches(landing, Seq("batch0", "batch1"))
-      val q = spark.readStream
-        .schema(StructType(Seq(StructField("doc_id", LongType),
-          StructField("text", StringType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-        .writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[Row],
-                         batchId: Long) =>
-          val agg = new MisraGriesAgg(m)
-          val prev: MgBuf =
-            if (batchId == 0L) agg.zero
-            else {
-              val rows = spark.read
-                .parquet(s"$versions/b${batchId - 1}/state").collect()
-              (rows.filter(!_.isNullAt(0))
-                 .map(r => r.getString(0) -> r.getLong(1)).toMap,
-               rows.head.getLong(2))
-            }
-          val batchSketch: MgBuf = b
-            .select(explode(split(col("text"), " ")).as("tok"))
-            .filter(col("tok") =!= "")
-            .select(lower(col("tok")).as("tok"))
-            .as[String]
-            .select(agg.toColumn).head()
-          val (cnt, n) = agg.merge(prev, batchSketch)
-          val out =
-            if (cnt.isEmpty) Seq((null: String, 0L, n))
-            else cnt.toSeq.map { case (t, c) => (t, c, n) }
-          out.toDF("tok", "cnt", "n")
-            .coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$versions/b$batchId/state")
-          ()
-        }
-        .start()
-      q.awaitTermination()
+      stageBatches(landing, docs.filter(col("doc_id") <= cut),
+        docs.filter(col("doc_id") > cut))
+      runChain(spark, landing, s"$root/ckpt", docs.schema) { (b, batchId) =>
+        val agg = new MisraGriesAgg(m)
+        val prev: MgBuf =
+          if (batchId == 0L) agg.zero
+          else {
+            val rows = spark.read
+              .parquet(s"$versions/b${batchId - 1}/state").collect()
+            (rows.filter(!_.isNullAt(0))
+               .map(r => r.getString(0) -> r.getLong(1)).toMap,
+             rows.head.getLong(2))
+          }
+        val batchSketch: MgBuf = b
+          .select(explode(split(col("text"), " ")).as("tok"))
+          .filter(col("tok") =!= "")
+          .select(lower(col("tok")).as("tok"))
+          .as[String]
+          .select(agg.toColumn).head()
+        val (cnt, n) = agg.merge(prev, batchSketch)
+        val out =
+          if (cnt.isEmpty) Seq((null: String, 0L, n))
+          else cnt.toSeq.map { case (t, c) => (t, c, n) }
+        out.toDF("tok", "cnt", "n")
+          .coalesce(1).write.mode(SaveMode.Overwrite)
+          .parquet(s"$versions/b$batchId/state")
+      }
     }
     val st = spark.read.parquet(s"$versions/b1/state")
     val cands = st.filter(col("tok").isNotNull).select(col("tok"))
@@ -1982,7 +1627,7 @@ object StreamingIndex {
           VectorSearch.driftCells(raw).filter(col("side") === 0), nBins)
           .coalesce(1), refPath)
       val landing = s"$root/landing"
-      stageInto(raw.filter(col("vec_id") % 2 === 1), landing, "batch0")
+      stageBatches(landing, raw.filter(col("vec_id") % 2 === 1))
       // a crashed prior attempt may have checkpointed the batch as
       // consumed WITHOUT committing the result (the crash window between
       // foreachBatch and the _SUCCESS marker) — AvailableNow would then
@@ -1992,87 +1637,67 @@ object StreamingIndex {
       val ckptPath = new Path(s"$root/ckpt")
       val fs = ckptPath.getFileSystem(IndexStore.hadoopConf)
       if (fs.exists(ckptPath)) fs.delete(ckptPath, true)
-      val q = spark.readStream
-        .schema(StructType(Seq(StructField("vec_id", LongType),
-          StructField("v", ArrayType(DoubleType)))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-        .writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[Row],
-                         _: Long) =>
-          IndexStore.saveDataset(
-            VectorSearch.psiVsReference(spark.read.parquet(refPath),
-              VectorSearch.driftCells(b.toDF()), nBins, eps)
-              .coalesce(1), outPath)
-          ()
-        }
-        .start()
-      q.awaitTermination()
+      runChain(spark, landing, ckptPath.toString, raw.schema) { (b, _) =>
+        IndexStore.saveDataset(
+          VectorSearch.psiVsReference(spark.read.parquet(refPath),
+            VectorSearch.driftCells(b), nBins, eps)
+            .coalesce(1), outPath)
+      }
     }
     spark.read.parquet(outPath).orderBy("dim")
   }
 
   /** RETENTION as a gated query — the last lifecycle event
     * (build → append → delete → compact → refit → RETENTION) surfaced in
-    * the graded contract. [[pruneVersions]] is the production surface (a
-    * long-running ingest otherwise accumulates every snapshot ever
-    * written); this gate proves the refcounting end-to-end on a real
-    * chain: three O(batch) appends over the fixture IVF base (versions
-    * v0 → v1 → v2, each manifest re-referencing its predecessor's
-    * segments IN PLACE — so v0's segment files are live data of v1 and
-    * v2), then one `keep = 2` vacuum. The prune must (a) remove exactly
-    * v0 and nothing else, (b) leave v0 unresolvable as a VERSION while
-    * every segment a surviving manifest references stays on disk —
-    * refcounting, not directory deletion, (c) leave the latest version's
-    * search bit-identical (top-k ties break on (dist, id), so equality
-    * is exact, not floor-gated), and (d) be idempotent — a second vacuum
-    * finds nothing. Outcomes are persisted once per data fingerprint
-    * (the prune is a destructive one-shot; a re-run in a fresh JVM must
-    * grade the SAME event, not a differently-shaped steady state), and
-    * the serving check is recomputed live on every invocation.
+    * the graded contract, one body per family. [[pruneVersions]] is the
+    * production surface (a long-running ingest otherwise accumulates
+    * every snapshot ever written); this gate proves the refcounting
+    * end-to-end on a real chain: three O(batch) appends over the
+    * fixture base (versions v0 → v1 → v2, each manifest re-referencing
+    * its predecessor's segments IN PLACE — so v0's segment files are
+    * live data of v1 and v2), then one `keep = 2` vacuum. The prune must
+    * (a) remove exactly v0 and nothing else, (b) leave v0 unresolvable
+    * as a VERSION while every segment a surviving manifest references
+    * stays on disk — refcounting, not directory deletion, (c) leave the
+    * latest version's search identical (top-k ties break on (dist, id),
+    * so equality is exact, not floor-gated), and (d) be idempotent — a
+    * second vacuum finds nothing. Outcomes are persisted once per data
+    * fingerprint (the prune is a destructive one-shot; a re-run in a
+    * fresh JVM must grade the SAME event, not a differently-shaped
+    * steady state), and the serving check is recomputed live on every
+    * invocation. (nQueries, k) ride in `name`: the persisted outcomes
+    * were graded at THOSE parameters.
     */
-  def ivfRetentionViolations(spark: SparkSession, sfDir: String,
-                             nQueries: Int = 10, k: Int = 10): DataFrame = {
+  private def retentionGate(spark: SparkSession, sfDir: String,
+                            fam: IndexFamily, name: String, nQueries: Int,
+                            k: Int): DataFrame = {
     import spark.implicits._
-    import graft.operators.AnnSearch
-    // (nQueries, k) ride in the key: the persisted one-shot outcomes
-    // were graded at THESE parameters, and mixing them with a live
-    // serving check at different ones would blend two contracts
-    val root = IndexStore.indexDir(sfDir, s"ivf-ret-$nQueries-$k-v2",
-      "embeddings")
+    val root = IndexStore.indexDir(sfDir, name, "embeddings")
     val outcome = s"$root/outcome"
     val queries = AnnSearch.fixtureQueries(spark, sfDir, nQueries)
-    val probe = AnnSearch.defaultProbe(spark, sfDir)
+    // base + three corpus-sized batches
+    val n = 4 * AnnSearch.embeddingCount(spark, sfDir)
+    def searchAt(v: Long) = fam.search(spark, sfDir, s"$root/v$v", queries,
+      nQueries, k, n).select(col("query_id"), col("id"))
     if (!IndexStore.committed(outcome)) {
-      val base = AnnSearch.ensureIvfIndex(spark, sfDir)
       // id-ceiling-windowed injections ([[AnnSearch.injectionBatch]])
-      def shifted(k: Int, delta: Double) =
-        AnnSearch.injectionBatch(spark, sfDir, k, delta)
-      AnnSearch.appendToIvfIndexAt(spark, base,
-        shifted(1, 0.04), s"$root/v0")
-      AnnSearch.appendToIvfIndexAt(spark, s"$root/v0",
-        shifted(2, 0.05), s"$root/v1")
-      AnnSearch.appendToIvfIndexAt(spark, s"$root/v1",
-        shifted(3, 0.06), s"$root/v2")
-      val pre = AnnSearch.searchIndexAt(spark, s"$root/v2", queries, k,
-        probe, expectedQ = nQueries.toLong)
-        .select(col("query_id"), col("id")).localCheckpoint(true)
+      Seq(0.04, 0.05, 0.06).zipWithIndex.foldLeft(fam.base(spark, sfDir)) {
+        case (prev, (d, v)) =>
+          fam.append(spark, prev,
+            AnnSearch.injectionBatch(spark, sfDir, v + 1, d), s"$root/v$v")
+          s"$root/v$v"
+      }
+      val pre = searchAt(2L).localCheckpoint(true)
       val fs = new Path(root).getFileSystem(IndexStore.hadoopConf)
-      def qualify(s: String): String =
-        fs.makeQualified(new Path(s)).toString
       // what the SURVIVORS reference — captured before the prune so the
       // liveness check is against the prune's own input, incl. v0's
-      // segment (re-referenced by v1/v2: must survive its version's
+      // segments (re-referenced by v1/v2: must survive their version's
       // death) and the base index's segments outside `root`
       val live = Seq(1L, 2L)
         .flatMap(v => IndexStore.readManifest(spark, s"$root/v$v"))
-        .map(e => qualify(e._2)).distinct
+        .map(e => fs.makeQualified(new Path(e._2))).distinct
       val doomed = pruneVersions(spark, root, keep = 2)
-      val post = AnnSearch.searchIndexAt(spark, s"$root/v2", queries, k,
-        probe, expectedQ = nQueries.toLong)
-        .select(col("query_id"), col("id"))
+      val post = searchAt(2L)
       val drift = post.exceptAll(pre).count() + pre.exceptAll(post).count()
       IndexStore.saveDataset(Seq(
         ("pruned_exactly_v0", 1.0,
@@ -2081,7 +1706,7 @@ object StreamingIndex {
           (if (IndexStore.committed(s"$root/v0/manifest")) 1L else 0L)
             .toDouble),
         ("live_segment_missing", 0.0,
-          live.count(p => !fs.exists(new Path(p))).toDouble),
+          live.count(p => !fs.exists(p)).toDouble),
         ("post_prune_drift", 0.0, drift.toDouble),
         ("prune_idempotent", 0.0,
           pruneVersions(spark, root, keep = 2).size.toDouble))
@@ -2092,92 +1717,27 @@ object StreamingIndex {
     val persisted = spark.read.parquet(outcome)
       .filter(col("expected") =!= col("actual"))
     val vLast = latestVersion(root).getOrElse(-1L)
-    val nRes =
-      if (vLast < 0L) -1L
-      else AnnSearch.searchIndexAt(spark, s"$root/v$vLast", queries, k,
-        probe, expectedQ = nQueries.toLong).count()
-    val current = Seq(
-      Option.when(vLast != 2L)(
-        ("latest_version", 2.0, vLast.toDouble)),
+    val nRes = if (vLast < 0L) -1L else searchAt(vLast).count()
+    persisted.unionByName(violationRows(spark,
+      Option.when(vLast != 2L)(("latest_version", 2.0, vLast.toDouble)),
       Option.when(nRes != nQueries.toLong * k)(
-        ("serving_rows", nQueries.toDouble * k, nRes.toDouble))).flatten
-    persisted
-      .unionByName(current.toDF("invariant", "expected", "actual"))
+        ("serving_rows", nQueries.toDouble * k, nRes.toDouble))))
       .orderBy("invariant")
   }
 
-  /** RETENTION for the GRAPH chain — [[ivfRetentionViolations]]'
-    * contract on the graph family's manifested versions (the
-    * [[pruneVersions]] refcounting vacuum is layout-agnostic; this gate
-    * proves that on the k-NN-graph chain): three O(batch) graph appends
-    * build v0→v1→v2, the keep-2 prune must doom EXACTLY v0 while every
-    * segment any survivor references lives on (v0's delta segments are
-    * re-referenced by v1/v2 and must survive their version's death, as
-    * must the base index's segments outside the root), the surviving
-    * head must answer the fixture queries IDENTICALLY before and after
-    * the prune, and the prune must be idempotent. One-shot outcomes
-    * persist at prune time; the serving check recomputes per call.
+  /** [[retentionGate]] on the IVF chain. */
+  def ivfRetentionViolations(spark: SparkSession, sfDir: String,
+                             nQueries: Int = 10, k: Int = 10): DataFrame =
+    retentionGate(spark, sfDir, IvfFamily, s"ivf-ret-$nQueries-$k-v2",
+      nQueries, k)
+
+  /** [[retentionGate]] on the k-NN-graph chain — the [[pruneVersions]]
+    * vacuum is layout-agnostic, and this proves it on the graph's
+    * nested `seg/app/…` segments.
     */
   def graphRetentionViolations(spark: SparkSession, sfDir: String,
                                nQueries: Int = 10,
-                               k: Int = 10): DataFrame = {
-    import spark.implicits._
-    import graft.operators.{AnnSearch, GraphAnn}
-    val root = IndexStore.indexDir(sfDir, s"graph-ret-$nQueries-$k-v4",
-      "embeddings")
-    val outcome = s"$root/outcome"
-    val queries = AnnSearch.fixtureQueries(spark, sfDir, nQueries)
-    val n = AnnSearch.embeddingCount(spark, sfDir)
-    val hops = GraphAnn.autoHops(4 * n, GraphAnn.autoDegree(n))
-    def searchAt(v: Long) =
-      GraphAnn.graphSearchAt(spark, s"$root/v$v", queries, k,
-        GraphAnn.autoEf(4 * n), hops)
-    if (!IndexStore.committed(outcome)) {
-      val base = GraphAnn.buildGraphIndex(spark, sfDir)
-      // id-ceiling-windowed injections ([[AnnSearch.injectionBatch]])
-      def shifted(k: Int, delta: Double) =
-        AnnSearch.injectionBatch(spark, sfDir, k, delta)
-      GraphAnn.appendToGraphIndexAt(spark, base,
-        shifted(1, 0.04), s"$root/v0")
-      GraphAnn.appendToGraphIndexAt(spark, s"$root/v0",
-        shifted(2, 0.05), s"$root/v1")
-      GraphAnn.appendToGraphIndexAt(spark, s"$root/v1",
-        shifted(3, 0.06), s"$root/v2")
-      val pre = searchAt(2L)
-        .select(col("query_id"), col("id")).localCheckpoint(true)
-      val fs = new Path(root).getFileSystem(IndexStore.hadoopConf)
-      def qualify(s: String): String =
-        fs.makeQualified(new Path(s)).toString
-      val live = Seq(1L, 2L)
-        .flatMap(v => IndexStore.readManifest(spark, s"$root/v$v"))
-        .map(e => qualify(e._2)).distinct
-      val doomed = pruneVersions(spark, root, keep = 2)
-      val post = searchAt(2L).select(col("query_id"), col("id"))
-      val drift = post.exceptAll(pre).count() + pre.exceptAll(post).count()
-      IndexStore.saveDataset(Seq(
-        ("pruned_exactly_v0", 1.0,
-          if (doomed == Seq(0L)) 1.0 else 0.0),
-        ("doomed_still_resolvable", 0.0,
-          (if (IndexStore.committed(s"$root/v0/manifest")) 1L else 0L)
-            .toDouble),
-        ("live_segment_missing", 0.0,
-          live.count(p => !fs.exists(new Path(p))).toDouble),
-        ("post_prune_drift", 0.0, drift.toDouble),
-        ("prune_idempotent", 0.0,
-          pruneVersions(spark, root, keep = 2).size.toDouble))
-        .toDF("invariant", "expected", "actual").coalesce(1), outcome)
-    }
-    val persisted = spark.read.parquet(outcome)
-      .filter(col("expected") =!= col("actual"))
-    val vLast = latestVersion(root).getOrElse(-1L)
-    val nRes = if (vLast < 0L) -1L else searchAt(vLast).count()
-    val current = Seq(
-      Option.when(vLast != 2L)(
-        ("latest_version", 2.0, vLast.toDouble)),
-      Option.when(nRes != nQueries.toLong * k)(
-        ("serving_rows", nQueries.toDouble * k, nRes.toDouble))).flatten
-    persisted
-      .unionByName(current.toDF("invariant", "expected", "actual"))
-      .orderBy("invariant")
-  }
+                               k: Int = 10): DataFrame =
+    retentionGate(spark, sfDir, GraphFamily, s"graph-ret-$nQueries-$k-v4",
+      nQueries, k)
 }

@@ -60,7 +60,6 @@ object StreamingOps extends Serializable {
                           statePartitions: Option[Int] = None): DataFrame = {
     val spark = df.sparkSession
     def run(): Unit = {
-      val t0 = System.nanoTime()
       // Ephemeral checkpoint on tmpfs when present (r18, guide §6 I/O):
       // a memory-sink replay's checkpoint is throwaway by definition —
       // Spark itself puts it in a deleted-on-stop temp dir — but the
@@ -82,18 +81,9 @@ object StreamingOps extends Serializable {
       val q = df.writeStream.outputMode(mode).format("memory")
         .queryName(name).option("checkpointLocation", ckpt).start()
       // the checkpoint delete sits in its own finally: a throwing
-      // stop() or debug dump must not leak the tmpfs dir
-      try q.processAllAvailable() finally try {
-        if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG")) {
-          System.err.println(f"[stream] $name start->drained " +
-            f"${(System.nanoTime() - t0) / 1e9}%.3f s")
-          q.recentProgress.foreach { p =>
-            System.err.println(s"[stream] $name batch ${p.batchId} " +
-              s"rows=${p.numInputRows} durationMs=${p.durationMs}")
-          }
-        }
-        q.stop()
-      } finally org.apache.commons.io.FileUtils.deleteDirectory(
+      // stop() must not leak the tmpfs dir
+      try q.processAllAvailable() finally try q.stop()
+      finally org.apache.commons.io.FileUtils.deleteDirectory(
         new java.io.File(ckpt))
     }
     statePartitions match {

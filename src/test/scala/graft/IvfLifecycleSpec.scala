@@ -46,31 +46,13 @@ class IvfLifecycleSpec extends SparkSpec {
           corpus, 10, nProbe, m, nk, 40, q)))
   }
 
-  private def tmp(p: String): String =
-    java.nio.file.Files.createTempDirectory(p).toString
-
   private def shifted(off: Long, d: Double): DataFrame =
     Tables.load(spark, sf, "embeddings")
       .select((col("vec_id") + off).as("vec_id"),
         expr(s"transform(embedding, x -> cast(x as double) + $d)").as("v"))
 
-  /** Every file under `dir` with its size and mtime: a write of any kind
-    * changes it. (The committed-manifest read is cached per JVM, so the
-    * disk is what shows a replay rewrote nothing.)
-    */
-  private def files(dir: String): Set[(String, Long, Long)] = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(IndexStore.hadoopConf)
-    val it = fs.listFiles(new org.apache.hadoop.fs.Path(dir), true)
-    var out = Set.empty[(String, Long, Long)]
-    while (it.hasNext) {
-      val f = it.next()
-      out += ((f.getPath.toString, f.getLen, f.getModificationTime))
-    }
-    out
-  }
-
-  test("append and delete guards hold on both codecs") {
+  tempDirTest("append and delete guards hold on both codecs") { newDir =>
+    def tmp(p: String) = newDir(p).toString
     for (c <- chains) {
       // a batch of the wrong width would NULL every centroid distance
       val wide = shifted(140000L, 0.01)
@@ -109,8 +91,9 @@ class IvfLifecycleSpec extends SparkSpec {
     }
   }
 
-  test("flat and PQ chains keep the same live ids and segment shape " +
-      "through append, delete and the in-chain fold") {
+  tempDirTest("flat and PQ chains keep the same live ids and segment " +
+      "shape through append, delete and the in-chain fold") { newDir =>
+    def tmp(p: String) = newDir(p).toString
     val b1 = shifted(110000L, 0.01)
     val b2 = shifted(120000L, 0.02)
     val b3 = shifted(130000L, 0.03)

@@ -1,7 +1,13 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
+import org.scalactic.source.Position
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.sources.IndexStore
 
 /** Shared local SparkSession for all suites (one JVM per `sbt test` fork). */
 object TestSpark {
@@ -22,4 +28,35 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   def sf: String = TestSpark.sf
+
+  /** A test whose body gets `newDir`, a maker of fresh directories under
+    * `java.io.tmpdir`; every directory it made is deleted when the test
+    * ends, whether it passed or failed.
+    */
+  def tempDirTest(name: String)(body: (String => Path) => Unit)
+                 (implicit pos: Position): Unit =
+    test(name) {
+      val made = scala.collection.mutable.ListBuffer.empty[Path]
+      try body { prefix =>
+        val d = Files.createTempDirectory(prefix)
+        made += d
+        d
+      } finally made.foreach(d => FileUtils.deleteQuietly(d.toFile))
+    }
+
+  /** Every file under `dir` with its size and mtime: a write of any kind
+    * changes it. (The committed-manifest read is cached per JVM, so the
+    * disk is what shows a replay rewrote nothing.)
+    */
+  def files(dir: String): Set[(String, Long, Long)] = {
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(IndexStore.hadoopConf)
+    val it = fs.listFiles(new org.apache.hadoop.fs.Path(dir), true)
+    var out = Set.empty[(String, Long, Long)]
+    while (it.hasNext) {
+      val f = it.next()
+      out += ((f.getPath.toString, f.getLen, f.getModificationTime))
+    }
+    out
+  }
 }

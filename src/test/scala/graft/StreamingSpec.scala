@@ -12,18 +12,19 @@ import graft.streaming.StreamingOps.{Ev, OpenSess, SessOut}
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
-  test("two-micro-batch sessionize: open sessions continue across batches") {
+  tempDirTest("two-micro-batch sessionize: open sessions continue across " +
+      "batches") { newDir =>
     // split events at the median timestamp into two files -> two batches
     val ev = Tables.normalizeTs(Tables.eventsRaw(spark, sf))
       .select(col("user_id"), col("event_id"), col("ts_us").as("us"))
     val cut = ev.stat.approxQuantile("us", Array(0.5), 0.0).head.toLong
-    val dir = Files.createTempDirectory("graft_2batch")
+    val dir = newDir("graft_2batch")
     ev.filter(col("us") <= cut).coalesce(1).write
       .parquet(s"$dir/b1/data.parquet")
     ev.filter(col("us") > cut).coalesce(1).write
       .parquet(s"$dir/b2/data.parquet")
     // stage: one file per micro-batch via maxFilesPerTrigger
-    val stage = Files.createTempDirectory("graft_2batch_in")
+    val stage = newDir("graft_2batch_in")
     def copyPart(sub: String, n: Int): Unit = {
       val part = new java.io.File(s"$dir/$sub/data.parquet").listFiles()
         .filter(_.getName.endsWith(".parquet")).head
@@ -100,15 +101,16 @@ class StreamingSpec extends SparkSpec {
     assert(got.nonEmpty && got == want)
   }
 
-  test("checkpointed file-sink ingest is exactly-once across restarts") {
+  tempDirTest("checkpointed file-sink ingest is exactly-once across " +
+      "restarts") { newDir =>
     val ev = Tables.eventsRaw(spark, sf)
       .select(col("event_id"), col("user_id"))
     val cut = ev.count() / 2
-    val src = Files.createTempDirectory("graft_ingest_src")
-    val out = Files.createTempDirectory("graft_ingest_out").toString
-    val ckpt = Files.createTempDirectory("graft_ingest_ckpt").toString
+    val src = newDir("graft_ingest_src")
+    val out = newDir("graft_ingest_out").toString
+    val ckpt = newDir("graft_ingest_ckpt").toString
     def stage(part: Int, df: org.apache.spark.sql.DataFrame): Unit = {
-      val d = Files.createTempDirectory("graft_ingest_stage")
+      val d = newDir("graft_ingest_stage")
       df.coalesce(1).write.mode("overwrite").parquet(d.toString)
       val f = new java.io.File(d.toString).listFiles()
         .filter(_.getName.endsWith(".parquet")).head
@@ -179,13 +181,12 @@ class StreamingSpec extends SparkSpec {
     assert(got.nonEmpty && got == want)
   }
 
-  test("flat-store delete: tombstones leave the ranking, re-adds get " +
+  tempDirTest("flat-store delete: tombstones leave the ranking, re-adds get " +
       "fresh ids without resurrecting the old vector, compaction " +
-      "reclaims the space") {
+      "reclaims the space") { newDir =>
     import graft.streaming.StreamingIndex
     import graft.sources.IndexStore
-    def tmp(p: String) =
-      java.nio.file.Files.createTempDirectory(p).toString
+    def tmp(p: String) = newDir(p).toString
     val root = tmp("graft_flat_del_root")
     val landing = s"$root/landing"
     val ckpt = s"$root/ckpt"
@@ -279,11 +280,11 @@ class StreamingSpec extends SparkSpec {
       "v1 must reference the staged wave-2 segments")
   }
 
-  test("stream-failure wipe is scoped to the out-of-order refusal") {
+  tempDirTest("stream-failure wipe is scoped to the out-of-order " +
+      "refusal") { newDir =>
     import graft.streaming.StreamingIndex
     def mkRoot(): java.io.File = {
-      val d = java.nio.file.Files
-        .createTempDirectory("graft_wipe").toFile
+      val d = newDir("graft_wipe").toFile
       java.nio.file.Files.writeString(
         new java.io.File(d, "state").toPath, "derived")
       d
@@ -475,7 +476,8 @@ class StreamingSpec extends SparkSpec {
     assert(native == custom)
   }
 
-  test("windowed-agg state stays bounded: watermark eviction fires") {
+  tempDirTest("windowed-agg state stays bounded: watermark eviction " +
+      "fires") { newDir =>
     // the 100 TB streaming risk is unbounded state, not wrong sums: an
     // append-mode windowed aggregation over ≥3 time-ordered micro-batches
     // must EVICT finalized windows as the watermark advances, so the
@@ -485,14 +487,14 @@ class StreamingSpec extends SparkSpec {
         col("ts_us").as("us"))
     val qs = ev.stat.approxQuantile("us", Array(0.25, 0.5, 0.75), 0.0)
       .map(_.toLong)
-    val stage = Files.createTempDirectory("graft_state_evict")
+    val stage = newDir("graft_state_evict")
     val parts = Seq(
       ev.filter(col("us") <= qs(0)),
       ev.filter(col("us") > qs(0) && col("us") <= qs(1)),
       ev.filter(col("us") > qs(1) && col("us") <= qs(2)),
       ev.filter(col("us") > qs(2)))
     parts.zipWithIndex.foreach { case (p, i) =>
-      val tmp = Files.createTempDirectory(s"graft_evict_w$i")
+      val tmp = newDir(s"graft_evict_w$i")
       p.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = new java.io.File(tmp.toString).listFiles()
         .filter(_.getName.endsWith(".parquet")).head
@@ -531,7 +533,8 @@ class StreamingSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
-  test("flat-store ingest auto-compacts past the segment bound") {
+  tempDirTest("flat-store ingest auto-compacts past the segment " +
+      "bound") { newDir =>
     import graft.sources.IndexStore
     import graft.streaming.StreamingIndex
     import spark.implicits._
@@ -542,7 +545,7 @@ class StreamingSpec extends SparkSpec {
       (s"k-new-$i", s"text-new-$i", Seq(0.3, 0.1 * (i + 1))))
       .toDF("str_id", "text", "v")
     def chain(maxSegments: Int): String = {
-      val root = Files.createTempDirectory("graft_flat_auto").toString
+      val root = newDir("graft_flat_auto").toString
       (0 to 2).foreach { i =>
         StreamingIndex.stageInto(b(i), s"$root/landing", s"batch$i")
         StreamingIndex.ingestAvailable(spark, s"$root/landing", root,
@@ -573,7 +576,8 @@ class StreamingSpec extends SparkSpec {
     assert(m.forall(_._2.contains("/v2/")))
   }
 
-  test("compaction collapses the chain to one segment per artifact") {
+  tempDirTest("compaction collapses the chain to one segment per " +
+      "artifact") { newDir =>
     import graft.sources.IndexStore
     import graft.streaming.StreamingIndex
     // the ingest fixture's two-version chain is the compaction input
@@ -584,7 +588,7 @@ class StreamingSpec extends SparkSpec {
     // compaction bounds)
     assert(IndexStore.readManifest(spark, srcV)
       .count(_._1 == "mapping") == 2)
-    val out = Files.createTempDirectory("graft_compact").toString
+    val out = newDir("graft_compact").toString
     StreamingIndex.compactTo(spark, root, out)
     assert(StreamingIndex.latestVersion(out).contains(0L))
     val m = IndexStore.readManifest(spark, s"$out/v0")
@@ -601,10 +605,11 @@ class StreamingSpec extends SparkSpec {
       StreamingIndex.loadVectorsAt(spark, srcV).count())
   }
 
-  test("pruneVersions refcounts segments: survivors' references live on") {
+  tempDirTest("pruneVersions refcounts segments: survivors' references " +
+      "live on") { newDir =>
     import graft.sources.IndexStore
     import graft.streaming.StreamingIndex
-    val root = Files.createTempDirectory("graft_prune").toString
+    val root = newDir("graft_prune").toString
     def seg(path: String): Unit =
       IndexStore.saveDataset(spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -651,7 +656,7 @@ class StreamingSpec extends SparkSpec {
     // a root with NO manifested versions (foreign/old layout) reads as
     // all-uncommitted: the vacuum deletes NOTHING — a wrong vacuum
     // pointed at a root can't eat live data
-    val root2 = Files.createTempDirectory("graft_prune2").toString
+    val root2 = newDir("graft_prune2").toString
     (0L to 2L).foreach(v => seg(s"$root2/v$v/mapping"))
     assert(StreamingIndex.pruneVersions(spark, root2, keep = 2).isEmpty)
     assert(java.nio.file.Files.exists(
@@ -776,13 +781,14 @@ class StreamingSpec extends SparkSpec {
       .collect().isEmpty)
   }
 
-  test("index ingest refuses a fresh checkpoint over an older root") {
+  tempDirTest("index ingest refuses a fresh checkpoint over an older " +
+      "root") { newDir =>
     import graft.sources.IndexStore
     import graft.streaming.StreamingIndex
     // a committed v5 this (fresh) checkpoint knows nothing about: the
     // lost-checkpoint scenario — batch ids restart at 0 and would fold
     // from an EMPTY base, rewriting history under readers
-    val root = Files.createTempDirectory("graft_ckpt_mismatch").toString
+    val root = newDir("graft_ckpt_mismatch").toString
     IndexStore.saveDataset(spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       StreamingIndex.MappingSchema), s"$root/v5/mapping")
