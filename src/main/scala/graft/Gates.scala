@@ -37,8 +37,9 @@ import graft.sources.IndexStore
   * regenerated fixture must recompute, and every index version the
   * gates build is itself keyed by the same fingerprint via
   * [[IndexStore.indexDir]]. Session-instance keyed like every
-  * checkpointed-frame cache ([[AnnSearch.sessionKey]]): a checkpointed
-  * frame pins the session that made it, so a session swap must MISS.
+  * checkpointed frame of the cache seam ([[IndexStore.cachedFrame]]): a
+  * checkpointed frame pins the session that made it, so a session swap
+  * must MISS.
   *
   * Scope: this object is wired in [[SparkEntry]] ONLY. Operator-layer
   * callers and the specs call the gate functions directly and always
@@ -46,44 +47,17 @@ import graft.sources.IndexStore
   * not of the operators.
   */
 object Gates {
-  // group key (session#sfDir#name) -> (source fingerprints, checkpointed
-  // frame). Keying the MAP by the fingerprint-free group and storing the
-  // fingerprint in the VALUE is what makes eviction possible: a fixture
-  // regeneration lands on the SAME group with a different fingerprint,
-  // so the stale entry is found (and its pinned checkpoint blocks
-  // released via Checkpoints.release) instead of accumulating forever —
-  // the round-13 storage-leak class, closed for the round-14 caches.
-  private val cache = new graft.operators.Checkpoints.FrameCache
-
   /** The cached-gate wrapper: `compute` runs once per (session, sfDir,
     * source fingerprints, name); later calls re-read the checkpointed
     * violations frame. `tables` names the source tables the gate's
-    * whole version chain derives from (fingerprint inputs).
-    *
-    * Eviction (round 15): a call that MISSES because the fingerprint
-    * changed (fixture regenerated in-place) releases the superseded
-    * entry's checkpoint blocks before computing the fresh one, and a
-    * call from a NEW session instance purges every dead session's
-    * entries (their frames can never be served again — the key embeds
-    * the session — so their blocks are pure leaked storage). Releasing
-    * is safe by the [[graft.operators.Checkpoints.release]] contract:
-    * a superseded-fingerprint frame derives from a source that no
-    * longer exists, and a dead session's frame cannot be re-served.
-    *
-    * Triage bypass: `SPARK_GRAFT_GATES_LIVE=1` disables the cache and
-    * every gate recomputes per call — for isolating a regression the
-    * cached read would mask within one long-lived session (e.g. a
-    * Bench `SPARK_GRAFT_ONLY` loop re-measuring one gate's true cost).
+    * whole version chain derives from (fingerprint inputs). It is a
+    * frame of the cache seam ([[IndexStore.cachedFrame]]): a regenerated
+    * fixture recomputes and releases the superseded frame's blocks, and
+    * a dead session's frames are purged.
     */
   def cached(spark: SparkSession, sfDir: String, name: String,
              tables: Seq[String] = Seq("embeddings"))
-            (compute: => DataFrame): DataFrame = {
-    if (sys.env.get("SPARK_GRAFT_GATES_LIVE").contains("1")) return compute
-    val fps = tables.map(t => IndexStore.sourceFingerprint(sfDir, t))
-      .mkString(",")
-    cache.getOrCompute(spark, s"$sfDir#$name", fps)(compute)
-  }
-
-  /** Test/triage visibility: the number of live cached gate frames. */
-  private[graft] def cacheSize: Int = cache.size
+            (compute: => DataFrame): DataFrame =
+    IndexStore.cachedFrame(spark, "gate", s"$sfDir#$name",
+      IndexStore.FromSource(sfDir, tables))(compute)
 }

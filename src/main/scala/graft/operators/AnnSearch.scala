@@ -53,34 +53,16 @@ object AnnSearch {
   private[graft] def autoProbe(nClusters: Int): Int =
     math.max(1, (nClusters * 3 + 7) / 8)
 
-  /** Per-SparkSession-INSTANCE cache-key component for the DataFrame
-    * caches (recall frame, exact pairs, curve, the graph family's
-    * append truth): a checkpointed DataFrame pins the session that
-    * created it, so a stop-and-recreate of the session in the same JVM
-    * must MISS rather than serve a dead handle. Identity-keyed weak map
-    * (not hashCode — two live sessions can collide on hash), entries
-    * released with the session.
+  /** A fixture table's row count for auto-sizing, one count job per
+    * table fingerprint ([[IndexStore.cached]]) — every default-parameter
+    * query would otherwise re-count the LARGEST table just to re-derive
+    * the name of an already-built index.
     */
-  private val sessionIds =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, String]())
-  private[graft] def sessionKey(spark: SparkSession): String =
-    sessionIds.computeIfAbsent(spark,
-      _ => java.util.UUID.randomUUID().toString)
-
-  /** Table-size cache for auto-sizing: one count job per (fixture dir,
-    * table) per JVM — every default-parameter query would otherwise
-    * re-count the LARGEST table just to re-derive the name of an
-    * already-built index. Safe because a regenerated fixture invalidates
-    * via [[IndexStore.indexDir]]'s source fingerprint, not via this
-    * count.
-    */
-  private val countCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   private[graft] def tableCount(spark: SparkSession, sfDir: String,
                                 table: String): Long =
-    countCache.computeIfAbsent(s"$sfDir#$table",
-      _ => Tables.load(spark, sfDir, table).count()).longValue()
+    IndexStore.cached("tableCount", s"$sfDir#$table",
+      IndexStore.FromSource(sfDir, Seq(table)))(
+      Tables.load(spark, sfDir, table).count())
   private[graft] def embeddingCount(spark: SparkSession,
                                     sfDir: String): Long =
     tableCount(spark, sfDir, "embeddings")
@@ -515,20 +497,16 @@ object AnnSearch {
   private[graft] def ivfVectors(spark: SparkSession, dir: String): DataFrame =
     IndexStore.readUnion(spark, ivfLayout(spark, dir).segments)
 
-  /** The version's cluster count, cached per COMMITTED centroids path
-    * (immutable once committed — the [[IndexStore.readManifest]] cache's
-    * argument): saturated readers (`nProbe = -1`) derive it per dir, and
-    * without the cache a K-shard scatter-gather pays K count jobs per
-    * call for a number that never changes.
+  /** The version's cluster count, cached per committed centroids path
+    * ([[IndexStore.cached]]): saturated readers (`nProbe = -1`) derive it
+    * per dir, and without the cache a K-shard scatter-gather pays K count
+    * jobs per call for a number that never changes.
     */
-  private val clusterCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Integer]()
   private[graft] def clusterCountAt(spark: SparkSession,
                                     dir: String): Int = {
     val cPath = ivfLayout(spark, dir).centroids
-    def load() = IndexStore.readCached(spark, cPath).count().toInt
-    if (!IndexStore.committed(cPath)) load()
-    else clusterCountCache.computeIfAbsent(cPath, _ => load()).intValue()
+    IndexStore.cached("clusterCount", cPath, IndexStore.AtPath(cPath))(
+      IndexStore.readCached(spark, cPath).count().toInt)
   }
 
   /** Drop tombstone-masked rows from a candidate/vector frame keyed by
@@ -784,9 +762,15 @@ object AnnSearch {
       .repartition(col("cluster"))
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .partitionBy("cluster").parquet(segment)
+    // an empty batch (e.g. a shard's empty slice of a streamed batch)
+    // writes a segment with no data file, from which no reader can infer
+    // a schema: the version then re-lists the predecessor's segments, so
+    // it reads exactly as its predecessor does
+    val empty = !IndexStore.holdsData(segment)
     // LAST: the manifest commits the version (see commit protocol above)
     IndexStore.writeManifest(spark, out,
-      if (fold) base.successor(Seq(segment), Nil)
+      if (empty) base.successor(base.segments, base.tombstones)
+      else if (fold) base.successor(Seq(segment), Nil)
       else base.successor(base.segments :+ segment, base.tombstones))
     // the version is committed — the assignment's working checkpoint is
     // dead; release deterministically ([[Checkpoints]])
@@ -1204,26 +1188,22 @@ object AnnSearch {
   }
 
   /** Fraction of the corpus matching `label` — the predicate SELECTIVITY
-    * the filtered probe over-probes by. Two cached control-plane counts
-    * (at 100 TB both come from table statistics / NDV sketches). The
-    * cache keys on the SOURCE fingerprint (as [[IndexStore.indexDir]]
-    * does), not the path: selectivity feeds the saturation-exactness
-    * property that lets `ann_filtered` share the exact oracle, so a
-    * regenerated fixture in the same JVM must never be served a stale
+    * the filtered probe over-probes by. Two control-plane counts (at
+    * 100 TB both come from table statistics / NDV sketches), cached per
+    * source fingerprint ([[IndexStore.cached]]): selectivity feeds the
+    * saturation-exactness property that lets `ann_filtered` share the
+    * exact oracle, so a regenerated fixture must never be served a stale
     * figure — both counts run fresh inside the miss, keeping numerator
     * and denominator consistent with each other.
     */
-  private val selCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Double]()
   private[graft] def labelSelectivity(spark: SparkSession, sfDir: String,
-                                      label: Int): Double = {
-    val fp = IndexStore.sourceFingerprint(sfDir, "embeddings")
-    selCache.computeIfAbsent(s"$sfDir#$fp#$label", _ => {
+                                      label: Int): Double =
+    IndexStore.cached("selectivity", s"$sfDir#$label",
+      IndexStore.FromSource(sfDir, Seq("embeddings"))) {
       val emb = Tables.load(spark, sfDir, "embeddings")
       val matching = emb.filter(col("label") === label).count()
       matching.toDouble / math.max(1L, emb.count())
-    }).doubleValue()
-  }
+    }
 
   /** FILTERED approximate k-NN: metadata predicate + IVF probe in ONE
     * plan — the promised-but-missing `search_by_text`-style filtered
@@ -1431,24 +1411,17 @@ object AnnSearch {
     * [[annRecallViolations]] is a pure filter over it, so the exact
     * denominator and the six per-method searches never run twice across
     * the gauge tier (they are ~25% of the whole suite's wall-clock
-    * otherwise). Fingerprint keying, as in [[labelSelectivity]], keeps a
-    * regenerated fixture from reading a stale frame.
+    * otherwise). It is a checkpointed frame of the cache seam
+    * ([[IndexStore.cachedFrame]]), so a regenerated fixture or a new
+    * session recomputes it, and the superseded frame's blocks are
+    * released.
     */
-  // session-instance keying + eviction (all three DataFrame caches
-  // here, via Checkpoints.FrameCache): a cached checkpointed frame pins
-  // the session that created it, so a stop-and-recreate of the session
-  // in the same JVM must MISS rather than serve a dead handle, and a
-  // superseded-fingerprint or dead-session entry has its blocks
-  // RELEASED (the Gates.cached discipline) instead of pinned for the
-  // JVM lifetime; only the scalar caches ([[countCache]], [[selCache]])
-  // survive a session swap
-  private val recallCache = new Checkpoints.FrameCache
   private def recallFrame(spark: SparkSession, sfDir: String,
                           nQueries: Int, k: Int,
                           floors: Map[String, Double]): DataFrame =
-    recallCache.getOrCompute(spark,
+    IndexStore.cachedFrame(spark, "recall",
       s"$sfDir#$nQueries#$k#" + floors.toSeq.sorted.mkString(","),
-      IndexStore.sourceFingerprint(sfDir, "embeddings"))(
+      IndexStore.FromSource(sfDir, Seq("embeddings")))(
       computeRecallFrame(spark, sfDir, nQueries, k, floors))
 
   /** The exact k-NN truth pairs (query_id, id), checkpointed and shared
@@ -1481,11 +1454,10 @@ object AnnSearch {
     IndexStore.readCached(spark, dir)
   }
 
-  private val exactCache = new Checkpoints.FrameCache
   private[graft] def exactKnnPairs(spark: SparkSession, sfDir: String,
                             nQueries: Int, k: Int): DataFrame =
-    exactCache.getOrCompute(spark, s"$sfDir#$nQueries#$k",
-      IndexStore.sourceFingerprint(sfDir, "embeddings"))(
+    IndexStore.cachedFrame(spark, "exactPairs", s"$sfDir#$nQueries#$k",
+      IndexStore.FromSource(sfDir, Seq("embeddings")))(
       exactKnnAt(spark, sfDir, nQueries, k)
         .select(col("query_id"), col("id")))
 
@@ -1640,11 +1612,10 @@ object AnnSearch {
     * JVM and the checkpointed result re-read after that. Fingerprint
     * keying keeps a regenerated fixture from serving a stale curve.
     */
-  private val curveCache = new Checkpoints.FrameCache
   def annRecallCurve(spark: SparkSession, sfDir: String,
                      nQueries: Int = 10, k: Int = 10): DataFrame =
-    curveCache.getOrCompute(spark, s"$sfDir#$nQueries#$k",
-      IndexStore.sourceFingerprint(sfDir, "embeddings"))(
+    IndexStore.cachedFrame(spark, "curve", s"$sfDir#$nQueries#$k",
+      IndexStore.FromSource(sfDir, Seq("embeddings")))(
       computeRecallCurve(spark, sfDir, nQueries, k))
       .orderBy("method", "cost")
 
@@ -1770,17 +1741,16 @@ object AnnSearch {
     * a count-based shift still lands inside the base id space (and the
     * fixture-era +20000 constant overlapped 180k of the 100× base ids
     * outright — the append gate's vector_count invariant measured the
-    * collision, not the append). Cached per (dir, fingerprint) like
+    * collision, not the append). Cached per source fingerprint like
     * [[tableCount]]; on dense fixture ids (0..n-1) the ceiling equals
     * the count, so fixture artifacts are unchanged.
     */
   private[graft] def embeddingIdCeiling(spark: SparkSession,
                                         sfDir: String): Long =
-    countCache.computeIfAbsent(
-      s"$sfDir#embeddings#idceiling#" +
-        IndexStore.sourceFingerprint(sfDir, "embeddings"),
-      _ => Tables.load(spark, sfDir, "embeddings")
-        .agg(max(col("vec_id"))).head.getLong(0) + 1L).longValue()
+    IndexStore.cached("idCeiling", sfDir,
+      IndexStore.FromSource(sfDir, Seq("embeddings")))(
+      Tables.load(spark, sfDir, "embeddings")
+        .agg(max(col("vec_id"))).head.getLong(0) + 1L)
 
   private[graft] def appendBatch(spark: SparkSession,
                                  sfDir: String): DataFrame = {

@@ -33,102 +33,4 @@ private[graft] object Checkpoints {
     case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
     case _              => ()
   }
-
-  /** A checkpointed-frame cache WITH the [[graft.Gates.cached]] eviction
-    * discipline, factored out so every fingerprint-keyed frame cache in
-    * the operator layer (recall frames, recall curves, exact-truth
-    * pairs, PQ operating points) shares it instead of re-growing the
-    * round-13 leak class one cache at a time: without eviction, a
-    * regenerated fixture (new fingerprint) or a stopped session leaves
-    * the superseded entry's localCheckpoint blocks pinned for the JVM
-    * lifetime — dead storage-memory that slows UNRELATED queries.
-    *
-    * Keying: the map key is (session, group) where `group` is
-    * everything that IDENTIFIES the cached frame except the source
-    * fingerprint; the fingerprint travels in the VALUE as the
-    * discriminator. A fixture regenerated in-place then lands on the
-    * SAME map entry with a different discriminator, so the stale frame
-    * is found and its blocks released (instead of accumulating under a
-    * fingerprint-embedding key forever). Every call purges entries of
-    * PROVABLY DEAD sessions — their frames can never be served again
-    * (the key embeds the session instance), so their blocks are pure
-    * leaked storage. "Provably dead" is checked, not inferred from
-    * "not the caller": a concurrently-live sibling session (parallel
-    * suites sharing one JVM) must keep its entries — a released
-    * localCheckpoint block is non-recomputable, so evicting a live
-    * session's frame breaks that session's next re-read.
-    */
-  private[graft] final class FrameCache {
-    private val cache = new java.util.concurrent.ConcurrentHashMap[
-      String, (String, DataFrame)]()
-
-    /** sess-key → its session, WEAKLY held (the cache must not extend a
-      * session's lifetime — [[AnnSearch.sessionKey]]'s WeakHashMap is
-      * the same discipline). Liveness evidence for the purge.
-      */
-    private val owners = new java.util.concurrent.ConcurrentHashMap[
-      String,
-      java.lang.ref.WeakReference[org.apache.spark.sql.SparkSession]]()
-
-    /** A session is provably dead when its weak ref is gone (the
-      * instance was GC'd — no caller can ever present it to
-      * [[getOrCompute]] again) or its SparkContext is stopped. A live
-      * session that merely isn't the current caller is neither.
-      */
-    private def provablyDead(sessKey: String): Boolean = {
-      val ref = owners.get(sessKey)
-      ref == null || {
-        val s = ref.get()
-        s == null || s.sparkContext.isStopped
-      }
-    }
-
-    /** Test seam: drop the liveness evidence for `spark`, simulating a
-      * GC'd session instance (a deterministic stand-in for the
-      * weak-ref clearing the purge keys on). Test-only.
-      */
-    private[graft] def forgetOwner(
-        spark: org.apache.spark.sql.SparkSession): Unit =
-      owners.remove(AnnSearch.sessionKey(spark))
-
-    /** `group`: cache identity minus the fingerprint (dir, Q, k, …);
-      * `disc`: the source fingerprint(s) the frame derives from.
-      * `compute` runs once per (live session, group, disc); the result
-      * is eagerly checkpointed and re-read after that.
-      */
-    def getOrCompute(spark: org.apache.spark.sql.SparkSession,
-                     group: String, disc: String)
-                    (compute: => DataFrame): DataFrame = {
-      val sess = AnnSearch.sessionKey(spark)
-      owners.putIfAbsent(sess,
-        new java.lang.ref.WeakReference(spark))
-      val it = cache.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        val owner = e.getKey.substring(0, e.getKey.indexOf('#'))
-        if (owner != sess && provablyDead(owner)) {
-          release(e.getValue._2)
-          it.remove()
-          owners.remove(owner)
-        }
-      }
-      cache.compute(s"$sess#$group", (_, old) =>
-        if (old != null && old._1 == disc) old
-        else {
-          if (old != null) release(old._2)
-          val frame = compute
-          // don't re-checkpoint a frame the compute already
-          // checkpointed (its plan is a LogicalRDD leaf) — a second
-          // copy of the blocks would be pinned and the inner copy
-          // never released
-          (disc, frame.queryExecution.logical match {
-            case _: LogicalRDD => frame
-            case _             => frame.localCheckpoint(true)
-          })
-        })._2
-    }
-
-    /** Test/triage visibility: the number of live cached frames. */
-    private[graft] def size: Int = cache.size()
-  }
 }

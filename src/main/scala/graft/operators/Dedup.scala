@@ -42,13 +42,12 @@ object Dedup {
     n > PairedBandsAutoThreshold
 
   /** Near-dup corpus count for mode auto-selection, one count job per
-    * fixture dir per JVM (the [[AnnSearch.embeddingCount]] pattern).
+    * `documents` fingerprint ([[IndexStore.cached]]).
     */
-  private val countCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   private[graft] def corpusCount(spark: SparkSession, sfDir: String): Long =
-    countCache.computeIfAbsent(sfDir,
-      _ => nearDupCorpus(spark, sfDir).count()).longValue()
+    IndexStore.cached("corpusCount", sfDir,
+      IndexStore.FromSource(sfDir, Seq("documents")))(
+      nearDupCorpus(spark, sfDir).count())
 
   /** documents plus one near-duplicate per doc (first token dropped). */
   def nearDupCorpus(spark: SparkSession, sfDir: String): DataFrame = {

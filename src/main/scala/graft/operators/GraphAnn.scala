@@ -530,24 +530,13 @@ object GraphAnn {
     dir
   }
 
-  // (degree, buckets) per version dir, cached per JVM: a version dir is
-  // immutable once committed (manifest written last) and a same-dir
-  // rebuild is a deterministic replay writing identical meta — the
-  // head() job per beam call was pure re-fetch (r17; the
-  // [[IndexStore.readManifest]] discipline applied to the meta row)
-  private val metaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Int, Int)]()
+  // (degree, buckets) per committed meta row ([[IndexStore.cached]]):
+  // the head() job per beam call was pure re-fetch (r17)
   private def meta(spark: SparkSession, dir: String): (Int, Int) =
-    metaCache.computeIfAbsent(dir, _ => {
+    IndexStore.cached("graphMeta", dir, IndexStore.AtPath(s"$dir/meta")) {
       val r = IndexStore.readCached(spark, s"$dir/meta").head
       (r.getAs[Int]("degree"), r.getAs[Int]("buckets"))
-    })
-
-  // seed-vector dimensionality per version dir (same immutability
-  // argument): searchTraceAt's control-plane d probe was one head()
-  // job per beam call
-  private val seedDimCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    }
 
   private def artifact(spark: SparkSession, dir: String,
                        name: String): DataFrame =
@@ -617,11 +606,12 @@ object GraphAnn {
     // control-plane pricing inputs: Q (threaded in by callers that know
     // it — the [[AnnSearch.searchIndexAt]] expectedQ discipline — else one
     // count of the query frame) and d (one head row of the tiny seed
-    // table, cached per immutable version dir)
+    // table, cached per committed version)
     val qCount =
       if (expectedQ > 0L) expectedQ else math.max(1L, queries.count())
-    val d: Int = seedDimCache.computeIfAbsent(dir, _ =>
-      seeds.head.getAs[scala.collection.Seq[Double]]("sv").length).intValue()
+    val d: Int = IndexStore.cached("seedDim", dir,
+      IndexStore.AtPath(s"$dir/manifest"))(
+      seeds.head.getAs[scala.collection.Seq[Double]]("sv").length)
     def hinted(df: DataFrame, approxBytes: Long): DataFrame =
       if (approxBytes > AnnSearch.BroadcastProbeByteLimit) df
       else broadcast(df)
@@ -777,17 +767,14 @@ object GraphAnn {
     * from the artifact exactly as they would have at that version's
     * write time.
     */
-  // node count per version dir, cached per JVM (the [[metaCache]]
-  // immutability argument: committed version dirs never change)
-  private val nodeCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   private[graft] def graphSearchAtAuto(spark: SparkSession, dir: String,
                                        queries: DataFrame,
                                        k: Int): DataFrame = {
     val (deg, _) = meta(spark, dir)
-    val n: Long = nodeCountCache.computeIfAbsent(dir, _ =>
-      artifact(spark, dir, "vectors")
-        .select("vec_id").distinct().count()).longValue()
+    // node count per committed version ([[IndexStore.cached]])
+    val n: Long = IndexStore.cached("nodeCount", dir,
+      IndexStore.AtPath(s"$dir/manifest"))(
+      artifact(spark, dir, "vectors").select("vec_id").distinct().count())
     graphSearchAt(spark, dir, queries, k, autoEf(n), autoHops(n, deg))
   }
 
@@ -828,31 +815,26 @@ object GraphAnn {
     * gates drive whole append batches as queries) must use
     * [[searchTraceAt]] directly.
     */
-  // group key (session + fingerprint-STRIPPED dir + query/knob identity)
-  // -> (full dir, checkpointed trace). The map key drops the index dir's
-  // trailing source-fingerprint token so a fixture regeneration (same
-  // artifact name, new fingerprint) lands on the SAME group: the stale
-  // trace is found and its checkpoint blocks released (Checkpoints
-  // .release) instead of pinning storage until the ContextCleaner
-  // happens to GC — round 15, closing the round-14 cache's leak class.
-  // The fingerprint token is always the LAST `-<hex>` path segment
-  // suffix (IndexStore.indexDir appends it after the versioned name),
-  // so the strip regex anchors on segment end and cannot collapse two
-  // genuinely different artifacts (e.g. `pq8-22-...` vs `pq8-33-...`
+  // The seam key drops the index dir's trailing source-fingerprint token
+  // and the token (the full dir's manifest marker) carries it, so a
+  // fixture regeneration (same artifact name, new fingerprint) lands on
+  // the SAME key: the stale trace's checkpoint blocks are released
+  // instead of pinning storage until the ContextCleaner happens to GC
+  // (round 15). The fingerprint token is always the LAST `-<hex>` path
+  // segment suffix (IndexStore.indexDir appends it after the versioned
+  // name), so the strip regex anchors on segment end and cannot collapse
+  // two genuinely different artifacts (e.g. `pq8-22-...` vs `pq8-33-...`
   // differ before the suffix; distinct versions differ in `-vN-`).
   private val FpSuffix = "-[0-9a-f]{1,16}(?=/|$)".r
   private[graft] def fpStripped(dir: String): String =
     FpSuffix.replaceAllIn(dir, "")
-  private val traceCache = new Checkpoints.FrameCache
   private[graft] def cachedTrace(spark: SparkSession, dir: String,
                                  queries: => DataFrame, ef: Int,
                                  hops: Int, queryKey: String): DataFrame =
-    traceCache.getOrCompute(spark,
-      s"${fpStripped(dir)}#$queryKey#$ef#$hops", dir)(
+    IndexStore.cachedFrame(spark, "trace",
+      s"${fpStripped(dir)}#$queryKey#$ef#$hops",
+      IndexStore.AtPath(s"$dir/manifest"))(
       searchTraceAt(spark, dir, queries, ef, hops))
-
-  /** Test/triage visibility: the number of live cached beam traces. */
-  private[graft] def traceCacheSize: Int = traceCache.size
 
   /** [[graphSearchAt]] over the [[cachedTrace]] — same rows, one beam
     * search per (fingerprint, query set, ef, hops) per JVM.
@@ -1407,7 +1389,7 @@ object GraphAnn {
   // ([[AnnSearch.appendUnionExact]]) — the graph and IVF append/refit
   // gates measure against the SAME grown corpus, so one committed
   // artifact per (fingerprint, Q, k, batchTag) serves both families and
-  // survives across JVMs (the per-JVM FrameCache it replaces re-ran the
+  // survives across JVMs (the per-JVM frame cache it replaces re-ran the
   // brute force once per session).
   private def appendUnionExact(spark: SparkSession, sfDir: String,
                                union: DataFrame, nQueries: Int,

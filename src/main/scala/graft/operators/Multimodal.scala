@@ -250,20 +250,20 @@ object Multimodal {
     * table statistics). Reading the stored column keeps exactly one copy
     * of each modality's size arithmetic ([[decodedBytes]] /
     * 2·n_samples, pinned by spec). ONE cache for every modality, keyed
-    * `<modality>#<fixture dir>` per JVM, so query CONSTRUCTION never
-    * re-runs the aggregate.
+    * `<modality>#<fixture dir>` per `documents` fingerprint (both media
+    * fixtures derive from it), so query CONSTRUCTION never re-runs the
+    * aggregate.
     */
-  private val sizeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  private def cachedDecodedBytes(key: String, table: => DataFrame): Long =
-    sizeCache.computeIfAbsent(key, _ =>
+  private def cachedDecodedBytes(sfDir: String, modality: String,
+                                 table: => DataFrame): Long =
+    IndexStore.cached("payloadBytes", s"$modality#$sfDir",
+      IndexStore.FromSource(sfDir, Seq("documents")))(
       table.agg(coalesce(sum(col("meta.decoded_bytes")), lit(0L)))
-        .head.getLong(0)).longValue()
+        .head.getLong(0))
 
   private[graft] def estimatedPayloadBytes(spark: SparkSession,
                                            sfDir: String): Long =
-    cachedDecodedBytes(s"img#$sfDir", mediaTable(spark, sfDir))
+    cachedDecodedBytes(sfDir, "img", mediaTable(spark, sfDir))
 
   /** The audio fixture's total decoded bytes — the `audio#<dir>` entry of
     * the same cache, exposed so byte-per-modality reporting (the scaling
@@ -271,7 +271,7 @@ object Multimodal {
     */
   private[graft] def audioPayloadBytes(spark: SparkSession,
                                        sfDir: String): Long =
-    cachedDecodedBytes(s"audio#$sfDir", audioTable(spark, sfDir))
+    cachedDecodedBytes(sfDir, "audio", audioTable(spark, sfDir))
 
   /** The shared batch shape for decode-style stages: payload column +
     * the metadata the decoder needs, byte-targeted repartitioning
@@ -442,7 +442,7 @@ object Multimodal {
                     targetBatchBytes: Long = DefaultBatchBytes): DataFrame = {
     import spark.implicits._
     val audio = audioTable(spark, sfDir)
-    val totalBytes = cachedDecodedBytes(s"audio#$sfDir", audio)
+    val totalBytes = cachedDecodedBytes(sfDir, "audio", audio)
     val n = math.max(batchCount(totalBytes, targetBatchBytes),
       spark.sparkContext.defaultParallelism)
     audio.select(col("doc_id"), col("content"))

@@ -221,20 +221,17 @@ object Quantize {
     Iterator.range(t, 0, -1).find(dim % _ == 0).getOrElse(1)
   }
 
-  /** The embedding width, one head-row probe per fixture dir per JVM —
-    * keyed on the source FINGERPRINT (not the bare path) so an in-place
-    * fixture regeneration with a different width can never serve a stale
-    * dim and re-derive the wrong m (the fixed-m recall collapse round 14
-    * fixed, reintroduced via a path-keyed cache).
+  /** The embedding width, one head-row probe per source FINGERPRINT
+    * ([[IndexStore.cached]]) — an in-place fixture regeneration with a
+    * different width can never serve a stale dim and re-derive the wrong
+    * m (the fixed-m recall collapse round 14 fixed).
     */
-  private val dimCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
   private[graft] def vectorDim(spark: SparkSession,
                                    sfDir: String): Int =
-    dimCache.computeIfAbsent(
-      sfDir + "#" + IndexStore.sourceFingerprint(sfDir, "embeddings"), _ =>
+    IndexStore.cached("vectorDim", sfDir,
+      IndexStore.FromSource(sfDir, Seq("embeddings")))(
       graft.Tables.load(spark, sfDir, "embeddings")
-        .select(size(col("embedding"))).head.getInt(0)).intValue()
+        .select(size(col("embedding"))).head.getInt(0))
 
   /** `m = 0` → the [[pqSubspaces]] d-scaled default; explicit m wins. */
   private[graft] def resolveM(spark: SparkSession, sfDir: String,
@@ -375,11 +372,10 @@ object Quantize {
     * collapse at width (round 14). Cached per (session, fingerprint,
     * Q, k) like the curve: a GAUGE, recomputed when the fixture changes.
     */
-  private val opCache = new Checkpoints.FrameCache
   def pqOperatingPoints(spark: SparkSession, sfDir: String,
                         nQueries: Int = 10, k: Int = 10): DataFrame =
-    opCache.getOrCompute(spark, s"$sfDir#$nQueries#$k",
-      IndexStore.sourceFingerprint(sfDir, "embeddings"))(
+    IndexStore.cachedFrame(spark, "operatingPoints", s"$sfDir#$nQueries#$k",
+      IndexStore.FromSource(sfDir, Seq("embeddings")))(
       computeOperatingPoints(spark, sfDir, nQueries, k))
       .orderBy("m", "rerank")
 

@@ -57,88 +57,214 @@ object IndexStore {
     * keys, signatures, centroids…). Readers gate on [[committed]], so a
     * crashed write is indistinguishable from "never built".
     */
-  def saveDataset(df: DataFrame, path: String): Unit = {
+  def saveDataset(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Overwrite).parquet(path)
-    schemaCache.remove(path)
+
+  // ---- The cache seam ----------------------------------------------
+  //
+  // Every per-JVM cache of the engine is one entry kind of ONE map here.
+  // An entry is keyed by what its value is derived from and carries a
+  // validity token that the seam reads from the filesystem on every
+  // lookup, so a value goes stale exactly when its inputs change: a write
+  // through any session, an in-place fixture rewrite or a regenerated
+  // index dir all show up in the token, and no writer invalidates
+  // anything. A hit runs no Spark job and one filesystem status call
+  // (one per source table for a multi-table source).
+
+  /** What a cached value is derived from; the seam reads its token. */
+  private[graft] sealed trait Origin
+
+  /** A dataset at `path`. Its token is the status of its `_SUCCESS`
+    * commit marker, or of the file itself for a fixture file. A directory
+    * without a marker is uncommitted: its reads bypass the cache.
+    */
+  private[graft] final case class AtPath(path: String) extends Origin
+
+  /** Values derived from fixture tables; the token is their
+    * [[sourceFingerprint]]s.
+    */
+  private[graft] final case class FromSource(sfDir: String,
+                                             tables: Seq[String])
+      extends Origin
+
+  /** One cached value and the token it was derived under. `marker` is the
+    * path whose status the token is (null for a source token); `owner` is
+    * the session of a checkpointed frame, weakly held so the cache never
+    * extends a session's life (null for every other value).
+    */
+  private final class Entry(val cache: String, val marker: String,
+                            val token: String, val value: Any,
+                            val owner: java.lang.ref.WeakReference[SparkSession])
+
+  private val cacheEntries =
+    new java.util.concurrent.ConcurrentHashMap[String, Entry]()
+
+  /** Hit, miss and evict counts of one cache since the JVM started. A
+    * read of an uncommitted path counts as a miss.
+    */
+  private[graft] final case class CacheCounts(hits: Long, misses: Long,
+                                              evicts: Long)
+  private val counters = new java.util.concurrent.ConcurrentHashMap[
+    String, Array[java.util.concurrent.atomic.LongAdder]]()
+  private def count(cache: String, i: Int): Unit =
+    counters.computeIfAbsent(cache,
+      _ => Array.fill(3)(new java.util.concurrent.atomic.LongAdder))(i)
+      .increment()
+  private[graft] def cacheCounts: Map[String, CacheCounts] = {
+    import scala.jdk.CollectionConverters._
+    counters.asScala.map { case (c, a) =>
+      c -> CacheCounts(a(0).sum, a(1).sum, a(2).sum) }.toMap
   }
 
-  /** Per-JVM parquet schema cache (path → inferred StructType) behind
-    * [[readCached]]. Schema inference reads footers on the DRIVER on
-    * every `spark.read.parquet` call — measured ~0.1 s per call at
-    * fixture scale, paid by every query × table × rep across the bench.
-    * Fixture tables and index artifacts are schema-stable for a path's
-    * lifetime (new data lands in NEW fingerprinted/seq-numbered paths),
-    * so the first inference holds; writes through [[saveDataset]]/
-    * [[save]] invalidate their path. This caches METADATA only — the
-    * data files are re-listed and re-read on every call as before.
+  /** A per-SparkSession-INSTANCE key component: a checkpointed frame pins
+    * the session that made it, so a stop-and-recreate of the session in
+    * the same JVM must miss. Identity-keyed weak map (two live sessions
+    * can collide on hashCode), entries released with the session.
     */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+  private val sessionIds = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, String]())
+  private def sessionKey(spark: SparkSession): String =
+    sessionIds.computeIfAbsent(spark,
+      _ => java.util.UUID.randomUUID().toString)
 
-  /** [[SparkSession.read.parquet]] with the per-path schema cache — THE
-    * read seam for schema-stable parquet paths (fixture tables, index
-    * artifacts, manifest segments). Inference failures propagate
-    * uncached (e.g. the TIMESTAMP(NANOS) refusal [[graft.Tables]]
-    * branches on).
+  /** (marker, token) of `origin` now, or None for an uncommitted path.
+    * `hint` is the marker the key's previous entry used: it is stat'ed
+    * first, so a hit costs one status call.
+    */
+  private def tokenOf(origin: Origin, hint: String): Option[(String, String)] =
+    origin match {
+      case FromSource(sfDir, tables) =>
+        Some((null, tables.map(sourceFingerprint(sfDir, _)).mkString(",")))
+      case AtPath(path) =>
+        val fs = new Path(path).getFileSystem(hadoopConf)
+        def file(m: String) =
+          try Some(fs.getFileStatus(new Path(m))).filter(_.isFile)
+            .map(st => (m, s"${st.getModificationTime}:${st.getLen}"))
+          catch { case _: java.io.FileNotFoundException => None }
+        val marker = s"$path/_SUCCESS"
+        if (hint == path) file(path).orElse(file(marker))
+        else file(marker).orElse(file(path))
+    }
+
+  /** The one lookup: `load` runs on a miss, and its value replaces the
+    * key's entry of a superseded token (the one eviction path, besides
+    * the dead-session purge of [[cachedFrame]]). `load` runs outside the
+    * map's locks, so a load may itself read through the seam.
+    */
+  private def lookup[V](cache: String, key: String, origin: Origin,
+                        owner: SparkSession)(load: => V): V = {
+    val old = cacheEntries.get(key)
+    tokenOf(origin, if (old == null) null else old.marker) match {
+      case None =>
+        count(cache, 1)
+        load
+      case Some((marker, token)) =>
+        if (old != null && old.marker == marker && old.token == token) {
+          count(cache, 0)
+          old.value.asInstanceOf[V]
+        } else {
+          count(cache, 1)
+          val fresh = new Entry(cache, marker, token, load,
+            if (owner == null) null
+            else new java.lang.ref.WeakReference(owner))
+          var superseded: Entry = null
+          val won = cacheEntries.compute(key, (_, cur) =>
+            if (cur != null && cur.marker == marker && cur.token == token) cur
+            else { superseded = cur; fresh })
+          if (won ne fresh) drop(fresh)
+          else if (superseded != null) {
+            count(cache, 2)
+            drop(superseded)
+          }
+          won.value.asInstanceOf[V]
+        }
+    }
+  }
+
+  private def drop(e: Entry): Unit =
+    if (e.owner != null)
+      graft.operators.Checkpoints.release(e.value.asInstanceOf[DataFrame])
+
+  /** A value derived from `origin`, computed once per token. */
+  private[graft] def cached[V](cache: String, key: String, origin: Origin)
+                              (load: => V): V =
+    lookup(cache, s"$cache#$key", origin, null)(load)
+
+  /** A checkpointed frame derived from `origin`, computed once per
+    * (session, key, token) and re-read after that. `key` is the frame's
+    * identity minus what the token already says. A new token for the key
+    * releases the superseded frame's blocks. Every call also purges the
+    * frames of PROVABLY DEAD sessions (weak ref cleared or SparkContext
+    * stopped): such a frame can never be served again. A live sibling
+    * session's frames are kept — a released localCheckpoint block is not
+    * recomputable, so evicting them would break its next re-read.
+    */
+  private[graft] def cachedFrame(spark: SparkSession, cache: String,
+                                 key: String, origin: Origin)
+                                (compute: => DataFrame): DataFrame = {
+    cacheEntries.forEach { (k, e) =>
+      if (e.owner != null) {
+        val s = e.owner.get()
+        if ((s ne spark) && (s == null || s.sparkContext.isStopped) &&
+            cacheEntries.remove(k, e)) {
+          count(e.cache, 2)
+          drop(e)
+        }
+      }
+    }
+    lookup(cache, s"$cache#${sessionKey(spark)}#$key", origin, spark) {
+      val frame = compute
+      // a frame the compute already checkpointed (a LogicalRDD leaf) is
+      // kept as is: a second copy's blocks would pin the inner copy
+      frame.queryExecution.logical match {
+        case _: org.apache.spark.sql.execution.LogicalRDD => frame
+        case _ => frame.localCheckpoint(true)
+      }
+    }
+  }
+
+  /** Test seam: clear the weak refs to `spark` held by its frames, as a
+    * GC of the session instance would.
+    */
+  private[graft] def forgetSession(spark: SparkSession): Unit =
+    cacheEntries.values.forEach { e =>
+      if (e.owner != null && (e.owner.get() eq spark)) e.owner.clear()
+    }
+
+  /** [[SparkSession.read.parquet]] with the schema cached per committed
+    * path — THE read seam for fixture tables, index artifacts and
+    * manifest segments. Schema inference is a driver-side footer read
+    * (~0.1 s per call at fixture scale) on every `spark.read.parquet`;
+    * the data files are still listed and read on every call. Inference
+    * failures propagate uncached (e.g. the TIMESTAMP(NANOS) refusal
+    * [[graft.Tables]] branches on).
     */
   def readCached(spark: SparkSession, path: String): DataFrame = {
-    ensureWriteInvalidator(spark)
-    val cached = schemaCache.get(path)
-    if (cached != null) spark.read.schema(cached).parquet(path)
-    else {
-      val df = spark.read.parquet(path)
-      schemaCache.put(path, df.schema)
-      df
+    var inferred: DataFrame = null
+    val schema = cached("schema", path, AtPath(path)) {
+      inferred = spark.read.parquet(path)
+      inferred.schema
     }
+    if (inferred != null) inferred else spark.read.schema(schema).parquet(path)
   }
-
-  // Structural closure of the cache's write seam (r18): ~60 artifact
-  // writes go through raw `.write.parquet` into fresh committed-guarded
-  // version dirs — safe by the immutable-dir convention, but only by
-  // convention. A per-session QueryExecutionListener invalidates the
-  // cached schema of EVERY parquet path this session writes, so a future
-  // in-place overwrite cannot serve a stale schema. (Listener delivery is
-  // async — the convention stays the primary guarantee; this removes the
-  // correctness dependence on it for any read that follows the write by
-  // more than a listener-bus beat.)
-  private val invalidatorSessions =
-    java.util.Collections.synchronizedSet(
-      java.util.Collections.newSetFromMap(
-        new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
-  private def ensureWriteInvalidator(spark: SparkSession): Unit = {
-    if (invalidatorSessions.contains(spark)) return
-    invalidatorSessions.synchronized {
-      if (invalidatorSessions.contains(spark)) return
-      spark.listenerManager.register(
-        new org.apache.spark.sql.util.QueryExecutionListener {
-          private def invalidate(
-              qe: org.apache.spark.sql.execution.QueryExecution): Unit =
-            qe.analyzed.foreach {
-              case c: org.apache.spark.sql.execution.datasources
-                  .InsertIntoHadoopFsRelationCommand =>
-                schemaCache.remove(c.outputPath.toString)
-                // writers pass the path string; outputPath may carry a
-                // `file:` scheme — drop it so both spellings invalidate
-                schemaCache.remove(c.outputPath.toUri.getPath)
-              case _ => ()
-            }
-          override def onSuccess(funcName: String,
-              qe: org.apache.spark.sql.execution.QueryExecution,
-              durationNs: Long): Unit = invalidate(qe)
-          override def onFailure(funcName: String,
-              qe: org.apache.spark.sql.execution.QueryExecution,
-              exception: Exception): Unit = invalidate(qe)
-        })
-      invalidatorSessions.add(spark)
-    }
-  }
-
-  private[graft] def invalidateSchema(path: String): Unit =
-    schemaCache.remove(path)
 
   def committed(path: String): Boolean = {
     val p = new Path(path, "_SUCCESS")
     p.getFileSystem(hadoopConf).exists(p)
+  }
+
+  /** Whether the dataset at `path` holds a data file (one listing, no
+    * Spark job): an empty write leaves only its `_SUCCESS` marker.
+    */
+  private[graft] def holdsData(path: String): Boolean = {
+    val p = new Path(path)
+    val it = p.getFileSystem(hadoopConf).listFiles(p, true)
+    var found = false
+    while (!found && it.hasNext) {
+      val name = it.next().getPath.getName
+      found = !name.startsWith("_") && !name.startsWith(".")
+    }
+    found
   }
 
   /** Per-(fixture, index-name) directory under the JVM temp root — the
@@ -159,12 +285,11 @@ object IndexStore {
       s"$name-${sourceFingerprint(sfDir, sourceTable)}").toString
 
   /** The SOURCE table's (size + mtime) fingerprint as a hex token — what
-    * [[indexDir]] embeds in every index path, exposed so in-JVM caches of
-    * source-DERIVED values (e.g. predicate selectivities) can key on data
-    * identity and never serve a regenerated fixture a stale figure.
+    * [[indexDir]] embeds in every index path, and the token of every
+    * source-derived cache entry ([[FromSource]]).
     */
-  private[graft] def sourceFingerprint(sfDir: String,
-                                       sourceTable: String): String = {
+  private def sourceFingerprint(sfDir: String,
+                                sourceTable: String): String = {
     val src = new Path(sfDir, s"$sourceTable.parquet")
     val fs = src.getFileSystem(hadoopConf)
     java.lang.Long.toHexString(fingerprint(fs, fs.getFileStatus(src)))
@@ -227,33 +352,22 @@ object IndexStore {
     * versions-retained × artifacts — so the collect is control-plane
     * metadata, never data.
     *
-    * COMMITTED manifests are cached per JVM (plain Scala rows — no
-    * session or DataFrame pinned): the commit protocol makes a committed
-    * manifest immutable (written LAST, exactly once — replay
-    * short-circuits on the commit marker, version dirs are never
-    * reused), so re-reading it is a pure re-fetch of identical bytes.
-    * Without the cache every manifested read path (layout resolution,
-    * tombstone lookup, segment load) pays one Spark job per manifest
-    * per call — a K-shard scatter-gather over version chains was
-    * spending more jobs on manifest re-reads than on the searches
-    * (round 17, `search_asof_sharded`). An UNCOMMITTED path skips the
-    * cache entirely and keeps its read-fails-loudly behavior; a
-    * retention-vacuumed dir stays refused by its callers'
-    * `committed(...)` requires, which check the filesystem, not this
-    * cache.
+    * A committed manifest is cached in the seam ([[cached]]): it is
+    * written last and exactly once, so re-reading it is a pure re-fetch
+    * of identical bytes. Without the cache every manifested read path
+    * (layout resolution, tombstone lookup, segment load) pays one Spark
+    * job per manifest per call (round 17, `search_asof_sharded`). An
+    * uncommitted path bypasses the cache and keeps its read-fails-loudly
+    * behavior.
     */
-  private val manifestCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(String, String, Long)]]()
-
   def readManifest(spark: SparkSession,
-                   versionDir: String): Seq[(String, String, Long)] = {
-    def load() = spark.read.parquet(s"$versionDir/manifest")
-      .collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-      .sortBy(e => (e._1, e._3)).toSeq
-    if (!committed(s"$versionDir/manifest")) load()
-    else manifestCache.computeIfAbsent(versionDir, _ => load())
-  }
+                   versionDir: String): Seq[(String, String, Long)] =
+    cached("manifest", versionDir, AtPath(s"$versionDir/manifest")) {
+      spark.read.parquet(s"$versionDir/manifest")
+        .collect()
+        .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+        .sortBy(e => (e._1, e._3)).toSeq
+    }
 
   /** seq-ordered segment paths of one artifact. */
   def manifestSegments(entries: Seq[(String, String, Long)],

@@ -38,15 +38,14 @@ class AnalyticsSpec extends SparkSpec {
     }
   }
 
-  test("retrieval metrics: a label-unique query still emits a row " +
-      "(n_rel = 0, vacuous recall/nDCG = 1)") {
+  tempDirTest("retrieval metrics: a label-unique query still emits a row " +
+      "(n_rel = 0, vacuous recall/nDCG = 1)") { newDir =>
     // ADVICE r12: the inner join with the truth-set sizes silently
     // dropped queries whose label appears on no OTHER vector; the left
     // join makes the n_rel = 0 branches live. Synthetic fixture: query 0
     // carries a label nothing else has.
     import graft.operators.Evaluation
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_uniq_label").toString
+    val dir = newDir("graft_uniq_label").toString
     val rows = (0L until 12L).map { i =>
       val lbl = if (i == 0L) 99 else 1
       (i, Array.tabulate(4)(j =>

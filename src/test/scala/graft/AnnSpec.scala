@@ -96,9 +96,9 @@ class AnnSpec extends SparkSpec {
     assert(recall >= 0.6, s"ivf recall $recall at nClusters=8")
   }
 
-  test("appendToIvfIndex adds a batch O(batch) into a committed version") {
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_ivf_append").toString
+  tempDirTest("appendToIvfIndex adds a batch O(batch) into a " +
+      "committed version") { newDir =>
+    val out = newDir("graft_ivf_append").toString
     val batch = Tables.load(spark, sf, "embeddings")
       .select((col("vec_id") + 20000).as("vec_id"),
         expr("transform(embedding, x -> cast(x as double) + 0.01)").as("v"))
@@ -275,11 +275,10 @@ class AnnSpec extends SparkSpec {
     assert(stats.getLong(1) == n, s"coverage ${stats.getLong(1)} != $n")
   }
 
-  test("knn-graph append is O(batch) by manifest reference and " +
-      "replay-idempotent") {
+  tempDirTest("knn-graph append is O(batch) by manifest reference and " +
+      "replay-idempotent") { newDir =>
     import graft.operators.{AnnSearch, GraphAnn}
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_graph_append").toString
+    val out = newDir("graft_graph_append").toString
     // a SMALL batch (under the doubling point) exercises the beam-link
     // side of the append regime switch — batch ids start at the corpus
     // size (appendBatch's collision-free shift)
@@ -310,11 +309,10 @@ class AnnSpec extends SparkSpec {
       new java.io.File(out))
   }
 
-  test("a doubling-point append rebuilds: self-contained version, " +
-      "full coverage, 2-deg bound") {
+  tempDirTest("a doubling-point append rebuilds: self-contained version, " +
+      "full coverage, 2-deg bound") { newDir =>
     import graft.operators.{AnnSearch, GraphAnn}
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_graph_rebuild").toString
+    val out = newDir("graft_graph_rebuild").toString
     val n = Tables.load(spark, sf, "embeddings").count()
     val deg = GraphAnn.autoDegree(n)
     // the full growth batch (= corpus) is AT the doubling point: the
@@ -361,17 +359,16 @@ class AnnSpec extends SparkSpec {
       .collect().isEmpty)
   }
 
-  test("knn-graph append chain auto-compacts at the segment bound: a " +
+  tempDirTest("knn-graph append chain auto-compacts at the segment bound: a " +
       "12-batch chain never exceeds DefaultMaxSegments and stays " +
-      "complete and navigable") {
+      "complete and navigable") { newDir =>
     // the round-7 flat/IVF in-chain compaction discipline, applied to
     // the graph family (r12 VERDICT #1): without the maxSegments fold,
     // every append re-references the base segments and a long streamed
     // ingest grows merge-on-read unboundedly
     import graft.operators.GraphAnn
     val base = GraphAnn.buildGraphIndex(spark, sf)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_graph_chain").toString
+    val root = newDir("graft_graph_chain").toString
     val emb = Tables.load(spark, sf, "embeddings")
       .select(col("vec_id"),
         transform(col("embedding"), x => x.cast("double")).as("v"))
@@ -427,15 +424,14 @@ class AnnSpec extends SparkSpec {
     assert(AnnSearch.ivfAppendViolations(spark, sf).collect().isEmpty)
   }
 
-  test("IVF compaction produces an equivalent plain-layout base") {
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_ivf_precompact").toString
+  tempDirTest("IVF compaction produces an equivalent plain-layout base") {
+    newDir =>
+    val out = newDir("graft_ivf_precompact").toString
     val batch = Tables.load(spark, sf, "embeddings")
       .select((col("vec_id") + 20000).as("vec_id"),
         expr("transform(embedding, x -> cast(x as double) + 0.01)").as("v"))
     AnnSearch.appendToIvfIndex(spark, sf, batch, out)
-    val comp = java.nio.file.Files
-      .createTempDirectory("graft_ivf_compact").toString
+    val comp = newDir("graft_ivf_compact").toString
     AnnSearch.compactIvfTo(spark, out, comp)
     // plain layout, committed (centroids last = the commit marker)
     assert(IndexStore.committed(s"$comp/vectors"))
@@ -446,17 +442,17 @@ class AnnSpec extends SparkSpec {
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     assert(byCluster(comp) == byCluster(out))
     // and it is itself a valid append base: chain another batch onto it
-    val next = java.nio.file.Files
-      .createTempDirectory("graft_ivf_postcompact").toString
+    val next = newDir("graft_ivf_postcompact").toString
     AnnSearch.appendToIvfIndexAt(spark, comp, batch, next)
     assert(AnnSearch.ivfVectors(spark, next).count() ==
       AnnSearch.ivfVectors(spark, comp).count() + batch.count())
   }
 
-  test("delete writes O(batch) tombstones, searches exclude them, " +
+  tempDirTest("delete writes O(batch) tombstones, searches exclude them, " +
       "appends carry them forward, compaction drops them physically") {
+    newDir =>
     def tmp(p: String) =
-      java.nio.file.Files.createTempDirectory(p).toString
+      newDir(p).toString
     val batch = Tables.load(spark, sf, "embeddings")
       .select((col("vec_id") + 20000).as("vec_id"),
         expr("transform(embedding, x -> cast(x as double) + 0.01)").as("v"))
@@ -532,10 +528,10 @@ class AnnSpec extends SparkSpec {
     assert(AnnSearch.ivfPqDeleteViolations(spark, sf).collect().isEmpty)
   }
 
-  test("IVF+PQ delete survives appends and the in-chain fold never " +
-      "resurrects masked codes") {
+  tempDirTest("IVF+PQ delete survives appends and the in-chain fold never " +
+      "resurrects masked codes") { newDir =>
     def tmp(p: String) =
-      java.nio.file.Files.createTempDirectory(p).toString
+      newDir(p).toString
     def shifted(off: Long, d: Double) =
       Tables.load(spark, sf, "embeddings")
         .select((col("vec_id") + off).as("vec_id"),
@@ -648,9 +644,10 @@ class AnnSpec extends SparkSpec {
     assert(got.nonEmpty && got == want)
   }
 
-  test("IVF append auto-compacts once the segment chain passes the bound") {
+  tempDirTest("IVF append auto-compacts once the segment chain passes " +
+      "the bound") { newDir =>
     def tmp(p: String) =
-      java.nio.file.Files.createTempDirectory(p).toString
+      newDir(p).toString
     def shifted(off: Long, d: Double) =
       Tables.load(spark, sf, "embeddings")
         .select((col("vec_id") + off).as("vec_id"),
@@ -766,10 +763,10 @@ class AnnSpec extends SparkSpec {
     } finally spark.conf.set(key, prev)
   }
 
-  test("IVF+PQ append auto-compacts once the code-segment chain passes " +
-      "the bound") {
+  tempDirTest("IVF+PQ append auto-compacts once the code-segment " +
+      "chain passes the bound") { newDir =>
     def tmp(p: String) =
-      java.nio.file.Files.createTempDirectory(p).toString
+      newDir(p).toString
     def shifted(off: Long, d: Double) =
       Tables.load(spark, sf, "embeddings")
         .select((col("vec_id") + off).as("vec_id"),
@@ -812,13 +809,12 @@ class AnnSpec extends SparkSpec {
     assert(viols.collect().isEmpty, viols.collect().mkString(", "))
   }
 
-  test("joined probe searches a MANIFESTED (appended) version " +
-      "identically to the collect probe") {
+  tempDirTest("joined probe searches a MANIFESTED (appended) version " +
+      "identically to the collect probe") { newDir =>
     // segments resolve per-branch under the join (union ABOVE the join,
     // so DPP attaches to each partitioned scan); results must match the
     // collect path over the same appended version
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_ivf_joinprobe").toString
+    val out = newDir("graft_ivf_joinprobe").toString
     val batch = Tables.load(spark, sf, "embeddings")
       .select((col("vec_id") + 20000).as("vec_id"),
         expr("transform(embedding, x -> cast(x as double) + 0.01)").as("v"))
@@ -1016,8 +1012,8 @@ class AnnSpec extends SparkSpec {
     assert(Quantize.pqWidthViolations(spark, sf).collect().isEmpty)
   }
 
-  test("concurrent PQ subspace fits are bit-identical to a committed " +
-      "sequential-era build (deterministic per-subspace seeds)") {
+  tempDirTest("concurrent PQ subspace fits are bit-identical to a committed " +
+      "sequential-era build (deterministic per-subspace seeds)") { newDir =>
     import graft.operators.{Quantize, VectorSearch}
     // the committed fixture index predates the round-14 concurrent
     // fits; a fresh build into a new dir must reproduce its codebooks
@@ -1027,8 +1023,7 @@ class AnnSpec extends SparkSpec {
     // the code that actually runs when SPARK_GRAFT_PQ_FIT_PAR is set,
     // not on a sequential-vs-sequential tautology (ADVICE round 14).
     val committedDir = Quantize.buildPqIndex(spark, sf)
-    val fresh = java.nio.file.Files
-      .createTempDirectory("graft_pq_par").toString
+    val fresh = newDir("graft_pq_par").toString
     graft.operators.Quantize.buildPqOver(spark,
       VectorSearch.normalized(spark, sf), 8,
       Quantize.resolveCodes(spark, sf, 0), fresh, fitParOverride = 8)
@@ -1060,9 +1055,9 @@ class AnnSpec extends SparkSpec {
     assert(!(g3 eq g1))
   }
 
-  test("NN-descent build determinism: a fresh build reproduces the " +
+  tempDirTest("NN-descent build determinism: a fresh build reproduces the " +
       "committed fixture graph bit-identically (dequantize-once kernel " +
-      "== the original per-pair-divide kernel)") {
+      "== the original per-pair-divide kernel)") { newDir =>
     import graft.operators.{AnnSearch, GraphAnn}
     // the committed fixture index predates the round-15 kernel change
     // (dequantization hoisted out of the pair loop) and the width-aware
@@ -1071,8 +1066,7 @@ class AnnSpec extends SparkSpec {
     // the hoist runs the same IEEE divides once instead of deg times,
     // so every distance is the same double
     val committed = GraphAnn.buildGraphIndex(spark, sf)
-    val fresh = java.nio.file.Files
-      .createTempDirectory("graft_graph_det").toString
+    val fresh = newDir("graft_graph_det").toString
     GraphAnn.buildGraphOver(spark,
       AnnSearch.normalizedCorpus(spark, sf), fresh,
       GraphAnn.autoDegree(Tables.load(spark, sf, "embeddings").count()))
@@ -1088,15 +1082,14 @@ class AnnSpec extends SparkSpec {
     assert(seeds(fresh).toSeq == seeds(committed).toSeq)
   }
 
-  test("gate cache eviction: an in-place fixture regeneration inside " +
-      "one session frees the superseded checkpoint blocks") {
+  tempDirTest("gate cache eviction: an in-place fixture regeneration inside " +
+      "one session frees the superseded checkpoint blocks") { newDir =>
     import org.apache.spark.sql.execution.LogicalRDD
     // stage a throwaway fixture dir: only the embeddings table matters
     // (it is the gate key's fingerprint source); the gate body is a
     // probe frame, since what is under test is the cache's lifecycle,
     // not any particular gate's semantics
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_gate_evict").toString
+    val tmp = newDir("graft_gate_evict").toString
     def stage(rows: Int): Unit =
       Tables.load(spark, sf, "embeddings").limit(rows)
         .write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")

@@ -38,9 +38,10 @@ class ChainReplaySpec extends SparkSpec {
     AnnSearch.injectionBatch(spark, sf, window, 0.01 * window, rows = 32L)
 
   private def appends(fam: IndexFamily, bases: => Seq[String],
-                      shards: Int = 0)
+                      shards: Int = 0,
+                      batch: Int => DataFrame = inject)
       : (String, String, String) => Unit = (landing, root, ckpt) => {
-    StreamingIndex.stageBatches(landing, inject(1), inject(2))
+    StreamingIndex.stageBatches(landing, batch(1), batch(2))
     val roots =
       if (shards > 0) (0 until shards).map(s => s"$root/s$s") else Seq(root)
     StreamingIndex.appendChain(spark, fam, landing, ckpt, roots.zip(bases))
@@ -92,6 +93,12 @@ class ChainReplaySpec extends SparkSpec {
       GraphFamily.live(spark, _)),
     Kind("sharded IVF append", appends(IvfFamily,
         ShardedSearch.buildShardedIvf(spark, sf, shards), shards),
+      IvfFamily.live(spark, _), shards),
+    // every batch routes no row to shard 0: its chain folds empty slices
+    Kind("sharded IVF append with an empty shard", appends(IvfFamily,
+        ShardedSearch.buildShardedIvf(spark, sf, shards), shards,
+        w => inject(w).filter(
+          ShardedSearch.shardOf(col("vec_id"), shards) =!= 0)),
       IvfFamily.live(spark, _), shards),
     Kind("IVF add/delete", addDeletes(IvfFamily, ivfBase),
       IvfFamily.live(spark, _)),

@@ -175,13 +175,13 @@ class DedupSpec extends SparkSpec {
     pairedIds.foreach(id => assert(comp(id) == comp(id + 10000)))
   }
 
-  test("mergeBatchIntoIndex produces a complete next index version") {
+  tempDirTest("mergeBatchIntoIndex produces a complete next index version") {
+    newDir =>
     import graft.sources.IndexStore
     // ensure the corpus index + this run's batch artifacts exist
     Dedup.incrementalDedup(spark, sf).count()
     val dir = IndexStore.indexDir(sf, "dedup-v2", "documents")
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_merge").toString
+    val out = newDir("graft_merge").toString
     Dedup.mergeBatchIntoIndex(spark, dir, out)
     // the manifest is the version's one commit marker
     assert(IndexStore.committed(s"$out/manifest"))

@@ -8,8 +8,8 @@ import graft.sources.IndexStore
 
 class IndexStoreSpec extends SparkSpec {
 
-  test("save then load round-trips mapping and vectors") {
-    val dir = Files.createTempDirectory("graft_idx").toString
+  tempDirTest("save then load round-trips mapping and vectors") { newDir =>
+    val dir = newDir("graft_idx").toString
     val mapping = Tables.load(spark, sf, "documents")
       .select(col("doc_id"), col("text"))
     val vectors = Tables.load(spark, sf, "embeddings")
@@ -28,10 +28,11 @@ class IndexStoreSpec extends SparkSpec {
     assert(empty.schema == vectors.schema)
   }
 
-  test("indexDir fingerprint invalidates on source change, incl. dirs") {
+  tempDirTest("indexDir fingerprint invalidates on source change, incl. dirs") {
+    newDir =>
     import java.nio.file.{Files, Paths}
     import java.nio.file.attribute.FileTime
-    val d = Files.createTempDirectory("graft_fp").toString
+    val d = newDir("graft_fp").toString
     // single-file source: a size change changes the index path
     Files.writeString(Paths.get(d, "t.parquet"), "aa")
     val dir1 = IndexStore.indexDir(d, "x-v1", "t")
@@ -80,11 +81,11 @@ class IndexStoreSpec extends SparkSpec {
         .forEach(f => java.nio.file.Files.delete(f))
   }
 
-  test("writer killed between segment write and manifest commit: " +
+  tempDirTest("writer killed between segment write and manifest commit: " +
       "readers ignore the dir, the checkpointed replay recommits " +
-      "the identical version") {
+      "the identical version") { newDir =>
     import graft.streaming.StreamingIndex
-    val tmp = Files.createTempDirectory("graft_crash_commit").toString
+    val tmp = newDir("graft_crash_commit").toString
     val (landing, root, ckpt) = (s"$tmp/landing", s"$tmp/root",
       s"$tmp/ckpt")
     def batch(ids: Seq[Long], shift: Double) = {
@@ -129,10 +130,11 @@ class IndexStoreSpec extends SparkSpec {
     assert(got.nonEmpty && got == want)
   }
 
-  test("in-chain auto-compaction killed before its manifest commits: " +
+  tempDirTest("in-chain auto-compaction killed before its manifest commits: " +
       "the replay re-folds the same resolved version deterministically") {
+    newDir =>
     import graft.streaming.StreamingIndex
-    val tmp = Files.createTempDirectory("graft_crash_fold").toString
+    val tmp = newDir("graft_crash_fold").toString
     val (landing, root, ckpt) = (s"$tmp/landing", s"$tmp/root",
       s"$tmp/ckpt")
     def batch(ids: Seq[Long], shift: Double) = {
@@ -180,8 +182,8 @@ class IndexStoreSpec extends SparkSpec {
       .forall(_._2.contains("/v2/")))
   }
 
-  test("compaction killed before its manifest commits: the old root " +
-      "keeps serving, a re-run completes with the resolved state") {
+  tempDirTest("compaction killed before its manifest commits: the old root " +
+      "keeps serving, a re-run completes with the resolved state") { newDir =>
     import graft.streaming.StreamingIndex
     // reuse the committed ingest fixture chain as the compaction input
     StreamingIndex.streamingIndexIngest(spark, sf).count()
@@ -189,7 +191,7 @@ class IndexStoreSpec extends SparkSpec {
     val srcV = s"$root/v${StreamingIndex.latestVersion(root).get}"
     val want = StreamingIndex.loadMappingAt(spark, srcV)
       .orderBy("str_id").collect().map(_.toSeq).toSeq
-    val out = Files.createTempDirectory("graft_crash_compact").toString
+    val out = newDir("graft_crash_compact").toString
     StreamingIndex.compactTo(spark, root, out)
     // CRASH STATE: both artifact segments written, manifest missing
     rmTree(s"$out/v0/manifest")
@@ -206,10 +208,10 @@ class IndexStoreSpec extends SparkSpec {
       .orderBy("str_id").collect().map(_.toSeq).toSeq == want)
   }
 
-  test("vacuum killed mid-sweep: a re-run finishes the prune " +
-      "idempotently and never collects the half-written survivor") {
+  tempDirTest("vacuum killed mid-sweep: a re-run finishes the prune " +
+      "idempotently and never collects the half-written survivor") { newDir =>
     import graft.streaming.StreamingIndex
-    val root = Files.createTempDirectory("graft_crash_prune").toString
+    val root = newDir("graft_crash_prune").toString
     def seg(path: String): Unit =
       IndexStore.saveDataset(spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -257,5 +259,83 @@ class IndexStoreSpec extends SparkSpec {
       .join(broadcast(q), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"), squaredL2(col("qv"), col("v")))
     assert(res.count() == 0)
+  }
+
+  // ---- the cache seam: every value is checked against its token ----
+
+  tempDirTest("a write through a session that never read the path " +
+      "invalidates another session's cached schema") { newDir =>
+    val path = s"${newDir("graft_schema")}/t"
+    spark.range(3).toDF("a").write.parquet(path)
+    assert(IndexStore.readCached(spark, path).columns.toSeq == Seq("a"))
+    // a sibling session, which has never read through the seam,
+    // overwrites the path with a wider schema
+    val other = spark.newSession()
+    other.range(3).selectExpr("id AS a", "id * 2 AS b")
+      .write.mode("overwrite").parquet(path)
+    val again = IndexStore.readCached(spark, path)
+    assert(again.columns.toSeq == Seq("a", "b"))
+    assert(again.select("b").collect().map(_.getLong(0)).sorted.toSeq ==
+      Seq(0L, 2L, 4L))
+  }
+
+  tempDirTest("an in-place fixture rewrite refreshes the source-derived " +
+      "counts in the same JVM") { newDir =>
+    import java.nio.file.{Paths, StandardCopyOption}
+    import graft.operators.{AnnSearch, Dedup, Multimodal}
+    val dir = newDir("graft_fixture").toString
+    Seq("documents", "embeddings").foreach(t => Files.copy(
+      Paths.get(sf, s"$t.parquet"), Paths.get(dir, s"$t.parquet")))
+    // the media fixture this dir builds lives under its own index root
+    val indexRoot = Paths.get(IndexStore.indexDir(dir, "x", "documents"))
+      .getParent.toFile
+    try {
+      def counts = (AnnSearch.tableCount(spark, dir, "documents"),
+        Dedup.corpusCount(spark, dir),
+        Multimodal.estimatedPayloadBytes(spark, dir))
+      val before = counts
+      // rewrite documents.parquet in place with every other document
+      val half = Tables.load(spark, dir, "documents")
+        .filter(col("doc_id") % 2 === 0)
+      val n = half.count()
+      val staged = s"${newDir("graft_fixture_half")}/t"
+      half.coalesce(1).write.parquet(staged)
+      val part = new java.io.File(staged).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      Files.copy(part.toPath, Paths.get(dir, "documents.parquet"),
+        StandardCopyOption.REPLACE_EXISTING)
+      val bytes = Multimodal.mediaTable(spark, dir)
+        .agg(sum(col("meta.decoded_bytes"))).head.getLong(0)
+      assert(n < before._1)
+      assert(bytes != before._3)
+      assert(counts == ((n, 2 * n, bytes)))
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(indexRoot)
+  }
+
+  test("a warm read of a committed IVF version and of a graph version " +
+      "misses no cache and runs the warm call's jobs") {
+    import graft.operators.{AnnSearch, GraphAnn}
+    val queries = AnnSearch.fixtureQueries(spark, sf, 10)
+    val ivf = AnnSearch.ensureIvfIndex(spark, sf)
+    val np = AnnSearch.defaultProbe(spark, sf)
+    val graph = GraphAnn.buildGraphIndex(spark, sf)
+    val n = AnnSearch.embeddingCount(spark, sf)
+    val ef = GraphAnn.autoEf(n)
+    val hops = GraphAnn.autoHops(n, GraphAnn.autoDegree(n))
+    def misses = IndexStore.cacheCounts.values.map(_.misses).sum
+    val reads: Seq[(String, () => Unit)] = Seq(
+      "searchIndexAt" -> (() =>
+        AnnSearch.searchIndexAt(spark, ivf, queries, 10, np, 10L).collect()),
+      "graphSearchAt" -> (() =>
+        GraphAnn.graphSearchAt(spark, graph, queries, 10, ef, hops)
+          .collect()))
+    for ((name, read) <- reads) {
+      read()
+      val warm = jobCount(read)
+      val missed = misses
+      val again = jobCount(read)
+      assert(misses == missed, name)
+      assert(again == warm, name)
+    }
   }
 }

@@ -91,6 +91,23 @@ class IvfLifecycleSpec extends SparkSpec {
     }
   }
 
+  for (name <- Seq("flat", "pq"))
+    tempDirTest(s"$name: a zero-row append commits a version that reads " +
+        "as its base") { newDir =>
+      val c = chains.find(_.name == name).get
+      val out = newDir(s"graft_empty_$name").toString
+      c.append(c.base, shifted(160000L, 0.01).filter(lit(false)), out,
+        IndexStore.DefaultMaxSegments)
+      assert(IndexStore.committed(s"$out/manifest"))
+      def live(dir: String) = AnnSearch.ivfLiveVectors(spark, dir, c.data)
+        .select("vec_id").collect().map(_.getLong(0)).toSet
+      assert(live(out).nonEmpty && live(out) == live(c.base))
+      val corpus = AnnSearch.normalizedCorpus(spark, sf)
+      def rows(dir: String) =
+        c.search(dir, corpus, 10L).collect().map(_.toSeq).toSeq
+      assert(rows(out).nonEmpty && rows(out) == rows(c.base))
+    }
+
   tempDirTest("flat and PQ chains keep the same live ids and segment " +
       "shape through append, delete and the in-chain fold") { newDir =>
     def tmp(p: String) = newDir(p).toString

@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.testkit.ListenerBus
 import graft.operators.{AnnSearch, Quantize}
 
 /** Job-count ceilings of the IVF probe-and-scan, one per code format and
@@ -20,23 +16,7 @@ class ProbeScanJobsSpec extends SparkSpec {
     */
   private def jobsOf(run: () => Unit): Int = {
     run()
-    val sc = spark.sparkContext
-    val group = s"probe-scan-jobs-${java.util.UUID.randomUUID()}"
-    val n = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties)
-            .exists(_.getProperty("spark.jobGroup.id") == group))
-          n.incrementAndGet()
-    }
-    ListenerBus.drain(sc)
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, group)
-      try run() finally sc.clearJobGroup()
-      ListenerBus.drain(sc)
-    } finally sc.removeSparkListener(listener)
-    n.get
+    jobCount(run)
   }
 
   test("each code format's probe-and-scan stays at its job ceiling") {

@@ -92,8 +92,8 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("NN-descent over a random corpus recovers true neighbor " +
-      "structure with bounded degree") {
+  tempDirTest("NN-descent over a random corpus recovers true neighbor " +
+      "structure with bounded degree") { newDir =>
     import graft.operators.GraphAnn
     val rnd = new scala.util.Random(4242)
     val n = 600; val d = 8; val deg = 8
@@ -101,8 +101,7 @@ class PropertySpec extends SparkSpec {
       (i.toLong, Seq.fill(d)(rnd.nextGaussian())))
     val corpus = data.toDF("vec_id", "v0")
       .select(col("vec_id"), l2Normalize(col("v0")).as("v"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_graph_prop").toString
+    val dir = newDir("graft_graph_prop").toString
     GraphAnn.buildGraphOver(spark, corpus, dir, deg)
     val edges = GraphAnn.resolvedGraph(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1)))

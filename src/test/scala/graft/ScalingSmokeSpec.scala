@@ -25,11 +25,10 @@ class ScalingSmokeSpec extends SparkSpec {
     // round 12: the graph leg — beam search must stay beam-bounded
     "ann_knn_graph" -> 1.5)
 
-  test("10x blowup exponents stay sub-superlinear " +
-      "(SPARK_GRAFT_SCALING_SMOKE=1 to enable)") {
+  tempDirTest("10x blowup exponents stay sub-superlinear " +
+      "(SPARK_GRAFT_SCALING_SMOKE=1 to enable)") { newDir =>
     assume(enabled, "set SPARK_GRAFT_SCALING_SMOKE=1 to run the smoke")
-    val work = java.nio.file.Files
-      .createTempDirectory("graft_scale_smoke").toString
+    val work = newDir("graft_scale_smoke").toString
     val big = s"$work/x10"
     Scaling.buildBlowup(spark, sf, big, 10)
     def timeAt(dir: String): Map[String, Double] = {

@@ -1,15 +1,12 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import graft.sources.Formats
 
 class SourcesSpec extends SparkSpec {
 
-  private lazy val tmp = Files.createTempDirectory("graft_fmt").toString
-
-  test("csv round-trip preserves the customer table") {
+  tempDirTest("csv round-trip preserves the customer table") { newDir =>
+    val tmp = newDir("graft_fmt").toString
     val c = Tables.load(spark, sf, "customer")
     Formats.writeCsv(c, s"$tmp/customer_csv")
     val back = Formats.readCsv(spark, s"$tmp/customer_csv", c.schema)
@@ -18,7 +15,8 @@ class SourcesSpec extends SparkSpec {
       c.agg(sum("c_acctbal")).head.getDouble(0)) <= 1e-4)
   }
 
-  test("json round-trip preserves documents") {
+  tempDirTest("json round-trip preserves documents") { newDir =>
+    val tmp = newDir("graft_fmt").toString
     val d = Tables.load(spark, sf, "documents")
     Formats.writeJson(d, s"$tmp/docs_json")
     val back = Formats.readJson(spark, s"$tmp/docs_json", d.schema)
@@ -27,7 +25,8 @@ class SourcesSpec extends SparkSpec {
       d.select(min(length(col("text")))).head.getInt(0))
   }
 
-  test("orc round-trip preserves lineitem exactly") {
+  tempDirTest("orc round-trip preserves lineitem exactly") { newDir =>
+    val tmp = newDir("graft_fmt").toString
     val l = Tables.load(spark, sf, "lineitem").limit(1000)
     Formats.writeOrc(l, s"$tmp/li_orc")
     val back = Formats.readOrc(spark, s"$tmp/li_orc")
@@ -35,7 +34,8 @@ class SourcesSpec extends SparkSpec {
     assert(back.schema.map(_.name) == l.schema.map(_.name))
   }
 
-  test("partitioned layout prunes partitions at scan time") {
+  tempDirTest("partitioned layout prunes partitions at scan time") { newDir =>
+    val tmp = newDir("graft_fmt").toString
     val o = Tables.load(spark, sf, "orders")
       .withColumn("o_year", year(col("o_orderdate")))
     o.write.mode("overwrite").partitionBy("o_year")
@@ -48,7 +48,9 @@ class SourcesSpec extends SparkSpec {
     assert(back.count() == expected && expected > 0)
   }
 
-  test("schema evolution: mergeSchema unions columns across file vintages") {
+  tempDirTest("schema evolution: mergeSchema unions columns across file " +
+      "vintages") { newDir =>
+    val tmp = newDir("graft_fmt").toString
     // a 100 TB dataset is written over months; late files gain columns.
     // Readers must see the union schema with nulls for pre-evolution files.
     val v1 = Tables.load(spark, sf, "documents").select("doc_id", "text")
@@ -87,9 +89,9 @@ class SourcesSpec extends SparkSpec {
       plan.linesIterator.filter(_.contains("PushedFilters")).mkString("\n"))
   }
 
-  test("date-partitioned events prune at the file listing on day filters") {
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_daypart").toString
+  tempDirTest("date-partitioned events prune at the file listing on day " +
+      "filters") { newDir =>
+    val tmp = newDir("graft_daypart").toString
     val ev = Tables.events(spark, sf)
       .select(col("event_id"), col("user_id"), col("event_type"), col("ts"))
     Formats.writeDatePartitioned(ev, s"$tmp/events_by_day", "ts")

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path}
 
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.testkit.ListenerBus
 import org.scalactic.source.Position
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -43,6 +44,28 @@ abstract class SparkSpec extends AnyFunSuite {
         d
       } finally made.foreach(d => FileUtils.deleteQuietly(d.toFile))
     }
+
+  /** Spark jobs that `run` starts, counted under a job group of its own. */
+  def jobCount(run: () => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"graft-jobs-${java.util.UUID.randomUUID()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties)
+            .exists(_.getProperty("spark.jobGroup.id") == group))
+          n.incrementAndGet()
+    }
+    ListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      try run() finally sc.clearJobGroup()
+      ListenerBus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    n.get
+  }
 
   /** Every file under `dir` with its size and mtime: a write of any kind
     * changes it. (The committed-manifest read is cached per JVM, so the
