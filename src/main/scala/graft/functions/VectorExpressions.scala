@@ -109,21 +109,9 @@ case class ArraySquaredL2(left: Expression, right: Expression)
   private lazy val checkNulls =
     VectorExprGen.mayHaveNullElements(left) ||
       VectorExprGen.mayHaveNullElements(right)
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    if (n != y.numElements()) return null
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      if (checkNulls && (x.isNullAt(i) || y.isNullAt(i))) return null
-      val d = x.getDouble(i) - y.getDouble(i)
-      s += d * d
-      i += 1
-    }
-    s
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    ArraySquaredL2.kernel(a.asInstanceOf[ArrayData],
+      b.asInstanceOf[ArrayData], checkNulls)
   override protected def doGenCode(ctx: CodegenContext,
                                    ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (x, y) => {
@@ -153,6 +141,28 @@ case class ArraySquaredL2(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): ArraySquaredL2 =
     copy(left = newLeft, right = newRight)
+}
+
+object ArraySquaredL2 {
+  /** The interpreted form of the expression: ‖x − y‖² accumulated left to
+    * right in double, or null on a length mismatch or (when `checkNulls`)
+    * a null element. Driver-side code that must agree bit for bit with a
+    * distributed distance (the small-Q probe, the PQ lookup tables) calls
+    * this same loop.
+    */
+  def kernel(x: ArrayData, y: ArrayData, checkNulls: Boolean): Any = {
+    val n = x.numElements()
+    if (n != y.numElements()) return null
+    var s = 0.0
+    var i = 0
+    while (i < n) {
+      if (checkNulls && (x.isNullAt(i) || y.isNullAt(i))) return null
+      val d = x.getDouble(i) - y.getDouble(i)
+      s += d * d
+      i += 1
+    }
+    s
+  }
 }
 
 /** v / ‖v‖₂ in one pass. The `transform`-based form re-evaluates the norm

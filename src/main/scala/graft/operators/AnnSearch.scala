@@ -4,10 +4,15 @@ import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.Tables
+import graft.functions.ArraySquaredL2
 import graft.functions.VectorOps._
 import graft.sources.IndexStore
 
@@ -197,12 +202,13 @@ object AnnSearch {
       .partitionBy("cluster").parquet(s"$dir/vectors")
   }
 
-  /** Probe strategy switch: below this many queries the probe is a
-    * bounded collect (`isin` literals → static PartitionFilters — the
-    * cheapest plan when the probe set is a few MB); above it the search
+  /** Probe strategy switch: up to this many queries the probe runs on
+    * the driver over the collected queries (`isin` literals → static
+    * PartitionFilters — the cheapest plan when the probe set is a few
+    * MB) and the read is one scan job ([[FusedTopK]]); above it the search
     * keeps the probe DISTRIBUTED and lets dynamic partition pruning do
     * the same file-level pruning ([[probeScan]]). What this
-    * switch removes is the `isin`-literal COLLECT of Q·d doubles plus
+    * switch removes is the driver-side COLLECT of Q·d doubles plus
     * Q·nprobe assignment rows (at d=2048 ~16 KB per query: 1024 queries
     * ≈ 16 MB fine, a 10⁶-query batch ~16 GB — a driver OOM). The joined
     * strategy still BROADCASTS the probe frame — which stages it through
@@ -250,9 +256,9 @@ object AnnSearch {
     else broadcast(probes)
 
   /** nprobe nearest centroids per query as a LAZY plan (tiny crossJoin:
-    * Q × k centroids, k = O(√n)) — the ONE probe subplan both strategies
-    * share, so probe tie-breaking ((cdist, cluster) window) can never
-    * drift between the collected and joined paths or the IVF layouts.
+    * Q × k centroids, k = O(√n)) — the joined strategy's probe; the
+    * small-Q driver probe ([[querySide]]) ranks by the same (cdist,
+    * cluster) order with the same distance kernel.
     */
   private def probeFrame(queries: DataFrame, centersDf: DataFrame,
                          nProbe: Int): DataFrame =
@@ -276,52 +282,65 @@ object AnnSearch {
       .select(col("query_id"), col("qu"), col("cluster"), col("cr"))
   }
 
-  /** nprobe nearest centroids per query, COLLECTED (the low-Q strategy).
-    * The probe set (≤ Q·nprobe rows, Q·d doubles) is collected ONCE,
-    * deliberately: the distinct cluster ids become `isin` literals — what
-    * the parquet source turns into PartitionFilters, the file-level
-    * pruning that makes a probe touch nprobe/k of a 100 TB index — and
-    * the rows become the broadcast join side. This bounded collect IS the
-    * index probe mechanism, not a driver-side compute loop; without it
-    * the probe subplan would run twice (collect + lazy plan). Bounded by
-    * [[JoinProbeQueryThreshold]] at its one call site ([[probeScan]]) —
-    * high-Q searches never reach it.
+  /** A committed centroid table's (cluster, center) rows on the driver,
+    * loaded once per committed path ([[IndexStore.cached]]): the small-Q
+    * probe and the append's dimension check read them without a job.
     */
-  private def probe(spark: SparkSession, queries: DataFrame,
-                    centersDf: DataFrame,
-                    nProbe: Int): (Seq[Int], DataFrame) = {
-    import spark.implicits._
-    val rows = probeAssignments(spark, queries, centersDf, nProbe)
-    (rows.map(_._3).distinct.sorted.toIndexedSeq,
-      rows.toDF("query_id", "qu", "cluster"))
-  }
+  private def centroidRows(spark: SparkSession,
+                           path: String): Array[(Int, ArrayData)] =
+    IndexStore.cached("centroidRows", path, IndexStore.AtPath(path))(
+      IndexStore.readCached(spark, path)
+        .select(col("cluster"), col("center")).collect()
+        .map(r => (r.getInt(0), Quantize.arrayData(r.get(1)))))
 
-  /** The raw (query_id, query vector, probed cluster) assignment rows —
-    * [[probe]]'s collect, exposed so [[annRecallCurve]] can price an
-    * operating point (sum of probed cluster sizes) without a second
-    * distributed job.
+  /** A tombstone segment's deleted ids on the driver, loaded once per
+    * committed segment.
     */
-  private def probeAssignments(spark: SparkSession, queries: DataFrame,
-                               centersDf: DataFrame, nProbe: Int)
-      : Seq[(Long, Seq[Double], Int)] = {
-    // DRIVER-SIDE collect, Q·nProbe rows each carrying a d-dim query
-    // vector: sound only below [[JoinProbeQueryThreshold]] — every
-    // caller auto-switches to the joined-probe plan above it. The
-    // guard is post-collect (a pre-count would add a job to every hot
-    // probe), so it catches a misrouted moderately-large query frame
-    // deterministically rather than letting it silently become the new
-    // normal; a truly corpus-sized frame fails the collect itself on
-    // spark.driver.maxResultSize first.
-    val rows = probeFrame(queries, centersDf, nProbe)
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1), r.getInt(2)))
-      .toSeq
-    require(rows.length <= JoinProbeQueryThreshold * math.max(1, nProbe),
-      s"probeAssignments collected ${rows.length} driver rows " +
-        s"(> JoinProbeQueryThreshold=$JoinProbeQueryThreshold * " +
-        s"nProbe=$nProbe) - route this query frame through the " +
-        "joined-probe plan (probeSide) instead")
-    rows
+  private def tombstoneIds(spark: SparkSession, path: String): Array[Long] =
+    IndexStore.cached("tombstoneIds", path, IndexStore.AtPath(path))(
+      IndexStore.readCached(spark, path).select(col("vec_id")).collect()
+        .filterNot(_.isNullAt(0)).map(_.getAs[Number](0).longValue))
+
+  /** The small-Q read's driver side ([[QuerySide]]), built without a job
+    * beyond collecting the ≤ [[JoinProbeQueryThreshold]] query rows:
+    *  - each query's `nProbe` nearest centroids in [[probeFrame]]'s
+    *    window order — (squared L2, cluster), NULL distances first — by
+    *    the one left-fold kernel [[ArraySquaredL2]] evaluates;
+    *  - PQ's per-query lookup tables ([[Quantize.pqLut]]), bit-identical
+    *    to the distributed [[Quantize.pqLutsAt]];
+    *  - the version's tombstoned ids.
+    * Centroids, codebooks and tombstones are cached per committed path.
+    */
+  private def querySide(spark: SparkSession, layout: IvfLayout,
+                        queries: DataFrame, nProbe: Int,
+                        luts: Option[PqLuts]): QuerySide = {
+    val rows = queries.select(col("query_id"), col("qu")).collect()
+      .filterNot(_.isNullAt(0))
+    require(rows.length <= JoinProbeQueryThreshold,
+      s"small-Q read collected ${rows.length} query rows (> " +
+        s"JoinProbeQueryThreshold=$JoinProbeQueryThreshold) - pass the " +
+        "query count as expectedQ so the joined plan runs instead")
+    val qus = rows.map(r => Quantize.arrayData(r.get(1)))
+    val centers = centroidRows(spark, layout.centroids)
+    val probes = qus.map(qu => centers.map { case (c, center) =>
+      val d = if (qu == null) null
+              else ArraySquaredL2.kernel(qu, center, checkNulls = true)
+      FusedTopK.Cand(c, if (d == null) 0.0 else d.asInstanceOf[Double],
+        d == null)
+    }.sorted(FusedTopK.ordering(nullsLast = false))
+      .take(math.max(0, nProbe)).map(_.id))
+    val books = luts.map(l =>
+      (l, Quantize.codebookRows(spark, layout.codebooks.get)))
+    val sideRows = rows.indices.map { i =>
+      new GenericInternalRow(Array[Any](rows(i).getAs[Number](0).longValue,
+        qus(i)) ++ books.map { case (l, b) =>
+          UnsafeArrayData.fromPrimitiveArray(Quantize.pqLut(b, qus(i), l.m,
+            l.nk)) }): InternalRow
+    }.toArray
+    new QuerySide(sideRows,
+      probes.zipWithIndex.flatMap { case (cs, q) => cs.map((_, q)) }
+        .groupBy(_._1).map { case (c, qs) => c -> qs.map(_._2) },
+      layout.tombstones.flatMap(tombstoneIds(spark, _)).toSet)
   }
 
   private def queryVectors(spark: SparkSession, sfDir: String,
@@ -332,9 +351,9 @@ object AnnSearch {
 
   /** IVF-style approximate top-k against the PERSISTED index
     * (load-or-build): nprobe nearest centroids per query from the tiny
-    * persisted centroid table ([[probe]]), then candidates read only from
+    * persisted centroid table, then candidates read only from
     * the probed cluster partitions. Above [[JoinProbeQueryThreshold]]
-    * queries the probe auto-switches from the bounded collect to the
+    * queries the probe auto-switches from the driver-side probe to the
     * broadcast-probe-join + dynamic-partition-pruning plan
     * ([[probeScan]]) so a batch-query run never stages Q·d doubles on
     * the driver.
@@ -548,20 +567,34 @@ object AnnSearch {
       : DataFrame =
     liveRows(spark, ivfLayout(spark, dir, data))
 
+  /** PQ's per-query side of a probe-and-scan: ADC lookup tables over `m`
+    * subspaces × `nk` codes, built from the version's codebooks — or,
+    * on the joined plan, the caller's `given` table (one table shared by
+    * a sharded read's K dirs, whose codebooks are copies of one another).
+    */
+  private final case class PqLuts(m: Int, nk: Int, given: Option[DataFrame])
+
   /** THE IVF probe-and-scan of every code format — FAISS's `IndexIVF`
     * search (`main.py:138-165`), with the code format entering only as
-    * the caller's `score` column over the joined (query_id, qu, probe
-    * side…, scanned row…) rows. Returns (query_id, qu, id, score)
-    * candidates minus tombstoned ids; flat, SQ8, PQ and filtered
-    * searches differ only in that column and in the ranking tail they
-    * apply, so probe tie-breaking, strategy choice, broadcast pricing,
-    * segment fan-out and masking can never drift between them.
+    * the caller's `score` column over the joined (query_id, qu[, lut],
+    * scanned row…) rows, ranked per query by (score, id). It returns the
+    * top `keep` as a flat read's result rows (query_id, id, distance,
+    * rn), or, with `margin`, as a quantized read's exact-rescore margin
+    * (query_id, qu, id), NULL scores last. Flat, SQ8, PQ and filtered
+    * searches differ only in that column and the tail, so probe
+    * tie-breaking, strategy choice, broadcast pricing, segment fan-out
+    * and masking can never drift between them.
     *
     *  - up to [[JoinProbeQueryThreshold]] queries (`expectedQ`, the
     *    caller's known query count — a filter literal at every call
-    *    site, never a count job) the probe is COLLECTED ([[probe]]): its
-    *    cluster ids become `isin` literals on the union scan (static
-    *    PartitionFilters, pushed into every segment);
+    *    site, never a count job) the read runs as ONE scan job
+    *    ([[FusedTopK]]): the probe, PQ's LUTs and the tombstone set are
+    *    computed on the driver ([[querySide]]); the probed cluster ids
+    *    become `isin` literals on the union scan (static
+    *    PartitionFilters, pushed into every segment); each scan task
+    *    scores its rows against the queries probing their cluster and
+    *    keeps a bounded per-query heap, and one task merges the heaps —
+    *    no window, rank or sort stage, no tombstone job;
     *  - above it the probe stays a DISTRIBUTED plan ([[probeFrame]])
     *    and becomes the broadcast side of an equi-join on the PARTITION
     *    column, so dynamic partition pruning closes the same file-level
@@ -571,57 +604,61 @@ object AnnSearch {
     *    file scan, not to a Union; the probe side's exchange is planned
     *    once and reused across branches — and above
     *    [[BroadcastProbeByteLimit]] of staged payload the broadcast hint
-    *    drops ([[probeSide]]);
-    *  - `perQuery`: an optional query_id-keyed side and its width in
-    *    doubles (PQ's ADC LUTs). The collect path broadcasts it on its
-    *    own, per QUERY: joined into the probe rows it would be
-    *    denormalized across every probed cluster — Q·nProbe·(m·nk·8 B)
-    *    of broadcast, ~0.5 MB/row at d=2048 (m=256, nk=256), which
-    *    OOM'd a 24 g heap on the K-shard scatter-gather at the deep×wide
-    *    point. The joined path carries it on the probe side, priced into
-    *    the broadcast bound with the query vector;
+    *    drops ([[probeSide]]). PQ's LUTs ride the probe side, priced
+    *    into that bound with the query vector; tombstones are anti-joined
+    *    on the unioned candidates; the window tails
+    *    ([[VectorSearch.topK]], [[VectorSearch.pruneCandidates]]) rank;
     *  - `rowFilter`: a predicate on the scanned rows (the filtered
     *    index's `label = L`), pushed into the same partition scan.
-    *
-    * Tombstone exclusion sits on the (unioned) candidates: the probe
-    * join must sit directly on each partitioned scan for DPP to attach,
-    * and a deleted id must not burn a quantized path's rerank slots
-    * either ([[excludeTombstoned]] is a no-op plan-wise on undeleted
-    * versions).
     */
   private def probeScan(spark: SparkSession, layout: IvfLayout,
                         queries: DataFrame, nProbe: Int, expectedQ: Long,
-                        score: Column,
-                        perQuery: Option[(DataFrame, Int)] = None,
+                        score: Column, keep: Int, margin: Boolean,
+                        luts: Option[PqLuts] = None,
                         rowFilter: Option[Column] = None): DataFrame = {
-    val centersDf = IndexStore.readCached(spark, layout.centroids)
-    val side = perQuery.map(_._1)
     def scan(rows: DataFrame) = rowFilter.fold(rows)(rows.filter)
-    def candidates(joined: DataFrame) = joined
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("qu"), col("vec_id").as("id"), score)
-    val cands =
-      if (expectedQ <= JoinProbeQueryThreshold) {
-        val (probedClusters, p) = probe(spark, queries, centersDf, nProbe)
-        val scanned = broadcast(p).join(
-          scan(IndexStore.readUnion(spark, layout.segments)
-            .filter(col("cluster").isin(probedClusters: _*))), "cluster")
-        candidates(side.fold(scanned)(l =>
-          scanned.join(broadcast(l), "query_id")))
-      } else {
-        val probes = probeFrame(queries, centersDf, nProbe)
-        val p = probeSide(side.fold(probes)(probes.join(_, "query_id")),
-          expectedQ, nProbe, centroidDim(centersDf) + perQuery.fold(0)(_._2))
-        layout.segments.map(seg => candidates(
-          p.join(scan(IndexStore.readCached(spark, seg)), "cluster")))
-          .reduce(_ unionAll _)
-      }
-    excludeTombstoned(spark, layout.tombstones, cands, "id")
+    if (expectedQ <= JoinProbeQueryThreshold) {
+      val side = querySide(spark, layout, queries, nProbe, luts)
+      val top = FusedTopK.probed(spark, side, queries.schema("qu").dataType,
+        luts.isDefined, scan(IndexStore.readUnion(spark, layout.segments)
+          .filter(col("cluster").isin(side.clusters: _*))),
+        score, keep, nullsLast = margin)
+      if (margin) top.select(col("query_id"), col("qu"), col("id"))
+      else top.select(col("query_id"), col("id"),
+        round(col(top.columns(3)), 6).as("distance"), col("rn"))
+    } else {
+      val centersDf = IndexStore.readCached(spark, layout.centroids)
+      val side = luts.map(l => l.given.getOrElse(Quantize.pqLutsAt(spark,
+        layout.codebooks.get, queries, l.m, l.nk)
+        .select(col("query_id"), col("lut"))))
+      val probes = probeFrame(queries, centersDf, nProbe)
+      val p = probeSide(side.fold(probes)(probes.join(_, "query_id")),
+        expectedQ, nProbe,
+        centroidDim(centersDf) + luts.fold(0)(l => l.m * l.nk))
+      val cands = excludeTombstoned(spark, layout.tombstones,
+        layout.segments.map(seg =>
+          p.join(scan(IndexStore.readCached(spark, seg)), "cluster")
+            .filter(col("vec_id") =!= col("query_id"))
+            .select(col("query_id"), col("qu"), col("vec_id").as("id"),
+              score))
+          .reduce(_ unionAll _), "id")
+      if (margin) VectorSearch.pruneCandidates(cands, keep, Some(queries))
+      else VectorSearch.topK(cands.drop("qu"), keep)
+    }
   }
+
+  /** The exact rescore of a quantized read's margin against `normed`,
+    * ranked by the tail of the probe strategy `expectedQ` chose.
+    */
+  private def rescore(margin: DataFrame, normed: DataFrame, k: Int,
+                      expectedQ: Long): DataFrame =
+    VectorSearch.rescoreTopK(margin, normed, k,
+      if (expectedQ <= JoinProbeQueryThreshold) FusedTopK.ranked
+      else VectorSearch.topK)
 
   /** Flat IVF top-k against an EXPLICIT (possibly manifested or
     * tombstoned) index dir: exact squared L2 over the probed rows,
-    * ranked by [[VectorSearch.topK]]. The one flat read of every caller
+    * ranked by (distance, id). The one flat read of every caller
     * — fixture search, lifecycle gates, streaming chains, time travel,
     * shard legs and the benchmark — so none can drift in probe
     * tie-breaking or candidate shaping.
@@ -629,9 +666,8 @@ object AnnSearch {
   private[graft] def searchIndexAt(spark: SparkSession, dir: String,
                                    queries: DataFrame, k: Int,
                                    nProbe: Int, expectedQ: Long): DataFrame =
-    VectorSearch.topK(probeScan(spark, ivfLayout(spark, dir), queries,
-      nProbe, expectedQ, squaredL2(col("qu"), col("v")).as("dist"))
-      .drop("qu"), k)
+    probeScan(spark, ivfLayout(spark, dir), queries, nProbe, expectedQ,
+      squaredL2(col("qu"), col("v")).as("dist"), k, margin = false)
 
   /** Load-or-build gate for the persisted IVF index — the ONE place the
     * committed-artifact check lives (three call sites would otherwise
@@ -731,7 +767,7 @@ object AnnSearch {
     val centersDf = IndexStore.readCached(spark, base.centroids)
     // the batch's dimension must match the index — a mismatch would make
     // every squaredL2 NULL and silently dump the whole batch in cluster 0
-    val centerDim = centroidDim(centersDf)
+    val centerDim = centroidRows(spark, base.centroids).head._2.numElements()
     batch.select(size(col("v"))).limit(1).collect().headOption.foreach {
       r => require(r.getInt(0) == centerDim,
         s"batch dim ${r.getInt(0)} != index dim $centerDim")
@@ -750,9 +786,11 @@ object AnnSearch {
     // compaction contract of the delete lifecycle). A delta append
     // carries the tombstones FORWARD: it must never un-delete
     val fold = base.segments.length + 1 > maxSegments
-    (if (fold) liveRows(spark, base).select(rows.columns.map(col): _*)
+    val written =
+      if (fold) liveRows(spark, base).select(rows.columns.map(col): _*)
         .unionByName(rows)
-      else rows)
+      else rows
+    written
       // one shuffle so each touched cluster gets ONE file, not one per
       // (task × cluster): per-cluster rows are O(√n) by the nlist
       // sizing, and a micro-batch spread over every writer task would
@@ -767,6 +805,7 @@ object AnnSearch {
     // a schema: the version then re-lists the predecessor's segments, so
     // it reads exactly as its predecessor does
     val empty = !IndexStore.holdsData(segment)
+    if (!empty) seedSegmentSchema(spark, written, base.segments.last, segment)
     // LAST: the manifest commits the version (see commit protocol above)
     IndexStore.writeManifest(spark, out,
       if (empty) base.successor(base.segments, base.tombstones)
@@ -775,6 +814,23 @@ object AnnSearch {
     // the version is committed — the assignment's working checkpoint is
     // dead; release deterministically ([[Checkpoints]])
     Checkpoints.release(assigned)
+  }
+
+  /** Seed the schema of a data segment just written from `rows`: a
+    * reader's inference would find the predecessor segment's (`like`)
+    * whenever the rows carry its columns and types — nullability aside,
+    * the partition column last — so the first read of the new version
+    * skips the inference job. Rows of another shape are left to
+    * inference.
+    */
+  private def seedSegmentSchema(spark: SparkSession, rows: DataFrame,
+                                like: String, segment: String): Unit = {
+    val prior = IndexStore.readCached(spark, like).schema
+    def shape(fields: Seq[StructField]) =
+      fields.map(f => (f.name, f.dataType.catalogString))
+    val (part, data) = rows.schema.fields.toSeq.partition(_.name == "cluster")
+    if (shape(data ++ part) == shape(prior.fields.toSeq))
+      IndexStore.seedSchema(segment, prior)
   }
 
   /** Incremental add to the persisted flat IVF index: [[appendAt]] with
@@ -853,6 +909,11 @@ object AnnSearch {
       } else (batch, base.tombstones)
     written.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(segment)
+    // a segment of long ids reads back as exactly this schema
+    if (written.schema("vec_id").dataType == LongType &&
+        IndexStore.holdsData(segment))
+      IndexStore.seedSchema(segment, StructType(Seq(
+        StructField("vec_id", LongType))))
     // LAST: the manifest commits the version — predecessor data
     // segments re-referenced untouched, tombstone chain extended/folded
     IndexStore.writeManifest(spark, out,
@@ -935,14 +996,12 @@ object AnnSearch {
                                    queries: DataFrame, normed: DataFrame,
                                    k: Int, nProbe: Int, rerank: Int,
                                    expectedQ: Long): DataFrame =
-    VectorSearch.rescoreTopK(
-      VectorSearch.pruneCandidates(
-        probeScan(spark, ivfLayout(spark, dir), queries, nProbe, expectedQ,
-          squaredL2(col("qu"),
-            transform(col("qv"), x => x.cast("double") / col("scale")))
-            .as("adist")),
-        rerank, Some(queries)),
-      normed, k)
+    rescore(
+      probeScan(spark, ivfLayout(spark, dir), queries, nProbe, expectedQ,
+        squaredL2(col("qu"),
+          transform(col("qv"), x => x.cast("double") / col("scale")))
+          .as("adist"), rerank, margin = true),
+      normed, k, expectedQ)
 
   /** Build (once) the composed IVF+PQ layout — the production default of
     * every FAISS deployment at scale (`IndexIVFPQ`; the reference holds
@@ -1007,7 +1066,7 @@ object AnnSearch {
     * sums, exact rescore of the candidate margin — [[ivfSqKnn]]'s shape
     * with the scan rows shrunk from ~d bytes (SQ8) to m bytes (PQ), the
     * aggressive end of the family's storage/recall trade at the SAME
-    * probe pruning. The per-query LUTs ride [[probeScan]]'s per-query
+    * probe pruning. The per-query LUTs ride [[probeScan]]'s query
     * side, so the code scan is one map-side pass summing m lookups per
     * row; above [[JoinProbeQueryThreshold]] queries the probe stays
     * distributed (DPP prunes the partitioned code scan), and
@@ -1039,10 +1098,10 @@ object AnnSearch {
                                    rerank: Int, expectedQ: Long,
                                    lutsIn: Option[DataFrame] = None)
       : DataFrame =
-    VectorSearch.rescoreTopK(
+    rescore(
       ivfPqMarginAt(spark, dir, queries, nProbe, m, nk, rerank,
         expectedQ, lutsIn),
-      normed, k)
+      normed, k, expectedQ)
 
   /** The ADC half of [[ivfPqSearchAt]]: the [[probeScan]] scored by m
     * LUT lookups per code row (the per-query LUTs, the shared
@@ -1061,21 +1120,16 @@ object AnnSearch {
                                    rerank: Int, expectedQ: Long,
                                    lutsIn: Option[DataFrame] = None)
       : DataFrame = {
-    val layout = ivfLayout(spark, dir, PqCodec.Data)
     // `lutsIn`: a caller that probes several dirs sharing ONE trained
     // codebook (the sharded topology) builds the Q-row LUT table once
     // and passes it in — K identical Q·m·nk constructions collapsed to
     // one ([[ShardedSearch.shardedIvfPqKnn]])
-    val luts = lutsIn.getOrElse(
-      Quantize.pqLutsAt(spark, layout.codebooks.get, queries, m, nk)
-        .select(col("query_id"), col("lut")))
-    VectorSearch.pruneCandidates(
-      probeScan(spark, layout, queries, nProbe, expectedQ,
-        expr(s"""aggregate(sequence(0, ${m - 1}), 0D, (acc, j) ->
-          acc + element_at(lut, j * $nk +
-            element_at(codes, j + 1) + 1))""").as("adist"),
-        perQuery = Some((luts, m * nk))),
-      rerank, Some(queries))
+    probeScan(spark, ivfLayout(spark, dir, PqCodec.Data), queries, nProbe,
+      expectedQ,
+      expr(s"""aggregate(sequence(0, ${m - 1}), 0D, (acc, j) ->
+        acc + element_at(lut, j * $nk +
+          element_at(codes, j + 1) + 1))""").as("adist"),
+      rerank, margin = true, luts = Some(PqLuts(m, nk, lutsIn)))
   }
 
   /** PQ-encode an explicit centroid-assigned frame (vec_id, v, cluster)
@@ -1102,7 +1156,8 @@ object AnnSearch {
   private def pqEncode(spark: SparkSession, codebooksPath: String,
                        rows: DataFrame, m: Int, nk: Int): DataFrame = {
     val books = IndexStore.readCached(spark, codebooksPath)
-    val subLen = books.select(size(col("center"))).head.getInt(0)
+    val subLen = Quantize.codebookRows(spark, codebooksPath).head._3
+      .numElements()
     // NEVER materialize the batch × (m·nk) codebook blowup (57,344 book
     // rows at d=2048). The first cut carried the 8·d B vector through
     // that blowup into a window sort and OOM'd a 24 g heap on a 10k-row
@@ -1258,9 +1313,9 @@ object AnnSearch {
                                          queries: DataFrame, label: Int,
                                          k: Int, nProbe: Int,
                                          expectedQ: Long): DataFrame =
-    VectorSearch.topK(probeScan(spark, ivfLayout(spark, dir), queries,
-      nProbe, expectedQ, squaredL2(col("qu"), col("v")).as("dist"),
-      rowFilter = Some(col("label") === label)).drop("qu"), k)
+    probeScan(spark, ivfLayout(spark, dir), queries, nProbe, expectedQ,
+      squaredL2(col("qu"), col("v")).as("dist"), k, margin = false,
+      rowFilter = Some(col("label") === label))
 
   /** The persisted-IVF scale path through the PURE-SQL surface — what a
     * SQL-only consumer of the library runs (the exact-k-NN twin is

@@ -1,9 +1,12 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.ArraySquaredL2
 import graft.functions.VectorOps._
 import graft.sources.IndexStore
 
@@ -294,6 +297,7 @@ object Quantize {
     * the absent-slot +inf fill) cannot drift between the two layouts.
     * Built DISTRIBUTED as a queries × codebooks join (Q·m·nCodes rows) —
     * no query row or codebook ever lands on the driver, Q is unbounded.
+    * The small-Q read builds the same tables on the driver ([[pqLut]]).
     */
   private[operators] def pqLutsAt(spark: SparkSession,
                                   codebooksPath: String,
@@ -321,6 +325,52 @@ object Quantize {
         transform(sequence(lit(0), lit(m * nk - 1)),
           i => coalesce(element_at(col("lm"), i),
             lit(Double.PositiveInfinity))).as("lut"))
+  }
+
+  /** A collected array column value (a Seq, or null) as Catalyst
+    * [[ArrayData]], null elements kept — the form the shared distance
+    * kernel ([[graft.functions.ArraySquaredL2.kernel]]) reads.
+    */
+  private[operators] def arrayData(v: Any): ArrayData =
+    CatalystTypeConverters.convertToCatalyst(v).asInstanceOf[ArrayData]
+
+  /** A committed codebook table's (subspace, code, center) rows on the
+    * driver, loaded once per committed path ([[IndexStore.cached]]): the
+    * small-Q read's LUTs ([[pqLut]]) and the append's subspace width
+    * read them without a job.
+    */
+  private[operators] def codebookRows(spark: SparkSession, path: String)
+      : Array[(Int, Int, ArrayData)] =
+    IndexStore.cached("codebookRows", path, IndexStore.AtPath(path))(
+      IndexStore.readCached(spark, path)
+        .select(col("subspace"), col("code"), col("center")).collect()
+        .map(r => (r.getInt(0), r.getInt(1), arrayData(r.get(2)))))
+
+  /** One query's [[pqLutsAt]] table built on the driver from the
+    * codebook rows: the same slot layout, the same `slice` of the query,
+    * the same left-fold distance (the [[ArraySquaredL2]] kernel), and
+    * +inf for an absent slot or a NULL distance — bit-identical to the
+    * distributed construction.
+    */
+  private[operators] def pqLut(books: Array[(Int, Int, ArrayData)],
+                               qu: ArrayData, m: Int,
+                               nk: Int): Array[Double] = {
+    val lut = Array.fill(m * nk)(Double.PositiveInfinity)
+    if (qu != null) books.foreach { case (j, c, center) =>
+      val slot = j * nk + c
+      val len = center.numElements()
+      if (slot >= 0 && slot < lut.length) {
+        val from = j * len
+        val sub = new GenericArrayData((from until math.min(from + len,
+          qu.numElements())).map(i =>
+          if (qu.isNullAt(i)) null else qu.getDouble(i)).toArray[Any])
+        ArraySquaredL2.kernel(sub, center, checkNulls = true) match {
+          case d: Double => lut(slot) = d
+          case _ =>
+        }
+      }
+    }
+    lut
   }
 
   /** Top-k search over the quantized store with exact re-ranking:

@@ -235,21 +235,23 @@ object ShardedSearch {
     // shard's scan runs on its own executors and only ≤ Q·rerank id
     // rows travel), and the gathered margin is a SUPERSET of the
     // per-shard top-k gather, so the one-rescore merge can only
-    // improve on it.
-    val luts = Quantize.pqLutsAt(spark, s"${dirs.head}/codebooks",
-        queries, m, nk)
-      .select(col("query_id"), col("lut")).localCheckpoint(true)
+    // improve on it. Up to JoinProbeQueryThreshold queries each shard's
+    // read builds the same tables on the driver, so the shared table is
+    // built for the joined plan only.
+    val luts = Option.when(nQueries > AnnSearch.JoinProbeQueryThreshold)(
+      Quantize.pqLutsAt(spark, s"${dirs.head}/codebooks", queries, m, nk)
+        .select(col("query_id"), col("lut")).localCheckpoint(true))
     try {
       val gathered = dirs.map { dir =>
         AnnSearch.ivfPqMarginAt(spark, dir, queries, p, m, nk,
-            rerank, expectedQ = nQueries.toLong, lutsIn = Some(luts))
+            rerank, expectedQ = nQueries.toLong, lutsIn = luts)
           .select(col("query_id"), col("id")).localCheckpoint(true)
       }.reduce(_ unionAll _)
       VectorSearch.rescoreTopK(
         gathered.join(broadcast(queries), "query_id")
           .select(col("query_id"), col("qu"), col("id")),
         normed, k)
-    } finally Checkpoints.release(luts)
+    } finally luts.foreach(Checkpoints.release)
   }
 
   /** Graph scatter-gather: beam each shard's graph (the one existing

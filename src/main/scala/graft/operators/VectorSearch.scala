@@ -79,11 +79,14 @@ object VectorSearch {
 
   /** Exact re-ranking of a bounded candidate set (query_id, qu, id)
     * against full-precision vectors: broadcast the candidates into one
-    * map-side join with the vector table, then [[topK]].
+    * map-side join with the vector table, then `rank` ([[topK]], or the
+    * small-Q read's one-job [[FusedTopK.ranked]]).
     */
   private[operators] def rescoreTopK(cands: DataFrame, normed: DataFrame,
-                                     k: Int): DataFrame =
-    topK(normed.select(col("vec_id").as("id"), col("v"))
+                                     k: Int,
+                                     rank: (DataFrame, Int) => DataFrame =
+                                       topK): DataFrame =
+    rank(normed.select(col("vec_id").as("id"), col("v"))
       .join(broadcast(cands), "id")
       .select(col("query_id"), col("id"),
         squaredL2(col("qu"), col("v")).as("dist")), k)

@@ -185,6 +185,22 @@ object IndexStore {
     if (e.owner != null)
       graft.operators.Checkpoints.release(e.value.asInstanceOf[DataFrame])
 
+  /** Install `value` as the entry a writer just committed at `origin`,
+    * under the token it committed, so a reader in the same JVM does not
+    * read back what the writer already holds. An uncommitted origin is
+    * left alone.
+    */
+  private def seed(cache: String, key: String, origin: Origin,
+                   value: Any): Unit =
+    tokenOf(origin, null).foreach { case (marker, token) =>
+      val old = cacheEntries.put(s"$cache#$key",
+        new Entry(cache, marker, token, value, null))
+      if (old != null && old.token != token) {
+        count(cache, 2)
+        drop(old)
+      }
+    }
+
   /** A value derived from `origin`, computed once per token. */
   private[graft] def cached[V](cache: String, key: String, origin: Origin)
                               (load: => V): V =
@@ -247,6 +263,13 @@ object IndexStore {
     }
     if (inferred != null) inferred else spark.read.schema(schema).parquet(path)
   }
+
+  /** Seed [[readCached]]'s schema of a dataset just written at `path`:
+    * the writer knows what inference would find, so the first read
+    * skips it.
+    */
+  private[graft] def seedSchema(path: String, schema: StructType): Unit =
+    seed("schema", path, AtPath(path), schema)
 
   def committed(path: String): Boolean = {
     val p = new Path(path, "_SUCCESS")
@@ -345,6 +368,9 @@ object IndexStore {
     import spark.implicits._
     saveDataset(entries.toDF("artifact", "path", "seq")
       .coalesce(1), s"$versionDir/manifest")
+    // the rows just committed are what [[readManifest]] would read back
+    seed("manifest", versionDir,
+      AtPath(s"$versionDir/manifest"), entries.sortBy(e => (e._1, e._3)))
   }
 
   /** The version's `(artifact, path, seq)` rows, ordered by (artifact,

@@ -15,6 +15,16 @@ object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** A DataFrame over a logical plan (`Dataset.ofRows` is `private[sql]`):
+    * how an operator with its own logical node and planning strategy
+    * hands callers a lazy frame.
+    */
+  def ofRows(spark: org.apache.spark.sql.SparkSession,
+             plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
   /** Register a temp SQL function on a session (`sessionState` is
     * `private[sql]` too).
     */

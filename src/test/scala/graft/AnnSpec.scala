@@ -1216,18 +1216,15 @@ class AnnSpec extends SparkSpec {
     assert(s1 == s2, "the hash sample must be reproducible")
   }
 
-  test("a sampled-fit IVF build still assigns and persists EVERY row " +
-      "(the sample bounds the fit, never the encode)") {
+  tempDirTest("a sampled-fit IVF build still assigns and persists EVERY " +
+      "row (the sample bounds the fit, never the encode)") { newDir =>
     import graft.operators.{AnnSearch, VectorSearch}
     val nRows = 2000
     val big = spark.range(nRows.toLong).select(col("id").as("vec_id"),
       graft.functions.VectorOps.l2Normalize(array(
         sin(col("id") * 0.7), cos(col("id") * 1.3),
         sin(col("id") * 2.1), cos(col("id") * 0.4))).as("v"))
-    val dir = s"/tmp/graft_test_sampled_ivf_${spark.hashCode()}"
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(graft.sources.IndexStore.hadoopConf)
-      .delete(new org.apache.hadoop.fs.Path(dir), true)
+    val dir = newDir("graft_test_sampled_ivf").toString
     // nc=2 → training bound 512 < 2000: the fit is sampled
     assert(!(AnnSearch.fitSample(big, nRows.toLong, 2) eq big))
     AnnSearch.buildIvfOver(spark, big, 2, dir)
@@ -1237,17 +1234,15 @@ class AnnSpec extends SparkSpec {
       "the assign pass must cover every row, sampled fit or not")
   }
 
-  test("a sampled-fit PQ build encodes EVERY row at full code width") {
+  tempDirTest("a sampled-fit PQ build encodes EVERY row at full code " +
+      "width") { newDir =>
     import graft.operators.Quantize
     val nRows = 3000
     val big = spark.range(nRows.toLong).select(col("id").as("vec_id"),
       graft.functions.VectorOps.l2Normalize(array(
         sin(col("id") * 0.7), cos(col("id") * 1.3),
         sin(col("id") * 2.1), cos(col("id") * 0.4))).as("v"))
-    val dir = s"/tmp/graft_test_sampled_pq_${spark.hashCode()}"
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(graft.sources.IndexStore.hadoopConf)
-      .delete(new org.apache.hadoop.fs.Path(dir), true)
+    val dir = newDir("graft_test_sampled_pq").toString
     // nk=4 → training bound 1024 < 3000: the per-subspace fits sample
     Quantize.buildPqOver(spark, big, 2, 4, dir)
     val codes = spark.read.parquet(s"$dir/codes")

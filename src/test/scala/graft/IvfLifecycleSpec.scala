@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.functions.VectorOps.l2Normalize
 import graft.operators.{AnnSearch, Quantize}
 import graft.sources.IndexStore
@@ -107,6 +108,37 @@ class IvfLifecycleSpec extends SparkSpec {
         c.search(dir, corpus, 10L).collect().map(_.toSeq).toSeq
       assert(rows(out).nonEmpty && rows(out) == rows(c.base))
     }
+
+  tempDirTest("a write seeds the manifest and segment schema a read of " +
+      "its version would infer") { newDir =>
+    // what a read in a fresh JVM would find on disk
+    def onDisk(out: String) = spark.read.parquet(s"$out/manifest").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+      .sortBy(e => (e._1, e._3)).toSeq
+    def seeded(out: String, segment: String): Unit = {
+      val manifest = IndexStore.cached[Seq[(String, String, Long)]](
+        "manifest", out, IndexStore.AtPath(s"$out/manifest"))(
+        fail(s"$out: manifest not seeded"))
+      assert(manifest == onDisk(out), out)
+      val schema = IndexStore.cached[StructType]("schema", segment,
+        IndexStore.AtPath(segment))(fail(s"$segment: schema not seeded"))
+      assert(schema == spark.read.parquet(segment).schema, segment)
+    }
+    for (c <- chains) {
+      val batch = shifted(170000L, 0.01)
+      val app = newDir(s"graft_seed_${c.name}_app").toString
+      c.append(c.base, batch, app, IndexStore.DefaultMaxSegments)
+      seeded(app, s"$app/segment")
+      val del = newDir(s"graft_seed_${c.name}_del").toString
+      c.delete(app, batch.select(col("vec_id"))
+        .filter(col("vec_id") % 2 === 0), del)
+      seeded(del, s"$del/tombstones")
+      // 2 data segments + 1 > 1: the fold rewrites the live rows
+      val fold = newDir(s"graft_seed_${c.name}_fold").toString
+      c.append(del, shifted(180000L, 0.02), fold, 1)
+      seeded(fold, s"$fold/segment")
+    }
+  }
 
   tempDirTest("flat and PQ chains keep the same live ids and segment " +
       "shape through append, delete and the in-chain fold") { newDir =>
