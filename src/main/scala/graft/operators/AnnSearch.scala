@@ -293,14 +293,6 @@ object AnnSearch {
         .select(col("cluster"), col("center")).collect()
         .map(r => (r.getInt(0), Quantize.arrayData(r.get(1)))))
 
-  /** A tombstone segment's deleted ids on the driver, loaded once per
-    * committed segment.
-    */
-  private def tombstoneIds(spark: SparkSession, path: String): Array[Long] =
-    IndexStore.cached("tombstoneIds", path, IndexStore.AtPath(path))(
-      IndexStore.readCached(spark, path).select(col("vec_id")).collect()
-        .filterNot(_.isNullAt(0)).map(_.getAs[Number](0).longValue))
-
   /** The small-Q read's driver side ([[QuerySide]]), built without a job
     * beyond collecting the ≤ [[JoinProbeQueryThreshold]] query rows:
     *  - each query's `nProbe` nearest centroids in [[probeFrame]]'s
@@ -340,7 +332,7 @@ object AnnSearch {
     new QuerySide(sideRows,
       probes.zipWithIndex.flatMap { case (cs, q) => cs.map((_, q)) }
         .groupBy(_._1).map { case (c, qs) => c -> qs.map(_._2) },
-      layout.tombstones.flatMap(tombstoneIds(spark, _)).toSet)
+      layout.tombstones.flatMap(IndexStore.tombstoneIds(spark, _)).toSet)
   }
 
   private def queryVectors(spark: SparkSession, sfDir: String,

@@ -677,8 +677,7 @@ object Dedup {
         .select(col("id"),
           least(col("l1"), coalesce(col("jl"), col("l1")))
             .as("new_label"), col("old_label"))
-      // plan evidence hook (the beam's SPARK_GRAFT_BEAM_PLAN pattern):
-      // the converged final frame explains as a bare checkpoint read, so
+      // plan evidence hook: the converged final frame explains as a bare checkpoint read, so
       // the per-round join shape is only visible from inside the loop
       if (iter == 0 && sys.env.contains("SPARK_GRAFT_COMP_PLAN"))
         System.err.println(jumped.queryExecution.explainString(

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, AttributeSet, BindReferences, Expression, GenericInternalRow, JoinedRow, NamedExpression, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, AttributeSet, BindReferences, Expression, GenericInternalRow, JoinedRow, Literal, NamedExpression, Round, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.Cross
 import org.apache.spark.sql.catalyst.plans.logical.{Join, JoinHint, LocalRelation, LogicalPlan, Project, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, SinglePartition}
@@ -14,16 +14,19 @@ import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType}
 
 /** The driver-resident query side of a small-Q read: one row
-  * (query_id, qu[, lut]) per query, the queries each cluster's rows are
-  * scored against (`probed`: cluster → query indices) and the ids no
-  * query may return. A query's vector and lookup table are held once,
-  * never per probed cluster: at d=2048 a table is ~0.5 MB. Compared by
-  * reference, so plan reuse can never hand one read another read's
-  * queries.
+  * (query_id, qu[, lut]) per query, the queries each key's rows are
+  * scored against (`probed`: an IVF cluster, or a graph beam's fresh
+  * vec_id → query indices) and the ids no query may return. With
+  * `excludeSelf` a query never scores its own id; a graph beam keeps it,
+  * since its ranking drops the query only after the walk. A query's
+  * vector and lookup table are held once, never per probed key: at
+  * d=2048 a table is ~0.5 MB. Compared by reference, so plan reuse can
+  * never hand one read another read's queries.
   */
 private[graft] final class QuerySide(val rows: Array[InternalRow],
                                      val probed: Map[Long, Array[Int]],
-                                     val tombstones: Set[Long])
+                                     val tombstones: Set[Long],
+                                     val excludeSelf: Boolean = true)
     extends Serializable {
   /** The probed cluster ids, ascending. */
   def clusters: Seq[Int] = probed.keys.map(_.toInt).toSeq.sorted
@@ -36,9 +39,10 @@ private[graft] final class QuerySide(val rows: Array[InternalRow],
   * (`rowId`): the window tails of a small-Q search ([[VectorSearch.topK]],
   * [[VectorSearch.pruneCandidates]]) fused into the scan. With a `side`,
   * every child row is scored against each query whose probe holds the
-  * row's `key` (its cluster), skipping the query's own id and tombstoned
-  * ids — the probe join, run inside the scan's tasks; without one, `key`
-  * is the row's query_id. NULL scores rank first, or last with
+  * row's `key` (its cluster, or its id for a graph beam), skipping
+  * tombstoned ids and, unless the side keeps it, the query's own id —
+  * the probe join, run inside the scan's tasks; without one, `key` is
+  * the row's query_id. NULL scores rank first, or last with
   * `nullsLast` (the quantized margin's order). Output: query_id,
   * [qu (with a side)], id, score, rn.
   */
@@ -98,7 +102,8 @@ private[graft] case class FusedTopKExec(side: Option[QuerySide],
               if (!s.tombstones.contains(rid))
                 s.probed.get(keyOf._2(row)).foreach(_.foreach { q =>
                   val qid = s.rows(q).getLong(0)
-                  if (qid != rid) offer(qid, rid, joined(s.rows(q), row))
+                  if (qid != rid || !s.excludeSelf)
+                    offer(qid, rid, joined(s.rows(q), row))
                 })
             }
           }
@@ -211,15 +216,17 @@ private[graft] object FusedTopK {
     plan.output.find(_.name == name).getOrElse(throw
       new IllegalArgumentException(s"no `$name` column in ${plan.output}"))
 
-  /** The top `keep` rows per query of the probed `scan` (vec_id, cluster,
+  /** The top `keep` rows per query of the probed `scan` (vec_id, `key`,
     * …) scored by `score` — a column over the scan's columns and the
     * side's query_id, qu (typed `quType`, as the caller's query frame, so
     * `score` resolves exactly as it does over a probe join) and, with
     * `withLut`, PQ's lookup table — as (query_id, qu, id, score, rn).
+    * `key` is the scan column the side's `probed` map is keyed by.
     */
   def probed(spark: SparkSession, side: QuerySide, quType: DataType,
              withLut: Boolean, scan: DataFrame, score: Column,
-             keep: Int, nullsLast: Boolean): DataFrame = {
+             keep: Int, nullsLast: Boolean,
+             key: String = "cluster"): DataFrame = {
     val sideOutput =
       Seq(AttributeReference("query_id", LongType, nullable = false)(),
         AttributeReference("qu", quType)()) ++
@@ -234,7 +241,7 @@ private[graft] object FusedTopK {
       case n: NamedExpression => (n.name, n)
     }
     require(expr.dataType == DoubleType, s"score $name is not a double")
-    frame(spark, FusedTopK(Some(side), sideOutput, attr(child, "cluster"),
+    frame(spark, FusedTopK(Some(side), sideOutput, attr(child, key),
       attr(child, "vec_id"), expr, keep, nullsLast,
       Seq(AttributeReference("query_id", LongType, nullable = false)(),
         AttributeReference("qu", quType)(),
@@ -242,6 +249,12 @@ private[graft] object FusedTopK {
         AttributeReference(name, DoubleType)(),
         AttributeReference("rn", LongType, nullable = false)()), child))
   }
+
+  /** `round(d, 6)` as the ranking tails' `round` column computes it:
+    * for the rows a driver-side tail ranks itself.
+    */
+  def rounded(d: Double): Double =
+    Round(Literal(d), Literal(6)).eval().asInstanceOf[Double]
 
   /** [[VectorSearch.topK]] as one job: the top `k` of (query_id, id,
     * dist) pairs per query as (query_id, id, distance, rn).

@@ -1,10 +1,18 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 
 import graft.Tables
+import graft.functions.ArraySquaredL2
 import graft.functions.VectorOps._
 import graft.sources.IndexStore
 
@@ -39,11 +47,18 @@ import graft.sources.IndexStore
   *    spread, and [[autoEf]] for why √n) expand hop by hop: the current
   *    best `ef` visited nodes per query (efSearch ≅ beam width, √n
   *    scale-derived — the 100× ladder measured the fixed-64 beam
-  *    decaying to recall 0.65) pull their adjacency rows in via one
-  *    equi-join on the graph table, new nodes get scored, and after
-  *    `hops` rounds the shared ranking tail ([[VectorSearch.topK]])
-  *    emits the contract rows. Every hop is one join of a
-  *    Q·ef·M-bounded frame against the id-bucketed vector store — at
+  *    decaying to recall 0.65) pull their adjacency rows in, new nodes
+  *    get scored, and after `hops` rounds the ranking tail emits the
+  *    contract rows. Which path runs is priced per call
+  *    ([[searchTraceAt]]): up to [[AnnSearch.JoinProbeQueryThreshold]]
+  *    queries, with the Q·ef·M probe under
+  *    [[AnnSearch.BroadcastProbeByteLimit]], the pruned beam lives on
+  *    the driver and a hop is at most one bucket-pruned adjacency scan
+  *    and one [[FusedTopK]] scoring scan ([[driverBeam]]), ranked on the
+  *    driver; above that, for the unpruned diagnostic trace and in the
+  *    SQL twin ([[sqlAnnGraph]]), every hop is one join of a
+  *    Q·ef·M-bounded frame against the id-bucketed vector store, ranked
+  *    by [[VectorSearch.topK]]. Both return the same rows, and at
   *    100 TB the per-hop work is proportional to the beam, never the
   *    corpus.
   *
@@ -574,6 +589,12 @@ object GraphAnn {
     * limit the hints drop and the hop joins shuffle — pruning is moot
     * there anyway: Q·ef·deg touches essentially every bucket.
     *
+    * Strategy (the IVF read's [[AnnSearch.JoinProbeQueryThreshold]]
+    * switch applied to the beam): a pruned search of at most that many
+    * queries whose probe side prices under the byte limit runs
+    * [[driverBeam]], whose trace is a local frame with the same rows;
+    * every other search runs the joined hops below.
+    *
     * Beam-state pruning (`pruneToEf`, default on): the visited frame is
     * cut to each query's top-`ef` rows after every hop. This is EXACT
     * for every consumer — the frontier is already the per-query top-ef,
@@ -601,24 +622,28 @@ object GraphAnn {
     val graphView = artifact(spark, dir, "graph")
       .select(col("bucket"), col("src"), col("dst"))
     val vectors = artifact(spark, dir, "vectors")
-    val seeds = artifact(spark, dir, "seeds")
-      .select(col("vec_id").as("id"), col("v").as("sv"))
-    // control-plane pricing inputs: Q (threaded in by callers that know
-    // it — the [[AnnSearch.searchIndexAt]] expectedQ discipline — else one
-    // count of the query frame) and d (one head row of the tiny seed
-    // table, cached per committed version)
+    // control-plane pricing input: Q, threaded in by callers that know
+    // it (the [[AnnSearch.searchIndexAt]] expectedQ discipline), else one
+    // count of the query frame
     val qCount =
       if (expectedQ > 0L) expectedQ else math.max(1L, queries.count())
+    // ~32 B per slim (query_id, id, bucket) row in the in-memory
+    // broadcast relation; the query frame carries the d-dim vector
+    val frontierBytes = qCount * ef * 32L
+    val probeBytes = qCount * ef * deg * 32L
+    if (pruneToEf && qCount <= AnnSearch.JoinProbeQueryThreshold &&
+        probeBytes <= AnnSearch.BroadcastProbeByteLimit)
+      return driverBeam(spark, dir, queries, ef, hops, b, graphView, vectors)
+    val seeds = artifact(spark, dir, "seeds")
+      .select(col("vec_id").as("id"), col("v").as("sv"))
+    // d prices the query frame: one head row of the tiny seed table,
+    // cached per committed version
     val d: Int = IndexStore.cached("seedDim", dir,
       IndexStore.AtPath(s"$dir/manifest"))(
       seeds.head.getAs[scala.collection.Seq[Double]]("sv").length)
     def hinted(df: DataFrame, approxBytes: Long): DataFrame =
       if (approxBytes > AnnSearch.BroadcastProbeByteLimit) df
       else broadcast(df)
-    // ~32 B per slim (query_id, id, bucket) row in the in-memory
-    // broadcast relation; the query frame carries the d-dim vector
-    val frontierBytes = qCount * ef * 32L
-    val probeBytes = qCount * ef * deg * 32L
     val q = hinted(queries.select(col("query_id"), col("qu")),
       qCount * (d * 8L + 16L))
     // the per-query beam cut (see scaladoc): exact for every consumer,
@@ -628,19 +653,11 @@ object GraphAnn {
       else df.withColumn("_r", row_number().over(
           Window.partitionBy("query_id").orderBy(col("dist"), col("id"))))
         .filter(col("_r") <= ef).drop("_r")
-    val dbg = sys.env.contains("SPARK_GRAFT_BEAM_DEBUG")
-    var t0 = System.nanoTime()
-    def lap(tag: String): Unit = if (dbg) {
-      val t1 = System.nanoTime()
-      System.err.println(f"[beam] $tag ${(t1 - t0) / 1e9}%.3f s")
-      t0 = t1
-    }
     var visited = pruned(q.join(broadcast(seeds))
       .select(col("query_id"), col("id"),
         squaredL2(col("qu"), col("sv")).as("dist"),
         lit(0).as("hop")))
       .localCheckpoint(true)
-    lap("seed")
     for (h <- 1 to hops) {
       // pruned mode: `visited` IS the per-query top-ef beam already (the
       // prune invariant — both the seed frame and every `next` pass
@@ -714,16 +731,12 @@ object GraphAnn {
       // (query_id) satisfies both ClusteredDistributions) — the hop's
       // three shuffle rounds (expansion distinct, anti-join, prune
       // window) are now this one.
-      val nextPlan = pruned(
+      val next = pruned(
         visited.unionAll(scored)
           .repartition(col("query_id"))
           .groupBy(col("query_id"), col("id"))
           .agg(min(col("dist")).as("dist"), min(col("hop")).as("hop")))
-      if (dbg && h == 1 && sys.env.contains("SPARK_GRAFT_BEAM_PLAN"))
-        System.err.println(nextPlan.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
-      val next = nextPlan.localCheckpoint(true)
-      lap(s"hop $h checkpoint")
+        .localCheckpoint(true)
       // early exit: no NEW ENTRANT into any query's kept set, which is
       // final — an unchanged set re-expands the same frontier forever.
       // Every `scored` row carries hop = h and every `visited` row
@@ -736,7 +749,6 @@ object GraphAnn {
       // loop exits regardless, and the trace is returned as-is.
       val converged =
         h < hops && next.filter(col("hop") === h).isEmpty
-      lap(s"hop $h converged=$converged")
       // `next` is eagerly materialized, so the superseded hop's blocks
       // are dead — release them now instead of holding hops+1
       // checkpoint generations until a GC (see [[Checkpoints]])
@@ -745,6 +757,138 @@ object GraphAnn {
       if (converged) return visited
     }
     visited
+  }
+
+  /** A version's seeds on the driver: ids, vectors and their adjacency
+    * in the raw graph union, loaded once per committed version
+    * ([[IndexStore.cached]]) so a small-Q beam ([[driverBeam]]) scores
+    * hop 0 and expands hop 1 without a job.
+    */
+  private final case class SeedSide(ids: Array[Long],
+                                    vectors: Array[ArrayData],
+                                    adjacency: Map[Long, Array[Long]])
+
+  private def seedSide(spark: SparkSession, dir: String,
+                       graphView: DataFrame, b: Int): SeedSide =
+    IndexStore.cached("graphSeeds", dir,
+        IndexStore.AtPath(s"$dir/manifest")) {
+      val rows = artifact(spark, dir, "seeds")
+        .select(col("vec_id"), col("v").cast("array<double>")).collect()
+        .filterNot(_.isNullAt(0))
+      val ids = rows.map(_.getAs[Number](0).longValue)
+      SeedSide(ids, rows.map(r => Quantize.arrayData(r.get(1))),
+        adjacency(graphView, ids.toSeq, b))
+    }
+
+  /** `srcs`' rows of the raw graph union (duplicate edges kept) from one
+    * bucket-pruned scan; a src without edges maps to no dsts.
+    */
+  private def adjacency(graphView: DataFrame, srcs: Seq[Long],
+                        b: Int): Map[Long, Array[Long]] = {
+    val edges = graphView
+      .filter(col("bucket").isin(srcs.map(bucketOf(_, b)).distinct: _*) &&
+        col("src").isin(srcs: _*))
+      .select(col("src"), col("dst")).collect()
+      .filterNot(r => r.isNullAt(0) || r.isNullAt(1))
+      .groupMap(_.getAs[Number](0).longValue)(_.getAs[Number](1).longValue)
+    srcs.map(s => s -> edges.getOrElse(s, Array.empty[Long])).toMap
+  }
+
+  /** The segment bucket of `id`: `pmod(id, b)`. */
+  private def bucketOf(id: Long, b: Int): Int =
+    Math.floorMod(id, b.toLong).toInt
+
+  /** The small-Q beam of [[searchTraceAt]]: each query's top-`ef` beam
+    * stays on the driver, and a hop runs at most two jobs.
+    *  - Adjacency: one bucket-pruned scan of the raw graph union for the
+    *    beam nodes not expanded yet — exactly the previous hop's
+    *    entrants, since a node cut from the beam never re-enters it. Hop
+    *    1 expands the seeds, whose adjacency is cached.
+    *  - Scoring: one [[FusedTopK]] scan of the bucket-pruned vector
+    *    union keyed by `vec_id`, `ef` kept per query. The beam is the
+    *    top-`ef` of every row scored so far, so merging that into it on
+    *    the driver is the joined hop's cut of (beam ∪ scored), and a node
+    *    already scored is not scored again: the rows, hop labels
+    *    included, are the joined path's.
+    * A hop with no fresh node, or whose scores bring no new entrant, is
+    * the joined path's convergence, found without a job. The query's own
+    * id and tombstoned ids stay in the walk; the ranking drops them. The
+    * trace is a local frame, without rows for NULL query ids (which no
+    * ranking returns).
+    */
+  private def driverBeam(spark: SparkSession, dir: String,
+                         queries: DataFrame, ef: Int, hops: Int, b: Int,
+                         graphView: DataFrame,
+                         vectors: DataFrame): DataFrame = {
+    val qType = queries.schema("query_id").dataType
+    val qf = queries.select(col("query_id"),
+      col("qu").cast("array<double>").as("qu"))
+    val rows = qf.collect().filterNot(_.isNullAt(0))
+    require(rows.length <= AnnSearch.JoinProbeQueryThreshold,
+      s"small-Q beam collected ${rows.length} query rows (> " +
+        s"JoinProbeQueryThreshold=${AnnSearch.JoinProbeQueryThreshold})" +
+        " - pass the query count as expectedQ so the joined beam runs")
+    val qids = rows.map(_.getAs[Number](0).longValue)
+    val qus = rows.map(r => Quantize.arrayData(r.get(1)))
+    val sideRows: Array[InternalRow] = rows.indices.map(i =>
+      new GenericInternalRow(Array[Any](qids(i), qus(i)))).toArray
+    val seeds = seedSide(spark, dir, graphView, b)
+    val order = FusedTopK.ordering(nullsLast = false)
+    def cand(id: Long, d: Any) = FusedTopK.Cand(id,
+      if (d == null) 0.0 else d.asInstanceOf[Double], d == null)
+    // per query: the beam as (candidate, hop first scored), and the
+    // non-seed ids scored so far (every seed is scored at hop 0)
+    val beams = qus.map(qu => seeds.ids.indices.map(s =>
+      (cand(seeds.ids(s), if (qu == null) null
+        else ArraySquaredL2.kernel(qu, seeds.vectors(s), checkNulls = true)),
+        0)).sortBy(_._1)(order).take(ef))
+    val seedSet = seeds.ids.toSet
+    val scored = qus.map(_ => scala.collection.mutable.LongMap.empty[Unit])
+    val adj = scala.collection.mutable.LongMap.from(seeds.adjacency)
+    var h = 1
+    var moving = true
+    while (moving && h <= hops) {
+      val frontier = beams.map(_.collect { case (c, hop) if hop == h - 1 =>
+        c.id })
+      val missing = frontier.iterator.flatten.filterNot(adj.contains)
+        .distinct.toSeq
+      if (missing.nonEmpty) adj ++= adjacency(graphView, missing, b)
+      val fresh = frontier.indices.map(i => frontier(i).iterator
+        .flatMap(adj(_))
+        .filterNot(id => seedSet(id) || scored(i).contains(id))
+        .distinct.toArray)
+      moving = fresh.exists(_.nonEmpty)
+      if (moving) {
+        fresh.indices.foreach(i => fresh(i).foreach(scored(i)(_) = ()))
+        val side = new QuerySide(sideRows, fresh.indices
+          .flatMap(i => fresh(i).map(_ -> i)).groupMap(_._1)(_._2)
+          .map { case (id, qs) => id -> qs.toArray }, Set.empty,
+          excludeSelf = false)
+        val got = FusedTopK.probed(spark, side, qf.schema("qu").dataType,
+            withLut = false, vectors.filter(col("bucket").isin(
+              fresh.flatten.map(bucketOf(_, b)).distinct: _*)),
+            squaredL2(col("qu"), col("v")).as("dist"), ef,
+            nullsLast = false, key = "vec_id")
+          .select(col("query_id"), col("id"), col("dist")).collect()
+          .groupMap(_.getLong(0))(r =>
+            cand(r.getLong(1), if (r.isNullAt(2)) null else r.getDouble(2)))
+        moving = false
+        beams.indices.foreach { i =>
+          beams(i) = (beams(i) ++ got.getOrElse(qids(i), Array.empty)
+            .map((_, h))).sortBy(_._1)(order).take(ef)
+          moving ||= beams(i).exists(_._2 == h)
+        }
+      }
+      h += 1
+    }
+    val out = beams.indices.flatMap(i => beams(i).map { case (c, hop) =>
+      Row(if (qType == IntegerType) qids(i).toInt else qids(i), c.id,
+        if (c.isNull) null else c.score, hop)
+    })
+    spark.createDataFrame(out.asJava, StructType(Seq(
+      StructField("query_id", qType), StructField("id", LongType),
+      StructField("dist", DoubleType),
+      StructField("hop", IntegerType, nullable = false))))
   }
 
   /** Top-k per query from a version dir through the shared ranking tail
@@ -784,13 +928,46 @@ object GraphAnn {
     * construction.
     */
   private def rankTail(spark: SparkSession, dir: String,
-                       trace: DataFrame, k: Int): DataFrame = {
-    val slim = trace.filter(col("id") =!= col("query_id"))
-      .select(col("query_id"), col("id"), col("dist"))
-    val masked = tombstones(spark, dir).fold(slim)(t =>
-      slim.join(broadcast(t.select(col("vec_id").as("id"))),
-        Seq("id"), "left_anti"))
-    VectorSearch.topK(masked, k)
+                       trace: DataFrame, k: Int): DataFrame =
+    trace.queryExecution.logical match {
+      case _: LocalRelation => rankLocal(spark, dir, trace, k)
+      case _ =>
+        val slim = trace.filter(col("id") =!= col("query_id"))
+          .select(col("query_id"), col("id"), col("dist"))
+        val masked = tombstones(spark, dir).fold(slim)(t =>
+          slim.join(broadcast(t.select(col("vec_id").as("id"))),
+            Seq("id"), "left_anti"))
+        VectorSearch.topK(masked, k)
+    }
+
+  /** [[rankTail]] of a small-Q beam's local trace, on the driver: the
+    * same self-exclusion, tombstone mask (the tombstone segments' cached
+    * ids), top-k by (dist, id) and `round(dist, 6)`, as a local frame in
+    * (query_id, rn) order, so collecting it runs no job.
+    */
+  private def rankLocal(spark: SparkSession, dir: String, trace: DataFrame,
+                        k: Int): DataFrame = {
+    val dead = IndexStore.manifestSegments(
+        IndexStore.readManifest(spark, dir), "tombstones")
+      .flatMap(IndexStore.tombstoneIds(spark, _)).toSet
+    val order = FusedTopK.ordering(nullsLast = false)
+    val ranked = trace.collect().toSeq
+      .filterNot(r => r.isNullAt(0) || r.isNullAt(1))
+      .map(r => (r.getAs[Number](0).longValue, r.get(0),
+        FusedTopK.Cand(r.getLong(1), if (r.isNullAt(2)) 0.0
+          else r.getDouble(2), r.isNullAt(2))))
+      .filter { case (q, _, c) => c.id != q && !dead(c.id) }
+      .groupBy(_._1).toSeq.sortBy(_._1)
+      .flatMap { case (_, rs) =>
+        rs.sortBy(_._3)(order).take(k).zipWithIndex.map {
+          case ((_, q, c), i) => Row(q, c.id,
+            if (c.isNull) null else FusedTopK.rounded(c.score), i + 1L)
+        }
+      }
+    spark.createDataFrame(ranked.asJava, StructType(Seq(
+      trace.schema("query_id"), StructField("id", LongType),
+      StructField("distance", DoubleType),
+      StructField("rn", LongType, nullable = false))))
   }
 
   /** Per-(session, version dir, query set, ef, hops) CACHED beam trace —
@@ -1035,11 +1212,7 @@ object GraphAnn {
            |  ON v.bucket = pmod(f.id, $b) AND v.vec_id = f.id"""
           .stripMargin)
       visited.unionAll(scored).createOrReplaceTempView("graph_next_sql")
-      val nextPlan = spark.sql(pruneSql.stripMargin)
-      if (h == 1 && sys.env.contains("SPARK_GRAFT_BEAM_PLAN"))
-        System.err.println(nextPlan.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
-      val next = nextPlan.localCheckpoint(true)
+      val next = spark.sql(pruneSql.stripMargin).localCheckpoint(true)
       Checkpoints.release(visited)
       visited = next
     }

@@ -247,6 +247,16 @@ object IndexStore {
       if (e.owner != null && (e.owner.get() eq spark)) e.owner.clear()
     }
 
+  /** A tombstone segment's deleted ids (its `vec_id` column) on the
+    * driver, loaded once per committed segment: the small-Q IVF read's
+    * mask and the small-Q graph ranking share this one entry kind.
+    */
+  private[graft] def tombstoneIds(spark: SparkSession,
+                                  path: String): Array[Long] =
+    cached("tombstoneIds", path, AtPath(path))(
+      readCached(spark, path).select("vec_id").collect()
+        .filterNot(_.isNullAt(0)).map(_.getAs[Number](0).longValue))
+
   /** [[SparkSession.read.parquet]] with the schema cached per committed
     * path — THE read seam for fixture tables, index artifacts and
     * manifest segments. Schema inference is a driver-side footer read

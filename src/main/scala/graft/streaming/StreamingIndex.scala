@@ -1,14 +1,18 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.Tables
 import graft.functions.VectorOps.l2Normalize
-import graft.operators.{AnnSearch, GraphAnn, ShardedSearch}
+import graft.operators.{AnnSearch, FusedTopK, GraphAnn, ShardedSearch}
 import graft.operators.AnnSearch.{hitCount, r4, rowCount, violationRows}
 import graft.sources.IndexStore
 
@@ -367,50 +371,91 @@ object StreamingIndex {
     * `POST /search_drawing` (`main.py:138-165`) against the latest
     * committed snapshot: rank the version's vectors by squared L2 to the
     * query, keep top-k, remap to user-facing ids via the same version's
-    * mapping (inner join = drop-on-miss, `main.py:158-163`). An empty or
-    * absent index returns an empty frame, not an error (the reference's
+    * mapping (inner join = drop-on-miss, `main.py:158-163`), as
+    * (id, distance) rows ordered by (distance, id). An empty or absent
+    * index returns an empty frame, not an error (the reference's
     * empty-index guard, `main.py:152-153`).
+    *
+    * At most three small jobs, and a local result frame: the dead
+    * faiss_ids of a version not read before ([[deadIds]]), one
+    * TakeOrdered scan of the vectors, and one `isin` scan of the
+    * mapping for the ≤ k ranked ids. Both rest on the store's id
+    * discipline ([[mergeBatchOps]]): a faiss_id belongs to one str_id
+    * for life, and no row after a tombstone revives it (a re-add
+    * allocates a fresh id). So the ids whose str_id's newest row is a
+    * tombstone are exactly the ids any tombstone row names, and a live
+    * id's newest row among its own rows is its str_id's newest row.
     */
   def searchLatest(spark: SparkSession, root: String, query: Seq[Double],
                    k: Int = 10): DataFrame = {
     import graft.functions.VectorOps.squaredL2
-    // the store holds COMMITTED snapshots only; an absent/uncommitted
-    // version degrades to the empty schema'd frames
-    def empty(schema: StructType) = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], schema)
-    val base = latestVersion(root).map(v => s"$root/v$v")
-    val raw = base.map(loadMappingRawAt(spark, _))
-      .getOrElse(empty(MappingSchema))
-    val mapping = raw.filter(!coalesce(col("deleted"), lit(false)))
-      .select(col("str_id"), col("faiss_id"), col("text"))
-    // tombstoned ids must leave the RANKING, not just the remap join —
-    // an inner-join-only exclusion would let deleted vectors burn top-k
-    // slots and shrink results below k. The deleted set is O(deletes
-    // since compaction) (compaction drops the vectors physically), so
-    // the anti-join side broadcasts, as with the IVF tombstones.
-    val deadIds = raw.filter(coalesce(col("deleted"), lit(false)))
-      .select(col("faiss_id"))
-    val vectors = base.map(loadVectorsAt(spark, _))
-      .getOrElse(empty(VectorSchema))
-      .join(broadcast(deadIds), Seq("faiss_id"), "left_anti")
-    // normalize the query exactly as the stored side was (main.py:87
-    // normalizes BOTH sides; same left-fold sum + divide → bit-identical
-    // to the codegen normalizer, so a self-query lands at distance 0)
-    val norm = math.sqrt(query.map(x => x * x).sum)
-    val q = array((if (norm > 0) query.map(_ / norm) else query)
-      .map(lit): _*)
-    // orderBy+limit plans TakeOrdered over the scan; the k-row result is
-    // the broadcast side of the remap join (the mapping is the big table
-    // at scale, never broadcast)
-    val topk = vectors
-      .select(col("faiss_id"), squaredL2(q, col("v")).as("distance"))
-      .orderBy(col("distance"), col("faiss_id"))
-      .limit(k)
-    mapping.join(broadcast(topk), "faiss_id")
-      .select(col("str_id").as("id"), round(col("distance"), 6)
-        .as("distance"))
-      .orderBy("distance", "id")
+    val hits = latestVersion(root).map(v => s"$root/v$v").fold(
+        Seq.empty[(String, Any)]) { dir =>
+      val segs = IndexStore.manifestSegments(
+        IndexStore.readManifest(spark, dir), "mapping")
+      // tombstoned ids must leave the RANKING, not just the remap — a
+      // join-only exclusion would let deleted vectors burn top-k slots
+      // and shrink results below k. The dead set is O(deletes since
+      // compaction) (compaction drops the vectors physically), so the
+      // scan ranks that many rows more and the driver drops them
+      val dead = deadIds(spark, dir, segs)
+      // normalize the query exactly as the stored side was (main.py:87
+      // normalizes BOTH sides; same left-fold sum + divide → bit-identical
+      // to the codegen normalizer, so a self-query lands at distance 0)
+      val norm = math.sqrt(query.map(x => x * x).sum)
+      val q = array((if (norm > 0) query.map(_ / norm) else query)
+        .map(lit): _*)
+      // orderBy+limit plans TakeOrdered over the scan
+      val top = loadVectorsAt(spark, dir)
+        .select(col("faiss_id"), squaredL2(q, col("v")).as("distance"))
+        .orderBy(col("distance"), col("faiss_id")).limit(k + dead.size)
+        .collect().toSeq
+        .filterNot(r => !r.isNullAt(0) && dead(r.getLong(0))).take(k)
+        .filterNot(_.isNullAt(0))
+      val ids = top.map(_.getLong(0)).distinct
+      // each ranked id's live str_ids: the newest row per str_id among
+      // the ranked ids' rows, unless it is a tombstone
+      val strs = if (ids.isEmpty) Map.empty[Long, Seq[String]]
+        else segs.zipWithIndex.map { case (p, i) =>
+          spark.read.schema(MappingSchema).parquet(p)
+            .filter(col("faiss_id").isin(ids: _*))
+            .select(col("str_id"), col("faiss_id"),
+              coalesce(col("deleted"), lit(false)), lit(i))
+        }.reduce(_ unionAll _).collect().toSeq
+          .groupBy(r => Option(r.getString(0))).values
+          .map(_.maxBy(_.getInt(3))).filterNot(_.getBoolean(2)).toSeq
+          .groupMap(_.getLong(1))(_.getString(0))
+      top.flatMap(r => strs.getOrElse(r.getLong(0), Nil)
+        .map(s => (s, if (r.isNullAt(1)) null
+          else FusedTopK.rounded(r.getDouble(1)))))
+    }
+    // (distance, id), NULLs first, in SQL order
+    def nullsFirst[T](x: T, y: T)(c: (T, T) => Int): Int =
+      if (x == null || y == null) java.lang.Boolean.compare(y == null,
+        x == null)
+      else c(x, y)
+    val rows = hits.sortWith { case ((s1, d1), (s2, d2)) =>
+      val byDist = nullsFirst(d1, d2)((a, b) => SQLOrderingUtil
+        .compareDoubles(a.asInstanceOf[Double], b.asInstanceOf[Double]))
+      (if (byDist != 0) byDist else nullsFirst(s1, s2)((a, b) =>
+        UTF8String.fromString(a).compareTo(UTF8String.fromString(b)))) < 0
+    }.map { case (s, d) => Row(s, d) }
+    spark.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("id", StringType), StructField("distance", DoubleType))))
   }
+
+  /** The faiss_ids any tombstone row of version `dir`'s mapping `segs`
+    * names, on the driver: one scan, once per committed version
+    * ([[IndexStore.cached]]).
+    */
+  private def deadIds(spark: SparkSession, dir: String,
+                      segs: Seq[String]): Set[Long] =
+    IndexStore.cached("deadIds", dir, IndexStore.AtPath(s"$dir/manifest"))(
+      segs.map(spark.read.schema(MappingSchema).parquet(_))
+        .reduce(_ unionAll _)
+        .filter(coalesce(col("deleted"), lit(false)))
+        .select(col("faiss_id")).collect()
+        .filterNot(_.isNullAt(0)).map(_.getLong(0)).toSet)
 
   /** Retention for the versioned snapshot store: delete committed
     * versions older than the newest `keep` (default 2 — serving version

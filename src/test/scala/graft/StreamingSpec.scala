@@ -231,6 +231,56 @@ class StreamingSpec extends SparkSpec {
     assert(resC == res)
   }
 
+  tempDirTest("searchLatest equals the ranked LWW mapping join over " +
+      "upserts, deletes, re-adds, ties and a compacted version") { newDir =>
+    import graft.streaming.StreamingIndex
+    import graft.functions.VectorOps.squaredL2
+    def tmp(p: String) = newDir(p).toString
+    val root = tmp("graft_latest_root")
+    def ingest(prefix: String, rows: Seq[(String, String, Seq[Double],
+        String)]): Unit = {
+      StreamingIndex.stageInto(rows.toDF("str_id", "text", "v", "op"),
+        s"$root/landing", prefix)
+      StreamingIndex.ingestAvailable(spark, s"$root/landing", root,
+        s"$root/ckpt")
+    }
+    def e(i: Int, x: Double) = Seq.tabulate(4)(j => if (j == i) 1.0 else x)
+    ingest("b0", (0 until 12).map(i =>
+      (s"s$i", s"t$i", e(i % 4, i / 4 * 0.1), "add")))
+    ingest("b1", Seq(("s1", "upd", e(1, 0.5), "add"),
+      ("s2", null, null, "delete"), ("s5", null, null, "delete")))
+    // s12 ties s0; s2 comes back under a fresh id
+    ingest("b2", Seq(("s2", "back", e(2, 0.3), "add"),
+      ("s12", "new", e(0, 0.0), "add")))
+    // the read before this change: LWW mapping, dead ids anti-joined
+    // from the ranking, top-k joined to the live mapping
+    def reference(dir: String, q: Seq[Double], k: Int) = {
+      val raw = StreamingIndex.loadMappingRawAt(spark, dir)
+      val dead = coalesce(col("deleted"), lit(false))
+      val norm = math.sqrt(q.map(x => x * x).sum)
+      val topk = StreamingIndex.loadVectorsAt(spark, dir)
+        .join(raw.filter(dead).select(col("faiss_id")), Seq("faiss_id"),
+          "left_anti")
+        .select(col("faiss_id"),
+          squaredL2(array(q.map(x => lit(x / norm)): _*), col("v"))
+            .as("distance"))
+        .orderBy(col("distance"), col("faiss_id")).limit(k)
+      raw.filter(!dead).join(topk, "faiss_id")
+        .select(col("str_id").as("id"), round(col("distance"), 6)
+          .as("distance"))
+        .orderBy("distance", "id").collect().map(_.toSeq).toSeq
+    }
+    val out = tmp("graft_latest_compact")
+    StreamingIndex.compactTo(spark, root, out)
+    val v = StreamingIndex.latestVersion(root).get
+    for ((store, dir) <- Seq(root -> s"$root/v$v", out -> s"$out/v0");
+         q <- Seq(e(0, 0.0), e(1, 0.1), e(2, 0.2)); k <- Seq(3, 8, 20)) {
+      val got = StreamingIndex.searchLatest(spark, store, q, k).collect()
+        .map(_.toSeq).toSeq
+      assert(got.nonEmpty && got == reference(dir, q, k), s"$dir $q $k")
+    }
+  }
+
   test("streamed delete-at-ingest chains an add and a tombstone version " +
       "with zero violations") {
     import graft.streaming.StreamingIndex
